@@ -276,7 +276,11 @@ object Bench {
     val results = benched.map { case (name, build) =>
       val t0 = System.nanoTime()
       try { build(spark, sfDir).count() }
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); -1L }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        e.printStackTrace()
+        -1L
+      }
       name -> (System.nanoTime() - t0) / 1e9
     }
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }

@@ -30,7 +30,8 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: $e")
+        e.printStackTrace()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -286,10 +286,10 @@ object GraphQueries {
     // the join condition and thereby evaluates the intersect twice per
     // edge (once as predicate, once as projection; seen in the physical
     // plan). The overlap test is sound (an empty overlap range implies an
-    // empty intersection); the few false positives emit c=0 contribution
-    // rows that the exact `tri > 0` filter after the aggregate removes,
-    // keeping the output set identical (a node appears iff it closes at
-    // least one triangle).
+    // empty intersection); its few false positives reach the explode
+    // below with an empty `ws`, whose empty array emits no row, so the
+    // output set is unchanged (a node appears iff it closes at least one
+    // triangle).
     val withCommon = oriented
       .join(bcast(adj.select($"src", $"nbr".as("au"))), Seq("src"))
       .join(bcast(adj.select($"src".as("dst"), $"nbr".as("av"))), Seq("dst"))

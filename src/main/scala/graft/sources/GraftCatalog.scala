@@ -1078,14 +1078,14 @@ object GraftCatalog {
   /** Identifier suffix routing to a table's current partition-level
     * layout, e.g. `` cat.`orders$partitions` ``. */
   val PartitionsSuffix = "$partitions"
-  /** Identifier suffix routing to a materialized view's freshness
-    * metadata, e.g. `` cat.`daily_mv$mv` `` — one row per source table
-    * with the refreshed-through vs current version and staleness. */
   /** Column names the changelog claims next to the data columns; rejected
     * as data-column names at CREATE and ALTER ADD/RENAME time. */
   val ChangeReserved: Seq[String] = Seq(GraftStore.ChangeOpCol,
     GraftStore.ChangeBeforeCol, GraftStore.ChangeVersionCol)
 
+  /** Identifier suffix routing to a materialized view's freshness
+    * metadata, e.g. `` cat.`daily_mv$mv` `` — one row per source table
+    * with the refreshed-through vs current version and staleness. */
   val MvSuffix = "$mv"
   /** Identifier infix addressing a BRANCH of a table as a full
     * read-write table, e.g. `` cat.`orders$branch$exp1` `` — DML, MERGE,

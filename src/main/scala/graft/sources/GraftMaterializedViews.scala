@@ -89,20 +89,17 @@ object GraftMaterializedViews {
   private[sources] val inMaintenance =
     new scala.util.DynamicVariable[Boolean](false)
 
-  /** True iff the MV's state table exists and reflects every source's
-    * CURRENT version — the watermark table (sole source, or a join
-    * shape's fact) through the state commit's txn watermark, dims
-    * through the recorded versions. The same math `mv$mv` reports; the
-    * transparent rewrite substitutes only when this holds, so it can
-    * never serve data a direct evaluation wouldn't. */
   /** Whether the MV's CURRENT state is small enough — judged from its
     * file bytes, metadata only — that the NEXT state overwrite should
     * write as one task (`applyChanges(smallBatchHint)`) instead of
-    * paying an AQE rebalance round: an aggregate state's size tracks
-    * |view|, which one refresh cannot grow past ~2× the prior state
-    * plus the (bounded) fold delta; halving the commit-broadcast byte
-    * bound leaves that headroom. False for the initial materialization
-    * (no prior state to judge by) — it keeps the rebalance. */
+    * paying an AQE rebalance round. An aggregate state's size tracks
+    * |view|, and a refresh grows it by at most the new groups in its
+    * fold delta; halving the commit-broadcast byte bound leaves headroom
+    * for typical growth. It is a heuristic, not a bound: the delta is
+    * not limited relative to the state, so a refresh can grow the state
+    * well past 2×, and the one-task write is then merely slower. False
+    * for the initial materialization (no prior state to judge by) — it
+    * keeps the rebalance. */
   private def smallStateHint(spark: SparkSession, stateDir: String): Boolean =
     GraftStore.exists(stateDir) && {
       val v = GraftStore.currentVersion(stateDir)
@@ -110,6 +107,12 @@ object GraftMaterializedViews {
         GraftStore.commitBroadcastMaxBytes(spark) / 2
     }
 
+  /** True iff the MV's state table exists and reflects every source's
+    * CURRENT version — the watermark table (sole source, or a join
+    * shape's fact) through the state commit's txn watermark, dims
+    * through the recorded versions. The same math `mv$mv` reports; the
+    * transparent rewrite substitutes only when this holds, so it can
+    * never serve data a direct evaluation wouldn't. */
   def isFresh(g: GraftCatalog, id: Identifier, rec: Record,
       analyzed: LogicalPlan): Boolean = {
     val stateDir = g.mvStateDir(id)

@@ -1469,8 +1469,12 @@ object GraftStore {
       StandardCopyOption.ATOMIC_MOVE)
   }
 
+  /** The temp name is writer-private: a group's coordinator and its
+    * resolvers may flip one member's pointer to the same head at once,
+    * and with a shared temp name one writer's rename would consume the
+    * other's file (NoSuchFileException on the loser's move). */
   private def writePointer(dir: String, v: Long): Unit = {
-    val tmp = Paths.get(dir, "_current.tmp")
+    val tmp = Paths.get(dir, s"_current.tmp-${java.util.UUID.randomUUID()}")
     Files.write(tmp, v.toString.getBytes("UTF-8"))
     Files.move(tmp, pointerPath(dir), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
@@ -1505,22 +1509,27 @@ object GraftStore {
     * cannot, because a drop+recreate restarts them and a recreated table
     * can CATCH UP to a stale watermark (the r15-advised MV staleness
     * hole). */
-  def incarnationOf(dir: String): String = {
-    val p = Paths.get(dir, IncarnationName)
-    try new String(Files.readAllBytes(p), "UTF-8").trim
-    catch {
-      case _: java.nio.file.NoSuchFileException =>
-        val fresh = java.util.UUID.randomUUID().toString
-        try {
-          Files.write(p, fresh.getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          fresh
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            new String(Files.readAllBytes(p), "UTF-8").trim
-        }
+  def incarnationOf(dir: String): String =
+    storedIncarnation(dir).getOrElse {
+      val p = Paths.get(dir, IncarnationName)
+      val fresh = java.util.UUID.randomUUID().toString
+      try {
+        Files.write(p, fresh.getBytes("UTF-8"),
+          java.nio.file.StandardOpenOption.CREATE_NEW)
+        fresh
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          new String(Files.readAllBytes(p), "UTF-8").trim
+      }
     }
-  }
+
+  /** The stamped incarnation, read-only: None when the directory or its
+    * stamp is missing. Resolvers use this form — they must never write
+    * into a tree they do not own. */
+  private def storedIncarnation(dir: String): Option[String] =
+    try Some(new String(Files.readAllBytes(Paths.get(dir, IncarnationName)),
+      "UTF-8").trim)
+    catch { case _: java.nio.file.NoSuchFileException => None }
 
   def changesRoot(dir: String): String = s"$dir/_changes"
   private def changesDir(dir: String, v: Long): String =
@@ -2372,12 +2381,17 @@ object GraftStore {
     recoverChangelog(dir) // the pointer now covers the staged slices
     // consume ONLY the published incarnation: a resolver acting on a
     // stale marker read can find the same NAME already re-created for
-    // the next publish — that branch is not ours to drop. A legacy
-    // manifest (no incarnation field) keeps the by-name behavior.
-    if (branchExists(dir, branch) &&
-        inc.forall(_ == incarnationOf(branchDir(dir, branch))))
+    // the next publish — that branch is not ours to drop. The stamp is
+    // read, never written: a missing directory or stamp (a racing
+    // resolver mid-drop, or a tree we cannot identify) means "not ours".
+    // A legacy manifest (no incarnation field) keeps the by-name behavior.
+    if (inc.forall(storedIncarnation(branchDir(dir, branch)).contains) &&
+        branchExists(dir, branch))
       try dropBranch(dir, branch)
-      catch { case _: IllegalArgumentException => () } // raced: consumed
+      catch { // raced: another resolver consumed it first
+        case _: IllegalArgumentException => ()
+        case _: java.nio.file.NoSuchFileException => ()
+      }
     Files.deleteIfExists(marker)
   }
 

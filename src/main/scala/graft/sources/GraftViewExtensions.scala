@@ -35,6 +35,10 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
   *    cycle fails with the cycle path, never an analyzer loop;
   *  - wire it with `.config("spark.sql.extensions",
   *    classOf[GraftExtensions].getName)`.
+  *
+  * Applying the extensions also installs the fork-free `file:` filesystem
+  * ([[graft.fs.GraftLocalFileSystem.install]]) on the SparkContext's
+  * Hadoop configuration, unless the user set one.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -47,6 +51,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // transparent MV rewrite: post-hoc (the plan is fully resolved, so
     // aggregates compare canonically); substitutes only FRESH state
     ext.injectPostHocResolutionRule(s => GraftMvRewriteRule(s))
+    // the fork-free `file:` filesystem, on the context this session is
+    // being built on: extensions apply before the session's SharedState
+    // first resolves `file:`, and Hadoop caches that resolution per JVM
+    org.apache.spark.sql.GraftSqlShim.activeContext.foreach(sc =>
+      graft.fs.GraftLocalFileSystem.install(sc.hadoopConfiguration))
   }
 }
 

@@ -27,6 +27,11 @@ object GraftSqlShim {
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The running SparkContext, if any, without creating one
+    * (`SparkContext.getActive` is private[spark]). */
+  def activeContext: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.SparkContext.getActive
+
   /** The analyzed logical plan behind a DataFrame (`queryExecution` lives
     * on the classic Dataset). */
   def analyzedPlan(df: Dataset[_])

@@ -438,6 +438,33 @@ class BranchSpec extends SparkTestBase {
     assert(GraftStore.listBranches(s"$warehouse/$b").isEmpty)
   }
 
+  test("roll-forward declines a branch without _incarnation and never stamps it") {
+    val a = mkTable("grpn_a")
+    val b = mkTable("grpn_b")
+    spark.sql(s"INSERT INTO $cat.$a VALUES (1, 0, 10)")
+    spark.sql(s"INSERT INTO $cat.$b VALUES (5, 0, 50)")
+    Seq(a, b).foreach(t =>
+      spark.sql(s"CALL $cat.create_branch(table => '$t', name => 'wap')"))
+    spark.sql(s"INSERT INTO $cat.`$a$$branch$$wap` VALUES (2, 0, 20)")
+    spark.sql(s"INSERT INTO $cat.`$b$$branch$$wap` VALUES (6, 0, 60)")
+    sys.props("graft.store.failpoint.publish_group") = "between-flips"
+    try intercept[Exception] {
+      spark.sql(s"CALL $cat.publish_group(tables => '$a,$b', name => 'wap')")
+    } finally sys.props.remove("graft.store.failpoint.publish_group")
+    // b (second in sorted order) is decided but not completed; its branch
+    // has lost the stamp the manifest pinned, so it cannot be identified
+    val bDir = s"$warehouse/$b"
+    val bBranch = GraftStore.branchDir(bDir, "wap")
+    val stamp = java.nio.file.Paths.get(bBranch, "_incarnation")
+    Files.delete(stamp)
+    assert(rows(s"$cat.$b") === Seq((5L, 0L, 50L), (6L, 0L, 60L)))
+    assert(GraftStore.currentVersion(bDir) === GraftStore.currentVersion(bBranch))
+    assert(!Files.exists(java.nio.file.Paths.get(bDir, "_groupcommit")))
+    // "not ours": the drop is declined and nothing is written into the tree
+    assert(GraftStore.branchExists(bDir, "wap"))
+    assert(!Files.exists(stamp))
+  }
+
   test("publish_group conflicts when one member's main moved off its fork") {
     val a = mkTable("grpx_a")
     val b = mkTable("grpx_b")
