@@ -1001,7 +1001,7 @@ object SourceQueries {
       val contentsOk = afterRebkt.exceptAll(latest).isEmpty &&
         latest.exceptAll(afterRebkt).isEmpty
       val markerOk =
-        G.versionBuckets(dir, G.currentVersion(dir)).contains(16)
+        G.versionBuckets(dir, G.currentVersion(dir)) == 16
 
       // write THROUGH the new layout, then compact to 1 file/bucket and
       // measure that a point lookup plans exactly one file at count 16

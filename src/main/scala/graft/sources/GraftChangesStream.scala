@@ -199,7 +199,7 @@ final class GraftChangesMicroBatchStream(dir: String, meta: GraftTableMeta,
     // missing-dir filter below — without this, a writer crashing between
     // its pointer flip and its changelog publish leaves the slice in
     // staging, the filter drops it, and the stream advances past committed
-    // changes (silent CDC loss; r8 ADVICE)
+    // changes (silent CDC loss)
     GraftStore.recoverChangelog(dir)
     // a checkpointed resume point below the retention horizon means
     // expire_changes dropped history this consumer never saw — an empty
@@ -215,7 +215,7 @@ final class GraftChangesMicroBatchStream(dir: String, meta: GraftTableMeta,
     // overwrite — changelog-less commits that REPLACED the table state)
     // must fail the same way: the missing slice would be silently dropped
     // by the dir filter below, and a consumer folding across it would
-    // resurrect the undone rows with no signal (r9 ADVICE). The boundary
+    // resurrect the undone rows with no signal. The boundary
     // is stamped per version (and survives version expiry via promoted
     // markers), so this is distinguishable from a harmless optimize/
     // rebucket gap, which carries no marker and folds through safely.

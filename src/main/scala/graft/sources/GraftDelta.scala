@@ -196,7 +196,7 @@ final class GraftDeltaWriterFactory(staging: String,
   * metadata-log model. The queryId scoping matters: Spark batch ids
   * restart at 0 for every new query/checkpoint, so an epoch-only marker
   * would silently drop every batch of a fresh stream until its epoch
-  * passed the stale high-water mark (r7 ADVICE). A DIFFERENT queryId
+  * passed the stale high-water mark. A DIFFERENT queryId
   * resets the marker — each logical stream (checkpoint) gets its own
   * epoch line; interleaving two live streams on one table is still
   * unsupported (their markers would thrash; use separate tables or
@@ -236,24 +236,6 @@ final class GraftStreamingAppend(dir: String, meta: GraftTableMeta,
         val lines = new String(Files.readAllBytes(lastEpochPath), "UTF-8")
           .split("\n")
         if (lines.length >= 2 && lines(0) == queryId) lines(1).trim.toLong
-        else if (lines.length == 1 && lines(0).trim.nonEmpty && epochId > 0)
-          // legacy single-line marker (pre-queryId format): attribute it to
-          // the CURRENT query only when this query is plausibly the SAME
-          // stream continuing from its checkpoint (its batch ids carried
-          // on past 0) — there, treating the high-water mark as stale
-          // would re-commit a replayed epoch (duplicates, the exact
-          // failure the marker prevents). A query committing epoch 0 is a
-          // FRESH stream (batch ids restart per checkpoint): inheriting a
-          // stale mark would silently drop every batch <= it, so the
-          // marker resets instead (r8 ADVICE). The one ambiguous corner —
-          // legacy marker exactly '0' AND a pre-upgrade crash between
-          // sink-commit and checkpoint-commit of epoch 0 — re-commits
-          // that epoch once; the fresh-stream reading wins because a
-          // swallowed epoch 0 is a SILENT unbounded drop while the
-          // replay corner is a bounded one-time duplicate that the
-          // scoped marker then forecloses forever. Either way the first
-          // commit rewrites the marker in the scoped format.
-          lines(0).trim.toLong
         else -1L
       } else -1L
     try {
@@ -361,7 +343,7 @@ final class GraftStreamingTaskWriter(path: String, rowSchema: StructType,
   * — so `UPDATE t SET k = k + 1` moves the row: when the new row's key
   * differs from `id`, a 'D' frame for the old key precedes the 'U' frame,
   * otherwise the old-keyed row would survive the commit as a silent
-  * duplicate (r7 ADVICE, high). */
+  * duplicate. */
 final class GraftDeltaWriter(path: String, rowSchema: StructType,
     idSchema: StructType) extends DeltaWriter[InternalRow] {
 

@@ -125,7 +125,7 @@ object GraftMaterializedViews {
         // means the watermark below was measured against a DIFFERENT
         // table at this name — version comparison is meaningless then,
         // even when the recreated table has caught up to the old numbers
-        rec.incarnations.get(n).forall(_ == GraftStore.incarnationOf(d)) && {
+        sameIncarnation(rec, n, d) && {
           val cur = GraftStore.currentVersion(d)
           val refreshed =
             if (wmName.contains(n))
@@ -153,14 +153,13 @@ object GraftMaterializedViews {
         * starts the watermark clean. */
       txnApp: String = TxnApp,
       /** Per-source table-incarnation identity ([[GraftStore
-        * .incarnationOf]]) recorded at refresh. Version numbers alone
+        * .storedIncarnation]]) recorded at refresh. Version numbers alone
         * cannot see a DROP+recreate once the new table CATCHES UP to the
         * old watermark (regression-based lane rotation only fires while
         * the stale watermark still EXCEEDS the new table's version) — a
         * recorded-vs-current identity mismatch is unconditionally stale
         * and rotates the lane regardless of where the version counters
-        * sit. Missing entries (pre-r16 records) compare as matching; the
-        * next refresh records them. */
+        * sit. A missing entry is a mismatch too (see [[sameIncarnation]]). */
       incarnations: Map[String, String] = Map.empty)
 
   def writeRecord(path: Path, rec: Record, createNew: Boolean): Unit = {
@@ -745,7 +744,7 @@ object GraftMaterializedViews {
       if (stateExists && wmSrc.exists { case (n, d) =>
           GraftStore.lastTxnVersion(stateDir, rec.txnApp)
             .exists(_ > GraftStore.currentVersion(d)) ||
-            rec.incarnations.get(n).exists(_ != GraftStore.incarnationOf(d))
+            !sameIncarnation(rec, n, d)
         }) {
         val rotated = rec.copy(txnApp = s"__mv_refresh_${System.nanoTime()}")
         writeRecord(g.mvPath(id), rotated, createNew = false)
@@ -801,7 +800,7 @@ object GraftMaterializedViews {
           // a dim dropped+recreated back to its recorded version NUMBER is
           // still a different table — folding against it would join the
           // delta to content the state was never built from
-          rec1.incarnations.get(n).forall(_ == GraftStore.incarnationOf(d)) }
+          sameIncarnation(rec1, n, d) }
     }
     if (stateExists && wmSrc.isDefined && (single || dimsPinned)) {
       val srcDir = wmSrc.get._2
@@ -860,12 +859,11 @@ object GraftMaterializedViews {
                     smallBatchHint = smallStateHint(spark, stateDir))
                   // dims stay at their RECORDED versions (what the fold
                   // actually joined against); only the fact advances
-                  updateSources(g, id, rec1, sources.map { case (n, d) =>
-                    n -> (if (d == srcDir) cur
-                          else rec1.sources.getOrElse(n,
-                            GraftStore.currentVersion(d))) }.toMap,
-                    sources.map { case (n, d) =>
-                      n -> GraftStore.incarnationOf(d) }.toMap)
+                  updateSources(g, id, rec1, sources, sources.map {
+                    case (n, d) =>
+                      n -> (if (d == srcDir) cur
+                            else rec1.sources.getOrElse(n,
+                              GraftStore.currentVersion(d))) }.toMap)
                   return (cur, "incremental")
                 } // else: fall through to the recompute lane below
               } finally changes.unpersist()
@@ -879,8 +877,7 @@ object GraftMaterializedViews {
     if (stateExists && !single && rec.sources.nonEmpty &&
         sources.forall { case (n, d) =>
           rec.sources.get(n).contains(GraftStore.currentVersion(d)) &&
-            rec.incarnations.get(n).forall(
-              _ == GraftStore.incarnationOf(d)) })
+            sameIncarnation(rec, n, d) })
       return (rec.sources.values.max, "noop")
 
     // Full recompute. Shape-eligible MVs pin EVERY relation at the
@@ -936,10 +933,8 @@ object GraftMaterializedViews {
       allInserts = true, overwrite = true,
       expectedVersion = statePin, txn = txn,
       smallBatchHint = smallStateHint(spark, stateDir))
-    updateSources(g, id, rec1,
-      versionsBefore.map { case (n, _, v) => n -> v }.toMap,
-      versionsBefore.map { case (n, d, _) =>
-        n -> GraftStore.incarnationOf(d) }.toMap)
+    updateSources(g, id, rec1, sources,
+      versionsBefore.map { case (n, _, v) => n -> v }.toMap)
     (wmV, "full")
   }
 
@@ -984,7 +979,7 @@ object GraftMaterializedViews {
       spark.readStream.table(addr)
         .select(col(GraftStore.ChangeVersionCol))
     }
-    // Trigger legs: the watermark table's changelog PLUS (r16) every
+    // Trigger legs: the watermark table's changelog PLUS every
     // DIM's. A join MV watching only its fact left a dim-only commit
     // stale until the next fact commit — on a quiet fact, indefinitely.
     // The dim legs are trigger-only like the fact leg (pruned to the
@@ -1001,7 +996,7 @@ object GraftMaterializedViews {
         // maintainStream) surfaces as a conflict through the state pin;
         // the LOSER here retries with bounded backoff — whatever the
         // winner folded, the retry's refresh no-ops past. Exhausting the
-        // retries RETHROWS (the r15-advised fix: swallowing the final
+        // retries RETHROWS (swallowing the final
         // conflict would commit this batch's offsets with the fold not
         // done, and a quiet source would leave the MV stale indefinitely
         // despite the always-fresh contract) — the failed batch's offsets
@@ -1035,9 +1030,19 @@ object GraftMaterializedViews {
     }
   }
 
+  /** Whether source `n` at `d` is still the table incarnation `rec` was
+    * refreshed against. A source with no recorded incarnation counts as
+    * stale: [[updateSources]] records versions and incarnations together,
+    * so a missing entry means no refresh ever measured this source. */
+  private def sameIncarnation(rec: Record, n: String, d: String): Boolean =
+    rec.incarnations.get(n).exists(GraftStore.storedIncarnation(d).contains)
+
+  /** Record the refreshed-through `versions` of `sources` (name → dir)
+    * together with each source's incarnation. */
   private def updateSources(g: GraftCatalog, id: Identifier, rec: Record,
-      sources: Map[String, Long],
-      incarnations: Map[String, String]): Unit = {
+      sources: Seq[(String, String)], versions: Map[String, Long]): Unit = {
+    val incarnations = sources.flatMap { case (n, d) =>
+      GraftStore.storedIncarnation(d).map(n -> _) }.toMap
     // a refresh racing DROP MATERIALIZED VIEW must not resurrect the
     // deleted definition from its in-memory copy — skip the metadata
     // update when the record is gone (the residual exists→write window
@@ -1045,7 +1050,7 @@ object GraftMaterializedViews {
     // only costs an extra recompute; a resurrected record is a ghost)
     val p = g.mvPath(id)
     if (Files.exists(p))
-      writeRecord(p, rec.copy(sources = sources,
+      writeRecord(p, rec.copy(sources = versions,
         incarnations = incarnations), createNew = false)
   }
 
@@ -1064,10 +1069,8 @@ object GraftMaterializedViews {
     val wmName = watermarkSource(sources, shape).map(_._1)
     sources.map { case (n, d) =>
       val cur = GraftStore.currentVersion(d)
-      val sameIncarnation =
-        rec.incarnations.get(n).forall(_ == GraftStore.incarnationOf(d))
       val refreshed =
-        if (!sameIncarnation) None // a recreated table: watermark void
+        if (!sameIncarnation(rec, n, d)) None // recreated: watermark void
         else if (wmName.contains(n) && GraftStore.exists(stateDir))
           GraftStore.lastTxnVersion(stateDir, rec.txnApp)
             .filter(_ <= cur) // a regressed lane is not a real watermark

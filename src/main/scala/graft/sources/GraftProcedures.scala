@@ -211,7 +211,7 @@ object GraftProcedures {
         threshold: Any, action: String) =
       new GenericInternalRow(Array[Any](UTF8String.fromString(signal),
         triggered, observed, threshold, UTF8String.fromString(action)))
-    // slot fragmentation → optimize (slot-scoped since r13)
+    // slot fragmentation → optimize (slot-scoped)
     val fragmented = GraftStore.slotFileCounts(dir, cur)
       .count(_._2 > maxFilesPerSlot).toLong
     // merge-on-read delete-cap pressure → optimize folds the slices; the
@@ -225,9 +225,8 @@ object GraftProcedures {
       case None => (true, null) // never analyzed: the planner is blind
       case Some((_, arows, _)) =>
         val fresh = GraftStore.freshTableColStats(dir, cur).nonEmpty
-        val pct: Any = (arows, curRows) match {
-          case (Some(a), Some(c)) if a > 0 =>
-            math.abs(c - a) * 100L / a
+        val pct: Any = curRows match {
+          case Some(c) if arows > 0 => math.abs(c - arows) * 100L / arows
           case _ => null
         }
         (!fresh, pct)

@@ -25,15 +25,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Mechanics: every commit writes `_stats` into its version dir — one line
   * per (file, top-level primitive column) with min/max/nullCount read from
-  * the parquet FOOTERS of the NEW files (metadata-only, cost ∝ files
-  * written); hard-link carried files re-use their entries from the
-  * previous version's manifest verbatim (same relative path), so manifest
-  * cost tracks the commit, not the table. The scan side
-  * ([[org.apache.spark.sql.GraftRenamingScan]]) drops whole files whose
-  * stats PROVE no row can satisfy the pushed conjuncts. Absent entries —
-  * legacy versions, unsupported physical types (INT96, decimals, nested) —
-  * simply keep their files: pruning only ever narrows to a correct
-  * superset.
+  * the parquet FOOTERS of the files that version dir holds (metadata-only,
+  * cost ∝ files written); carried files keep their entries in their owner
+  * versions' manifests, so manifest cost tracks the commit, not the table.
+  * The scan side ([[org.apache.spark.sql.GraftRenamingScan]]) drops whole
+  * files whose stats PROVE no row can satisfy the pushed conjuncts. Absent
+  * entries — unreadable footers, unsupported physical types (INT96,
+  * decimals, nested) — simply keep their files: pruning only ever narrows
+  * to a correct superset.
   *
   * Values are stored by PHYSICAL column name (files never rename) in a
   * line format with base64-encoded endpoints, so no JSON machinery and no
@@ -62,12 +61,10 @@ object GraftStats {
 
   // ---------------------------------------------------------------- write
 
-  /** Write `buildDir/_stats` covering every data file under the build dir:
-    * entries for files also present in `prevVersionDir`'s manifest are
-    * copied (hard-linked carry-over), new files get their footers read. */
-  def writeManifest(buildDir: String, prevVersionDir: Option[String]): Unit = {
-    val prev: Map[String, FileStats] =
-      prevVersionDir.map(readManifest).getOrElse(Map.empty)
+  /** Footer stats of every data file under a build dir — what a commit
+    * persists for the files it wrote. An unreadable footer yields no
+    * entry (its file is then never skipped). */
+  def footerManifest(buildDir: String): Map[String, FileStats] = {
     val root = Paths.get(buildDir)
     val files = dataFiles(root)
     val conf = new Configuration()
@@ -78,33 +75,24 @@ object GraftStats {
     // load, rebucket) fans them out over a small pool instead of paying
     // per-file latency serially (a real object store would batch these
     // into a task-side job; locally the pool is plenty)
-    val newFiles = files.filterNot(prev.contains)
-    val fresh: Map[String, FileStats] =
-      if (newFiles.size <= 4) newFiles.map(r => r -> footer(r)).toMap
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, newFiles.size))
-        try newFiles
-          .map(r => r -> pool.submit({ () => footer(r) }: java.util.concurrent.Callable[FileStats]))
-          .map { case (r, f) =>
-            r -> (try f.get() catch { case _: Exception => Map.empty[String, ColStats] })
-          }.toMap
-        finally pool.shutdown()
-      }
-    val sb = new StringBuilder
-    files.foreach { rel =>
-      prev.getOrElse(rel, fresh.getOrElse(rel, Map.empty)).foreach {
-        case (col, cs) => sb.append(encodeLine(rel, col, cs)).append('\n')
-      }
+    if (files.size <= 4) files.map(r => r -> footer(r)).toMap
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(8, files.size))
+      try files
+        .map(r => r -> pool.submit({ () => footer(r) }: java.util.concurrent.Callable[FileStats]))
+        .map { case (r, f) =>
+          r -> (try f.get() catch { case _: Exception => Map.empty[String, ColStats] })
+        }.toMap
+      finally pool.shutdown()
     }
-    Files.write(root.resolve(ManifestName),
-      sb.toString.getBytes(StandardCharsets.UTF_8))
   }
 
-  /** Write a manifest from PRE-AGGREGATED entries (clone/RTAS
-    * materialization: the copied files' stats are already in the source
-    * owners' manifests — no footer re-reads). */
-  def writeManifestEntries(buildDir: String,
+  /** Write `buildDir/_stats` from per-file entries: a commit's own
+    * [[footerManifest]], or — for a materialized copy (clone/RTAS) — the
+    * entries already in the source owners' manifests (no footer
+    * re-reads). */
+  def writeManifest(buildDir: String,
       entries: Map[String, FileStats]): Unit = {
     val sb = new StringBuilder
     entries.toSeq.sortBy(_._1).foreach { case (rel, fs) =>
@@ -139,7 +127,7 @@ object GraftStats {
   }
 
   /** Footer statistics of one parquet file (empty on read failure) — the
-    * same aggregation [[writeManifest]] persists, for callers that need
+    * same aggregation [[footerManifest]] collects, for callers that need
     * stats of files OUTSIDE a version manifest (e.g. classifying a
     * changelog slice as insert-only from its `change_op` min/max). */
   def readFileStats(file: Path): FileStats =
@@ -325,8 +313,8 @@ object GraftStats {
       enc(cs.kind, cs.min), enc(cs.kind, cs.max)).mkString("\t")
 
   /** Exact row count of a version from its manifest — every data file
-    * covered with a known per-file rowCount — or None (legacy version,
-    * or a file whose footer read failed). Metadata-only; this is the
+    * covered with a known per-file rowCount — or None (a file whose
+    * footer read failed, or a missing manifest). Metadata-only; this is the
     * `numRows` leg of the scan's `estimateStatistics`, so Spark's
     * join-size estimation sees an exact count instead of guessing from
     * compressed bytes. */
@@ -341,8 +329,7 @@ object GraftStats {
     if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten.sum)
   }
 
-  /** Read a version dir's manifest; empty when absent (legacy version —
-    * nothing skips). */
+  /** Read a version dir's manifest; empty when absent (nothing skips). */
   def readManifest(versionDir: String): Map[String, FileStats] = {
     val p = Paths.get(versionDir, ManifestName)
     if (!Files.exists(p)) return Map.empty
@@ -405,11 +392,9 @@ object GraftStats {
     * CURRENT snapshot's manifest row count
     * ([[GraftStore.freshTableColStats]]). */
   def writeTableColStats(dir: String, version: Long,
-      analyzedRows: Option[Long], stats: Map[String, TableColStat]): Unit = {
+      analyzedRows: Long, stats: Map[String, TableColStat]): Unit = {
     val sb = new StringBuilder
-    sb.append(version)
-    analyzedRows.foreach(r => sb.append('\t').append(r))
-    sb.append('\n')
+    sb.append(version).append('\t').append(analyzedRows).append('\n')
     stats.toSeq.sortBy(_._1).foreach { case (c, s) =>
       sb.append(Seq(c, s.kind, s.ndv.toString, s.nullCount.toString,
         enc(s.kind, s.min), enc(s.kind, s.max), encHist(s.histogram))
@@ -422,25 +407,18 @@ object GraftStats {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** (analyzed version, analyzed row count if recorded — pre-r13 files
-    * carry none, per-PHYSICAL-column stats). */
+  /** (analyzed version, analyzed row count, per-PHYSICAL-column stats). */
   def readTableColStatsFull(dir: String)
-      : Option[(Long, Option[Long], Map[String, TableColStat])] = {
+      : Option[(Long, Long, Map[String, TableColStat])] = {
     val p = Paths.get(dir, ColStatsName)
     if (!Files.exists(p)) return None
     val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
       .filter(_.nonEmpty)
     if (lines.isEmpty) return None
     try {
-      val header = lines.head.trim.split('\t')
-      val v = header(0).toLong
-      val arows = if (header.length > 1) header(1).toLongOption else None
+      val Array(v, arows) = lines.head.trim.split('\t').map(_.toLong)
       val m = lines.tail.flatMap { line =>
         line.split('\t') match {
-          case Array(c, kind, ndv, nulls, mn, mx) =>
-            try Some(c -> TableColStat(kind, ndv.toLong, nulls.toLong,
-              dec(kind, mn), dec(kind, mx)))
-            catch { case _: Exception => None }
           case Array(c, kind, ndv, nulls, mn, mx, hist) =>
             try Some(c -> TableColStat(kind, ndv.toLong, nulls.toLong,
               dec(kind, mn), dec(kind, mx), decHist(hist)))

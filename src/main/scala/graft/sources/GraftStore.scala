@@ -60,8 +60,13 @@ final case class GraftTableMeta(schema: StructType, keyCols: Seq[String],
   * {{{
   *   <dir>/_meta.json            schema + key columns + bucket count
   *   <dir>/_current              atomic pointer: current version number
+  *   <dir>/_incarnation          identity stamp, written at creation
   *   <dir>/v0000000007/          one immutable directory per version:
-  *     _bucketmap                  bucket → owner versions (the manifest)
+  *     _bucketmap                  slot → owner versions (the manifest)
+  *     _fileseq                    own file → write version, size
+  *     _stats                      own files' zone maps
+  *     _buckets, _committed_at     bucket fan-out, commit instant
+  *     _partspec                   partition spec (partitioned tables)
   *     gbucket=<k>/part-*.parquet  ONLY the files THIS commit wrote
   *   <dir>/_staging/<queryId>/   delta-write staging frames
   * }}}
@@ -70,9 +75,9 @@ final case class GraftTableMeta(schema: StructType, keyCols: Seq[String],
   * rewrites the buckets its keys hash into. Untouched buckets carry by
   * MANIFEST REFERENCE — the new version's `_bucketmap` names, per bucket,
   * the versions whose dirs physically hold its live files — so commit
-  * metadata costs O(changed files + buckets), never O(table files) (the
-  * pre-r12 layout hard-linked every untouched file forward; at ~1M files
-  * that driver-side pass was the commit bottleneck). A data file lives
+  * metadata costs O(changed files + buckets), never O(table files)
+  * (hard-linking every untouched file forward would make that driver-side
+  * pass the commit bottleneck at ~1M files). A data file lives
   * forever in the version dir that wrote it, which is also what makes its
   * write-version derivable from its path. The version pointer flips last
   * with an atomic rename, so readers resolve a complete version or the
@@ -242,9 +247,9 @@ object GraftStore {
   // BY table (partition above bucket — the standard fact-table layout, so
   // date-grained retention and coarse pruning compose with the key-hash
   // fan-out). Untouched slots are carried by rewriting one manifest line,
-  // not by re-linking every file the way pre-r12 commits did — at 100 TB /
-  // ~1M files the per-commit hard-link pass was the store's last O(table)
-  // driver-side cost. Readers resolve a snapshot to (slot → owner dirs)
+  // not by re-linking every file — at 100 TB / ~1M files a per-commit
+  // hard-link pass would be an O(table) driver-side cost. Readers resolve
+  // a snapshot to (slot → owner dirs)
   // and scan those paths directly; expireVersions keeps an old version
   // dir's referenced slots alive (marked `_expired`, excluded from the
   // version listing) until no retained snapshot references them.
@@ -282,7 +287,7 @@ object GraftStore {
     partitionExprFor(meta, meta.partition)
 
   /** [[partitionExpr]] under an EXPLICIT spec — writers derive the spec
-    * from the layout they commit into ([[layoutPartSpec]]), so a
+    * from the layout they commit into ([[versionPartSpec]]), so a
     * `set_partition_spec` change re-grains NEW commits while old owner
     * dirs keep the ordinals they were written with. */
   def partitionExprFor(meta: GraftTableMeta,
@@ -337,7 +342,7 @@ object GraftStore {
     meta.bloomCols
       .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
 
-  private[sources] def writeBucketMap(buildDir: String,
+  private def writeBucketMap(buildDir: String,
       map: Map[String, Seq[Long]]): Unit = {
     val sb = new StringBuilder
     map.toSeq.sortBy(_._1).foreach { case (slot, vs) =>
@@ -363,14 +368,13 @@ object GraftStore {
     }.toSeq)
   }
 
-  /** Per-slot owner versions of version `v` (ascending). Versions
-    * predating the manifest format are self-contained (hard-linked), so
-    * the fallback is the physical listing owning itself. */
-  def ownersOf(dir: String, v: Long): Map[String, Seq[Long]] = {
-    val p = Paths.get(versionDir(dir, v), BucketMapName)
-    if (!Files.exists(p))
-      return localSlots(versionDir(dir, v)).map(s => s -> Seq(v)).toMap
-    Files.readAllLines(p, java.nio.charset.StandardCharsets.UTF_8).asScala
+  /** Per-slot owner versions of version `v` (ascending). */
+  def ownersOf(dir: String, v: Long): Map[String, Seq[Long]] =
+    readBucketMap(versionDir(dir, v))
+
+  private def readBucketMap(vdir: String): Map[String, Seq[Long]] =
+    Files.readAllLines(Paths.get(vdir, BucketMapName),
+        java.nio.charset.StandardCharsets.UTF_8).asScala
       .filter(_.nonEmpty).flatMap { line =>
         line.split('\t') match {
           case Array(slot, vs) =>
@@ -379,7 +383,6 @@ object GraftStore {
           case _ => None
         }
       }.toMap
-  }
 
   /** Physical slot directories of a snapshot: slot → the owner versions'
     * dirs (existing ones only), optionally restricted to a bucket set —
@@ -441,8 +444,7 @@ object GraftStore {
   }
 
   /** One live file of a snapshot, with its zone-map manifest entry (from
-    * the owning version dir) when one exists. `size` is -1 when the owner
-    * manifest predates the size column AND the physical stat failed. */
+    * the owning version dir) when one exists. */
   final case class SnapshotFile(slot: String, rel: String, path: String,
       size: Long, stats: Option[GraftStats.FileStats]) {
     def rowCount: Option[Long] =
@@ -486,19 +488,8 @@ object GraftStore {
       d <- ds
       od = ownerDirOf(d, slot)
       man = manifests.getOrElseUpdate(od, GraftStats.readManifest(od))
-      fromSeq = ownerSlots(od).getOrElse(slot, Seq.empty)
-      entry <- if (fromSeq.nonEmpty && fromSeq.forall(_._2 >= 0))
-        fromSeq.map { case (rel, bytes) =>
-          SnapshotFile(slot, rel, s"$od/$rel", bytes, man.get(rel))
-        }
-      else
-        // fallback for owners predating the size column: one listing
-        listBucketFiles(d).map { f =>
-          val rel = s"$slot/${f.getFileName}"
-          val sz = try Files.size(f) catch { case _: Exception => -1L }
-          SnapshotFile(slot, rel, f.toString, sz, man.get(rel))
-        }
-    } yield entry
+      (rel, bytes) <- ownerSlots(od).getOrElse(slot, Seq.empty)
+    } yield SnapshotFile(slot, rel, s"$od/$rel", bytes, man.get(rel))
     if (snapshotFilesCache.size > 64) snapshotFilesCache.clear()
     if (cacheEpoch.get() == epoch0) snapshotFilesCache.put(key, computed)
     computed
@@ -816,12 +807,10 @@ object GraftStore {
     * table: [[rebucket]] changes it, and time travel must prune/SPJ old
     * versions under the count they were WRITTEN with — deriving buckets
     * from the current meta against an older layout would silently prune to
-    * the wrong files. Every commit stamps the marker; versions predating
-    * this feature fall back to `meta.buckets` (correct for them — they can
-    * only exist on tables that never rebucketed). A `_committed_at` stamp
-    * (epoch millis, written just before the pointer flip) rides along —
-    * the clock behind `TIMESTAMP AS OF`. */
-  private[sources] def writeBucketMarker(vdir: String, buckets: Int): Unit = {
+    * the wrong files. A `_committed_at` stamp (epoch millis, written just
+    * before the pointer flip) rides along — the clock behind
+    * `TIMESTAMP AS OF`. */
+  private def writeBucketMarker(vdir: String, buckets: Int): Unit = {
     Files.write(Paths.get(vdir, "_buckets"), buckets.toString.getBytes("UTF-8"))
     // `TIMESTAMP AS OF` resolution assumes commit stamps are MONOTONE per
     // table; with multiple Spark drivers on a shared filesystem (the
@@ -843,13 +832,10 @@ object GraftStore {
       stamp.toString.getBytes("UTF-8"))
   }
 
-  /** When version `v` committed (epoch millis); falls back to the version
-    * directory's mtime for pre-stamp versions. */
-  def committedAt(dir: String, v: Long): Long = {
-    val p = Paths.get(versionDir(dir, v), "_committed_at")
-    if (Files.exists(p)) new String(Files.readAllBytes(p), "UTF-8").trim.toLong
-    else Files.getLastModifiedTime(Paths.get(versionDir(dir, v))).toMillis
-  }
+  /** When version `v` committed (epoch millis). */
+  def committedAt(dir: String, v: Long): Long =
+    new String(Files.readAllBytes(Paths.get(versionDir(dir, v),
+      "_committed_at")), "UTF-8").trim.toLong
 
   /** Latest retained version committed at or before `tsMillis` —
     * `TIMESTAMP AS OF` resolution (commit stamps are monotone because
@@ -881,6 +867,7 @@ object GraftStore {
     // never a meta-less half-table squatting on the target name
     val tmp = s"$dstDir.clonebuild-${java.util.UUID.randomUUID()}"
     Files.createDirectories(Paths.get(tmp))
+    stampIncarnation(tmp) // a clone (or branch) is a new table identity
     // the clone's history STARTS AT the source's current version number
     // (not 0): carried file seqs and merge-on-read delete seqs are version
     // numbers, and a clone restarting at v0 would commit future deletes
@@ -896,11 +883,9 @@ object GraftStore {
     // fileseq so carried delete seqs stay meaningful.
     val linkedSeq = materializeInto(srcDir, cur, base)
     linkDvCarry(srcV, base, Set.empty)
-    writeBucketMap(base, localSlots(base).map(s => s -> Seq(cur)).toMap)
-    writeFileSeqEntries(base, linkedSeq)
-    GraftStats.writeManifestEntries(base, mergedManifest(srcDir, cur))
-    writeBucketMarker(base, layoutBuckets(srcDir, cur, meta))
-    writePartSpecMarker(base, layoutPartSpec(srcDir, cur, meta))
+    sealVersion(base, localSlots(base).map(s => s -> Seq(cur)).toMap,
+      linkedSeq, mergedManifest(srcDir, cur), versionBuckets(srcDir, cur),
+      versionPartSpec(srcDir, cur))
     Files.createDirectories(Paths.get(changesRoot(tmp)))
     writePointer(tmp, cur)
     writeMeta(tmp, meta)
@@ -975,13 +960,11 @@ object GraftStore {
       // link pass is O(new files) by construction
       materializeInto(stagedDir, sv, buildDir)
       linkDvCarry(svDir, buildDir, Set.empty) // staged DVs (none today) carry
-      writeBucketMap(buildDir,
-        localSlots(buildDir).map(s => s -> Seq(next)).toMap)
-      writeFileSeq(buildDir, None, next)
-      GraftStats.writeManifestEntries(buildDir,
-        mergedManifest(stagedDir, sv)) // reuse staged footers
-      writeBucketMarker(buildDir, layoutBuckets(stagedDir, sv, stagedMeta))
-      writePartSpecMarker(buildDir, layoutPartSpec(stagedDir, sv, stagedMeta))
+      sealVersion(buildDir,
+        localSlots(buildDir).map(s => s -> Seq(next)).toMap,
+        ownFileSeq(buildDir, next),
+        mergedManifest(stagedDir, sv), // reuse staged footers
+        versionBuckets(stagedDir, sv), versionPartSpec(stagedDir, sv))
       writeBoundaryMarker(buildDir) // snapshot boundary for CDC consumers
       // crash-safe meta swap: stamp the OLD meta + target version into
       // _meta_backup first. If this commit dies between the meta write
@@ -1016,9 +999,8 @@ object GraftStore {
 
   /** Stamp the partition spec a version's OWN dirs were written with —
     * the per-version layout marker partition-spec evolution reads (the
-    * `_buckets` pattern, mirrored). Only written for partitioned tables;
-    * readers fall back to the CREATE-time meta spec. */
-  private[sources] def writePartSpecMarker(vdir: String,
+    * `_buckets` pattern, mirrored). Only written for partitioned tables. */
+  private def writePartSpecMarker(vdir: String,
       spec: Option[(String, String)]): Unit =
     spec.foreach { case (fn, c) =>
       Files.write(Paths.get(vdir, "_partspec"),
@@ -1034,7 +1016,8 @@ object GraftStore {
   private val partSpecCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[(String, String)]]()
 
-  /** The partition spec version `v` was written with, if stamped. */
+  /** The partition spec version `v`'s OWN dirs were written with (None on
+    * an unpartitioned table). */
   def versionPartSpec(dir: String, v: Long): Option[(String, String)] = {
     val key = versionDir(dir, v)
     val hit = partSpecCache.get(key)
@@ -1053,13 +1036,6 @@ object GraftStore {
     computed
   }
 
-  /** The partition spec governing version `v`'s OWN dirs: its marker if
-    * stamped, else the CREATE-time meta spec (tables predating markers
-    * can only carry the original spec). */
-  def layoutPartSpec(dir: String, v: Long,
-      meta: GraftTableMeta): Option[(String, String)] =
-    versionPartSpec(dir, v).orElse(meta.partition)
-
   /** Distinct partition specs among the owner versions of snapshot `v` —
     * size 1 means era-uniform (partition pruning is sound under that one
     * spec); size > 1 means mixed grains (pruning derives nothing; the
@@ -1069,7 +1045,7 @@ object GraftStore {
       meta: GraftTableMeta): Seq[(String, String)] =
     if (meta.partition.isEmpty) Nil
     else ownersOf(dir, v).values.flatten.toSeq.distinct
-      .flatMap(o => layoutPartSpec(dir, o, meta)).distinct
+      .flatMap(o => versionPartSpec(dir, o)).distinct
 
   /** `CALL set_partition_spec(table, 'hours')`: change the partition
     * GRAIN for FUTURE commits as one metadata-only commit — no data file
@@ -1092,7 +1068,7 @@ object GraftStore {
       s"set_partition_spec supports time grains ${timeGrains.toSeq.sorted
         .mkString("/")}, got '$newFn'")
     val cur = currentVersion(dir)
-    val curSpec = layoutPartSpec(dir, cur, meta).get
+    val curSpec = versionPartSpec(dir, cur).get
     require(timeGrains.contains(curSpec._1),
       s"cannot evolve an identity-partitioned table's grain " +
         "(ordinal domains differ); use RTAS")
@@ -1109,12 +1085,9 @@ object GraftStore {
       deleteRecursively(Paths.get(buildDir))
       Files.createDirectories(Paths.get(buildDir))
       // pure metadata commit: carry the whole snapshot by reference
-      writeBucketMap(buildDir, ownersOf(dir, cur))
       linkDvCarry(versionDir(dir, cur), buildDir, Set.empty)
-      writeFileSeq(buildDir, None, next)
-      GraftStats.writeManifest(buildDir, None)
-      writeBucketMarker(buildDir, layoutBuckets(dir, cur, meta))
-      writePartSpecMarker(buildDir, Some((newFn, physCol)))
+      sealVersion(buildDir, ownersOf(dir, cur), Map.empty, Map.empty,
+        versionBuckets(dir, cur), Some((newFn, physCol)))
       verifyClaim(marker, token)
       publishVersion(buildDir, nextDir)
       writePointer(dir, next)
@@ -1122,19 +1095,13 @@ object GraftStore {
     } finally releaseClaim(marker, token)
   }
 
-  /** The bucket count version `v` was written with, if stamped. */
-  def versionBuckets(dir: String, v: Long): Option[Int] = {
-    val p = Paths.get(versionDir(dir, v), "_buckets")
-    if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p), "UTF-8").trim.toInt)
-  }
-
-  /** The fan-out of the CURRENT version's layout — what writers must
-    * bucket change batches by (not `meta.buckets`, which can lag the
-    * layout across a crashed [[rebucket]]'s meta-update/pointer-flip
-    * window). */
-  def layoutBuckets(dir: String, v: Long, meta: GraftTableMeta): Int =
-    versionBuckets(dir, v).getOrElse(meta.buckets)
+  /** The bucket count version `v` was written with — what writers must
+    * bucket change batches by when they commit on top of `v` (not
+    * `meta.buckets`, which can lag the layout across a crashed
+    * [[rebucket]]'s meta-update/pointer-flip window). */
+  def versionBuckets(dir: String, v: Long): Int =
+    new String(Files.readAllBytes(Paths.get(versionDir(dir, v), "_buckets")),
+      "UTF-8").trim.toInt
 
   // --------------------------------------------------------- merge-on-read
   //
@@ -1374,34 +1341,21 @@ object GraftStore {
 
   // ------------------------------------------------- per-file sequence map
 
-  /** Per-version manifest mapping each data file's relative path to the
-    * version that WROTE it (`rel\tseq` lines) — the read side's evidence
-    * for "is this file older than that delete". Hard-linked carry-over
-    * files keep their original seq; files carried from PRE-manifest
-    * versions get 0 (older than every delete slice, which is exactly what
-    * legacy files are). */
+  /** Per-version manifest mapping each data file the version dir holds to
+    * the version that WROTE it and its size (`rel\tseq\tbytes` lines) —
+    * the read side's evidence for "is this file older than that delete",
+    * and what lets scans plan from the manifest with zero filesystem
+    * listing (see snapshotFileEntries). Hard-linked materialized files
+    * (clone) keep their original seq. */
   val FileSeqName = "_fileseq"
 
-  private[sources] def writeFileSeq(buildDir: String,
-      prevVersionDir: Option[String], version: Long): Unit = {
-    val prev = prevVersionDir.map(readFileSeq).getOrElse(Map.empty[String, Long])
-    val prevExists: String => Boolean = prevVersionDir match {
-      case Some(pd) => rel => Files.exists(Paths.get(pd, rel))
-      case None => _ => false
-    }
+  /** A size that cannot be read fails the seal, and with it the commit:
+    * a recorded size is what scans plan splits from. */
+  private def writeFileSeq(buildDir: String,
+      entries: Map[String, Long]): Unit = {
     val sb = new StringBuilder
-    GraftStats.listDataFiles(buildDir).foreach { rel =>
-      val seq = prev.getOrElse(rel,
-        // present in the previous version dir but absent from its manifest
-        // = carried from a pre-manifest commit: stamp 0, NOT `version` —
-        // stamping a carried legacy file as new would stop every same-
-        // version delete from applying to it
-        if (prevExists(rel)) 0L else version)
-      // third column: file SIZE — what lets scans plan from the manifest
-      // with zero filesystem listing (see snapshotFileEntries)
-      val bytes =
-        try Files.size(Paths.get(buildDir, rel))
-        catch { case _: Exception => -1L }
+    entries.toSeq.sorted.foreach { case (rel, seq) =>
+      val bytes = Files.size(Paths.get(buildDir, rel))
       sb.append(rel).append('\t').append(seq).append('\t').append(bytes)
         .append('\n')
     }
@@ -1409,21 +1363,9 @@ object GraftStore {
       sb.toString.getBytes("UTF-8"))
   }
 
-  /** Write an EXPLICIT rel → seq map (clone: linked files keep their
-    * original write versions). */
-  private[sources] def writeFileSeqEntries(buildDir: String,
-      entries: Map[String, Long]): Unit = {
-    val sb = new StringBuilder
-    entries.toSeq.sorted.foreach { case (rel, s) =>
-      val bytes =
-        try Files.size(Paths.get(buildDir, rel))
-        catch { case _: Exception => -1L }
-      sb.append(rel).append('\t').append(s).append('\t').append(bytes)
-        .append('\n')
-    }
-    Files.write(Paths.get(buildDir, FileSeqName),
-      sb.toString.getBytes("UTF-8"))
-  }
+  /** Every data file of a build dir stamped with the committing version. */
+  private def ownFileSeq(buildDir: String, version: Long): Map[String, Long] =
+    GraftStats.listDataFiles(buildDir).map(_ -> version).toMap
 
   /** Zone-map entries of every live file of a snapshot, merged across its
     * owner versions' manifests — what a MATERIALIZED copy of the snapshot
@@ -1436,8 +1378,7 @@ object GraftStore {
   def readFileSeq(vdir: String): Map[String, Long] =
     readFileSeqFull(vdir).map { case (rel, (seq, _)) => rel -> seq }
 
-  /** rel → (write seq, size bytes or -1 when unrecorded — pre-r12 lines
-    * had no size column). */
+  /** rel → (write seq, size bytes). */
   private[sources] def readFileSeqFull(vdir: String)
       : Map[String, (Long, Long)] = {
     val p = Paths.get(vdir, FileSeqName)
@@ -1445,15 +1386,30 @@ object GraftStore {
     Files.readAllLines(p, java.nio.charset.StandardCharsets.UTF_8).asScala
       .filter(_.nonEmpty).flatMap { line =>
         line.split('\t') match {
-          case Array(rel, seq) =>
-            try Some(rel -> (seq.toLong, -1L))
-            catch { case _: Exception => None }
           case Array(rel, seq, bytes) =>
             try Some(rel -> (seq.toLong, bytes.toLong))
             catch { case _: Exception => None }
           case _ => None
         }
       }.toMap
+  }
+
+  /** Seal a build dir as a complete version. Every version directory —
+    * v0 of a CREATE, a clone's base, every commit and maintenance
+    * publish — carries the same file set, written here and nowhere else:
+    * `_bucketmap` (slot → owner versions), `_fileseq` (the dir's own
+    * files with write version and size), `_stats` (their zone maps),
+    * `_buckets` + `_committed_at`, and `_partspec` on a partitioned
+    * table. Readers therefore never fall back on a listing, the meta or
+    * a directory mtime. */
+  private def sealVersion(buildDir: String, owners: Map[String, Seq[Long]],
+      fileSeq: Map[String, Long], stats: Map[String, GraftStats.FileStats],
+      buckets: Int, partSpec: Option[(String, String)]): Unit = {
+    writeBucketMap(buildDir, owners)
+    writeFileSeq(buildDir, fileSeq)
+    GraftStats.writeManifest(buildDir, stats)
+    writeBucketMarker(buildDir, buckets)
+    writePartSpecMarker(buildDir, partSpec)
   }
 
   /** Publish a writer-private build directory under its final version
@@ -1480,53 +1436,38 @@ object GraftStore {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Create an empty table: meta, empty v0, empty changelog, pointer. */
+  /** Create an empty table: meta, identity stamp, empty v0, empty
+    * changelog, pointer. */
   def create(dir: String, meta: GraftTableMeta): Unit = {
     invalidateDvCache(dir) // a recreated path is a NEW identity
     writeMeta(dir, meta)
-    // a fresh identity stamp per CREATE: version numbers restart at 0
-    // here, so version-based watermarks alone cannot distinguish this
-    // table from a dropped predecessor at the same path/name — consumers
-    // that cache cross-refresh state (materialized views) compare this
-    // instead of trusting version arithmetic across a drop+recreate
-    Files.write(Paths.get(dir, IncarnationName),
-      java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-    Files.createDirectories(Paths.get(versionDir(dir, 0L)))
-    writeBucketMap(versionDir(dir, 0L), Map.empty)
-    writeBucketMarker(versionDir(dir, 0L), meta.buckets)
+    stampIncarnation(dir)
+    val v0 = versionDir(dir, 0L)
+    Files.createDirectories(Paths.get(v0))
+    sealVersion(v0, Map.empty, Map.empty, Map.empty, meta.buckets,
+      meta.partition)
     Files.createDirectories(Paths.get(changesRoot(dir)))
     writePointer(dir, 0L)
   }
 
   private[sources] val IncarnationName = "_incarnation"
 
-  /** The table's incarnation identity — a UUID stamped at CREATE. Tables
-    * predating the stamp (or built through paths that assemble their dir
-    * file-by-file, e.g. clones) adopt one lazily and race-safely: the
-    * CREATE_NEW loser reads the winner's. The identity answers exactly
-    * one question for cross-refresh consumers: "is this the same table
-    * my recorded watermark was measured against?" — version numbers
-    * cannot, because a drop+recreate restarts them and a recreated table
-    * can CATCH UP to a stale watermark (the r15-advised MV staleness
-    * hole). */
-  def incarnationOf(dir: String): String =
-    storedIncarnation(dir).getOrElse {
-      val p = Paths.get(dir, IncarnationName)
-      val fresh = java.util.UUID.randomUUID().toString
-      try {
-        Files.write(p, fresh.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        fresh
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          new String(Files.readAllBytes(p), "UTF-8").trim
-      }
-    }
+  /** A fresh identity stamp for a table directory, written where the
+    * directory is created (CREATE, and a clone's or branch's build dir)
+    * and never afterwards: version numbers restart at 0 on a recreate,
+    * so version-based watermarks alone cannot distinguish a table from a
+    * dropped predecessor at the same path/name — consumers that cache
+    * cross-refresh state (materialized views) compare this instead of
+    * trusting version arithmetic across a drop+recreate, and a recreated
+    * table can CATCH UP to a stale watermark. */
+  private def stampIncarnation(dir: String): Unit =
+    Files.write(Paths.get(dir, IncarnationName),
+      java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
 
-  /** The stamped incarnation, read-only: None when the directory or its
-    * stamp is missing. Resolvers use this form — they must never write
-    * into a tree they do not own. */
-  private def storedIncarnation(dir: String): Option[String] =
+  /** The table's incarnation identity, read-only: None when the directory
+    * or its stamp is missing. No reader or resolver ever writes one — they
+    * must never write into a tree they do not own. */
+  def storedIncarnation(dir: String): Option[String] =
     try Some(new String(Files.readAllBytes(Paths.get(dir, IncarnationName)),
       "UTF-8").trim)
     catch { case _: java.nio.file.NoSuchFileException => None }
@@ -1601,9 +1542,8 @@ object GraftStore {
       val bd = s"$nd.build-$token"
       deleteRecursively(Paths.get(bd))
       Files.createDirectories(Paths.get(bd))
-      writeBucketMap(bd, Map.empty) // manifest-format marker: no data
-      writeBucketMarker(bd, layoutBuckets(dir, cur, readMeta(dir)))
-      writePartSpecMarker(bd, layoutPartSpec(dir, cur, readMeta(dir)))
+      sealVersion(bd, Map.empty, Map.empty, Map.empty,
+        versionBuckets(dir, cur), versionPartSpec(dir, cur))
       writeBoundaryMarker(bd) // truncation = snapshot boundary for CDC
       verifyClaim(marker, token)
       publishVersion(bd, nd)
@@ -1826,26 +1766,13 @@ object GraftStore {
     * above the fork are branch-era commits adopted alongside and keep
     * their numbers. */
   private def rewriteOwnerRefs(buildDir: String, fork: Long,
-      mainOwners: Map[String, Seq[Long]]): Unit = {
-    val p = Paths.get(buildDir, BucketMapName)
-    if (!Files.exists(p)) return // pre-manifest self-contained dir
-    val rewritten = Files.readAllLines(p,
-        java.nio.charset.StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).flatMap { line =>
-        line.split('	') match {
-          case Array(slot, vs) =>
-            try Some(slot -> vs.split(',').map(_.toLong).toSeq)
-            catch { case _: Exception => None }
-          case _ => None
-        }
-      }.map { case (slot, os) =>
-        slot -> os.flatMap { o =>
-          if (o > fork) Seq(o)
-          else mainOwners.getOrElse(slot, Seq(o))
-        }.distinct.sorted
-      }.toMap
-    writeBucketMap(buildDir, rewritten)
-  }
+      mainOwners: Map[String, Seq[Long]]): Unit =
+    writeBucketMap(buildDir, readBucketMap(buildDir).map { case (slot, os) =>
+      slot -> os.flatMap { o =>
+        if (o > fork) Seq(o)
+        else mainOwners.getOrElse(slot, Seq(o))
+      }.distinct.sorted
+    })
 
   /** Publish branch `name` into main — a TRUE fast-forward: requires main
     * still at the fork point (loud conflict otherwise), adopts every
@@ -2194,17 +2121,21 @@ object GraftStore {
       java.nio.file.StandardOpenOption.CREATE_NEW)
   }
 
-  /** Incarnation is None for manifests written before the field existed
-    * (committed manifests are retained indefinitely). */
+  /** Exactly five fields per line: any other count is a manifest this
+    * build did not write, and it fails loudly rather than being read by
+    * position. */
   private def readGroupManifest(manifest: Path)
-      : Seq[(String, String, Long, Long, Option[String])] =
+      : Seq[(String, String, Long, Long, String)] =
     new String(Files.readAllBytes(manifest), "UTF-8").split("\n").toSeq
       .filter(_.nonEmpty).map { line =>
-        val parts = line.split("\t")
-        (java.net.URLDecoder.decode(parts(0), "UTF-8"),
-          java.net.URLDecoder.decode(parts(1), "UTF-8"),
-          parts(2).toLong, parts(3).toLong,
-          parts.lift(4).map(java.net.URLDecoder.decode(_, "UTF-8")))
+        val dec = (f: String) => java.net.URLDecoder.decode(f, "UTF-8")
+        line.split("\t", -1) match {
+          case Array(d, b, f, h, inc) => (dec(d), dec(b), f.toLong, h.toLong,
+            dec(inc))
+          case parts => throw new IllegalStateException(
+            s"group manifest $manifest has a line with ${parts.length} " +
+              "fields, expected 5")
+        }
       }
 
   /** Publish branch `name` on EVERY listed table atomically — all flip
@@ -2297,7 +2228,9 @@ object GraftStore {
           preps += ((dir, bd, name, fork, bHead, marker))
         }
         writeGroupManifest(manifest, preps.toSeq.map {
-          case (d, bd, b, f, h, _) => (d, b, f, h, incarnationOf(bd)) })
+          case (d, bd, b, f, h, _) => (d, b, f, h,
+            storedIncarnation(bd).getOrElse(throw new IllegalStateException(
+              s"branch '$b' of $d has no ${IncarnationName} stamp"))) })
         preps.foreach { case (_, _, _, _, _, marker) =>
           try Files.write(marker,
             manifest.toAbsolutePath.toString.getBytes("UTF-8"),
@@ -2384,8 +2317,7 @@ object GraftStore {
     // the next publish — that branch is not ours to drop. The stamp is
     // read, never written: a missing directory or stamp (a racing
     // resolver mid-drop, or a tree we cannot identify) means "not ours".
-    // A legacy manifest (no incarnation field) keeps the by-name behavior.
-    if (inc.forall(storedIncarnation(branchDir(dir, branch)).contains) &&
+    if (storedIncarnation(branchDir(dir, branch)).contains(inc) &&
         branchExists(dir, branch))
       try dropBranch(dir, branch)
       catch { // raced: another resolver consumed it first
@@ -2732,10 +2664,7 @@ object GraftStore {
   def versionStats(dir: String, v: Long): (Int, Long, Long) = {
     if (!Files.isDirectory(Paths.get(versionDir(dir, v)))) return (0, 0L, 0L)
     val entries = snapshotFileEntries(dir, v)
-    val bytes = entries.map { e =>
-      if (e.size >= 0) e.size
-      else try Files.size(Paths.get(e.path)) catch { case _: Exception => 0L }
-    }.sum
+    val bytes = entries.map(_.size).sum
     (entries.map(e => slotBucket(e.slot)).distinct.size,
       entries.size.toLong, bytes)
   }
@@ -2800,7 +2729,8 @@ object GraftStore {
             .join(broadcast(seqDf), Seq("__rel"), "left_outer")
             .join(broadcast(dvAgg), physKeys, "left_outer")
             // keep unless a delete NEWER than the row's file exists for
-            // its key; an unmapped file (legacy carry) counts as seq 0
+            // its key; an unmapped file counts as seq 0 (older than every
+            // delete)
             .filter(col("__dvseq").isNull ||
               col("__dvseq") <= coalesce(col("__fseq"), lit(0L)))
             .select(withBucket.fieldNames.toIndexedSeq.map(col): _*)
@@ -2858,8 +2788,8 @@ object GraftStore {
     * version commit: the new data is written, no prior bucket is linked,
     * and the pointer flips once — readers see the old content or the new,
     * never an empty table in between, and a crash leaves the old version
-    * current (the two-commit truncate+append shape had both holes, r7
-    * ADVICE). Like TRUNCATE, an overwrite writes NO changelog slice — a
+    * current (a two-commit truncate+append would have both holes). Like
+    * TRUNCATE, an overwrite writes NO changelog slice — a
     * changelog never spans a truncation, and the MISSING slice is the
     * detectable boundary (`hasChangelog(v) == false`): a CDC consumer
     * folding past it would silently resurrect overwritten rows, so it
@@ -2941,7 +2871,7 @@ object GraftStore {
         // before-images, while a delete batch caches only its key
         // columns (nulls compress to ~nothing) — so also bound
         // rows × the base schema's estimated row width, the size the
-        // before-image broadcast can actually reach (r16 ADVICE).
+        // before-image broadcast can actually reach.
         val cachedBytes = ch.queryExecution.optimizedPlan.stats.sizeInBytes
         val rowWidth = meta.schema.fields.map(_.dataType.defaultSize).sum
         val maxBytes = commitBroadcastMaxBytes(spark)
@@ -2971,7 +2901,7 @@ object GraftStore {
       while (committed < 0) {
         val cur = currentVersion(dir)
         val next = cur + 1
-        bucketFor(layoutBuckets(dir, cur, meta))
+        bucketFor(versionBuckets(dir, cur))
         // a row-level delta pins its READ SNAPSHOT when its target scan is
         // planned; if the table has moved since — anywhere in the long
         // scan-to-commit window, not just inside this loop — the delta is
@@ -3092,7 +3022,7 @@ object GraftStore {
       // the current layout declares (set_partition_spec evolves it), and
       // the commit stamps its own marker so readers interpret its dirs
       // under the era they were written with
-      val curPartSpec = layoutPartSpec(dir, cur, meta)
+      val curPartSpec = versionPartSpec(dir, cur)
 
       // Changelog leg: persist the change batch itself, one immutable dir
       // per version. Written to a dot-prefixed STAGING dir now and renamed
@@ -3324,33 +3254,27 @@ object GraftStore {
             (if (local.contains(slot)) Seq(next) else Seq.empty)
         if (owners.isEmpty) None else Some(slot -> owners)
       }.toMap
-      writeBucketMap(buildDir, newMap)
       // carry still-live delete slices for buckets NOT rewritten this
       // commit (a rewrite APPLIES its buckets' deletes; an overwrite
       // starts from nothing). Physical links stay correct here: the live
       // delete set is cap-bounded, so this is O(changed rows), not
       // O(table).
       if (!overwrite) linkDvCarry(curDir, buildDir, rewritten)
-      // per-file write-version manifest for the LOCAL files (all stamped
-      // `next` — a file now lives forever in the version dir that wrote
-      // it); carried files keep their seqs in their own owners' manifests
-      writeFileSeq(buildDir, None, next)
       // A remnant final-named change dir for `next` can only predate this
       // commit (publication always happens after the flip, so a live one
       // would imply pointer >= next). Clear it BEFORE the flip — after the
       // flip a dir under the final name may be our own batch, published by
       // a concurrent reader's recoverChangelog the instant the pointer
-      // moved, and deleting it then would destroy the committed changelog
-      // (r7 ADVICE race).
+      // moved, and deleting it then would destroy the committed changelog.
       val chFinal = Paths.get(changesDir(dir, next))
       deleteRecursively(chFinal)
-      // zone maps: footer stats for the LOCAL files only (cost ∝ files
-      // written); carried files' entries live in their owner versions'
-      // manifests, which is where the scan looks them up (per-file path →
-      // owning version dir)
-      GraftStats.writeManifest(buildDir, None)
-      writeBucketMarker(buildDir, buckets)
-      writePartSpecMarker(buildDir, curPartSpec)
+      // per-file write versions and zone maps for the LOCAL files only
+      // (all stamped `next` — a file lives forever in the version dir
+      // that wrote it; cost ∝ files written); carried files keep their
+      // entries in their owner versions' manifests, which is where the
+      // scan looks them up (per-file path → owning version dir)
+      sealVersion(buildDir, newMap, ownFileSeq(buildDir, next),
+        GraftStats.footerManifest(buildDir), buckets, curPartSpec)
       if (overwrite) writeBoundaryMarker(buildDir) // snapshot boundary for CDC
       // idempotent-write record publishes atomically WITH the commit: in
       // the build dir before the rename, so neither "recorded but not
@@ -3421,11 +3345,11 @@ object GraftStore {
     val curDir = versionDir(dir, cur)
     // Fragmentation is SLOT-scoped: a leaf dir (`[gpart=v/]gbucket=k`)
     // over the threshold rewrites ALONE — compacting a hot day's bucket
-    // never rewrites that bucket's cold history (pre-r13 the count summed
-    // across partitions, so a long date-partitioned table read as
-    // permanently fragmented and every optimize rewrote whole buckets
-    // across every partition — O(bucket × history) instead of O(hot
-    // slots)). Unpartitioned tables are unchanged (slot == bucket).
+    // never rewrites that bucket's cold history (a per-bucket count sums
+    // across partitions, so a long date-partitioned table would read as
+    // permanently fragmented and every optimize would rewrite whole
+    // buckets across every partition — O(bucket × history) instead of
+    // O(hot slots)). On unpartitioned tables slot == bucket.
     // Buckets carrying live merge-on-read delete slices rewrite ALL their
     // slots: a delete entry can suppress rows in any partition, so
     // clearing the slice requires applying it everywhere — which is what
@@ -3464,7 +3388,7 @@ object GraftStore {
         spark.sparkContext.defaultParallelism * 4))
       val rep = withPartCol(
           readVersionPhysical(spark, dir, meta, cur, slots = Some(fragmented)),
-          meta, layoutPartSpec(dir, cur, meta))
+          meta, versionPartSpec(dir, cur))
         .repartition(nTasks, layoutCols(meta).map(col): _*)
       val clustered =
         if (zorderBy.nonEmpty) {
@@ -3485,21 +3409,18 @@ object GraftStore {
       // simply leaves the map)
       val local = localSlots(buildDir).toSet
       val prevOwners = ownersOf(dir, cur)
-      writeBucketMap(buildDir, (prevOwners.keySet ++ local)
-        .flatMap { slot =>
-          if (fragmented.contains(slot))
-            if (local.contains(slot)) Some(slot -> Seq(next)) else None
-          else prevOwners.get(slot).map(slot -> _)
-        }.toMap)
+      val owners = (prevOwners.keySet ++ local).flatMap { slot =>
+        if (fragmented.contains(slot))
+          if (local.contains(slot)) Some(slot -> Seq(next)) else None
+        else prevOwners.get(slot).map(slot -> _)
+      }.toMap
       // every slot of every DV-carrying bucket is in `fragmented`, so no
       // delete slice survives compaction; rewrites stamp `next` (≥ any
-      // dseq — stale
-      // entries could never match even if one leaked); carried files keep
-      // their seqs in their owners' manifests
-      writeFileSeq(buildDir, None, next)
-      GraftStats.writeManifest(buildDir, None)
-      writeBucketMarker(buildDir, layoutBuckets(dir, cur, meta))
-      writePartSpecMarker(buildDir, layoutPartSpec(dir, cur, meta))
+      // dseq — stale entries could never match even if one leaked);
+      // carried files keep their seqs in their owners' manifests
+      sealVersion(buildDir, owners, ownFileSeq(buildDir, next),
+        GraftStats.footerManifest(buildDir), versionBuckets(dir, cur),
+        versionPartSpec(dir, cur))
       verifyClaim(marker, token)
       publishVersion(buildDir, nextDir)
       writePointer(dir, next)
@@ -3524,7 +3445,7 @@ object GraftStore {
     * the pointer flip; a crash in between leaves meta.buckets ahead of the
     * layout, which is harmless — every reader AND writer derives the
     * effective fan-out from the current version's marker
-    * ([[layoutBuckets]]), never from meta alone. */
+    * ([[versionBuckets]]), never from meta alone. */
   def rebucket(spark: SparkSession, dir: String, newBuckets: Int): Long = {
     require(newBuckets > 0, "buckets must be positive")
     recoverChangelog(dir)
@@ -3534,7 +3455,7 @@ object GraftStore {
     // partition-era-uniform: after set_partition_spec, `CALL rebucket`
     // with the existing count is the documented re-grain (full rewrite
     // under the current grain, pruning resumes)
-    if (layoutBuckets(dir, cur, meta) == newBuckets &&
+    if (versionBuckets(dir, cur) == newBuckets &&
         meta.buckets == newBuckets &&
         snapshotPartSpecs(dir, cur, meta).size <= 1)
       return cur
@@ -3545,23 +3466,6 @@ object GraftStore {
       if (currentVersion(dir) != cur)
         throw new java.util.ConcurrentModificationException(
           s"table $dir advanced past version $cur during REBUCKET; re-run")
-      // stamp the old layout's count on the current version first, so the
-      // fallback-to-meta path can never misread it after our meta update.
-      // A pre-stamp version also has no _committed_at, so TIMESTAMP AS OF
-      // falls back to the version DIR's mtime — which writing the backfill
-      // into the dir disturbs. Capture the original mtime BEFORE touching
-      // the dir and persist it as _committed_at in the same backfill, so
-      // the version keeps resolving to when it actually committed, never
-      // to when it was rebucketed.
-      if (versionBuckets(dir, cur).isEmpty) {
-        val cdir = Paths.get(versionDir(dir, cur))
-        val origMtime = Files.getLastModifiedTime(cdir).toMillis
-        val stampP = Paths.get(versionDir(dir, cur), "_committed_at")
-        if (!Files.exists(stampP))
-          Files.write(stampP, origMtime.toString.getBytes("UTF-8"))
-        Files.write(Paths.get(versionDir(dir, cur), "_buckets"),
-          meta.buckets.toString.getBytes("UTF-8"))
-      }
       val nextDir = versionDir(dir, next)
       val buildDir = s"$nextDir.build-$token"
       deleteRecursively(Paths.get(buildDir))
@@ -3569,16 +3473,15 @@ object GraftStore {
       withPartCol(readVersionPhysical(spark, dir, meta, cur)
           .drop(BucketCol)
           .withColumn(BucketCol, bucketExpr(physKeys, newBuckets)), meta,
-          layoutPartSpec(dir, cur, meta))
+          versionPartSpec(dir, cur))
         .repartition(newBuckets, col(BucketCol))
         .write.options(bloomOptions(meta))
             .partitionBy(layoutCols(meta): _*).parquet(buildDir)
-      writeBucketMap(buildDir,
-        localSlots(buildDir).map(s => s -> Seq(next)).toMap)
-      writeFileSeq(buildDir, None, next) // every file rewritten (DVs applied)
-      GraftStats.writeManifest(buildDir, None) // every file rewritten
-      writeBucketMarker(buildDir, newBuckets)
-      writePartSpecMarker(buildDir, layoutPartSpec(dir, cur, meta))
+      // every file rewritten (DVs applied)
+      sealVersion(buildDir,
+        localSlots(buildDir).map(s => s -> Seq(next)).toMap,
+        ownFileSeq(buildDir, next), GraftStats.footerManifest(buildDir),
+        newBuckets, versionPartSpec(dir, cur))
       withMetaLock(dir) {
         val m = readMeta(dir) // re-read: fold over concurrent ALTERs
         writeMeta(dir, m.copy(buckets = newBuckets))
@@ -3605,7 +3508,6 @@ object GraftStore {
     * and later writes re-derive from it. */
   def restore(dir: String, toVersion: Long): Long = {
     recoverChangelog(dir)
-    val meta = readMeta(dir)
     val cur = currentVersion(dir)
     require(listVersions(dir).contains(toVersion),
       s"table $dir has no retained version $toVersion " +
@@ -3627,16 +3529,13 @@ object GraftStore {
       // target's resolved owner map verbatim — O(buckets), no per-file
       // pass at any table size
       val ownerMap = ownersOf(dir, toVersion)
-      writeBucketMap(buildDir, ownerMap)
       // the restored state includes the target's live delete slices
       // verbatim (physical cap-bounded links) — a merge-on-read version
       // restores to exactly the rows it read as; file seqs stay in the
       // owner versions' manifests
       linkDvCarry(srcV, buildDir, Set.empty)
-      writeFileSeq(buildDir, None, next)
-      GraftStats.writeManifest(buildDir, None)
-      writeBucketMarker(buildDir, layoutBuckets(dir, toVersion, meta))
-      writePartSpecMarker(buildDir, layoutPartSpec(dir, toVersion, meta))
+      sealVersion(buildDir, ownerMap, Map.empty, Map.empty,
+        versionBuckets(dir, toVersion), versionPartSpec(dir, toVersion))
       writeBoundaryMarker(buildDir) // restore = snapshot boundary for CDC
       verifyClaim(marker, token)
       // Re-check against a concurrent expireVersions (a maintenance op that
@@ -3725,7 +3624,7 @@ object GraftStore {
       else stats ++ histograms(spark, df, supported.toSeq, stats,
         histogramBins, analyzedRows)
         .map { case (c, h) => c -> stats(c).copy(histogram = Some(h)) }
-    GraftStats.writeTableColStats(dir, cur, Some(analyzedRows), withHists)
+    GraftStats.writeTableColStats(dir, cur, analyzedRows, withHists)
     cur
   }
 
@@ -3796,18 +3695,15 @@ object GraftStore {
 
   /** ANALYZE column stats for scanning (`dir`, `version`) — EMPTY when the
     * persisted stats are stale. Fresh means: analyzed at this exact
-    * version, or the analyzed row count is recorded (r13+) and the
-    * scanned snapshot's manifest row count drifted less than
-    * [[statsMaxStaleFraction]] from it. Row/byte estimates are per-scan
-    * from zone maps and never go through here — only column NDV/min-max
-    * age. Legacy `_colstats` without a recorded row count serve only at
-    * their own analyzed version (conservative; the next analyze upgrades
-    * the format). */
+    * version, or the scanned snapshot's manifest row count drifted less
+    * than [[statsMaxStaleFraction]] from the analyzed row count. Row/byte
+    * estimates are per-scan from zone maps and never go through here —
+    * only column NDV/min-max age. */
   def freshTableColStats(dir: String, version: Long)
       : Map[String, GraftStats.TableColStat] =
     GraftStats.readTableColStatsFull(dir) match {
       case Some((av, _, m)) if av == version => m
-      case Some((_, Some(arows), m)) =>
+      case Some((_, arows, m)) =>
         snapshotRowCount(dir, version) match {
           case Some(cur)
               if math.abs(cur - arows).toDouble <=
@@ -3851,7 +3747,7 @@ object GraftStore {
       s"table $dir mixes partition grains ${eras.map(_._1).mkString("/")} " +
         "after set_partition_spec — CALL rebucket to re-grain before " +
         "expire_partitions")
-    val effSpec = eras.headOption.orElse(layoutPartSpec(dir, cur, meta))
+    val effSpec = eras.headOption.orElse(versionPartSpec(dir, cur))
     // compare UNESCAPED values (partitionBy escapes special chars into the
     // dir name) and never drop the null-partition sentinel — NULL cannot
     // satisfy an ordering bound
@@ -3903,7 +3799,6 @@ object GraftStore {
       val buildDir = s"$nextDir.build-$token"
       deleteRecursively(Paths.get(buildDir))
       Files.createDirectories(Paths.get(buildDir))
-      writeBucketMap(buildDir, keepMap)
       // a merge-on-read table's live delete slices MUST carry across the
       // retention commit: slices are keyed (bucket, key), deliberately NOT
       // partition-scoped (an update that moves a row between partitions
@@ -3912,10 +3807,8 @@ object GraftStore {
       // a slice obsolete and dropping the slices would resurrect deleted
       // rows in every KEPT partition. Cap-bounded links, O(changed rows).
       linkDvCarry(versionDir(dir, cur), buildDir, Set.empty)
-      writeFileSeq(buildDir, None, next)
-      GraftStats.writeManifest(buildDir, None)
-      writeBucketMarker(buildDir, layoutBuckets(dir, cur, meta))
-      writePartSpecMarker(buildDir, layoutPartSpec(dir, cur, meta))
+      sealVersion(buildDir, keepMap, Map.empty, Map.empty,
+        versionBuckets(dir, cur), versionPartSpec(dir, cur))
       writeBoundaryMarker(buildDir) // rows vanish with no changelog slice
       verifyClaim(marker, token)
       publishVersion(buildDir, nextDir)

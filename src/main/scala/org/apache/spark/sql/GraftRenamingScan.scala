@@ -601,8 +601,8 @@ final class GraftRenamingScan(delegate: Scan,
     * the runtime-admitted bucket set (DPP) and files whose ZONE-MAP stats
     * prove no row satisfies the pushed conjuncts
     * ([[graft.sources.GraftStats]]). Both checks only ever narrow to a
-    * correct superset — a file with no bucket segment, no manifest (legacy
-    * version), or no usable stats entry is kept. */
+    * correct superset — a file with no bucket segment, no manifest, or no
+    * usable stats entry is kept. */
   override def toBatch: Batch = {
     val bs = allowedBuckets
     if (bs.isEmpty && statsFilters.isEmpty) delegate.toBatch

@@ -10,7 +10,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Builds the delegated parquet scan for one graft-store SNAPSHOT under
-  * the r12 manifest layout: a version's live files stay in the version
+  * the manifest layout: a version's live files stay in the version
   * dirs that WROTE them (`_bucketmap` slot references, no per-commit link
   * pass), so a snapshot is not one directory — it is a resolved list of
   * `[gpart=<v>/]gbucket=<k>` leaf dirs spread across owner versions.
@@ -52,11 +52,11 @@ object GraftSnapshotScan {
     *
     * The file index is built ENTIRELY from the store's manifests
     * (`_bucketmap` slots + `_fileseq` names/sizes) — zero filesystem
-    * listing at plan time. Pre-r12 the InMemoryFileIndex listed every
-    * slot dir before pruning could run, so a one-day scan of a
-    * 129-day × 16-bucket table paid a ~2000-directory listing job per
-    * query (measured ~4 s at 10M rows); planning from metadata is the
-    * object-store design point this store exists for. */
+    * listing at plan time. An InMemoryFileIndex lists every slot dir
+    * before pruning can run, so a one-day scan of a 129-day × 16-bucket
+    * table paid a ~2000-directory listing job per query (measured ~4 s at
+    * 10M rows); planning from metadata is the object-store design point
+    * this store exists for. */
   // the authored (PartitionSpec, dir → files) of a snapshot is a pure
   // function of the immutable version dir (+ the partition-column type),
   // but building it is O(slots) — a plan-heavy workload (many pruned

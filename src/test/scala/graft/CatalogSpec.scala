@@ -1283,7 +1283,7 @@ class CatalogSpec extends SparkTestBase {
     assert(v === 4L)
     // contents back to v1, restored under v1's OWN fan-out (marker copied)
     assert(rows(t).map(_._3).sum === (0 until 64).map(_ * 10).sum)
-    assert(GraftStore.versionBuckets(dir, 4L) === Some(4))
+    assert(GraftStore.versionBuckets(dir, 4L) === 4)
     assert(!GraftStore.hasChangelog(dir, 4L), "restore writes no changelog")
     // pruning and writes keep working under the restored layout
     def scanOf(df: org.apache.spark.sql.DataFrame) = {
@@ -1415,14 +1415,14 @@ class CatalogSpec extends SparkTestBase {
       "FROM range(0, 64)")
     val before = rows(t)
     val vOld = GraftStore.currentVersion(dir)
-    assert(GraftStore.versionBuckets(dir, vOld) === Some(4))
+    assert(GraftStore.versionBuckets(dir, vOld) === 4)
 
     val v = spark.sql(s"CALL $cat.rebucket(table => 't_rebkt', buckets => 16)")
       .head().getLong(0)
     assert(v === vOld + 1 && GraftStore.currentVersion(dir) === v)
     // layout: 16 bucket dirs under the new version, marker stamped, meta
     // updated; content identical; NO changelog slice (layout, not content)
-    assert(GraftStore.versionBuckets(dir, v) === Some(16))
+    assert(GraftStore.versionBuckets(dir, v) === 16)
     assert(GraftStore.readMeta(dir).buckets === 16)
     assert(rows(t) === before)
     assert(!GraftStore.hasChangelog(dir, v))

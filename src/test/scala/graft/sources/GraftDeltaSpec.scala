@@ -347,7 +347,7 @@ class GraftDeltaSpec extends SparkTestBase {
     assert(GraftStore.versionAsOfTimestamp(dir, t2 - 1) === Some(1L))
   }
 
-  test("rebucket's _buckets backfill preserves a legacy version's commit instant") {
+  test("rebucket leaves an earlier version's _buckets and commit instant") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_backfill_spec").toString + "/t"
@@ -355,20 +355,15 @@ class GraftDeltaSpec extends SparkTestBase {
     GraftStore.applyChanges(spark, dir,
       Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "name", "amount")
         .withColumn(GraftStore.OpCol, lit("I")), allInserts = true) // v1
-    // make v1 a LEGACY version: no stamps, dir mtime = its commit clock
-    val v1 = Paths.get(GraftStore.versionDir(dir, 1L))
-    Files.delete(v1.resolve("_buckets"))
-    Files.delete(v1.resolve("_committed_at"))
-    val original = System.currentTimeMillis() - 86400000L // "committed yesterday"
-    Files.setLastModifiedTime(v1,
-      java.nio.file.attribute.FileTime.fromMillis(original))
-    GraftStore.rebucket(spark, dir, newBuckets = 4) // backfills v1's marker
-    // the backfill wrote INTO v1 (bumping its mtime) — but the captured
-    // original instant must now be persisted, so TIMESTAMP AS OF keeps
-    // resolving v1 to yesterday, not to the rebucket (r9 ADVICE)
+    val original = GraftStore.committedAt(dir, 1L)
+    GraftStore.rebucket(spark, dir, newBuckets = 4)
+    // the rebucket writes only its own version: v1 keeps the fan-out it
+    // was written with and the instant it committed, so TIMESTAMP AS OF
+    // keeps resolving v1 to its commit, not to the rebucket
     assert(GraftStore.committedAt(dir, 1L) === original)
-    assert(GraftStore.versionAsOfTimestamp(dir, original + 1000) === Some(1L))
-    assert(GraftStore.versionBuckets(dir, 1L) === Some(2))
+    assert(GraftStore.versionAsOfTimestamp(dir, original) === Some(1L))
+    assert(GraftStore.versionBuckets(dir, 1L) === 2)
+    assert(GraftStore.versionBuckets(dir, 2L) === 4)
   }
 
   test("table stream: a pending snapshot that slept past the horizon fails loudly") {
