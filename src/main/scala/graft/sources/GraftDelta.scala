@@ -3,6 +3,8 @@ package graft.sources
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
@@ -25,10 +27,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * deltas. Executors stream their deltas as length-prefixed UnsafeRow
   * frames into per-task staging files (the same framing as the ingest bus,
   * [[graft.functions.GraftCodec.frameEncode]]); the driver-side commit
-  * never holds row data — it turns the staged file list into a distributed
-  * read and hands the resulting change DataFrame to
-  * [[GraftStore.applyChanges]], which rewrites only the buckets the change
-  * keys hash into.
+  * decodes a batch within the commit's small-batch bounds itself and turns
+  * any larger staged file list into a distributed read, then hands the
+  * change DataFrame to [[GraftStore.applyChanges]], which rewrites only the
+  * buckets the change keys hash into.
   *
   * Scale shape: delta volume ∝ rows changed (not table size); staging is
   * one sequential file per task on shared storage; the commit job is the
@@ -111,7 +113,6 @@ final class GraftDeltaBatchWrite(dir: String, meta: GraftTableMeta,
   private def cleanup(): Unit = {
     val p = Paths.get(staging)
     if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .iterator().asScala.foreach(Files.delete)
@@ -121,54 +122,106 @@ final class GraftDeltaBatchWrite(dir: String, meta: GraftTableMeta,
 }
 
 object GraftDeltaBatchWrite {
-  /** Distributed decode of staged delta files into the change DataFrame
+  /** Decode staged delta files into the change DataFrame
     * [[GraftStore.applyChanges]] expects (`_op` + full logical schema, all
-    * fields nullable — delete rows only carry the key columns). Only the
-    * file PATHS pass through the driver; frame decode and row conversion
-    * run in the tasks. */
+    * fields nullable — delete rows only carry the key columns).
+    *
+    * A batch within the commit's small-batch bounds (the staged files'
+    * bytes under `spark.graft.commit.broadcastMaxBytes`, the frames read
+    * under `spark.graft.commit.broadcastMaxRows`) is decoded on the driver
+    * into a local DataFrame: its consumers then run no decode job and no
+    * cache, and the commit reads its touched set and size from the rows
+    * themselves. A larger batch is decoded distributed — only the file
+    * PATHS pass through the driver; frame decode and row conversion run
+    * in the tasks. Both paths convert frames with [[frameDecoder]]. */
   private[sources] def decodeStaged(spark: SparkSession, files: Seq[String],
       logical: StructType, rowSchema: StructType, idSchema: StructType)
       : org.apache.spark.sql.DataFrame = {
     val logicalNames = logical.fieldNames.toSeq
-    val rowNames = rowSchema.fieldNames.toSeq
-    val idNames = idSchema.fieldNames.toSeq
     val outSchema = StructType(StructField(GraftStore.OpCol, StringType,
       nullable = false) +: logical.fields.map(_.copy(nullable = true)).toSeq)
-    val rdd = spark.sparkContext
-      .parallelize(files, math.max(1, files.size))
-      .mapPartitions { paths =>
-        // converters are built per-partition: they are cheap and not
-        // guaranteed serializable, the schemas are.
-        val rowConv = CatalystTypeConverters.createToScalaConverter(rowSchema)
-        val idConv = CatalystTypeConverters.createToScalaConverter(idSchema)
-        paths.flatMap { p =>
-          readFrames(p).map { case (op, bytes) =>
-            val (schema, conv, names) =
-              if (op == 'D') (idSchema, idConv, idNames)
-              else (rowSchema, rowConv, rowNames)
-            val ur = new UnsafeRow(schema.length)
-            ur.pointTo(bytes, bytes.length)
-            val byName = names.zip(conv(ur).asInstanceOf[Row].toSeq).toMap
-            Row.fromSeq(op.toString +: logicalNames.map(byName.getOrElse(_, null)))
+    val stagedBytes = files.map(f => Files.size(Paths.get(f))).sum
+    val local =
+      if (stagedBytes > GraftStore.commitBroadcastMaxBytes(spark)) None
+      else decodeLocal(files, GraftStore.commitBroadcastMaxRows(spark),
+        frameDecoder(logicalNames, rowSchema, idSchema))
+    local match {
+      case Some(rows) => spark.createDataFrame(rows.asJava, outSchema)
+      case None =>
+        val rdd = spark.sparkContext
+          .parallelize(files, math.max(1, files.size))
+          .mapPartitions { paths =>
+            // converters are built per-partition: they are cheap and not
+            // guaranteed serializable, the schemas are.
+            val decode = frameDecoder(logicalNames, rowSchema, idSchema)
+            paths.flatMap(p => readFrames(p).map(decode.tupled))
           }
-        }
-      }
-    spark.createDataFrame(rdd, outSchema)
+        spark.createDataFrame(rdd, outSchema)
+    }
   }
 
-  private def readFrames(path: String): Iterator[(Char, Array[Byte])] = {
-    val in = new DataInputStream(new BufferedInputStream(
+  /** One staged frame → one change row: the op, then the logical columns
+    * by name (a delete frame carries only the row-id columns; the rest are
+    * null). */
+  private def frameDecoder(logicalNames: Seq[String], rowSchema: StructType,
+      idSchema: StructType): (Char, Array[Byte]) => Row = {
+    val rowConv = CatalystTypeConverters.createToScalaConverter(rowSchema)
+    val idConv = CatalystTypeConverters.createToScalaConverter(idSchema)
+    val rowNames = rowSchema.fieldNames.toSeq
+    val idNames = idSchema.fieldNames.toSeq
+    (op, bytes) => {
+      val (schema, conv, names) =
+        if (op == 'D') (idSchema, idConv, idNames)
+        else (rowSchema, rowConv, rowNames)
+      val ur = new UnsafeRow(schema.length)
+      ur.pointTo(bytes, bytes.length)
+      val byName = names.zip(conv(ur).asInstanceOf[Row].toSeq).toMap
+      Row.fromSeq(op.toString +: logicalNames.map(byName.getOrElse(_, null)))
+    }
+  }
+
+  /** Every frame of `files` decoded on the driver, or None as soon as more
+    * than `maxRows` frames have been read. */
+  private def decodeLocal(files: Seq[String], maxRows: Long,
+      decode: (Char, Array[Byte]) => Row): Option[Seq[Row]] = {
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val fits = files.forall { p =>
+      val in = openFrames(p)
+      try {
+        var frame = readFrame(in)
+        while (frame != null && rows.size <= maxRows) {
+          rows += decode.tupled(frame)
+          frame = readFrame(in)
+        }
+        rows.size <= maxRows
+      } finally in.close()
+    }
+    if (fits) Some(rows.toSeq) else None
+  }
+
+  private def openFrames(path: String): DataInputStream =
+    new DataInputStream(new BufferedInputStream(
       Files.newInputStream(Paths.get(path))))
+
+  /** The next (op, row bytes) frame, or null at end of file. */
+  private def readFrame(in: DataInputStream): (Char, Array[Byte]) =
+    try {
+      val op = in.readByte().toChar
+      val len = in.readInt()
+      val bytes = new Array[Byte](len)
+      in.readFully(bytes)
+      (op, bytes)
+    } catch { case _: EOFException => null }
+
+  private def readFrames(path: String): Iterator[(Char, Array[Byte])] = {
+    val in = openFrames(path)
     new Iterator[(Char, Array[Byte])] {
       private var nextFrame: (Char, Array[Byte]) = advance()
-      private def advance(): (Char, Array[Byte]) =
-        try {
-          val op = in.readByte().toChar
-          val len = in.readInt()
-          val bytes = new Array[Byte](len)
-          in.readFully(bytes)
-          (op, bytes)
-        } catch { case _: EOFException => in.close(); null }
+      private def advance(): (Char, Array[Byte]) = {
+        val f = readFrame(in)
+        if (f == null) in.close()
+        f
+      }
       override def hasNext: Boolean = nextFrame != null
       override def next(): (Char, Array[Byte]) = {
         val r = nextFrame; nextFrame = advance(); r
@@ -242,12 +295,16 @@ final class GraftStreamingAppend(dir: String, meta: GraftTableMeta,
       if (epochId <= last) return // replayed epoch of THIS query: committed
       val files = messages.collect { case GraftDeltaCommit(p) => p }
       val spark = SparkSession.active
-      // persisted: the dup-guard aggregate and applyChanges' own jobs all
-      // read the decoded epoch from cache instead of re-decoding the
-      // staged files per job
-      val decoded = GraftDeltaBatchWrite.decodeStaged(
+      // a distributed decode is persisted: the dup-guard aggregate and
+      // applyChanges' own jobs all read the decoded epoch from cache
+      // instead of re-decoding the staged files per job. An epoch decoded
+      // on the driver is already in memory.
+      val decoded0 = GraftDeltaBatchWrite.decodeStaged(
         spark, files.toSeq, meta.schema, rowSchema,
-        StructType(meta.keyCols.map(k => meta.schema(k)))).persist()
+        StructType(meta.keyCols.map(k => meta.schema(k))))
+      val decoded =
+        if (GraftStore.localRows(decoded0).isDefined) decoded0
+        else decoded0.persist()
       try {
         // a live stream survives ALTER TABLE on its target: each epoch
         // re-bases onto the CURRENT schema by physical identity (renames
@@ -291,7 +348,6 @@ final class GraftStreamingAppend(dir: String, meta: GraftTableMeta,
   private def cleanup(epochId: Long): Unit = {
     val p = Paths.get(epochStaging(epochId))
     if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
       val s = Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .iterator().asScala.foreach(Files.delete)

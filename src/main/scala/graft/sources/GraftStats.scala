@@ -59,6 +59,12 @@ object GraftStats {
   private val KindString = "s"  // UTF8 strings, byte-order comparisons
   private val KindBool = "b"
 
+  /** The Hadoop configuration every footer read opens files with. Built
+    * once — a fresh `new Configuration()` per file re-parses Hadoop's XML
+    * defaults on its first lookup — and never mutated, so concurrent
+    * readers share it. */
+  private lazy val footerConf = new Configuration()
+
   // ---------------------------------------------------------------- write
 
   /** Footer stats of every data file under a build dir — what a commit
@@ -67,9 +73,8 @@ object GraftStats {
   def footerManifest(buildDir: String): Map[String, FileStats] = {
     val root = Paths.get(buildDir)
     val files = dataFiles(root)
-    val conf = new Configuration()
     def footer(rel: String): FileStats =
-      try readFooterStats(root.resolve(rel), conf)
+      try readFooterStats(root.resolve(rel))
       catch { case _: Exception => Map.empty }
     // footer reads are independent metadata I/O — a bulk commit (initial
     // load, rebucket) fans them out over a small pool instead of paying
@@ -131,7 +136,7 @@ object GraftStats {
     * stats of files OUTSIDE a version manifest (e.g. classifying a
     * changelog slice as insert-only from its `change_op` min/max). */
   def readFileStats(file: Path): FileStats =
-    try readFooterStats(file, new Configuration())
+    try readFooterStats(file)
     catch { case _: Exception => Map.empty }
 
   /** PHYSICAL column names carrying a bloom filter in one parquet file's
@@ -141,7 +146,7 @@ object GraftStats {
   def bloomedColumns(file: Path): Set[String] =
     try {
       val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toUri), new Configuration())
+        new org.apache.hadoop.fs.Path(file.toUri), footerConf)
       val r = ParquetFileReader.open(in)
       try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
         .filter(_.getBloomFilterOffset >= 0)
@@ -154,7 +159,7 @@ object GraftStats {
   def fileRowCount(file: Path): Option[Long] =
     try {
       val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toUri), new Configuration())
+        new org.apache.hadoop.fs.Path(file.toUri), footerConf)
       val r = ParquetFileReader.open(in)
       try Some(r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
       finally r.close()
@@ -163,9 +168,9 @@ object GraftStats {
   /** Aggregate footer statistics per top-level primitive column. Columns
     * whose physical type has no defensible comparison mapping (INT96,
     * decimals, nested paths, non-UTF8 binary) are omitted. */
-  private def readFooterStats(file: Path, conf: Configuration): FileStats = {
+  private def readFooterStats(file: Path): FileStats = {
     val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri), conf)
+      new org.apache.hadoop.fs.Path(file.toUri), footerConf)
     val r = ParquetFileReader.open(in)
     try {
       val blocks = r.getFooter.getBlocks.asScala.toSeq

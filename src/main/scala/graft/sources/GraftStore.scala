@@ -1203,7 +1203,7 @@ object GraftStore {
     * still occupy a few times the configured bytes on the driver and
     * each executor — derate accordingly (e.g. set it to 1/4 of what the
     * JVMs can really spare). */
-  private def commitBroadcastMaxRows(spark: SparkSession): Long =
+  private[sources] def commitBroadcastMaxRows(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.commit.broadcastMaxRows")
       .map(_.toLong).getOrElse(1L << 20)
   private[sources] def commitBroadcastMaxBytes(spark: SparkSession): Long =
@@ -1260,16 +1260,23 @@ object GraftStore {
   }
 
   /** Every live delete slice of a version as one DataFrame: the PHYSICAL
-    * key columns + [[BucketCol]] + [[DvSeqCol]] (long). None when the
-    * version has no live deletes. */
-  def readDv(spark: SparkSession, vdir: String): Option[DataFrame] = {
+    * key columns + [[DvSeqCol]] (long) + [[BucketCol]] (int). None when
+    * the version has no live deletes. The slice schema is passed to the
+    * reader — merge-key types never change (ALTER refuses it) — so the
+    * read plans without a schema-inference job. */
+  def readDv(spark: SparkSession, vdir: String,
+      meta: GraftTableMeta): Option[DataFrame] = {
     val seqs = dvSeqDirs(vdir)
     if (seqs.isEmpty) None
     else {
       val dirs = seqs.map(s => s"${dvRoot(vdir)}/$DvSeqCol=$s")
-      Some(spark.read.option("basePath", dvRoot(vdir)).parquet(dirs: _*)
-        .withColumn(DvSeqCol, col(DvSeqCol).cast(LongType))
-        .withColumn(BucketCol, col(BucketCol).cast(IntegerType)))
+      val sliceSchema = StructType(meta.keyCols.map { k =>
+          val f = meta.schema(k)
+          StructField(physicalName(f), f.dataType, nullable = true)
+        } :+ StructField(DvSeqCol, LongType, nullable = true)
+          :+ StructField(BucketCol, IntegerType, nullable = true))
+      Some(spark.read.schema(sliceSchema).option("basePath", dvRoot(vdir))
+        .parquet(dirs: _*))
     }
   }
 
@@ -1277,8 +1284,9 @@ object GraftStore {
     * ([[org.apache.spark.sql.GraftMorScanBuilder]]): the per-file seq map
     * and, per bucket, each deleted key's newest delete seq — key values in
     * CATALYST form so executors compare them against `InternalRow.get`
-    * directly. Cost: one small job over the (cap-bounded) delete slices.
-    * None when the version has no live deletes. */
+    * directly. Cost: one job reading the (cap-bounded) delete slices,
+    * whose rows are folded to the newest seq per key on the driver. None
+    * when the version has no live deletes. */
   def loadDvProbe(spark: SparkSession, dir: String, v: Long,
       meta: GraftTableMeta)
       : Option[(Map[String, Long], Map[Int, Map[Seq[Any], Long]])] = {
@@ -1321,20 +1329,22 @@ object GraftStore {
   private def loadDvProbeUncached(spark: SparkSession, dir: String, v: Long,
       meta: GraftTableMeta)
       : Option[(Map[String, Long], Map[Int, Map[Seq[Any], Long]])] =
-    readDv(spark, versionDir(dir, v)).map { dv =>
+    readDv(spark, versionDir(dir, v), meta).map { dv =>
       val physKeys = meta.keyCols.map(k => physicalName(meta.schema(k)))
       val keyTypes = meta.keyCols.map(k => meta.schema(k).dataType)
-      val rows = dv.groupBy((BucketCol +: physKeys).map(col): _*)
-        .agg(max(col(DvSeqCol)).as("__mx")).collect()
+      // the slices hold at most the live-delete cap of rows: one collect,
+      // then max-seq-per-key folds here instead of in a two-stage
+      // aggregate
+      val rows = dv.select((BucketCol +: DvSeqCol +: physKeys).map(col): _*)
+        .collect()
       val convs = keyTypes.map(org.apache.spark.sql.catalyst
         .CatalystTypeConverters.createToCatalystConverter)
       val n = physKeys.length
-      val m = rows.groupBy(_.getInt(0)).map { case (b, rs) =>
-        b -> rs.map { r =>
-          val key: Seq[Any] = Seq.tabulate(n)(i => org.apache.spark.sql
-            .GraftMorScanSupport.normalizeKey(convs(i)(r.get(i + 1))))
-          key -> r.getLong(n + 1)
-        }.toMap
+      val m = rows.toSeq.groupBy(_.getInt(0)).map { case (b, rs) =>
+        b -> rs.groupMapReduce { r =>
+          Seq.tabulate(n)(i => org.apache.spark.sql.GraftMorScanSupport
+            .normalizeKey(convs(i)(r.get(i + 2)))): Seq[Any]
+        }(_.getLong(1))(math.max)
       }
       (resolvedFileSeq(dir, v), m)
     }
@@ -2711,7 +2721,7 @@ object GraftStore {
         .parquet(roots: _*)
         .withColumn(BucketCol, regexp_extract(input_file_name(),
           s"$BucketCol=(\\d+)/", 1).cast(IntegerType))
-      readDv(spark, vdir) match {
+      readDv(spark, vdir, meta) match {
         case None => base
         case Some(dv) =>
           val physKeys = meta.keyCols.map(k => physicalName(meta.schema(k)))
@@ -2772,6 +2782,17 @@ object GraftStore {
       .foldLeft(mapped)((df, f) =>
         df.withColumn(f.name, lit(null).cast(f.dataType)))
   }
+
+  /** The rows of a DataFrame whose optimized plan is a local relation —
+    * data the driver already holds, which any action would only re-scan —
+    * or None for a plan that must run as a job. */
+  private[sources] def localRows(df: DataFrame)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        Some(l.data)
+      case _ => None
+    }
 
   /** Apply a change batch. `changes` columns: [[OpCol]] (one of I/U/D) plus
     * the full table schema (delete rows carry the key columns, the rest
@@ -2845,33 +2866,49 @@ object GraftStore {
     var smallKeyed = false
     def bucketFor(n: Int): Unit = if (bucketedFor != n) {
       if (ch != null) ch.unpersist()
+      def bucketed = changes
+        .withColumn(BucketCol, bucketExpr(bucketColsOf(meta), n))
+      // a batch the driver already holds (a small staged delta decoded
+      // locally): its touched set and row count come from the rows
+      // themselves, with no job and no cache
+      val local = localRows(bucketed)
       // persist serves the batch's MULTIPLE consumers (touched-set job +
       // both commit legs). An overwrite commit has exactly one — the
       // data-leg write (no changelog, no touched set) — so caching it is
       // a pure extra pass over the batch; for MV state overwrites the
       // "batch" is the whole folded view, so the pass is O(|view|).
-      val bucketed = changes
-        .withColumn(BucketCol, bucketExpr(bucketColsOf(meta), n))
-      ch = if (allInserts && overwrite) bucketed else bucketed.persist()
+      // `bucketed` is a fresh Dataset per use: one whose plan was already
+      // optimized (the local check above) never sees a cache registered
+      // after it, and the byte bound below reads the cached plan's stats.
+      ch = if ((allInserts && overwrite) || local.isDefined) bucketed
+        else bucketed.persist()
       // ≤ `buckets` (bucket, count) rows — the one driver-side
-      // materialization (same single job the old distinct-collect ran,
-      // upgraded to also count rows: the count + the materialized cache's
-      // byte size decide the small-batch broadcast legs below). The
-      // append fast path never reads the base, so it skips this job
-      // entirely (its "touched" set would only gate work it doesn't do).
+      // materialization of a distributed batch (the count + the
+      // materialized cache's byte size decide the small-batch broadcast
+      // legs below). The append fast path never reads the base, so it
+      // skips this job entirely (its "touched" set would only gate work
+      // it doesn't do).
       if (allInserts) touched = Set.empty[Int]
       else {
-        val perBucket = ch.groupBy(col(BucketCol)).count().collect()
-        touched = perBucket.map(_.getInt(0)).toSet
-        val rows = perBucket.map(_.getLong(1)).sum
-        // post-materialization the InMemoryRelation's stats carry the
-        // exact cached byte size — a zero-job broadcast-safety bound.
-        // The cached bytes alone UNDERSTATE the broadcast footprint: the
-        // changelog leg broadcasts up to `rows` FULL-WIDTH base
-        // before-images, while a delete batch caches only its key
-        // columns (nulls compress to ~nothing) — so also bound
-        // rows × the base schema's estimated row width, the size the
-        // before-image broadcast can actually reach.
+        val perBucket: Seq[(Int, Long)] = local match {
+          case Some(data) =>
+            val b = ch.schema.fieldIndex(BucketCol)
+            data.groupBy(_.getInt(b))
+              .map { case (k, rs) => k -> rs.size.toLong }.toSeq
+          case None =>
+            ch.groupBy(col(BucketCol)).count().collect().toSeq
+              .map(r => r.getInt(0) -> r.getLong(1))
+        }
+        touched = perBucket.map(_._1).toSet
+        val rows = perBucket.map(_._2).sum
+        // the plan's stats bound the batch's bytes with no job: a local
+        // batch's estimate from its rows, a distributed one's exact cached
+        // size after materialization. The batch bytes alone UNDERSTATE
+        // the broadcast footprint: the changelog leg broadcasts up to
+        // `rows` FULL-WIDTH base before-images, while a delete batch
+        // carries only its key columns (nulls compress to ~nothing) — so
+        // also bound rows × the base schema's estimated row width, the
+        // size the before-image broadcast can actually reach.
         val cachedBytes = ch.queryExecution.optimizedPlan.stats.sizeInBytes
         val rowWidth = meta.schema.fields.map(_.dataType.defaultSize).sum
         val maxBytes = commitBroadcastMaxBytes(spark)
@@ -3188,9 +3225,15 @@ object GraftStore {
               meta, curPartSpec), layoutCols(meta).map(col))
             .write.options(bloomOptions(meta))
             .partitionBy(layoutCols(meta): _*).parquet(buildDir)
-          sizeSlice(toPhysical(ch.filter(col(OpCol).isin("U", "D"))
-              .select((meta.keyCols :+ BucketCol).map(col): _*).distinct(),
-              meta.schema), Seq(col(BucketCol)))
+          // the delete slice dedups its keys; a small batch coalesces
+          // BEFORE the distinct — one partition already satisfies the
+          // aggregate's distribution, so no exchange (and no second AQE
+          // job) is planned
+          val removed = ch.filter(col(OpCol).isin("U", "D"))
+            .select((meta.keyCols :+ BucketCol).map(col): _*)
+          (if (smallKeyed) toPhysical(removed.coalesce(1).distinct(), meta.schema)
+            else sizeSlice(toPhysical(removed.distinct(), meta.schema),
+              Seq(col(BucketCol))))
             .write.partitionBy(BucketCol)
             .parquet(s"$buildDir/$DvDirName/$DvSeqCol=$next")
           val newRemoveRows = dvLiveRows(buildDir)

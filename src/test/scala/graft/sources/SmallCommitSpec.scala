@@ -1,8 +1,13 @@
 package graft.sources
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicBoolean
 
 import graft.SparkTestBase
+import org.apache.spark.GraftTestBus
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** r16 optimization guard: a keyed commit whose change batch is under the
   * broadcast bounds runs its legs as broadcasts of the batch (base never
@@ -10,7 +15,15 @@ import graft.SparkTestBase
   * produce byte-identical table content AND changelog slices — this spec
   * runs the same DML program down each path and diffs everything. Without
   * it the shuffle path would lose all coverage (every other suite's
-  * batches are small, so they all take the broadcast path now). */
+  * batches are small, so they all take the broadcast path now).
+  *
+  * The bounds also pick how the staged change batch is decoded: under
+  * them on the driver into a local batch, over them by a distributed job
+  * into a persisted batch. Each run asserts the decode it took, so the
+  * diff covers both decodes. The key shapes are a BIGINT key and a
+  * composite (STRING, DATE) key; under merge-on-read the latter's delete
+  * probe compares the driver-decoded key values with the scanned rows as
+  * catalyst values, and its reads must match copy-on-write's. */
 class SmallCommitSpec extends SparkTestBase {
 
   private lazy val cat = "smallcommit"
@@ -22,52 +35,97 @@ class SmallCommitSpec extends SparkTestBase {
     p.toString
   }
 
-  private def run(name: String, mode: String): Unit = {
+  /** A merge key: its column DDL and the SQL select list deriving the key
+    * columns, unique per `id`, from `range`'s `id`. */
+  private final case class KeyShape(label: String, keyCols: Seq[String],
+      ddl: String, fromId: String)
+  private val bigintKey = KeyShape("", Seq("k"), "k BIGINT NOT NULL", "id AS k")
+  private val stringDateKey = KeyShape(", STRING+DATE key", Seq("s", "d"),
+    "s STRING NOT NULL, d DATE NOT NULL",
+    "concat('s', id % 20) AS s, " +
+      "date_add(DATE'2024-01-01', CAST(id DIV 20 AS INT)) AS d")
+
+  private def run(name: String, mode: String, key: KeyShape): Unit = {
     warehouse
+    val keys = key.keyCols.mkString(", ")
     spark.sql(s"DROP TABLE IF EXISTS $cat.$name")
     spark.sql(s"""CREATE TABLE $cat.$name
-      (k BIGINT NOT NULL, name STRING, amount BIGINT) USING graft
-      TBLPROPERTIES ('merge_key'='k', 'buckets'='4',
-        'merge_mode'='$mode')""")
+      (${key.ddl}, name STRING, amount BIGINT) USING graft
+      TBLPROPERTIES ('merge_key'='${key.keyCols.mkString(",")}',
+        'buckets'='4', 'merge_mode'='$mode')""")
     spark.sql(s"INSERT INTO $cat.$name " +
-      "SELECT id, concat('n', id), id * 10 FROM range(0, 300)")
-    spark.sql("SELECT id AS k, concat('u', id) AS name, id AS amount " +
-      "FROM range(100, 400)").createOrReplaceTempView("sc_src")
-    spark.sql(s"""MERGE INTO $cat.$name t USING sc_src s ON t.k = s.k
-      WHEN MATCHED AND s.k % 10 = 0 THEN DELETE
+      s"SELECT ${key.fromId}, concat('n', id), id * 10 FROM range(0, 300)")
+    spark.sql(s"SELECT ${key.fromId}, id, concat('u', id) AS name, " +
+      "id AS amount FROM range(100, 400)").createOrReplaceTempView("sc_src")
+    spark.sql(s"""MERGE INTO $cat.$name t USING sc_src s
+      ON ${key.keyCols.map(k => s"t.$k = s.$k").mkString(" AND ")}
+      WHEN MATCHED AND s.id % 10 = 0 THEN DELETE
       WHEN MATCHED THEN UPDATE SET name = s.name, amount = s.amount
-      WHEN NOT MATCHED THEN INSERT (k, name, amount)
-        VALUES (s.k, s.name, s.amount)""")
-    spark.sql(s"UPDATE $cat.$name SET amount = amount + 7 WHERE k % 3 = 1")
+      WHEN NOT MATCHED THEN INSERT ($keys, name, amount)
+        VALUES (${key.keyCols.map("s." + _).mkString(", ")}, s.name, s.amount)""")
+    spark.sql(s"UPDATE $cat.$name SET amount = amount + 7 WHERE amount % 3 = 1")
     spark.sql(s"DELETE FROM $cat.$name WHERE amount % 5 = 2")
   }
 
-  private def content(name: String): Seq[String] =
-    spark.sql(s"SELECT k, name, amount FROM $cat.$name ORDER BY k")
+  private def content(name: String, key: KeyShape): Seq[String] = {
+    val keys = key.keyCols.mkString(", ")
+    spark.sql(s"SELECT $keys, name, amount FROM $cat.$name ORDER BY $keys")
       .collect().toSeq.map(_.toString)
+  }
 
-  private def changes(name: String): Seq[String] = {
+  private def changes(name: String, key: KeyShape): Seq[String] = {
     val d = s"$warehouse/$name"
     val v = GraftStore.currentVersion(d)
     GraftStore.readChanges(spark, d, 1, v)
-      .selectExpr("k", "name", "amount", "change_op",
-        "change_before.k", "change_before.name", "change_before.amount")
+      .selectExpr(key.keyCols ++ Seq("name", "amount", "change_op") ++
+        (key.keyCols ++ Seq("name", "amount")).map("change_before." + _): _*)
       .collect().toSeq.map(_.toString).sorted
   }
 
-  for (mode <- Seq("cow", "mor"))
-    test(s"broadcast and shuffle commit legs produce identical " +
-        s"content and changelog ($mode)") {
-      // default bounds: every batch here is small -> broadcast legs
-      run(s"bc_$mode", mode)
-      // rows bound 0: every batch is "large" -> shuffle legs
-      withConf("spark.graft.commit.broadcastMaxRows" -> "0") {
-        run(s"sh_$mode", mode)
-      }
-      assert(content(s"bc_$mode") == content(s"sh_$mode"))
-      assert(changes(s"bc_$mode") == changes(s"sh_$mode"))
-      assert(content(s"bc_$mode").nonEmpty)
+  /** Whether a query run by `body` read a change batch decoded by a
+    * distributed job and persisted (an in-memory relation over an RDD
+    * scan) — the decode a batch over the bounds takes. */
+  private def persistedDecode(body: => Unit): Boolean = {
+    val seen = new AtomicBoolean(false)
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.optimizedPlan.collectWithSubqueries {
+              case m: InMemoryRelation
+                  if m.cacheBuilder.cachedPlan.exists(_.isInstanceOf[RDDScanExec]) => m
+            }.nonEmpty) seen.set(true)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    spark.listenerManager.register(l)
+    try { body; GraftTestBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    seen.get
+  }
+
+  for (key <- Seq(bigintKey, stringDateKey); mode <- Seq("cow", "mor")) {
+    val tag = if (key == bigintKey) mode else s"${mode}_sd"
+    test(s"broadcast and shuffle commit legs produce identical " +
+        s"content and changelog ($mode${key.label})") {
+      // default bounds: every batch here is small -> driver decode,
+      // broadcast legs
+      assert(!persistedDecode(run(s"bc_$tag", mode, key)))
+      // rows bound 0: every batch is "large" -> distributed decode,
+      // persisted batch, shuffle legs
+      withConf("spark.graft.commit.broadcastMaxRows" -> "0") {
+        assert(persistedDecode(run(s"sh_$tag", mode, key)))
+      }
+      assert(content(s"bc_$tag", key) == content(s"sh_$tag", key))
+      assert(changes(s"bc_$tag", key) == changes(s"sh_$tag", key))
+      assert(content(s"bc_$tag", key).nonEmpty)
+      if (mode == "mor") {
+        // the same program on copy-on-write applies no delete probe
+        run(s"ref_$tag", "cow", key)
+        assert(GraftStore.hasLiveDv(GraftStore.versionDir(
+          s"$warehouse/bc_$tag", GraftStore.currentVersion(s"$warehouse/bc_$tag"))))
+        assert(content(s"bc_$tag", key) == content(s"ref_$tag", key))
+        assert(changes(s"bc_$tag", key) == changes(s"ref_$tag", key))
+      }
+    }
+  }
 
   test("mor over-cap escalation under broadcast legs matches the " +
       "shuffle path (cowRewrite over touched+DV buckets, small batch)") {
@@ -78,13 +136,13 @@ class SmallCommitSpec extends SparkTestBase {
     // base reads had no coverage
     sys.props("graft.store.morMaxLiveDeletes") = "1"
     try {
-      run("esc_bc", "mor")
+      run("esc_bc", "mor", bigintKey)
       withConf("spark.graft.commit.broadcastMaxRows" -> "0") {
-        run("esc_sh", "mor")
+        run("esc_sh", "mor", bigintKey)
       }
-      assert(content("esc_bc") == content("esc_sh"))
-      assert(changes("esc_bc") == changes("esc_sh"))
-      assert(content("esc_bc").nonEmpty)
+      assert(content("esc_bc", bigintKey) == content("esc_sh", bigintKey))
+      assert(changes("esc_bc", bigintKey) == changes("esc_sh", bigintKey))
+      assert(content("esc_bc", bigintKey).nonEmpty)
     } finally sys.props.remove("graft.store.morMaxLiveDeletes")
   }
 }
