@@ -74,10 +74,10 @@ object Bench {
     * listing from the `_bucketmap`/`_fileseq` manifests, each pruned query
     * plans from metadata in milliseconds regardless of slot count; a
     * regression to plan-time directory listing multiplies this row several
-    * times over (the pre-r12 shape measured ~4 s PER QUERY at 2k slots —
-    * Scratch `--scale part`). No oracle form on purpose: pruning
-    * correctness is s30/s30b's gate; this row pins plan-time COST into the
-    * driver's bench series. */
+    * times over (the pre-r12 shape measured ~4 s PER QUERY at 2k slots;
+    * DESIGN.md "Measured scaling evidence"). No oracle form on purpose:
+    * pruning correctness is s30/s30b's gate; this row pins plan-time COST
+    * into the driver's bench series. */
   private def planMetadataOnly(spark: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     operators.DmlFixture.register(spark)
@@ -148,9 +148,9 @@ object Bench {
     * materialization), the s26-style DML statement burst, ONE
     * incremental `refresh_mv` folding it, and the MV read. The refresh
     * leg is the number that must stay ∝ changes + |view| at any table
-    * size (Scratch `--scale mv` measures the flatness; this row pins the
-    * absolute cost into the driver's series). No oracle form on purpose:
-    * flow correctness is s39_materialized_view's gate. */
+    * size (DESIGN.md "Measured scaling evidence" records the flatness;
+    * this row pins the absolute cost into the driver's series). No oracle
+    * form on purpose: flow correctness is s39_materialized_view's gate. */
   private def mvRefreshOnly(spark: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     operators.DmlFixture.register(spark)
@@ -186,7 +186,8 @@ object Bench {
     * with the view a fact⋈dim rollup, so the incremental refresh's delta
     * plan joins the CHANGELOG SLICE to the pinned dim (the fact table
     * never appears in it). Commit-latency-bound like its single-table
-    * sibling; the scale separation lives in `Scratch --scale mvjoin`. */
+    * sibling; DESIGN.md "Measured scaling evidence" records its scale
+    * separation. */
   private def mvJoinRefreshOnly(spark: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     operators.DmlFixture.register(spark)

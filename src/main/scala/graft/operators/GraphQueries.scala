@@ -47,8 +47,8 @@ object GraphQueries {
     * both sides on l_orderkey (co-partitioned), and pair generation per
     * order is bounded by the order's distinct part count (<= 7 in TPC-H
     * shape), so the build is linear in lineitem, never quadratic in
-    * parts. Shared by g3/g4, d2_frequent_pairs, the facade tests, and the
-    * Scratch scale probe — one definition, no drift. */
+    * parts. Shared by g3/g4, d2_frequent_pairs and the facade tests — one
+    * definition, no drift. */
   def coOccurrencePairs(lineitem: DataFrame): DataFrame = {
     val spark = lineitem.sparkSession
     import spark.implicits._

@@ -1763,8 +1763,6 @@ object GraftTable {
       wrapScan: Option[org.apache.spark.sql.connector.read.Scan =>
         org.apache.spark.sql.connector.read.Scan] = None): ScanBuilder = {
     val vdir = GraftStore.versionDir(dir, version)
-    val withBucket = StructType(GraftStore.physicalSchema(meta.schema).fields :+
-      StructField(GraftStore.BucketCol, IntegerType, nullable = true))
     // manifest-resolved snapshot scan: the file index is authored from
     // `_bucketmap` (files live in their writing versions' dirs), partition
     // values served per bucket dir — see GraftSnapshotScan

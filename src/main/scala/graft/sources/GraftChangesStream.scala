@@ -429,36 +429,20 @@ final class GraftTableAppendStream(dir: String, meta: GraftTableMeta,
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** Stock parquet scan of one version dir (physical schema + the bucket
-    * partition column — the same layout the batch table scan reads). A
-    * merge-on-read version with live delete slices gets the same
-    * scan-level delete application as the batch path — the filter state
-    * rides in the PARTITIONS (planned against `v`), so the factory being
-    * built from a later version can't skew the snapshot. */
-  private def rawSnapshotScanBuilder(v: Long) = {
-    val withBucket = org.apache.spark.sql.types.StructType(
-      GraftStore.physicalSchema(meta.schema).fields :+
-        org.apache.spark.sql.types.StructField(GraftStore.BucketCol,
-          org.apache.spark.sql.types.IntegerType, nullable = true))
-    // manifest-resolved snapshot (bucket map → owner dirs), same path the
-    // batch table scan plans from — see GraftSnapshotScan
-    (org.apache.spark.sql.GraftSnapshotScan.parquetScanBuilder(spark, dir,
-      v, meta, GraftStore.physicalSchema(meta.schema),
-      CaseInsensitiveStringMap.empty()), withBucket)
-  }
+    * partition column — the same layout the batch table scan reads),
+    * planned from the manifest — see GraftSnapshotScan. */
+  private def rawSnapshotScan(v: Long) =
+    org.apache.spark.sql.GraftSnapshotScan.parquetScanBuilder(spark, dir, v,
+      meta, GraftStore.physicalSchema(meta.schema),
+      CaseInsensitiveStringMap.empty()).build()
 
-  private def rawSnapshotScan(v: Long) = rawSnapshotScanBuilder(v)._1.build()
-
-  private def snapshotScan(v: Long) = {
-    val (raw, withBucket) = rawSnapshotScanBuilder(v)
-    GraftStore.loadDvProbe(spark, dir, v, meta) match {
-      case None => raw.build()
-      case Some((fileSeq, dv)) =>
-        val physKeys = meta.keyCols.map(k =>
-          GraftStore.physicalName(meta.schema(k)))
-        new org.apache.spark.sql.GraftMorScanBuilder(raw, physKeys,
-          withBucket, dv, fileSeq).build()
-    }
-  }
+  /** The snapshot scan with the version's live delete slices applied, the
+    * same composition every other read of a version plans — the filter
+    * state rides in the PARTITIONS (planned against `v`), so the factory
+    * being built from a later version can't skew the snapshot. */
+  private def snapshotScan(v: Long) =
+    org.apache.spark.sql.GraftSnapshotScan.morScanBuilder(spark, dir, v, meta)
+      .build()
 
   private def changesScan(paths: Seq[String]) = {
     val opts = new CaseInsensitiveStringMap(

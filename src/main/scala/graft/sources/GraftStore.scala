@@ -385,12 +385,9 @@ object GraftStore {
       }.toMap
 
   /** Physical slot directories of a snapshot: slot → the owner versions'
-    * dirs (existing ones only), optionally restricted to a bucket set —
-    * the resolution every read path plans from. */
-  def resolvedSlotDirs(dir: String, v: Long,
-      buckets: Option[Set[Int]] = None): Seq[(String, Seq[String])] =
+    * dirs (existing ones only). */
+  def resolvedSlotDirs(dir: String, v: Long): Seq[(String, Seq[String])] =
     ownersOf(dir, v).toSeq
-      .filter { case (s, _) => buckets.forall(_.contains(slotBucket(s))) }
       .sortBy(_._1)
       .map { case (s, os) =>
         s -> os.map(o => s"${versionDir(dir, o)}/$s")
@@ -614,33 +611,30 @@ object GraftStore {
 
   private[sources] val MetaBackupName = "_meta_backup"
 
+  /** Parse `_meta.json`: exactly the nine lines [[writeMeta]] writes; any
+    * other count is not a meta this store wrote and fails loudly. */
   def readMeta(dir: String): GraftTableMeta = {
     recoverMetaBackup(dir)
-    val lines = new String(Files.readAllBytes(metaPath(dir)), "UTF-8").split("\n")
+    val lines = new String(Files.readAllBytes(metaPath(dir)), "UTF-8")
+      .split("\n", -1)
+    if (lines.length != 9) throw new IllegalStateException(
+      s"unreadable table meta in $dir: expected 9 lines, got ${lines.length}")
+    val dec = (v: String) => java.net.URLDecoder.decode(v, "UTF-8")
     GraftTableMeta(DataType.fromJson(lines(0)).asInstanceOf[StructType],
       lines(1).split(",").toSeq.filter(_.nonEmpty), lines(2).trim.toInt,
-      // 4th line absent in pre-evolution metas
-      if (lines.length > 3) lines(3).split(",").toSeq.filter(_.nonEmpty) else Nil,
-      // 5th line absent in pre-MoR metas (copy-on-write deltas)
-      if (lines.length > 4 && lines(4).trim.nonEmpty) lines(4).trim else "cow",
-      // 6th line absent in pre-constraint metas
-      if (lines.length > 5) lines(5).split(",").toSeq.filter(_.nonEmpty).map {
-        pair =>
-          val Array(n, s) = pair.split("=", 2)
-          val dec = (v: String) => java.net.URLDecoder.decode(v, "UTF-8")
-          (dec(n), dec(s))
-      } else Nil,
-      // 7th line absent in pre-partitioning metas
-      if (lines.length > 6 && lines(6).trim.nonEmpty) {
+      lines(3).split(",").toSeq.filter(_.nonEmpty),
+      lines(4).trim,
+      lines(5).split(",").toSeq.filter(_.nonEmpty).map { pair =>
+        val Array(n, s) = pair.split("=", 2)
+        (dec(n), dec(s))
+      },
+      if (lines(6).trim.isEmpty) None
+      else {
         val Array(fn, c) = lines(6).trim.split(":", 2)
-        Some((fn, java.net.URLDecoder.decode(c, "UTF-8")))
-      } else None,
-      // 8th line absent in pre-bloom metas
-      if (lines.length > 7) lines(7).split(",").toSeq.filter(_.nonEmpty)
-        .map(java.net.URLDecoder.decode(_, "UTF-8")) else Nil,
-      // 9th line absent in pre-auto-optimize metas
-      if (lines.length > 8 && lines(8).trim.nonEmpty) lines(8).trim.toInt
-      else 0)
+        Some((fn, dec(c)))
+      },
+      lines(7).split(",").toSeq.filter(_.nonEmpty).map(dec),
+      if (lines(8).trim.isEmpty) 0 else lines(8).trim.toInt)
   }
 
   def currentVersion(dir: String): Long =
@@ -1259,27 +1253,6 @@ object GraftStore {
     }
   }
 
-  /** Every live delete slice of a version as one DataFrame: the PHYSICAL
-    * key columns + [[DvSeqCol]] (long) + [[BucketCol]] (int). None when
-    * the version has no live deletes. The slice schema is passed to the
-    * reader — merge-key types never change (ALTER refuses it) — so the
-    * read plans without a schema-inference job. */
-  def readDv(spark: SparkSession, vdir: String,
-      meta: GraftTableMeta): Option[DataFrame] = {
-    val seqs = dvSeqDirs(vdir)
-    if (seqs.isEmpty) None
-    else {
-      val dirs = seqs.map(s => s"${dvRoot(vdir)}/$DvSeqCol=$s")
-      val sliceSchema = StructType(meta.keyCols.map { k =>
-          val f = meta.schema(k)
-          StructField(physicalName(f), f.dataType, nullable = true)
-        } :+ StructField(DvSeqCol, LongType, nullable = true)
-          :+ StructField(BucketCol, IntegerType, nullable = true))
-      Some(spark.read.schema(sliceSchema).option("basePath", dvRoot(vdir))
-        .parquet(dirs: _*))
-    }
-  }
-
   /** Driver-side probe structures for the scan wrapper
     * ([[org.apache.spark.sql.GraftMorScanBuilder]]): the per-file seq map
     * and, per bucket, each deleted key's newest delete seq — key values in
@@ -1326,28 +1299,40 @@ object GraftStore {
     org.apache.spark.sql.GraftSnapshotScan.invalidate(tableDir)
   }
 
+  /** Reads every live delete slice of the version — the only read of the
+    * `_dv` files. The slice schema (PHYSICAL key columns + [[DvSeqCol]]
+    * long + [[BucketCol]] int) is passed to the reader — merge-key types
+    * never change (ALTER refuses it) — so the read plans without a
+    * schema-inference job. The slices hold at most the live-delete cap
+    * of rows: one collect, then max-seq-per-key folds here on the driver. */
   private def loadDvProbeUncached(spark: SparkSession, dir: String, v: Long,
       meta: GraftTableMeta)
-      : Option[(Map[String, Long], Map[Int, Map[Seq[Any], Long]])] =
-    readDv(spark, versionDir(dir, v), meta).map { dv =>
-      val physKeys = meta.keyCols.map(k => physicalName(meta.schema(k)))
-      val keyTypes = meta.keyCols.map(k => meta.schema(k).dataType)
-      // the slices hold at most the live-delete cap of rows: one collect,
-      // then max-seq-per-key folds here instead of in a two-stage
-      // aggregate
-      val rows = dv.select((BucketCol +: DvSeqCol +: physKeys).map(col): _*)
-        .collect()
-      val convs = keyTypes.map(org.apache.spark.sql.catalyst
-        .CatalystTypeConverters.createToCatalystConverter)
-      val n = physKeys.length
-      val m = rows.toSeq.groupBy(_.getInt(0)).map { case (b, rs) =>
-        b -> rs.groupMapReduce { r =>
-          Seq.tabulate(n)(i => org.apache.spark.sql.GraftMorScanSupport
-            .normalizeKey(convs(i)(r.get(i + 2)))): Seq[Any]
-        }(_.getLong(1))(math.max)
-      }
-      (resolvedFileSeq(dir, v), m)
+      : Option[(Map[String, Long], Map[Int, Map[Seq[Any], Long]])] = {
+    val vdir = versionDir(dir, v)
+    val seqs = dvSeqDirs(vdir)
+    if (seqs.isEmpty) return None
+    val keyFields = meta.keyCols.map(k => meta.schema(k))
+    val physKeys = keyFields.map(physicalName)
+    val sliceSchema = StructType(keyFields.map(f =>
+        StructField(physicalName(f), f.dataType, nullable = true)) :+
+      StructField(DvSeqCol, LongType, nullable = true) :+
+      StructField(BucketCol, IntegerType, nullable = true))
+    val rows = spark.read.schema(sliceSchema)
+      .option("basePath", dvRoot(vdir))
+      .parquet(seqs.map(s => s"${dvRoot(vdir)}/$DvSeqCol=$s"): _*)
+      .select((BucketCol +: DvSeqCol +: physKeys).map(col): _*)
+      .collect()
+    val convs = keyFields.map(f => org.apache.spark.sql.catalyst
+      .CatalystTypeConverters.createToCatalystConverter(f.dataType))
+    val n = physKeys.length
+    val m = rows.toSeq.groupBy(_.getInt(0)).map { case (b, rs) =>
+      b -> rs.groupMapReduce { r =>
+        Seq.tabulate(n)(i => org.apache.spark.sql.GraftMorScanSupport
+          .normalizeKey(convs(i)(r.get(i + 2)))): Seq[Any]
+      }(_.getLong(1))(math.max)
     }
+    Some((resolvedFileSeq(dir, v), m))
+  }
 
   // ------------------------------------------------- per-file sequence map
 
@@ -2695,57 +2680,23 @@ object GraftStore {
 
   /** Read one version with PHYSICAL column names + [[BucketCol]] — the
     * exact file layout, for maintenance rewrites that must write the same
-    * names back ([[optimize]]). Merge-on-read versions apply their live
-    * delete slices here: a key's rows survive only in files at least as
-    * new as the key's newest delete entry (broadcast joins — the delete
-    * set and the file-seq map are both cap-bounded small). */
+    * names back ([[optimize]]). Plans the same manifest-resolved snapshot
+    * scan and merge-on-read delete application as every other read
+    * ([[org.apache.spark.sql.GraftSnapshotScan.morScanBuilder]]): a
+    * `buckets` restriction is a `gbucket` partition filter pushed into
+    * the authored file index, a `slots` restriction narrows the authored
+    * index itself. */
   private def readVersionPhysical(spark: SparkSession, dir: String,
       meta: GraftTableMeta, v: Long,
       buckets: Option[Set[Int]] = None,
       slots: Option[Set[String]] = None): DataFrame = {
-    val vdir = versionDir(dir, v)
-    val withBucket = StructType(physicalSchema(meta.schema).fields :+
-      StructField(BucketCol, IntegerType, nullable = true))
-    // resolution-based read: the roots are the owner versions' bucket
-    // dirs (leaf dirs holding only files — no partition discovery), with
-    // the bucket id re-derived from each file's `gbucket=` path segment.
-    // A bucket (or finer slot) restriction prunes at FILE-LIST time, the
-    // manifest-format equivalent of the old layout's partition pruning.
-    val roots = resolvedSlotDirs(dir, v, buckets)
-      .filter { case (s, _) => slots.forall(_.contains(s)) }
-      .flatMap(_._2)
-    if (roots.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), withBucket)
-    else {
-      val base = spark.read.schema(physicalSchema(meta.schema))
-        .parquet(roots: _*)
-        .withColumn(BucketCol, regexp_extract(input_file_name(),
-          s"$BucketCol=(\\d+)/", 1).cast(IntegerType))
-      readDv(spark, vdir, meta) match {
-        case None => base
-        case Some(dv) =>
-          val physKeys = meta.keyCols.map(k => physicalName(meta.schema(k)))
-          val seqRows = resolvedFileSeq(dir, v).toSeq.map {
-            case (rel, s) => Row(rel, s)
-          }
-          val seqDf = spark.createDataFrame(seqRows.asJava,
-            StructType(Seq(StructField("__rel", StringType, nullable = false),
-              StructField("__fseq", LongType, nullable = false))))
-          val dvAgg = dv.groupBy(physKeys.map(col): _*)
-            .agg(max(col(DvSeqCol)).as("__dvseq"))
-          base
-            .withColumn("__rel",
-              regexp_extract(input_file_name(), "/v\\d{10}/(.+)$", 1))
-            .join(broadcast(seqDf), Seq("__rel"), "left_outer")
-            .join(broadcast(dvAgg), physKeys, "left_outer")
-            // keep unless a delete NEWER than the row's file exists for
-            // its key; an unmapped file counts as seq 0 (older than every
-            // delete)
-            .filter(col("__dvseq").isNull ||
-              col("__dvseq") <= coalesce(col("__fseq"), lit(0L)))
-            .select(withBucket.fieldNames.toIndexedSeq.map(col): _*)
-      }
-    }
+    val df = org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(new org.apache.spark.sql.GraftVersionTable(spark, dir, v,
+          meta, slots), None, None))
+    buckets.fold(df)(bs => df.filter(col(BucketCol).isin(bs.toSeq: _*)))
+      .select((physicalSchema(meta.schema).fieldNames :+ BucketCol)
+        .toIndexedSeq.map(col): _*)
   }
 
   /** Read one version as a logical-named DataFrame including the

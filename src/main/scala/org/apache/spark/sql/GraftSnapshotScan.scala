@@ -1,8 +1,11 @@
 package org.apache.spark.sql
 
+import graft.sources.{GraftStore, GraftTableMeta}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.execution.datasources.{PartitioningAwareFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
@@ -29,7 +32,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * and `ParquetScanBuilder` are `private[sql]` — the same shim pattern as
   * [[GraftSqlShim]]. */
 object GraftSnapshotScan {
-  import graft.sources.{GraftStore, GraftTableMeta}
 
   /** Catalyst type of the `gpart` partition column: the source column's
     * type for identity partitioning, INT ordinal for the time transforms. */
@@ -46,17 +48,6 @@ object GraftSnapshotScan {
         ExternalCatalogUtils.unescapePathName(s)), StringType),
       dt, Some("UTC")).eval(null)
 
-  /** A ParquetScanBuilder over the resolved snapshot (`tableDir`, `v`).
-    * `physSchema` = the data columns as stored in files; the partition
-    * columns ([`gpart`,] `gbucket`) are appended here.
-    *
-    * The file index is built ENTIRELY from the store's manifests
-    * (`_bucketmap` slots + `_fileseq` names/sizes) — zero filesystem
-    * listing at plan time. An InMemoryFileIndex lists every slot dir
-    * before pruning can run, so a one-day scan of a 129-day × 16-bucket
-    * table paid a ~2000-directory listing job per query (measured ~4 s at
-    * 10M rows); planning from metadata is the object-store design point
-    * this store exists for. */
   // the authored (PartitionSpec, dir → files) of a snapshot is a pure
   // function of the immutable version dir (+ the partition-column type),
   // but building it is O(slots) — a plan-heavy workload (many pruned
@@ -82,25 +73,41 @@ object GraftSnapshotScan {
     authoredCache.keySet.removeIf(k => k == tableDir || k.startsWith(prefix))
   }
 
+  /** Data columns as stored plus the partition columns ([`gpart`,]
+    * `gbucket`) — the full read schema of a snapshot scan. */
+  def readSchema(meta: GraftTableMeta, physSchema: StructType): StructType =
+    StructType(physSchema.fields ++
+      partType(meta, physSchema).map(t =>
+        StructField(GraftStore.PartCol, t, nullable = true)).toSeq :+
+      StructField(GraftStore.BucketCol, IntegerType, nullable = true))
+
+  /** A ParquetScanBuilder over the resolved snapshot (`tableDir`, `v`).
+    * `physSchema` = the data columns as stored in files; the partition
+    * columns ([`gpart`,] `gbucket`) are appended here.
+    *
+    * The file index is built ENTIRELY from the store's manifests
+    * (`_bucketmap` slots + `_fileseq` names/sizes) — zero filesystem
+    * listing at plan time. An InMemoryFileIndex lists every slot dir
+    * before pruning can run, so a one-day scan of a 129-day × 16-bucket
+    * table paid a ~2000-directory listing job per query (measured ~4 s at
+    * 10M rows); planning from metadata is the object-store design point
+    * this store exists for.
+    *
+    * `slots` restricts the authored file index to those
+    * `[gpart=<v>/]gbucket=<k>` slots (a maintenance rewrite's working
+    * set); a restricted index is not cached. */
   def parquetScanBuilder(spark: SparkSession, tableDir: String, v: Long,
       meta: GraftTableMeta, physSchema: StructType,
-      options: CaseInsensitiveStringMap): ParquetScanBuilder = {
+      options: CaseInsensitiveStringMap,
+      slots: Option[Set[String]] = None): ParquetScanBuilder = {
     val pt = partType(meta, physSchema)
-    val partCols = StructType(
-      pt.map(t => StructField(GraftStore.PartCol, t, nullable = true)).toSeq :+
-        StructField(GraftStore.BucketCol, IntegerType, nullable = true))
-    val key = GraftStore.versionDir(tableDir, v) +
-      pt.map(t => s"#${t.sql}").getOrElse("")
-    val cached = authoredCache.get(key)
-    val epoch0 = invalidationEpoch.get()
-    val (spec, filesByDir) = if (cached != null) cached else {
+    val schema = readSchema(meta, physSchema)
+    val partCols = StructType(schema.fields.drop(physSchema.length))
+    def author(entries: Seq[GraftStore.SnapshotFile])
+        : (PartitionSpec, Map[Path, Array[FileStatus]]) = {
       val hconf = spark.sessionState.newHadoopConf()
       val fs = new Path(tableDir).getFileSystem(hconf)
       def qualified(p: String): Path = fs.makeQualified(new Path(p))
-      // size < 0 = the manifest predates the size column AND the physical
-      // stat failed (file gone) — nothing a scan could read anyway
-      val entries = GraftStore.snapshotFileEntries(tableDir, v)
-        .filter(_.size >= 0)
       val bySlotDir = entries.groupBy(e =>
         e.path.stripSuffix("/" + e.rel.substring(e.rel.lastIndexOf('/') + 1)))
       val parts = bySlotDir.toSeq.sortBy(_._1).map { case (d, es) =>
@@ -115,17 +122,65 @@ object GraftSnapshotScan {
           0L, qualified(e.path))).toArray
         (PartitionPath(new GenericInternalRow(values), qualified(d)), files)
       }
-      val computed = (PartitionSpec(partCols, parts.map(_._1)),
+      (PartitionSpec(partCols, parts.map(_._1)),
         parts.map(p => p._1.path -> p._2).toMap)
-      if (authoredCache.size > 64) authoredCache.clear()
-      if (invalidationEpoch.get() == epoch0) authoredCache.put(key, computed)
-      computed
+    }
+    val (spec, filesByDir) = slots match {
+      case Some(keep) => author(GraftStore.snapshotFileEntries(tableDir, v)
+        .filter(e => keep.contains(e.slot)))
+      case None =>
+        val key = GraftStore.versionDir(tableDir, v) +
+          pt.map(t => s"#${t.sql}").getOrElse("")
+        val cached = authoredCache.get(key)
+        val epoch0 = invalidationEpoch.get()
+        if (cached != null) cached else {
+          val computed = author(GraftStore.snapshotFileEntries(tableDir, v))
+          if (authoredCache.size > 64) authoredCache.clear()
+          if (invalidationEpoch.get() == epoch0) authoredCache.put(key, computed)
+          computed
+        }
     }
     val index = new GraftSlotFileIndex(spark, spec, filesByDir)
-    ParquetScanBuilder(spark,
-      index, StructType(physSchema.fields ++ partCols.fields), physSchema,
-      options)
+    ParquetScanBuilder(spark, index, schema, physSchema, options)
   }
+
+  /** The scan of version `v` that every read outside the catalog's table
+    * scan plans — commit legs, maintenance rewrites, ANALYZE, MV refresh
+    * (through [[GraftVersionTable]]) and the changes stream's snapshot
+    * leg: the snapshot scan over the physical columns, wrapped in
+    * [[GraftMorScanBuilder]] with the version's cached delete probe while
+    * it has live delete slices. Read schema: [[readSchema]]. */
+  def morScanBuilder(spark: SparkSession, tableDir: String, v: Long,
+      meta: GraftTableMeta, slots: Option[Set[String]] = None): ScanBuilder = {
+    val raw = parquetScanBuilder(spark, tableDir, v, meta,
+      GraftStore.physicalSchema(meta.schema),
+      CaseInsensitiveStringMap.empty(), slots)
+    GraftStore.loadDvProbe(spark, tableDir, v, meta) match {
+      case None => raw
+      case Some((fileSeq, dv)) =>
+        new GraftMorScanBuilder(raw,
+          meta.keyCols.map(k => GraftStore.physicalName(meta.schema(k))),
+          raw.schema, dv, fileSeq)
+    }
+  }
+}
+
+/** One version of a graft table as a bare readable table over
+  * [[GraftSnapshotScan.morScanBuilder]] — the relation behind
+  * `GraftStore.readVersion`. Deliberately not a `GraftTable`: materialized
+  * view shape derivation and rewrite match relations over `GraftTable`, so
+  * they never take a commit-leg or maintenance read of a user table. */
+final class GraftVersionTable(spark: SparkSession, tableDir: String, v: Long,
+    meta: GraftTableMeta, slots: Option[Set[String]])
+    extends Table with SupportsRead {
+  private val schema0 = GraftSnapshotScan.readSchema(meta,
+    GraftStore.physicalSchema(meta.schema))
+  override def name(): String = s"graft-version:$tableDir@$v"
+  override def schema(): StructType = schema0
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    GraftSnapshotScan.morScanBuilder(spark, tableDir, v, meta, slots)
 }
 
 /** A [[PartitioningAwareFileIndex]] whose partition spec AND file listing

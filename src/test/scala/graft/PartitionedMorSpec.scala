@@ -98,6 +98,71 @@ class PartitionedMorSpec extends SparkTestBase {
       s"after-images must land under gpart=/gbucket= dirs of v$v2: ${after -- before}")
   }
 
+  test("readVersion by bucket and the slot-restricted optimize equal the " +
+      "catalog read of a DV-live table") {
+    warehouse
+    val m = "t_readv"
+    spark.sql(s"DROP TABLE IF EXISTS $cat.$m")
+    spark.sql(s"""CREATE TABLE $cat.$m
+      (k DOUBLE NOT NULL, ts TIMESTAMP, amount BIGINT) USING graft
+      PARTITIONED BY (days(ts))
+      TBLPROPERTIES ('merge_key'='k', 'buckets'='4', 'merge_mode'='mor')""")
+    // 3 days × 8 keys; key 0 is written as -0.0
+    spark.sql(s"""INSERT INTO $cat.$m
+      SELECT CASE WHEN id = 0 THEN -0.0D ELSE CAST(id AS DOUBLE) END AS k,
+        timestamp'2024-03-01 00:00:00' + make_interval(0,0,0, CAST(id / 8 AS INT), 0,0,0) AS ts,
+        id * 10 AS amount
+      FROM range(0, 24)""")
+    // key 0 is matched and rewritten as +0.0 on another day; key 13 is
+    // deleted, then re-inserted on another day
+    spark.sql(s"""MERGE INTO $cat.$m t USING (SELECT 0.0D AS k,
+        timestamp'2024-03-03 01:00:00' AS ts, 7L AS amount) s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET k = s.k, ts = s.ts, amount = s.amount""")
+    spark.sql(s"DELETE FROM $cat.$m WHERE k = 13")
+    spark.sql(s"INSERT INTO $cat.$m VALUES " +
+      "(13, timestamp'2024-03-01 05:00:00', 1300)")
+    val d = dir(m)
+    val cur = GraftStore.currentVersion(d)
+    val dvB = GraftStore.dvBuckets(curVdir(m))
+    assert(dvB.nonEmpty && dvB.size < 4, s"delete slices in buckets $dvB")
+
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("k", "ts", "amount").collect().map(_.toString).toSeq.sorted
+    val catalog = sorted(spark.table(s"$cat.$m"))
+    assert(catalog.size === 24)
+    assert(catalog.filter(_.startsWith("[0.0,")) ===
+      Seq("[0.0,2024-03-03 01:00:00.0,7]"))
+    assert(!catalog.exists(_.startsWith("[-0.0,")))
+    assert(catalog.filter(_.startsWith("[13.0,")) ===
+      Seq("[13.0,2024-03-01 05:00:00.0,1300]"))
+
+    // each bucket's restricted read holds only that bucket, prunes at the
+    // file index, and together they are the catalog read
+    val full = filesPlanned(GraftStore.readVersion(spark, d, cur))
+    val byBucket = (0 until 4).map { b =>
+      val df = GraftStore.readVersion(spark, d, cur, Some(Set(b)))
+      assert(df.filter(df(GraftStore.BucketCol) =!= b).isEmpty)
+      assert(filesPlanned(df) < full, s"bucket $b read was not pruned")
+      sorted(df)
+    }
+    assert(byBucket.flatten.sorted === catalog)
+
+    // optimize rewrites only the slots of the DV-carrying buckets and
+    // carries the rest; the rewritten table reads the same rows
+    spark.sql(s"CALL $cat.optimize(`table` => '$m')")
+    val next = GraftStore.currentVersion(d)
+    assert(next === cur + 1)
+    assert(!GraftStore.hasLiveDv(curVdir(m)))
+    val owners = GraftStore.ownersOf(d, next)
+    val (rewritten, carried) =
+      owners.partition { case (_, os) => os == Seq(next) }
+    assert(rewritten.keySet.map(GraftStore.slotBucket) === dvB)
+    assert(carried.nonEmpty &&
+      carried.keySet.forall(s => !dvB.contains(GraftStore.slotBucket(s))))
+    assert(sorted(spark.table(s"$cat.$m")) === catalog)
+    assert(sorted(GraftStore.readVersion(spark, d, next)) === catalog)
+  }
+
   test("partition pruning composes with live delete slices") {
     val m = mkDays("t_prune", "mor")
     seedDays(m)

@@ -18,9 +18,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * The bounds pin the small-batch commit path: the change batch decoded
   * on the driver (no decode, persist or touched-set jobs), the delete
   * slice written in one job, and the delete-slice probe read in one job
-  * with no schema inference. A small batch that is not local (here an
-  * RDD-backed DataFrame handed to `applyChanges`) keeps the persisted
-  * path and must still be sized small from its cached plan. */
+  * with no schema inference. Commit legs and `CALL optimize` read a
+  * version through the same scan and cached delete probe as a query, so
+  * a MERGE over a version whose probe a read already loaded runs no more
+  * jobs than one over a version without live deletes. A small batch that
+  * is not local (here an RDD-backed DataFrame handed to `applyChanges`)
+  * keeps the persisted path and must still be sized small from its
+  * cached plan. */
 class CommitJobCountSpec extends SparkTestBase {
 
   private lazy val cat = "jobcount"
@@ -88,11 +92,19 @@ class CommitJobCountSpec extends SparkTestBase {
       assert(got.map(_.getLong(0)).toSeq == Seq(2 * 7 + 5L))
     }
     val live = jobsOf(merge(3))
+    assert(GraftStore.hasLiveDv(GraftStore.versionDir(dir,
+      GraftStore.currentVersion(dir))))
+    val optimizeLive = jobsOf(
+      spark.sql(s"CALL $cat.optimize(`table` => 'mm')").collect())
+    assert(!GraftStore.hasLiveDv(GraftStore.versionDir(dir,
+      GraftStore.currentVersion(dir))))
     info(s"jobs: MERGE without live deletes $noLive, with live deletes " +
-      s"$live, first point read of a new version $firstRead")
+      s"$live, first point read of a new version $firstRead, optimize " +
+      s"with live deletes $optimizeLive")
     assert(noLive <= 8)
-    assert(live <= 11)
+    assert(live <= 8)
     assert(firstRead <= 2)
+    assert(optimizeLive <= 3)
     // the statements above still produced the right table
     assert(spark.sql(s"SELECT count(*) FROM $table").head().getLong(0) ==
       6000 + 3 * 5 - 3 * 5)
