@@ -10,8 +10,6 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType, LongType, Metadata, MetadataBuilder, ShortType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -1443,12 +1441,13 @@ final class GraftMvInfoTable(tableName: String, g: GraftCatalog,
 }
 
 /** A table's changelog as a read-only DSv2 table: every committed change
-  * row (full image + `change_op` I/U/D) Hive-partitioned by
-  * `change_version`, scanned through the stock parquet DSv2 path so a
-  * version-range predicate prunes to the matching change directories.
-  * This is the CDC *producer* half of the S9/S11 story: downstream
-  * consumers read a version range and fold it with
-  * [[GraftStore.replayChanges]] instead of diffing snapshots. */
+  * row (full image + `change_op` I/U/D) partitioned by `change_version`,
+  * whose batch scan plans only the slices its pushed version predicates
+  * admit ([[org.apache.spark.sql.GraftChangesScanBuilder]]) and whose
+  * stream is [[GraftChangesMicroBatchStream]]. This is the CDC *producer*
+  * half of the S9/S11 story: downstream consumers read a version range
+  * and fold it with [[GraftStore.replayChanges]] instead of diffing
+  * snapshots. */
 final class GraftChangesTable(tableName: String, dir: String)
     extends Table with SupportsRead {
   private lazy val meta = GraftStore.readMeta(dir)
@@ -1462,21 +1461,18 @@ final class GraftChangesTable(tableName: String, dir: String)
     // finish any committed-but-unpublished changelog first; uncommitted
     // batches live in dot-prefixed staging dirs this scan never sees
     GraftStore.recoverChangelog(dir)
-    val batch = batchScanBuilder(options)
     // `readStream.table` on this table streams the changelog with
     // VERSION-ALIGNED micro-batches (GraftChangesMicroBatchStream);
     // maxVersionsPerTrigger / maxRowsPerTrigger bound each batch
-    new org.apache.spark.sql.GraftStreamableScanBuilder(batch,
+    new org.apache.spark.sql.GraftStreamableScanBuilder(batchScanBuilder,
       () => new GraftChangesMicroBatchStream(dir, meta,
         GraftStreamLimits.parse(options, "maxVersionsPerTrigger"),
         GraftStreamLimits.parse(options, "maxRowsPerTrigger")))
   }
 
-  private def batchScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val delegate = ParquetTable(s"graft:$tableName", SparkSession.active,
-      CaseInsensitiveStringMap.empty(), Seq(GraftStore.changesRoot(dir)),
-      Some(GraftStore.physicalChangesSchema(meta)),
-      classOf[ParquetFileFormat]).newScanBuilder(options)
+  private def batchScanBuilder: ScanBuilder = {
+    val delegate = new org.apache.spark.sql.GraftChangesScanBuilder(
+      SparkSession.active, dir, meta)
     if (!GraftStore.hasRenames(meta.schema)) delegate
     else {
       // flat data columns rename; the before-image struct's INNER fields
@@ -1492,8 +1488,7 @@ final class GraftChangesTable(tableName: String, dir: String)
               g.copy(name = m.getOrElse(g.name, g.name))).toSeq))
           case f => f.copy(name = m.getOrElse(f.name, f.name))
         }.toSeq)
-      new org.apache.spark.sql.GraftRenamingScanBuilder(
-        delegate.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScanBuilder],
+      new org.apache.spark.sql.GraftRenamingScanBuilder(delegate,
         l2p, mapChanges(l2p), mapChanges(p2l))
     }
   }

@@ -2,47 +2,69 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSnapshotScan, SparkSession}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Admission control for the store's version-aligned streams: both rate
   * limits keep batches TRANSACTION-ALIGNED — a version is never split
   * across batches, so `maxRowsPerTrigger` is a budget the batch fills
-  * version-by-version, not a hard row cap. Row counts come from the slice
-  * files' parquet footers (metadata only, cached — slices are immutable
-  * once published). The scale point: an unbounded first batch over a
-  * long-retained changelog (or a fleet of consumers restarting at once)
-  * is the classic backfill stampede; a bounded batch keeps state-store
-  * and sink pressure flat no matter how far behind a consumer is. */
-private[sources] object GraftStreamLimits {
-  private val sliceRows =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  * version-by-version, not a hard row cap. The scale point: an unbounded
+  * first batch over a long-retained changelog (or a fleet of consumers
+  * restarting at once) is the classic backfill stampede; a bounded batch
+  * keeps state-store and sink pressure flat no matter how far behind a
+  * consumer is. Also caches the published slices every changelog read
+  * plans from ([[slice]]). */
+object GraftStreamLimits {
 
-  /** Drop cached slice counts under a table dir — a DROPPED table
-    * recreated at the same path restarts version numbering, so a stale
-    * `change_version=N` count would mis-clamp the new table's batches. */
+  /** One published changelog slice: its data files (path relative to the
+    * slice dir, bytes), listed once — slices are immutable once
+    * published. Footer facts are read lazily, so a plain read of the
+    * slice opens no footer. */
+  final class Slice(val version: Long, val dir: String,
+      val files: Seq[(String, Long)]) {
+    def bytes: Long = files.map(_._2).sum
+
+    lazy val rows: Long = files.map(f =>
+      GraftStats.fileRowCount(Paths.get(dir, f._1)).getOrElse(0L)).sum
+
+    /** Whether every row is an INSERT, from the files' `change_op` footer
+      * min/max. Our own writers always produce the stats; a file without
+      * them cannot be classified, and silently guessing either way loses
+      * data or leaks a partial commit — fail loudly instead. */
+    lazy val insertOnly: Boolean = files.forall { case (rel, _) =>
+      GraftStats.readFileStats(Paths.get(dir, rel))
+        .get(GraftStore.ChangeOpCol) match {
+        case Some(cs) if cs.min.isDefined && cs.max.isDefined =>
+          cs.min.contains("I") && cs.max.contains("I")
+        case _ => throw new IllegalStateException(
+          s"cannot classify changelog slice $dir/$rel as insert-only: " +
+            "change_op footer statistics are missing")
+      }
+    }
+  }
+
+  private val slices =
+    new java.util.concurrent.ConcurrentHashMap[String, Slice]()
+
+  /** Drop cached slices under a table dir — a DROPPED table recreated at
+    * the same path restarts version numbering, a rebase replaces a
+    * branch's slices, and expired slices are gone. */
   private[sources] def invalidate(tableDir: String): Unit = {
     // path-segment-scoped: dropping 'wh/t' must not evict 'wh/t2'
     val prefix = tableDir + java.io.File.separator
-    sliceRows.keySet.removeIf(k => k == tableDir || k.startsWith(prefix))
+    slices.keySet.removeIf(k => k == tableDir || k.startsWith(prefix))
   }
 
-  /** Rows of one changelog slice (0 for a changelog-less version). */
-  def sliceRowCount(dir: String, v: Long): Long = {
+  /** The published slice of version `v` (see [[GraftStore.retainedSlices]]). */
+  def slice(dir: String, v: Long): Slice = {
     val sliceDir =
       s"${GraftStore.changesRoot(dir)}/${GraftStore.ChangeVersionCol}=$v"
-    if (!Files.isDirectory(Paths.get(sliceDir))) 0L
-    else {
-      if (sliceRows.size > 4096) sliceRows.clear() // backstop, not LRU
-      sliceRows.computeIfAbsent(sliceDir, _ =>
-        GraftStats.listDataFiles(sliceDir).map(rel =>
-          GraftStats.fileRowCount(Paths.get(sliceDir, rel))
-            .getOrElse(0L)).sum)
-    }
+    if (slices.size > 4096) slices.clear() // backstop, not LRU
+    slices.computeIfAbsent(sliceDir, _ =>
+      new Slice(v, sliceDir, GraftStats.listDataFiles(sliceDir)
+        .map(rel => rel -> Files.size(Paths.get(sliceDir, rel)))))
   }
 
   /** Largest end version in (startV, latest] admitted by the limits:
@@ -59,7 +81,8 @@ private[sources] object GraftStreamLimits {
       var rows = 0L
       var full = false
       while (v < end && !full) {
-        val next = sliceRowCount(dir, v + 1)
+        val next =
+          if (GraftStore.hasChangelog(dir, v + 1)) slice(dir, v + 1).rows else 0L
         if (rows == 0L || rows + next <= budget) { v += 1; rows += next }
         else full = true
       }
@@ -86,21 +109,55 @@ final case class GraftVersionOffset(v: Long) extends Offset {
   override def json(): String = v.toString
 }
 
+/** What the store's two version-aligned streams share: offsets are store
+  * versions, `Trigger.AvailableNow` pins its target at start, and every
+  * offset read takes the pointer FIRST and recovers the changelog second
+  * — recovery keyed off a later pointer read could miss a writer that
+  * flips the pointer after the recover ran but crashes before publishing
+  * its changelog staging; the batch range would then cover a version
+  * whose dir only appears after the NEXT recovery, and plan-time must not
+  * have already skipped it (it re-recovers too, belt and braces). Rate
+  * limits are the streams' own options: the engine ReadLimit passes. */
+abstract class GraftVersionStream(dir: String) extends MicroBatchStream
+    with SupportsAdmissionControl with SupportsTriggerAvailableNow {
+
+  protected def spark: SparkSession = SparkSession.active
+
+  @volatile private var availableNowTarget: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowTarget = Some(latestVersion())
+
+  /** The pointer (read before recovery), capped at the AvailableNow target. */
+  protected def latestVersion(): Long = {
+    val real = GraftStore.currentVersion(dir)
+    GraftStore.recoverChangelog(dir)
+    availableNowTarget.map(math.min(_, real)).getOrElse(real)
+  }
+
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+
+  override def latestOffset(): Offset =
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead of this method")
+
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+}
+
 /** `spark.readStream.table("cat.\`t$changes\`")` — the changelog as a
   * native DSv2 micro-batch stream with VERSION-ALIGNED batches: each
   * micro-batch is exactly the change slices of versions (start, end], so a
-  * batch boundary is always a transaction boundary (the file-stream
-  * alternative, [[GraftStore.streamChanges]], batches by file discovery
-  * and can split a version across batches). Offsets are plain version
-  * numbers — checkpointable, replayable, resumable.
+  * batch boundary is always a transaction boundary. Offsets are plain
+  * version numbers — checkpointable, replayable, resumable.
   *
-  * Planning delegates to the stock parquet machinery: per batch, a
-  * ParquetTable over exactly the `change_version=N` directories in range
-  * (with `basePath` so the version survives as a column) plans the file
-  * partitions; one shared reader factory (schema-identical across batches)
-  * serves them. Streaming v2 relations bypass column pruning, so the
-  * stream always reads the full changes schema — physical names map to
-  * logical positionally, same as the batch path.
+  * Planning is the changelog's one scan builder
+  * ([[org.apache.spark.sql.GraftSnapshotScan.changesScanBuilder]]) over
+  * exactly the batch's range, so a batch plans only its own slices; one
+  * shared reader factory (schema-identical across batches) serves them.
+  * Streaming v2 relations bypass column pruning, so the stream always
+  * reads the full changes schema — physical names map to logical
+  * positionally, same as the batch path.
   *
   * Retention: a FRESH stream starts at the earliest retained slice and
   * streams what exists; but a RESUMED stream whose checkpointed offset
@@ -121,28 +178,10 @@ final case class GraftVersionOffset(v: Long) extends Offset {
 final class GraftChangesMicroBatchStream(dir: String, meta: GraftTableMeta,
     maxVersionsPerTrigger: Option[Long] = None,
     maxRowsPerTrigger: Option[Long] = None)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
-
-  private def spark = SparkSession.active
-
-  @volatile private var availableNowTarget: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    // pointer first, recovery second — same reasoning as latestOffset
-    val v = GraftStore.currentVersion(dir)
-    GraftStore.recoverChangelog(dir)
-    availableNowTarget = Some(v)
-  }
-
-  // the limits live in this stream's own options, so the engine-side
-  // ReadLimit is pass-through; latestOffset(start, _) applies ours
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+    extends GraftVersionStream(dir) {
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val real = GraftStore.currentVersion(dir)
-    GraftStore.recoverChangelog(dir)
-    val target = availableNowTarget.map(math.min(_, real)).getOrElse(real)
+    val target = latestVersion()
     val s = start.asInstanceOf[GraftVersionOffset].v
     GraftVersionOffset(GraftStreamLimits.clampEnd(dir, s,
       math.max(target, s), maxVersionsPerTrigger, maxRowsPerTrigger))
@@ -151,17 +190,9 @@ final class GraftChangesMicroBatchStream(dir: String, meta: GraftTableMeta,
   override def reportLatestOffset(): Offset =
     GraftVersionOffset(GraftStore.currentVersion(dir))
 
-  private def retainedVersions: Seq[Long] = {
-    val root = Paths.get(GraftStore.changesRoot(dir))
-    if (!Files.isDirectory(root)) Seq.empty
-    else GraftStore.listDir(root)(_.map(_.getFileName.toString)
-      .filter(_.startsWith(s"${GraftStore.ChangeVersionCol}="))
-      .map(_.split("=")(1).toLong).toSeq.sorted)
-  }
-
   override def initialOffset(): Offset = {
     GraftStore.recoverChangelog(dir)
-    val vs = retainedVersions
+    val vs = GraftStore.retainedSlices(dir)
     // start BEFORE the earliest retained slice so the first batch carries
     // the full retained history; an empty changelog starts at the current
     // version (only future commits stream). Clamped to the retention
@@ -176,30 +207,17 @@ final class GraftChangesMicroBatchStream(dir: String, meta: GraftTableMeta,
     GraftVersionOffset(math.max(base, floor))
   }
 
-  // pointer FIRST, recovery second (inside latestOffset(start, limit)):
-  // recovery keyed off a later pointer read could miss a writer that
-  // flips the pointer after the recover ran but crashes before publishing
-  // its changelog staging — the batch range would then cover a version
-  // whose dir only appears after the NEXT recovery, and plan-time must
-  // not have already skipped it (it re-recovers too, belt and braces)
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called instead of this method")
-
   override def deserializeOffset(json: String): Offset =
     GraftVersionOffset(json.trim.toLong)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftVersionOffset].v
     val e = end.asInstanceOf[GraftVersionOffset].v
     // publish any committed-but-unpublished slice in (s, e] BEFORE the
-    // missing-dir filter below — without this, a writer crashing between
-    // its pointer flip and its changelog publish leaves the slice in
-    // staging, the filter drops it, and the stream advances past committed
-    // changes (silent CDC loss)
+    // scan plans the published ones — without this, a writer crashing
+    // between its pointer flip and its changelog publish leaves the slice
+    // in staging, the plan skips it, and the stream advances past
+    // committed changes (silent CDC loss)
     GraftStore.recoverChangelog(dir)
     // a checkpointed resume point below the retention horizon means
     // expire_changes dropped history this consumer never saw — an empty
@@ -213,8 +231,8 @@ final class GraftChangesMicroBatchStream(dir: String, meta: GraftTableMeta,
         "consumer from a fresh table snapshot")
     // a batch range crossing a SNAPSHOT BOUNDARY (restore/truncate/
     // overwrite — changelog-less commits that REPLACED the table state)
-    // must fail the same way: the missing slice would be silently dropped
-    // by the dir filter below, and a consumer folding across it would
+    // must fail the same way: the missing slice would be silently absent
+    // from the plan below, and a consumer folding across it would
     // resurrect the undone rows with no signal. The boundary
     // is stamped per version (and survives version expiry via promoted
     // markers), so this is distinguishable from a harmless optimize/
@@ -227,30 +245,18 @@ final class GraftChangesMicroBatchStream(dir: String, meta: GraftTableMeta,
         "write no changelog slice; " +
         "folding past one resurrects undone rows) — restart the " +
         "consumer from a fresh table snapshot")
-    val dirs = ((s + 1) to e)
-      .map(v => s"${GraftStore.changesRoot(dir)}/${GraftStore.ChangeVersionCol}=$v")
-      .filter(p => Files.isDirectory(Paths.get(p)))
-    if (dirs.isEmpty) return Array.empty
-    batchScan(dirs).toBatch.planInputPartitions()
+    GraftSnapshotScan.changesScanBuilder(spark, dir, meta, s + 1, e)
+      .build().toBatch.planInputPartitions()
   }
 
   // schema-driven, not file-driven: ONE factory serves every batch's
-  // file partitions (they all share the physical changes schema). Built
-  // lazily and CACHED — Spark asks for it per micro-batch, and building
-  // it lists the whole changes root, so an uncached factory makes a
-  // rate-limited drain of a k-version backlog cost O(k²) listings.
+  // file partitions (they all share the physical changes schema), so it
+  // is built once, from an empty range that plans no slice
   private lazy val readerFactory: PartitionReaderFactory =
-    batchScan(Seq(GraftStore.changesRoot(dir))).toBatch.createReaderFactory()
+    GraftSnapshotScan.changesScanBuilder(spark, dir, meta, 1L, 0L).build()
+      .toBatch.createReaderFactory()
 
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
-
-  private def batchScan(paths: Seq[String]) = {
-    val opts = new CaseInsensitiveStringMap(
-      java.util.Map.of("basePath", GraftStore.changesRoot(dir)))
-    ParquetTable(s"graft-changes-stream:$dir", spark, opts, paths,
-      Some(GraftStore.physicalChangesSchema(meta)), classOf[ParquetFileFormat])
-      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-  }
 }
 
 /** Offset for the BASE-TABLE stream: `pending = true` means the initial
@@ -290,20 +296,7 @@ final class GraftTableAppendStream(dir: String, meta: GraftTableMeta,
     skipChangeCommits: Boolean = false,
     maxVersionsPerTrigger: Option[Long] = None,
     maxRowsPerTrigger: Option[Long] = None)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
-
-  private def spark = SparkSession.active
-
-  @volatile private var availableNowTarget: Option[Long] = None
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val v = GraftStore.currentVersion(dir)
-    GraftStore.recoverChangelog(dir)
-    availableNowTarget = Some(v)
-  }
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
+    extends GraftVersionStream(dir) {
 
   override def initialOffset(): Offset = {
     GraftStore.recoverChangelog(dir)
@@ -311,11 +304,7 @@ final class GraftTableAppendStream(dir: String, meta: GraftTableMeta,
   }
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    // pointer first, recovery second — same crash-window reasoning as the
-    // changes stream's latestOffset
-    val real = GraftStore.currentVersion(dir)
-    GraftStore.recoverChangelog(dir)
-    val target = availableNowTarget.map(math.min(_, real)).getOrElse(real)
+    val target = latestVersion()
     val s0 = start.asInstanceOf[GraftTableOffset]
     if (s0.pending &&
         (maxVersionsPerTrigger.isDefined || maxRowsPerTrigger.isDefined))
@@ -331,19 +320,12 @@ final class GraftTableAppendStream(dir: String, meta: GraftTableMeta,
   override def reportLatestOffset(): Offset =
     GraftTableOffset(GraftStore.currentVersion(dir), pending = false)
 
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called instead of this method")
-
   override def deserializeOffset(json: String): Offset = {
     val t = json.trim
     if (t.startsWith("snapshot-"))
       GraftTableOffset(t.stripPrefix("snapshot-").toLong, pending = true)
     else GraftTableOffset(t.toLong, pending = false)
   }
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s0 = start.asInstanceOf[GraftTableOffset]
@@ -370,36 +352,14 @@ final class GraftTableAppendStream(dir: String, meta: GraftTableMeta,
       if (!s0.pending) Array.empty
       else snapshotScan(s0.v).toBatch.planInputPartitions()
         .map(GraftTableStreamPartition(_, snapshot = true): InputPartition)
-    val dirs = ((s0.v + 1) to e)
-      .map(v => s"${GraftStore.changesRoot(dir)}/${GraftStore.ChangeVersionCol}=$v")
-      .filter(p => Files.isDirectory(Paths.get(p)))
-      .filter(p => !skipChangeCommits || insertOnlySlice(p))
-    val tail: Array[InputPartition] =
-      if (dirs.isEmpty) Array.empty
-      else changesScan(dirs).toBatch.planInputPartitions()
-        .map(GraftTableStreamPartition(_, snapshot = false): InputPartition)
+    val tail = GraftSnapshotScan.changesScanBuilder(spark, dir, meta,
+      s0.v + 1, e, insertOnly = skipChangeCommits).build().toBatch
+      .planInputPartitions()
+      .map(GraftTableStreamPartition(_, snapshot = false): InputPartition)
     snap ++ tail
   }
 
-  /** Whether every row of a changelog slice is an INSERT, decided from the
-    * slice files' `change_op` footer min/max — metadata only, no data
-    * read. Our own writers always produce the stats; a file without them
-    * cannot be classified, and silently guessing either way loses data or
-    * leaks a partial commit — fail loudly instead. */
-  private def insertOnlySlice(sliceDir: String): Boolean =
-    GraftStats.listDataFiles(sliceDir).forall { rel =>
-      GraftStats.readFileStats(Paths.get(sliceDir, rel))
-        .get(GraftStore.ChangeOpCol) match {
-        case Some(cs) if cs.min.isDefined && cs.max.isDefined =>
-          cs.min.contains("I") && cs.max.contains("I")
-        case _ => throw new IllegalStateException(
-          s"cannot classify changelog slice $sliceDir/$rel for " +
-            "skipChangeCommits: change_op footer statistics are missing")
-      }
-    }
-
-  // cached like the changes stream's factory (schema-driven; Spark asks
-  // per micro-batch and building it lists the whole changes root)
+  // built once, like the changes stream's factory (schema-driven)
   private lazy val readerFactory: PartitionReaderFactory = {
     // the snapshot factory ALWAYS routes through the merge-on-read
     // dispatcher: partitions were planned against the OFFSET version (they
@@ -419,7 +379,8 @@ final class GraftTableAppendStream(dir: String, meta: GraftTableMeta,
         rawSnapshotScan(GraftStore.currentVersion(dir))
           .toBatch.createReaderFactory(),
         keyOrdinals, keyTypes, None, forceRowBased = true),
-      changesScan(Seq(GraftStore.changesRoot(dir))).toBatch.createReaderFactory(),
+      GraftSnapshotScan.changesScanBuilder(spark, dir, meta, 1L, 0L).build()
+        .toBatch.createReaderFactory(),
       phys.fields.map(_.dataType),
       // skipChangeCommits plans only insert-only slices, so a U/D reaching
       // the reader is an internal inconsistency the default branches catch
@@ -432,7 +393,7 @@ final class GraftTableAppendStream(dir: String, meta: GraftTableMeta,
     * partition column — the same layout the batch table scan reads),
     * planned from the manifest — see GraftSnapshotScan. */
   private def rawSnapshotScan(v: Long) =
-    org.apache.spark.sql.GraftSnapshotScan.parquetScanBuilder(spark, dir, v,
+    GraftSnapshotScan.parquetScanBuilder(spark, dir, v,
       meta, GraftStore.physicalSchema(meta.schema),
       CaseInsensitiveStringMap.empty()).build()
 
@@ -441,16 +402,7 @@ final class GraftTableAppendStream(dir: String, meta: GraftTableMeta,
     * state rides in the PARTITIONS (planned against `v`), so the factory
     * being built from a later version can't skew the snapshot. */
   private def snapshotScan(v: Long) =
-    org.apache.spark.sql.GraftSnapshotScan.morScanBuilder(spark, dir, v, meta)
-      .build()
-
-  private def changesScan(paths: Seq[String]) = {
-    val opts = new CaseInsensitiveStringMap(
-      java.util.Map.of("basePath", GraftStore.changesRoot(dir)))
-    ParquetTable(s"graft-table-stream-tail:$dir", spark, opts, paths,
-      Some(GraftStore.physicalChangesSchema(meta)), classOf[ParquetFileFormat])
-      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-  }
+    GraftSnapshotScan.morScanBuilder(spark, dir, v, meta).build()
 }
 
 /** Tags an input partition with which leg planned it — the reader factory

@@ -94,17 +94,17 @@ object GraftMaterializedViews {
     * write as one task (`applyChanges(smallBatchHint)`) instead of
     * paying an AQE rebalance round. An aggregate state's size tracks
     * |view|, and a refresh grows it by at most the new groups in its
-    * fold delta; halving the commit-broadcast byte bound leaves headroom
-    * for typical growth. It is a heuristic, not a bound: the delta is
-    * not limited relative to the state, so a refresh can grow the state
-    * well past 2×, and the one-task write is then merely slower. False
+    * fold delta, which is bounded by the changelog slices it folds
+    * (`sliceBytes`, from the cached slice file sizes — metadata only):
+    * both must stay within half the commit-broadcast byte bound. False
     * for the initial materialization (no prior state to judge by) — it
     * keeps the rebalance. */
-  private def smallStateHint(spark: SparkSession, stateDir: String): Boolean =
+  private def smallStateHint(spark: SparkSession, stateDir: String,
+      sliceBytes: Long = 0L): Boolean =
     GraftStore.exists(stateDir) && {
       val v = GraftStore.currentVersion(stateDir)
-      GraftStore.versionStats(stateDir, v)._3 <=
-        GraftStore.commitBroadcastMaxBytes(spark) / 2
+      val half = GraftStore.commitBroadcastMaxBytes(spark) / 2
+      GraftStore.versionStats(stateDir, v)._3 <= half && sliceBytes <= half
     }
 
   /** True iff the MV's state table exists and reflects every source's
@@ -822,24 +822,22 @@ object GraftMaterializedViews {
               GraftStore.boundariesIn(srcDir, w + 1, cur).isEmpty =>
           // pure-maintenance commits (optimize/rebucket/analyze) change
           // no content: nothing to fold, and the watermark can stay put
-          val contentVersions =
-            ((w + 1) to cur).filter(v => GraftStore.hasChangelog(srcDir, v))
+          val contentVersions = GraftStore.retainedSlices(srcDir, w + 1, cur)
           if (contentVersions.isEmpty) return (w, "noop")
           useShape match {
             case Some(sh) =>
-              // the slice feeds the insert-only probe AND both image
-              // frames of the fold — cache it so each refresh reads the
-              // changelog parquet once
-              val changes = GraftStore.readChanges(spark, srcDir, w + 1, cur)
-                .persist()
-              try {
-                // extrema never retract: a slice carrying U/D rows while
-                // the view has MIN/MAX outputs must recompute (one cheap
-                // existence probe over the cached slice, ∝ changes)
-                val insertOnly = sh.minmaxs.isEmpty ||
-                  changes.filter(col(GraftStore.ChangeOpCol)
-                    .isin("U", "D")).isEmpty
-                if (insertOnly) {
+              // extrema never retract: a slice carrying U/D rows while
+              // the view has MIN/MAX outputs must recompute (classified
+              // from the slices' `change_op` footers — metadata only)
+              val slices =
+                contentVersions.map(GraftStreamLimits.slice(srcDir, _))
+              val insertOnly = sh.minmaxs.isEmpty || slices.forall(_.insertOnly)
+              if (insertOnly) {
+                // the slice feeds both image frames of the fold — cache it
+                // so each refresh reads the changelog parquet once
+                val changes = GraftStore.readChanges(spark, srcDir, w + 1, cur)
+                  .persist()
+                try {
                   // dims read AT their recorded versions (not current):
                   // a dim commit landing mid-fold must not leak into the
                   // delta evaluation — the pin makes the race harmless
@@ -856,7 +854,8 @@ object GraftMaterializedViews {
                     allInserts = true, overwrite = true,
                     expectedVersion = Some(stateV),
                     txn = Some((rec1.txnApp, cur)),
-                    smallBatchHint = smallStateHint(spark, stateDir))
+                    smallBatchHint = smallStateHint(spark, stateDir,
+                      slices.map(_.bytes).sum))
                   // dims stay at their RECORDED versions (what the fold
                   // actually joined against); only the fact advances
                   updateSources(g, id, rec1, sources, sources.map {
@@ -865,8 +864,8 @@ object GraftMaterializedViews {
                             else rec1.sources.getOrElse(n,
                               GraftStore.currentVersion(d))) }.toMap)
                   return (cur, "incremental")
-                } // else: fall through to the recompute lane below
-              } finally changes.unpersist()
+                } finally changes.unpersist()
+              } // else: fall through to the recompute lane below
             case None => () // fall through to recompute
           }
         case _ => () // never stamped / source regressed → recompute

@@ -240,12 +240,7 @@ object GraftProcedures {
     // retired-but-still-referenced `_expired` file hosts (shrink as
     // later expire_versions calls re-sweep them)
     val versions = GraftStore.listVersions(dir).size.toLong
-    val changeSlices = {
-      val root = java.nio.file.Paths.get(GraftStore.changesRoot(dir))
-      if (!java.nio.file.Files.isDirectory(root)) 0L
-      else GraftStore.listDir(root)(_.count(_.getFileName.toString
-        .startsWith(s"${GraftStore.ChangeVersionCol}=")).toLong)
-    }
+    val changeSlices = GraftStore.retainedSlices(dir).size.toLong
     val expiredHosts = GraftStore.listDir(java.nio.file.Paths.get(dir))(
       _.count { p =>
         p.getFileName.toString.matches("v\\d{10}") && java.nio.file.Files

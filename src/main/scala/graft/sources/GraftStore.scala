@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1297,6 +1297,7 @@ object GraftStore {
       k == tableDir || k.startsWith(prefix))
     partSpecCache.keySet.removeIf(k => k == tableDir || k.startsWith(prefix))
     org.apache.spark.sql.GraftSnapshotScan.invalidate(tableDir)
+    GraftStreamLimits.invalidate(tableDir)
   }
 
   /** Reads every live delete slice of the version — the only read of the
@@ -1474,12 +1475,12 @@ object GraftStore {
     s"${changesRoot(dir)}/.staging-$v"
 
   /** Changelog publication recovery (WAL discipline). The changelog for a
-    * commit is written to a DOT-PREFIXED staging dir (invisible to parquet
-    * discovery and file streams) and renamed to its `change_version=N`
-    * name only AFTER the pointer flips — so a visible change directory
-    * always belongs to a committed version and no reader (SQL `$changes`
-    * table, CDC stream, readChanges) can ever observe uncommitted change
-    * rows. The two crash windows repair here: staging for a version the
+    * commit is written to a DOT-PREFIXED staging dir (invisible to every
+    * changelog read, which plans published slices only) and renamed to
+    * its `change_version=N` name only AFTER the pointer flips — so a
+    * visible change directory always belongs to a committed version and
+    * no reader (SQL `$changes` table, CDC stream, readChanges) can ever
+    * observe uncommitted change rows. The two crash windows repair here: staging for a version the
     * pointer never reached is dropped; staging for a committed version
     * (crash between flip and rename) is moved into place. Called at the
     * start of every commit and read path. */
@@ -1548,7 +1549,6 @@ object GraftStore {
 
   def dropTable(dir: String): Unit = {
     invalidateDvCache(dir)
-    GraftStreamLimits.invalidate(dir)
     deleteRecursively(Paths.get(dir))
   }
 
@@ -1997,7 +1997,7 @@ object GraftStore {
                 "); overlapping-key divergence needs a human — re-branch " +
                 "and reconcile, or drop one side's change")
         }
-        ((fork + 1) to bHead).filter(v => hasChangelog(bd, v)).foreach { v =>
+        retainedSlices(bd, fork + 1, bHead).foreach { v =>
           val slice = readChanges(spark, bd, v, v)
           val batch = slice.select((col(ChangeOpCol).as(OpCol) +:
             meta.schema.fieldNames.toSeq.map(col)): _*)
@@ -2667,6 +2667,21 @@ object GraftStore {
   /** Whether version `v`'s changelog slice is still retained. */
   def hasChangelog(dir: String, v: Long): Boolean =
     Files.isDirectory(Paths.get(changesDir(dir, v)))
+
+  /** Versions of the published changelog slices in [`from`, `to`],
+    * ascending: a short range probes each version's slice dir (planning one
+    * slice never lists the others), a long one lists the changes root. */
+  def retainedSlices(dir: String, from: Long = 0L,
+      to: Long = Long.MaxValue): Seq[Long] = {
+    val lo = math.max(from, 0L)
+    val root = Paths.get(changesRoot(dir))
+    if (to - lo < 64) (lo to to).filter(hasChangelog(dir, _))
+    else if (!Files.isDirectory(root)) Seq.empty
+    else listDir(root)(_.map(_.getFileName.toString)
+      .filter(_.startsWith(s"$ChangeVersionCol="))
+      .map(_.stripPrefix(s"$ChangeVersionCol=").toLong)
+      .filter(v => v >= lo && v <= to).toSeq.sorted)
+  }
 
   def bucketExpr(keyCols: Seq[String], buckets: Int): Column =
     pmod(xxhash64(keyCols.map(col): _*), lit(buckets.toLong)).cast(IntegerType)
@@ -3828,10 +3843,9 @@ object GraftStore {
     Files.write(tmp, h.toString.getBytes("UTF-8"))
     Files.move(tmp, Paths.get(changesRoot(dir), "_horizon"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    listDir(root)(_.filter(
-        _.getFileName.toString.startsWith(s"$ChangeVersionCol="))
-      .filter(_.getFileName.toString.split("=")(1).toLong < keepFromVersion)
-      .toList).foreach(deleteRecursively)
+    retainedSlices(dir, to = keepFromVersion - 1)
+      .foreach(v => deleteRecursively(Paths.get(changesDir(dir, v))))
+    GraftStreamLimits.invalidate(dir)
     // promoted boundary markers below the horizon are subsumed by the
     // horizon check itself (any resume below it already fails loudly)
     listDir(root)(_.map(_.getFileName.toString)
@@ -4090,7 +4104,7 @@ object GraftStore {
 
   /** [[changesSchema]] with file (physical) names, flat and inside the
     * before-image struct. */
-  private[sources] def physicalChangesSchema(meta: GraftTableMeta): StructType =
+  def physicalChangesSchema(meta: GraftTableMeta): StructType =
     StructType(changesSchema(meta).fields.map {
       case f if f.name == ChangeBeforeCol =>
         f.copy(dataType = physicalSchema(f.dataType.asInstanceOf[StructType]))
@@ -4099,29 +4113,14 @@ object GraftStore {
       case f => f
     }.toSeq)
 
-  /** Map a physical-named changes DataFrame to logical names (flat rename
-    * + positional struct cast for the before-image). */
-  private def changesToLogical(df: DataFrame, meta: GraftTableMeta): DataFrame = {
-    val logBefore = StructType(meta.schema.fields.map(_.copy(nullable = true)).toSeq)
-    toLogical(df.withColumn(ChangeBeforeCol,
-      col(ChangeBeforeCol).cast(logBefore)), meta.schema)
-  }
-
-  /** Read the committed changelog for versions in [fromV, toV]. Remnant
-    * change directories above the current pointer (crash between changelog
-    * write and pointer flip) are excluded by the pointer cap. */
-  def readChanges(spark: SparkSession, dir: String, fromV: Long, toV: Long): DataFrame = {
-    recoverChangelog(dir)
-    val meta = readMeta(dir)
-    val cap = math.min(toV, currentVersion(dir))
-    val root = Paths.get(changesRoot(dir))
-    val any = Files.isDirectory(root) && listDir(root)(
-      _.exists(_.getFileName.toString.startsWith(s"$ChangeVersionCol=")))
-    if (!any) spark.createDataFrame(new java.util.ArrayList[Row](), changesSchema(meta))
-    else changesToLogical(
-      spark.read.schema(physicalChangesSchema(meta)).parquet(changesRoot(dir))
-        .filter(col(ChangeVersionCol).between(fromV, cap)), meta)
-  }
+  /** Read the committed changelog for versions in [fromV, toV]: the
+    * `t$changes` table's scan over exactly that range (see
+    * [[GraftChangesTable]]), capped at the pointer and in logical names. */
+  def readChanges(spark: SparkSession, dir: String, fromV: Long, toV: Long): DataFrame =
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(new GraftChangesTable(s"graft-changes:$dir", dir), None, None))
+      .filter(col(ChangeVersionCol).between(fromV, toV))
 
   /** Replay a changelog slice onto a base snapshot. Because every change
     * row carries the FULL row image, multi-version replay collapses to
@@ -4154,25 +4153,6 @@ object GraftStore {
     base.join(last.select(meta.keyCols.map(col): _*), meta.keyCols, "left_anti")
       .select(cols.map(col): _*)
       .unionByName(survivors)
-  }
-
-  /** The changelog as a STREAM — change-data-feed reads. This is the stock
-    * file streaming source over the changelog directory (schema supplied,
-    * `basePath` so `change_version` survives as a column): every commit
-    * drops new files under a new `change_version=N` dir and the source's
-    * file log admits them as a micro-batch, checkpointable and replayable
-    * like any file stream. Pair with `Trigger.AvailableNow` for catch-up
-    * runs, or `foreachBatch` + [[incrementalAgg]] for a continuously
-    * maintained downstream aggregate. No custom source machinery: the
-    * changelog's layout IS a valid streaming input, which is the point of
-    * committing it as immutable per-version files. */
-  def streamChanges(spark: SparkSession, dir: String): DataFrame = {
-    recoverChangelog(dir)
-    val meta = readMeta(dir)
-    changesToLogical(
-      spark.readStream.schema(physicalChangesSchema(meta))
-        .option("basePath", changesRoot(dir))
-        .parquet(changesRoot(dir) + s"/$ChangeVersionCol=*"), meta)
   }
 
   /** Incrementally maintain a grouped (COUNT(*), SUM(aggCol)) materialized

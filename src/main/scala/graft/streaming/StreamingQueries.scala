@@ -80,6 +80,86 @@ object StreamingQueries {
       .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
   }
 
+  /** t10 / t12: the s15 DML program on its own keyed table, its
+    * changelog drained from `t$changes` under Trigger.AvailableNow, with
+    * per-version I/U/D counts pinned closed-form plus a boolean proving
+    * the streamed multiset equals the batch readChanges slice. */
+  private def changesStreamQuery(name: String, table: String): GraftQuery = {
+    val v = name.takeWhile(_ != '_')
+    GraftQuery(name, (s, d) => {
+      import s.implicits._
+      graft.operators.DmlFixture.register(s)
+      val G = graft.sources.GraftStore
+      T.nation(s, d)
+        .select($"n_nationkey".cast("long").as("k"),
+          $"n_regionkey".cast("long").as("r"),
+          ($"n_nationkey" * 10 + 7).cast("long").as("pop"))
+        .createOrReplaceTempView(s"${v}_src")
+      s.sql(s"""SELECT k, (r + 1) % 5 AS r, pop + 1000 AS pop, 'upsert' AS op
+               FROM ${v}_src WHERE k % 3 = 0 AND k % 7 <> 4
+               UNION ALL
+               SELECT k, r, pop, 'delete' FROM ${v}_src WHERE k % 7 = 4
+               UNION ALL
+               SELECT id + 100, (id + 100) % 5, (id + 100) * 10 + 7, 'upsert'
+               FROM range(5)""").createOrReplaceTempView(s"${v}_chg")
+      s.sql(s"DROP TABLE IF EXISTS graftdml.$table")
+      s.sql(s"""CREATE TABLE graftdml.$table
+        (k BIGINT NOT NULL, r BIGINT, pop BIGINT) USING graft
+        TBLPROPERTIES ('merge_key'='k', 'buckets'='4')""")
+      s.sql(s"INSERT INTO graftdml.$table SELECT k, r, pop FROM ${v}_src")
+      s.sql(s"""MERGE INTO graftdml.$table t USING ${v}_chg c ON t.k = c.k
+        WHEN MATCHED AND c.op = 'delete' THEN DELETE
+        WHEN MATCHED THEN UPDATE SET r = c.r, pop = c.pop
+        WHEN NOT MATCHED AND c.op <> 'delete' THEN
+          INSERT (k, r, pop) VALUES (c.k, c.r, c.pop)""")
+      s.sql(s"UPDATE graftdml.$table SET pop = pop + 3 WHERE r = 2")
+      s.sql(s"DELETE FROM graftdml.$table WHERE pop > 1200")
+
+      val dir = s"${graft.operators.DmlFixture.warehouse}/$table"
+      val streamed = runToMemoryAvailableNow(s,
+        s.readStream.table(s"graftdml.`$table$$changes`")
+          .select($"change_version", $"change_op"),
+        OutputMode.Append())
+      val batch = G.readChanges(s, dir, 1L, 4L)
+        .select($"change_version", $"change_op")
+      val streamEqBatch = streamed.exceptAll(batch).isEmpty &&
+        batch.exceptAll(streamed).isEmpty
+      streamed.groupBy($"change_version")
+        .agg(sum(when($"change_op" === "I", 1L).otherwise(0L)).as("n_ins"),
+          sum(when($"change_op" === "U", 1L).otherwise(0L)).as("n_upd"),
+          sum(when($"change_op" === "D", 1L).otherwise(0L)).as("n_del"))
+        .withColumn("stream_eq_batch", lit(streamEqBatch))
+        .orderBy($"change_version")
+    }, Some("""
+      WITH src AS (SELECT CAST(n_nationkey AS BIGINT) AS k,
+                     CAST(n_regionkey AS BIGINT) AS r,
+                     CAST(n_nationkey * 10 + 7 AS BIGINT) AS pop FROM nation),
+      after2 AS (
+        SELECT k, CASE WHEN k % 3 = 0 THEN (r + 1) % 5 ELSE r END AS r,
+          CASE WHEN k % 3 = 0 THEN pop + 1000 ELSE pop END AS pop
+        FROM src WHERE k % 7 <> 4
+        UNION ALL
+        SELECT CAST(i + 100 AS BIGINT), CAST((i + 100) % 5 AS BIGINT),
+          CAST((i + 100) * 10 + 7 AS BIGINT) FROM range(5) t(i)),
+      after3 AS (SELECT k, r, CASE WHEN r = 2 THEN pop + 3 ELSE pop END AS pop
+                 FROM after2)
+      SELECT CAST(1 AS BIGINT) AS change_version,
+        (SELECT CAST(COUNT(*) AS BIGINT) FROM src) AS n_ins,
+        CAST(0 AS BIGINT) AS n_upd, CAST(0 AS BIGINT) AS n_del,
+        TRUE AS stream_eq_batch
+      UNION ALL
+      SELECT 2, 5,
+        (SELECT CAST(COUNT(*) AS BIGINT) FROM src WHERE k % 3 = 0 AND k % 7 <> 4),
+        (SELECT CAST(COUNT(*) AS BIGINT) FROM src WHERE k % 7 = 4), TRUE
+      UNION ALL
+      SELECT 3, 0,
+        (SELECT CAST(COUNT(*) AS BIGINT) FROM after2 WHERE r = 2), 0, TRUE
+      UNION ALL
+      SELECT 4, 0, 0,
+        (SELECT CAST(COUNT(*) AS BIGINT) FROM after3 WHERE pop > 1200), TRUE
+      ORDER BY change_version"""))
+  }
+
   val queries: Seq[GraftQuery] = Seq(
 
     // ----- T1/T3 streaming: watermarked tumbling-window counts
@@ -600,170 +680,18 @@ object StreamingQueries {
       FROM m GROUP BY topic ORDER BY topic""")),
 
     // ----- T10: change-data-feed STREAM — the store's changelog consumed
-    // as a streaming source. No custom source machinery: each commit drops
-    // immutable files under a new change_version=N dir, which is exactly
-    // the contract Spark's file streaming source wants, so
-    // GraftStore.streamChanges is the stock parquet file stream with the
-    // changelog schema (checkpointable, replayable, AvailableNow-able).
-    // The gate runs the s15 DML fixture on its own table, drains the
-    // changelog with Trigger.AvailableNow, and pins per-version I/U/D
-    // counts closed-form — plus a boolean proving the streamed multiset
-    // equals the batch readChanges slice, so the stream neither drops nor
-    // duplicates change rows. This closes the CDC loop: DML commits →
-    // changelog → stream → (foreachBatch + incrementalAgg) downstream
-    // view, all on one storage layout.
-    GraftQuery("t10_cdf_stream", (s, d) => {
-      import s.implicits._
-      graft.operators.DmlFixture.register(s)
-      val G = graft.sources.GraftStore
-      T.nation(s, d)
-        .select($"n_nationkey".cast("long").as("k"),
-          $"n_regionkey".cast("long").as("r"),
-          ($"n_nationkey" * 10 + 7).cast("long").as("pop"))
-        .createOrReplaceTempView("t10_src")
-      s.sql("""SELECT k, (r + 1) % 5 AS r, pop + 1000 AS pop, 'upsert' AS op
-               FROM t10_src WHERE k % 3 = 0 AND k % 7 <> 4
-               UNION ALL
-               SELECT k, r, pop, 'delete' FROM t10_src WHERE k % 7 = 4
-               UNION ALL
-               SELECT id + 100, (id + 100) % 5, (id + 100) * 10 + 7, 'upsert'
-               FROM range(5)""").createOrReplaceTempView("t10_chg")
-      s.sql("DROP TABLE IF EXISTS graftdml.cdf_state")
-      s.sql("""CREATE TABLE graftdml.cdf_state
-        (k BIGINT NOT NULL, r BIGINT, pop BIGINT) USING graft
-        TBLPROPERTIES ('merge_key'='k', 'buckets'='4')""")
-      s.sql("INSERT INTO graftdml.cdf_state SELECT k, r, pop FROM t10_src")
-      s.sql("""MERGE INTO graftdml.cdf_state t USING t10_chg c ON t.k = c.k
-        WHEN MATCHED AND c.op = 'delete' THEN DELETE
-        WHEN MATCHED THEN UPDATE SET r = c.r, pop = c.pop
-        WHEN NOT MATCHED AND c.op <> 'delete' THEN
-          INSERT (k, r, pop) VALUES (c.k, c.r, c.pop)""")
-      s.sql("UPDATE graftdml.cdf_state SET pop = pop + 3 WHERE r = 2")
-      s.sql("DELETE FROM graftdml.cdf_state WHERE pop > 1200")
+    // as a streaming source through `readStream.table` on `t$changes`,
+    // whose micro-batches are planned by the same changelog scan as the
+    // batch readChanges (checkpointable, replayable, AvailableNow-able).
+    // This closes the CDC loop: DML commits → changelog → stream →
+    // (foreachBatch + incrementalAgg) downstream view, all on one storage
+    // layout. See changesStreamQuery for the program and the oracle.
+    changesStreamQuery("t10_cdf_stream", "cdf_state"),
 
-      val dir = s"${graft.operators.DmlFixture.warehouse}/cdf_state"
-      val streamed = runToMemoryAvailableNow(s,
-        G.streamChanges(s, dir).select($"change_version", $"change_op"),
-        OutputMode.Append())
-      val batch = G.readChanges(s, dir, 1L, 4L)
-        .select($"change_version", $"change_op")
-      val streamEqBatch = streamed.exceptAll(batch).isEmpty &&
-        batch.exceptAll(streamed).isEmpty
-      streamed.groupBy($"change_version")
-        .agg(sum(when($"change_op" === "I", 1L).otherwise(0L)).as("n_ins"),
-          sum(when($"change_op" === "U", 1L).otherwise(0L)).as("n_upd"),
-          sum(when($"change_op" === "D", 1L).otherwise(0L)).as("n_del"))
-        .withColumn("stream_eq_batch", lit(streamEqBatch))
-        .orderBy($"change_version")
-    }, Some("""
-      WITH src AS (SELECT CAST(n_nationkey AS BIGINT) AS k,
-                     CAST(n_regionkey AS BIGINT) AS r,
-                     CAST(n_nationkey * 10 + 7 AS BIGINT) AS pop FROM nation),
-      after2 AS (
-        SELECT k, CASE WHEN k % 3 = 0 THEN (r + 1) % 5 ELSE r END AS r,
-          CASE WHEN k % 3 = 0 THEN pop + 1000 ELSE pop END AS pop
-        FROM src WHERE k % 7 <> 4
-        UNION ALL
-        SELECT CAST(i + 100 AS BIGINT), CAST((i + 100) % 5 AS BIGINT),
-          CAST((i + 100) * 10 + 7 AS BIGINT) FROM range(5) t(i)),
-      after3 AS (SELECT k, r, CASE WHEN r = 2 THEN pop + 3 ELSE pop END AS pop
-                 FROM after2)
-      SELECT CAST(1 AS BIGINT) AS change_version,
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM src) AS n_ins,
-        CAST(0 AS BIGINT) AS n_upd, CAST(0 AS BIGINT) AS n_del,
-        TRUE AS stream_eq_batch
-      UNION ALL
-      SELECT 2, 5,
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM src WHERE k % 3 = 0 AND k % 7 <> 4),
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM src WHERE k % 7 = 4), TRUE
-      UNION ALL
-      SELECT 3, 0,
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM after2 WHERE r = 2), 0, TRUE
-      UNION ALL
-      SELECT 4, 0, 0,
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM after3 WHERE pop > 1200), TRUE
-      ORDER BY change_version""")),
-
-    // ----- T12: the changelog as a native DSv2 micro-batch stream —
-    // `spark.readStream.table("cat.`t$changes`")` with VERSION-ALIGNED
-    // batches (offsets are store version numbers, so batch boundaries are
-    // transaction boundaries; the file-stream route t10 uses batches by
-    // file discovery instead). Same DML program and closed-form
-    // per-version oracle as t10, drained under AvailableNow through the
-    // table-API route, plus the streamed-multiset == batch-readChanges
-    // equality.
-    GraftQuery("t12_changes_table_stream", (s, d) => {
-      import s.implicits._
-      graft.operators.DmlFixture.register(s)
-      val G = graft.sources.GraftStore
-      T.nation(s, d)
-        .select($"n_nationkey".cast("long").as("k"),
-          $"n_regionkey".cast("long").as("r"),
-          ($"n_nationkey" * 10 + 7).cast("long").as("pop"))
-        .createOrReplaceTempView("t12_src")
-      s.sql("""SELECT k, (r + 1) % 5 AS r, pop + 1000 AS pop, 'upsert' AS op
-               FROM t12_src WHERE k % 3 = 0 AND k % 7 <> 4
-               UNION ALL
-               SELECT k, r, pop, 'delete' FROM t12_src WHERE k % 7 = 4
-               UNION ALL
-               SELECT id + 100, (id + 100) % 5, (id + 100) * 10 + 7, 'upsert'
-               FROM range(5)""").createOrReplaceTempView("t12_chg")
-      s.sql("DROP TABLE IF EXISTS graftdml.cts_state")
-      s.sql("""CREATE TABLE graftdml.cts_state
-        (k BIGINT NOT NULL, r BIGINT, pop BIGINT) USING graft
-        TBLPROPERTIES ('merge_key'='k', 'buckets'='4')""")
-      s.sql("INSERT INTO graftdml.cts_state SELECT k, r, pop FROM t12_src")
-      s.sql("""MERGE INTO graftdml.cts_state t USING t12_chg c ON t.k = c.k
-        WHEN MATCHED AND c.op = 'delete' THEN DELETE
-        WHEN MATCHED THEN UPDATE SET r = c.r, pop = c.pop
-        WHEN NOT MATCHED AND c.op <> 'delete' THEN
-          INSERT (k, r, pop) VALUES (c.k, c.r, c.pop)""")
-      s.sql("UPDATE graftdml.cts_state SET pop = pop + 3 WHERE r = 2")
-      s.sql("DELETE FROM graftdml.cts_state WHERE pop > 1200")
-
-      val dir = s"${graft.operators.DmlFixture.warehouse}/cts_state"
-      val streamed = runToMemoryAvailableNow(s,
-        s.readStream.table("graftdml.`cts_state$changes`")
-          .select($"change_version", $"change_op"),
-        OutputMode.Append())
-      val batch = G.readChanges(s, dir, 1L, 4L)
-        .select($"change_version", $"change_op")
-      val streamEqBatch = streamed.exceptAll(batch).isEmpty &&
-        batch.exceptAll(streamed).isEmpty
-      streamed.groupBy($"change_version")
-        .agg(sum(when($"change_op" === "I", 1L).otherwise(0L)).as("n_ins"),
-          sum(when($"change_op" === "U", 1L).otherwise(0L)).as("n_upd"),
-          sum(when($"change_op" === "D", 1L).otherwise(0L)).as("n_del"))
-        .withColumn("stream_eq_batch", lit(streamEqBatch))
-        .orderBy($"change_version")
-    }, Some("""
-      WITH src AS (SELECT CAST(n_nationkey AS BIGINT) AS k,
-                     CAST(n_regionkey AS BIGINT) AS r,
-                     CAST(n_nationkey * 10 + 7 AS BIGINT) AS pop FROM nation),
-      after2 AS (
-        SELECT k, CASE WHEN k % 3 = 0 THEN (r + 1) % 5 ELSE r END AS r,
-          CASE WHEN k % 3 = 0 THEN pop + 1000 ELSE pop END AS pop
-        FROM src WHERE k % 7 <> 4
-        UNION ALL
-        SELECT CAST(i + 100 AS BIGINT), CAST((i + 100) % 5 AS BIGINT),
-          CAST((i + 100) * 10 + 7 AS BIGINT) FROM range(5) t(i)),
-      after3 AS (SELECT k, r, CASE WHEN r = 2 THEN pop + 3 ELSE pop END AS pop
-                 FROM after2)
-      SELECT CAST(1 AS BIGINT) AS change_version,
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM src) AS n_ins,
-        CAST(0 AS BIGINT) AS n_upd, CAST(0 AS BIGINT) AS n_del,
-        TRUE AS stream_eq_batch
-      UNION ALL
-      SELECT 2, 5,
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM src WHERE k % 3 = 0 AND k % 7 <> 4),
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM src WHERE k % 7 = 4), TRUE
-      UNION ALL
-      SELECT 3, 0,
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM after2 WHERE r = 2), 0, TRUE
-      UNION ALL
-      SELECT 4, 0, 0,
-        (SELECT CAST(COUNT(*) AS BIGINT) FROM after3 WHERE pop > 1200), TRUE
-      ORDER BY change_version""")),
+    // ----- T12: the same stream's VERSION-ALIGNED batches (offsets are
+    // store version numbers, so batch boundaries are transaction
+    // boundaries) — the t10 program and oracle on its own table.
+    changesStreamQuery("t12_changes_table_stream", "cts_state"),
 
     // ----- T13: the TABLE ITSELF as a streaming source —
     // `spark.readStream.table("cat.t")`, Delta-parity semantics: the first

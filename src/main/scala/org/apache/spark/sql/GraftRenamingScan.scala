@@ -7,7 +7,6 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.metric.CustomMetric
 import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
-import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
@@ -33,7 +32,8 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * filtering are NOT forwarded for renamed tables — correctness is
   * unaffected (Spark falls back to a normal scan+agg), and tables that
   * have never renamed a column bypass this wrapper entirely. */
-final class GraftRenamingScanBuilder(delegate: FileScanBuilder,
+final class GraftRenamingScanBuilder(delegate: ScanBuilder
+      with SupportsPushDownRequiredColumns with SupportsPushDownCatalystFilters,
     logToPhys: Map[String, String], mapSchemaToPhys: StructType => StructType,
     mapSchemaToLog: StructType => StructType,
     wrapScan: Scan => Scan = identity,

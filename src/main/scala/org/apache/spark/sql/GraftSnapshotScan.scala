@@ -1,14 +1,17 @@
 package org.apache.spark.sql
 
-import graft.sources.{GraftStore, GraftTableMeta}
+import graft.sources.{GraftStore, GraftStreamLimits, GraftTableMeta}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, EqualTo, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.ScanBuilder
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.{PartitioningAwareFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -163,6 +166,82 @@ object GraftSnapshotScan {
           raw.schema, dv, fileSeq)
     }
   }
+
+  /** The one scan of a table's changelog: a ParquetScanBuilder over the
+    * published slices of versions [`fromV`, `toV`] (capped at the
+    * pointer), partitioned by `change_version`. The file index is authored
+    * from the cached slice entries ([[GraftStreamLimits.slice]]), so
+    * planning lists nothing outside the range. `insertOnly` keeps only
+    * the slices whose `change_op` footers prove them all INSERTs. */
+  def changesScanBuilder(spark: SparkSession, dir: String,
+      meta: GraftTableMeta, fromV: Long, toV: Long,
+      insertOnly: Boolean = false): ParquetScanBuilder = {
+    val (partCols, dataSchema) = GraftStore.physicalChangesSchema(meta)
+      .asNullable.partition(_.name == GraftStore.ChangeVersionCol)
+    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val parts = GraftStore.retainedSlices(dir, fromV,
+        math.min(toV, GraftStore.currentVersion(dir)))
+      .map(GraftStreamLimits.slice(dir, _))
+      .filter(sl => !insertOnly || sl.insertOnly).map { sl =>
+        val d = fs.makeQualified(new Path(sl.dir))
+        (PartitionPath(new GenericInternalRow(Array[Any](sl.version)), d),
+          sl.files.map { case (rel, size) =>
+            new FileStatus(size, false, 1, 134217728L, 0L, new Path(d, rel))
+          }.toArray)
+      }
+    val index = new GraftSlotFileIndex(spark,
+      PartitionSpec(StructType(partCols), parts.map(_._1)),
+      parts.map(p => p._1.path -> p._2).toMap)
+    ParquetScanBuilder(spark, index, StructType(dataSchema ++ partCols),
+      StructType(dataSchema), CaseInsensitiveStringMap.empty())
+  }
+}
+
+/** The batch scan of `t$changes` (and so of `GraftStore.readChanges`):
+  * [[GraftSnapshotScan.changesScanBuilder]] over the range that the pushed
+  * `change_version` comparisons with literals admit (all retained slices
+  * if none). The filters are still pushed into that builder, so results
+  * never depend on which shapes the range derivation recognizes. */
+final class GraftChangesScanBuilder(spark: SparkSession, dir: String,
+    meta: GraftTableMeta)
+    extends ScanBuilder with SupportsPushDownRequiredColumns
+    with SupportsPushDownCatalystFilters with SupportsPushDownAggregates {
+
+  private var range = (Long.MinValue, Long.MaxValue)
+  private lazy val delegate =
+    GraftSnapshotScan.changesScanBuilder(spark, dir, meta, range._1, range._2)
+
+  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
+    def v(e: Expression): Option[Long] = e match {
+      case Literal(n: java.lang.Long, LongType) => Some(n.longValue)
+      case _ => None
+    }
+    def isV(a: Expression) = a match {
+      case a: AttributeReference => a.name == GraftStore.ChangeVersionCol
+      case _ => false
+    }
+    val (lo, hi) = (Long.MinValue, Long.MaxValue)
+    filters.flatMap {
+      case EqualTo(a, l) if isV(a) => v(l).map(x => (x, x))
+      case GreaterThan(a, l) if isV(a) => v(l).map(x => (x + 1, hi))
+      case GreaterThanOrEqual(a, l) if isV(a) => v(l).map(x => (x, hi))
+      case LessThan(a, l) if isV(a) => v(l).map(x => (lo, x - 1))
+      case LessThanOrEqual(a, l) if isV(a) => v(l).map(x => (lo, x))
+      case In(a, ls) if isV(a) && ls.nonEmpty && ls.forall(v(_).isDefined) =>
+        Some((ls.flatMap(v).min, ls.flatMap(v).max))
+      case _ => None
+    }.foreach { case (l, h) =>
+      range = (math.max(range._1, l), math.min(range._2, h)) }
+    delegate.pushFilters(filters)
+  }
+  override def pushedFilters: Array[Predicate] = delegate.pushedFilters
+  override def pruneColumns(requiredSchema: StructType): Unit =
+    delegate.pruneColumns(requiredSchema)
+  override def pushAggregation(aggregation: Aggregation): Boolean =
+    delegate.pushAggregation(aggregation)
+  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
+    delegate.supportCompletePushDown(aggregation)
+  override def build(): Scan = delegate.build()
 }
 
 /** One version of a graft table as a bare readable table over

@@ -270,14 +270,13 @@ class CatalogSpec extends SparkTestBase {
 
   test("streaming MV: change stream + incrementalAgg tracks DML continuously") {
     // the full CDC loop on one storage layout: SQL DML commits → changelog
-    // files → file-stream micro-batches → incrementalAgg folds each batch
+    // slices → `t$changes` micro-batches → incrementalAgg folds each batch
     // into the running view. A batch may span several commits; the
     // retract/add algebra is additive, so multi-version batches fold
     // exactly like single-version ones.
     import spark.implicits._
     val t = mkTable("t_mv_stream") // (k, name, amount); view groups by name
     spark.sql(s"INSERT INTO $cat.$t VALUES (1, 'x', 10), (2, 'y', 20)")
-    val dir = s"$warehouse/t_mv_stream"
     val mvState = new java.util.concurrent.atomic.AtomicReference[
       Map[(String, Boolean), (Long, Long)]](Map.empty)
     def mvDf = {
@@ -295,7 +294,7 @@ class CatalogSpec extends SparkTestBase {
           org.apache.spark.sql.types.StructField("s",
             org.apache.spark.sql.types.LongType))))
     }
-    val q = GraftStore.streamChanges(spark, dir)
+    val q = spark.readStream.table(s"$cat.`t_mv_stream$$changes`")
       .writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         val next = GraftStore.incrementalAgg(mvDf, batch, Seq("name"), "amount")

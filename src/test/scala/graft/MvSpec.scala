@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.{GraftCatalog, GraftMaterializedViews, GraftStore}
+import graft.sources.{GraftCatalog, GraftMaterializedViews, GraftStats, GraftStore}
 
 /** Materialized views (S39): `CREATE MATERIALIZED VIEW` persists the
   * definition and materializes the query into a backing state table;
@@ -292,6 +292,38 @@ class MvSpec extends SparkTestBase {
       s"FROM $cat.$t GROUP BY grp")
     spark.sql(s"INSERT INTO $cat.$t VALUES (6, 1, 7)")
     assert(refresh("mv_avg_dec")._2 === "full")
+  }
+
+  test("a large insert slice keeps the rebalanced write of a tiny state") {
+    val t = mkTable("t_mv_big")
+    spark.sql(s"INSERT INTO $cat.$t VALUES (1, 0, 10)")
+    spark.sql(s"CREATE MATERIALIZED VIEW $cat.mv_big AS " +
+      s"SELECT grp, COUNT(*) AS n, SUM(amount) AS s FROM $cat.$t GROUP BY grp")
+    val stateDir = s"$warehouse/__mv_state_mv_big"
+    // a 64 KiB commit-broadcast bound (hint threshold 32 KiB); AQE keeps
+    // the upstream partitions and splits rebalance partitions past 16 KiB,
+    // so a rebalanced write lands several files per bucket, the one-task
+    // write exactly one
+    withConf("spark.graft.commit.broadcastMaxBytes" -> "64k",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k") {
+      val v0 = GraftStore.currentVersion(stateDir)
+      assert(GraftStore.versionStats(stateDir, v0)._3 <= (32L << 10),
+        "the prior state must be under the hint threshold")
+      spark.sql(s"INSERT INTO $cat.$t SELECT id + 1, id, id FROM range(1, 20001)")
+      val src = s"$warehouse/$t"
+      assert(GraftStats.listDataFiles(s"${GraftStore.changesRoot(src)}/" +
+        s"change_version=${GraftStore.currentVersion(src)}").map(f =>
+          Files.size(java.nio.file.Paths.get(GraftStore.changesRoot(src),
+            s"change_version=${GraftStore.currentVersion(src)}", f))).sum >
+        (32L << 10), "the insert slice must be over the hint threshold")
+      assert(refresh("mv_big")._2 === "incremental")
+      val perBucket = GraftStore.bucketFileCounts(stateDir,
+        GraftStore.currentVersion(stateDir))
+      assert(perBucket.values.max > 1,
+        s"a large slice must keep the rebalanced write: $perBucket")
+      assert(rowsOf("mv_big") === recompute(t))
+    }
   }
 
   test("MIN/MAX fold incrementally for append-only slices, recompute on retraction") {
