@@ -7,10 +7,13 @@ import java.util.Base64
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Or}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-version ZONE MAPS — file-level min/max column statistics, the data-
@@ -164,6 +167,18 @@ object GraftStats {
       try Some(r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
       finally r.close()
     } catch { case _: Exception => None }
+
+  /** The Spark schema `spark.read.parquet` infers from one parquet file:
+    * the writer's Spark schema kept in the footer's key-value metadata,
+    * else the converted parquet schema. Read on the driver, so a reader
+    * that passes it to `spark.read.schema` runs no schema-inference job. */
+  def fileSchema(spark: SparkSession, file: Path): StructType = {
+    val path = new org.apache.hadoop.fs.Path(file.toUri)
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, footerConf))
+    try ParquetFileFormat.readSchemaFromFooter(new Footer(path, r.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally r.close()
+  }
 
   /** Aggregate footer statistics per top-level primitive column. Columns
     * whose physical type has no defensible comparison mapping (INT96,

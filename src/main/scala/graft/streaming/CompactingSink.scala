@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.Graft
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.sources.GraftStats
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -13,16 +14,31 @@ import scala.jdk.CollectionConverters._
   *
   * The store is partitioned by key-hash bucket (`bucket=N` subdirs, read
   * back by plain partition discovery), so a micro-batch reads, re-compacts
-  * and rewrites ONLY the buckets its keys hash into — at scale the store
-  * rewrite cost tracks the batch's key spread, not the store size. All
+  * and rewrites ONLY the buckets its keys hash into. Each touched bucket
+  * is rewritten whole: while the store is one bucket (below
+  * `maxBucketBytes`) every epoch rewrites the whole store, however few
+  * keys the batch has; once it has split, the rewrite tracks the batch's
+  * key spread over buckets of at most about `maxBucketBytes` each. All
   * touched buckets are written in one Spark job (partitionBy on the bucket
   * column); the per-bucket directory swap is then pure fs metadata.
   *
+  * Fixed cost per epoch: 3 Spark jobs — one for the touched-bucket pass
+  * (a per-partition distinct merged on the driver, no exchange) and two
+  * for the compacting write (its shuffle stage and the write stage under
+  * AQE). The stored schema comes from one data file's footer on the
+  * driver, so reading the touched buckets runs no schema-inference job.
+  * The batch is scanned twice: by the touched pass and by the write.
+  *
   * Bucket GROWTH (extendible hashing): the bucket name encodes its depth —
   * bucket n = 2^d + r (d = floor(log2 n)) holds keys with hash mod 2^d = r.
-  * The store starts at `initialDepth` (16 buckets at depth 4) and any
-  * bucket whose on-disk size exceeds `maxBucketBytes` after a merge is
-  * split into its two depth-(d+1) children (r and r + 2^d). Both children
+  * A new store starts at `initialDepth`; the default 0 is one bucket,
+  * `bucket=1`, so a store under `maxBucketBytes` is one file and an epoch
+  * rewrites one file (fewer jobs and files than 16 small buckets, paid
+  * for with the whole-store rewrite above: a win for small stores or
+  * batches that touch most buckets, about twice the epoch time for a
+  * store near the bound fed one-key batches; DESIGN.md). Any bucket whose
+  * on-disk size exceeds `maxBucketBytes` after a merge is split into its
+  * two depth-(d+1) children (r and r + 2^d). Both children
   * are ALWAYS created, even when one is empty, so the live bucket set
   * remains a prefix-free cover of the key space: every key routes to
   * exactly one live bucket (its unique deepest match), names are never
@@ -50,7 +66,7 @@ import scala.jdk.CollectionConverters._
   */
 object CompactingSink {
 
-  val DefaultInitialDepth = 4
+  val DefaultInitialDepth = 0
   /** Local default; a cluster deployment sizes this to its target file
     * size (e.g. 256 MB-1 GB). */
   val DefaultMaxBucketBytes: Long = 64L * 1024 * 1024
@@ -77,34 +93,31 @@ object CompactingSink {
   }
 
   /** Routing expression: the key's deepest live bucket match, else its
-    * depth-`initialDepth` home. Prefix-free cover => exactly one live
-    * match exists for any covered residue; fresh residues land at the
-    * initial depth. */
+    * home at the fallback depth. Prefix-free cover => exactly one live
+    * match exists for any covered residue. The fallback depth is
+    * `initialDepth` for an empty store and the shallowest live depth
+    * otherwise, so a fresh residue of a partly laid-out store (say only
+    * some of the 16 buckets of a depth-4 store) lands beside the existing
+    * buckets, never at an ancestor of one: the shallowest live depth only
+    * grows, so no live bucket lies below a fresh one and the live set
+    * stays a prefix-free cover, which splits rely on. */
   private[streaming] def bucketOf(keyCols: Seq[String], live: Seq[Long],
                                   initialDepth: Int): Column = {
     val h = xxhash64(keyCols.map(col): _*)
     def candidate(d: Int): Column = pmod(h, lit(1L << d)) + lit(1L << d)
-    val deeper = live.map(depthOf).distinct.filter(_ > initialDepth).sorted.reverse
-    val d0 = candidate(initialDepth)
-    deeper.foldRight(d0) { (d, fallback) =>
+    val fallback = if (live.isEmpty) initialDepth else live.map(depthOf).min
+    val deeper = live.map(depthOf).distinct.filter(_ > fallback).sorted.reverse
+    val d0 = candidate(fallback)
+    deeper.foldRight(d0) { (d, shallower) =>
       val names = live.filter(depthOf(_) == d)
-      when(candidate(d).isin(names: _*), candidate(d)).otherwise(fallback)
+      when(candidate(d).isin(names: _*), candidate(d)).otherwise(shallower)
     }
   }
 
-  /** True if the directory holds at least one visible data file. Empty
-    * child buckets are live for ROUTING but must be excluded from reads
-    * (spark.read.parquet cannot infer a schema from an empty dir). */
-  private def hasDataFiles(p: Path): Boolean = {
-    if (!Files.isDirectory(p)) return false
-    val s = Files.walk(p)
-    try s.iterator().asScala.exists(f =>
-      Files.isRegularFile(f) && {
-        val n = f.getFileName.toString
-        !n.startsWith(".") && !n.startsWith("_")
-      })
-    finally s.close()
-  }
+  /** Visible data files of a bucket dir (empty if absent). Empty child
+    * buckets are live for ROUTING but are excluded from reads. */
+  private def dataFiles(p: Path): Seq[Path] =
+    GraftStats.listDataFiles(p.toString).map(p.resolve(_))
 
   private def dirBytes(p: Path): Long = {
     if (!Files.isDirectory(p)) return 0L
@@ -125,17 +138,24 @@ object CompactingSink {
     recover(storeDir)
     val live = liveBuckets(storeDir)
     val withB = batch.withColumn("bucket", bucketOf(keyCols, live, initialDepth))
-    // bounded driver metadata: at most |live buckets| + 2^initialDepth rows
-    val touched = withB.select("bucket").distinct().collect().map(_.getLong(0)).sorted
+    // one job, one stage: each task dedups its partition and the driver
+    // merges, with no exchange. Bounded driver metadata: per task at most
+    // |live buckets| + 2^(fallback depth) values
+    val touched = withB.select("bucket").as(Encoders.scalaLong)
+      .mapPartitions((it: Iterator[Long]) => it.toSet.iterator)(Encoders.scalaLong)
+      .collect().distinct.sorted
     if (touched.isEmpty) return
-    val existingDirs = touched.map(b => s"$storeDir/bucket=$b")
-      .filter(p => hasDataFiles(Paths.get(p)))
+    val existingDirs = touched.toSeq.map(b => Paths.get(s"$storeDir/bucket=$b"))
+      .map(d => d -> dataFiles(d)).filter(_._2.nonEmpty)
     // stored files carry payload columns only; the bucket is re-derived
     // from the keys (same hash, same live set), keeping reader schema =
-    // writer schema
+    // writer schema. The stored schema comes from one footer (no
+    // inference job), never from the batch: `unionByName` must still
+    // reject a batch that lacks a stored column or adds one.
     val existing =
       if (existingDirs.nonEmpty)
-        Some(spark.read.parquet(existingDirs.toIndexedSeq: _*)
+        Some(spark.read.schema(GraftStats.fileSchema(spark, existingDirs.head._2.head))
+          .parquet(existingDirs.map(_._1.toString): _*)
           .withColumn("bucket", bucketOf(keyCols, live, initialDepth)))
       else None
     val all = existing.map(_.unionByName(withB)).getOrElse(withB)
@@ -171,8 +191,10 @@ object CompactingSink {
     val (c1, c2) = childrenOf(n)
     val splitRoot = Paths.get(s"$storeDir/_split_$n")
     val parent = Paths.get(s"$storeDir/bucket=$n")
-    if (!hasDataFiles(parent)) return
-    val df = spark.read.parquet(parent.toString)
+    val files = dataFiles(parent)
+    if (files.isEmpty) return
+    val df = spark.read.schema(GraftStats.fileSchema(spark, files.head))
+      .parquet(parent.toString)
       .withColumn("bucket", pmod(xxhash64(keyCols.map(col): _*), lit(1L << d1)) + lit(1L << d1))
     df.write.mode("overwrite").partitionBy("bucket").parquet(splitRoot.toString)
     // both children must exist — the live set stays a prefix-free cover
@@ -211,16 +233,11 @@ object CompactingSink {
     val staging = snapRoot.resolve(s"_staging_v$version")
     deleteRecursively(staging)
     liveBuckets(storeDir).foreach { b =>
-      val src = root.resolve(s"bucket=$b")
-      if (hasDataFiles(src)) {
+      val files = dataFiles(root.resolve(s"bucket=$b"))
+      if (files.nonEmpty) {
         val dst = staging.resolve(s"bucket=$b")
         Files.createDirectories(dst)
-        val s = Files.list(src)
-        try s.iterator().asScala.foreach { f =>
-          val n = f.getFileName.toString
-          if (Files.isRegularFile(f) && !n.startsWith(".") && !n.startsWith("_"))
-            Files.createLink(dst.resolve(n), f)
-        } finally s.close()
+        files.foreach(f => Files.createLink(dst.resolve(f.getFileName), f))
       }
     }
     Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)

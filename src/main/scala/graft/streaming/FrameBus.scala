@@ -121,7 +121,32 @@ object FrameBus {
     * match [[decodeCompleteFrames]]: a trailing partial frame (or partial
     * header) is "not yet available", never an error. The log size is
     * snapshotted once — frames appended mid-walk surface next poll. */
-  def count(dir: String, topic: String): Long = {
+  def count(dir: String, topic: String): Long =
+    walkFrames(dir, topic, Long.MaxValue)((_, _, _, _) => ())
+
+  /** Payloads of the complete frames at offsets [from, until) of a topic
+    * log: the header walk of [[count]] skips to `from`, then only the
+    * frames in range are read. A torn tail ends the range early, as in
+    * [[readAll]]. */
+  def readRange(dir: String, topic: String, from: Long,
+                until: Long): IndexedSeq[Array[Byte]] = {
+    val out = IndexedSeq.newBuilder[Array[Byte]]
+    walkFrames(dir, topic, until) { (ch, i, pos, len) =>
+      if (i >= from) {
+        val payload = java.nio.ByteBuffer.allocate(len)
+        while (payload.hasRemaining &&
+          ch.read(payload, pos + payload.position()) >= 0) ()
+        out += payload.array()
+      }
+    }
+    out.result()
+  }
+
+  /** Walks the first `limit` complete frames of a topic log by their
+    * length prefixes, calling `visit(channel, offset, payloadPos, len)`
+    * for each; returns the number walked. Stops at a torn tail. */
+  private def walkFrames(dir: String, topic: String, limit: Long)(
+      visit: (java.nio.channels.FileChannel, Long, Long, Int) => Unit): Long = {
     val f = Paths.get(dir, topic + LogSuffix)
     if (!Files.isRegularFile(f)) return 0L
     val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
@@ -130,7 +155,7 @@ object FrameBus {
       val hdr = java.nio.ByteBuffer.allocate(4)
       var pos = 0L
       var n = 0L
-      while (pos + 4 <= size && {
+      while (n < limit && pos + 4 <= size && {
         hdr.clear()
         while (hdr.hasRemaining && ch.read(hdr, pos + hdr.position()) >= 0) ()
         !hdr.hasRemaining
@@ -139,8 +164,10 @@ object FrameBus {
         val len = hdr.getInt
         require(len >= 0 && len <= GraftCodec.MaxFrameBytes,
           s"frame length $len out of bounds")
-        if (pos + 4 + len <= size) { n += 1; pos += 4 + len }
-        else return n // torn tail: payload not fully flushed yet
+        if (pos + 4 + len > size) return n // torn tail: payload not fully flushed yet
+        visit(ch, n, pos + 4, len)
+        n += 1
+        pos += 4 + len
       }
       n
     } finally ch.close()

@@ -180,20 +180,21 @@ object FrameBusReaderFactory extends PartitionReaderFactory {
 }
 
 /** Reads one topic log's frames in [from, until), decoding each payload to
-  * (topic, offset, ts, key, value). The whole-log read + skip is the local
-  * stand-in for a segment seek (see [[FrameBusSource]] scale note). */
+  * (topic, offset, ts, key, value). Only the frames in range are read; the
+  * header walk to `from` is the local stand-in for a segment seek (see
+  * [[FrameBusSource]] scale note). */
 final class FrameBusPartitionReader(p: FrameBusInputPartition)
     extends PartitionReader[InternalRow] {
-  private val payloads = FrameBus.readAll(p.busDir, p.topic)
+  private val payloads = FrameBus.readRange(p.busDir, p.topic, p.from, p.until)
   private val topicUtf8 = UTF8String.fromString(p.topic)
-  private var pos = p.from - 1
+  private var i = -1
 
-  override def next(): Boolean = { pos += 1; pos < p.until && pos < payloads.length }
+  override def next(): Boolean = { i += 1; i < payloads.length }
 
   override def get(): InternalRow = {
-    val (ts, key, value) = FrameBus.decodePayload(payloads(pos.toInt))
+    val (ts, key, value) = FrameBus.decodePayload(payloads(i))
     new GenericInternalRow(Array[Any](
-      topicUtf8, pos, ts, UTF8String.fromString(key), value))
+      topicUtf8, p.from + i, ts, UTF8String.fromString(key), value))
   }
 
   override def close(): Unit = ()

@@ -126,6 +126,27 @@ class FrameBusSpec extends SparkTestBase {
     intercept[IllegalArgumentException](FrameBus.count(dir, "op"))
   }
 
+  test("readRange reads only [from, until) and stops at a torn tail") {
+    val dir = Files.createTempDirectory("graft_bus_range").toString
+    assert(FrameBus.readRange(dir, "absent", 0L, 5L).isEmpty)
+    FrameBus.appendTopic(dir, "t", (0 until 6).map(i => msg(10L + i, s"k$i", "v" * i)))
+    val p = java.nio.file.Paths.get(dir, "t" + FrameBus.LogSuffix)
+    // a seventh frame whose payload only partly landed
+    val next = graft.functions.GraftCodec.frameEncode(
+      FrameBus.encodePayload(99L, "k6", "tail".getBytes("UTF-8")))
+    Files.write(p, next.dropRight(2), java.nio.file.StandardOpenOption.APPEND)
+    val all = FrameBus.readAll(dir, "t")
+    assert(all.length == 6)
+    for (from <- 0L to 7L; until <- from to 8L) {
+      val got = FrameBus.readRange(dir, "t", from, until)
+      val want = all.slice(from.toInt, until.toInt)
+      assert(got.map(_.toSeq) == want.map(_.toSeq), s"[$from, $until)")
+    }
+    // the reader's rows carry their log offsets
+    val (ts, key, _) = FrameBus.decodePayload(FrameBus.readRange(dir, "t", 4L, 5L).head)
+    assert(ts == 14L && key == "k4")
+  }
+
   test("latestOffset never regresses when a topic log vanishes or shrinks") {
     val bus = Files.createTempDirectory("graft_bus_vanish").toString
     FrameBus.appendTopic(bus, "gone", (0 until 4).map(i => msg(1L + i, s"k$i", "v")))

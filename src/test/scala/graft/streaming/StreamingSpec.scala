@@ -140,12 +140,12 @@ class StreamingSpec extends SparkTestBase {
       spark.range(1).select(pmod(xxhash64(lit(k)), lit(16L)) + lit(16L)).head().getLong(0)).toMap
     val k1 = keys.head
     val k2 = keys.find(k => bucketOf(k) != bucketOf(k1)).get
-    CompactingSink.upsertCompact(store, Seq("k"), Seq("off"))(
+    CompactingSink.upsertCompact(store, Seq("k"), Seq("off"), initialDepth = 4)(
       Seq((k1, 1L, "a"), (k2, 1L, "b")).toDF("k", "off", "v"), 0L)
     val k2DirBefore = bucketBytes(Paths.get(s"$store/bucket=${bucketOf(k2)}"))
     assert(k2DirBefore.nonEmpty)
     // second batch touches only k1's bucket
-    CompactingSink.upsertCompact(store, Seq("k"), Seq("off"))(
+    CompactingSink.upsertCompact(store, Seq("k"), Seq("off"), initialDepth = 4)(
       Seq((k1, 2L, "a2")).toDF("k", "off", "v"), 1L)
     val k2DirAfter = bucketBytes(Paths.get(s"$store/bucket=${bucketOf(k2)}"))
     assert(k2DirAfter == k2DirBefore, "untouched bucket was rewritten")
