@@ -31,15 +31,15 @@ import scala.jdk.CollectionConverters._
   *
   * Bucket GROWTH (extendible hashing): the bucket name encodes its depth —
   * bucket n = 2^d + r (d = floor(log2 n)) holds keys with hash mod 2^d = r.
-  * A new store starts at `initialDepth`; the default 0 is one bucket,
-  * `bucket=1`, so a store under `maxBucketBytes` is one file and an epoch
-  * rewrites one file (fewer jobs and files than 16 small buckets, paid
-  * for with the whole-store rewrite above: a win for small stores or
-  * batches that touch most buckets, about twice the epoch time for a
-  * store near the bound fed one-key batches; DESIGN.md). Any bucket whose
-  * on-disk size exceeds `maxBucketBytes` after a merge is split into its
-  * two depth-(d+1) children (r and r + 2^d). Both children
-  * are ALWAYS created, even when one is empty, so the live bucket set
+  * Every store starts as one bucket, `bucket=1`, so a store under
+  * `maxBucketBytes` is one file and an epoch rewrites one file (fewer
+  * jobs and files than 16 small buckets, paid for with the whole-store
+  * rewrite above: a win for small stores or batches that touch most
+  * buckets, about twice the epoch time for a store near the bound fed
+  * one-key batches; DESIGN.md). Any bucket whose on-disk size exceeds
+  * `maxBucketBytes` after a merge is split into its two depth-(d+1)
+  * children (r and r + 2^d). Both children are ALWAYS created, even when
+  * one is empty, so the live bucket set
   * remains a prefix-free cover of the key space: every key routes to
   * exactly one live bucket (its unique deepest match), names are never
   * recreated, and a 100 TB store self-scales instead of freezing at the
@@ -58,7 +58,10 @@ import scala.jdk.CollectionConverters._
   * checkpoint-replayed batch re-merges idempotently (max_by keeps the same
   * survivor). The underscore prefixes also hide in-flight dirs from
   * parquet discovery, so concurrent readers never see a half-written
-  * store.
+  * store. The store keeps only its latest state: versions, time travel
+  * and aggregate views over a stream belong to graft tables
+  * (`writeStream.toTable`, `create_tag` + `VERSION AS OF`, materialized
+  * views).
   *
   * Reference analogue: the execution queue's tick-drain consuming frames
   * into current state (scheduler.cpp:81-108), upgraded from at-most-once to
@@ -66,7 +69,6 @@ import scala.jdk.CollectionConverters._
   */
 object CompactingSink {
 
-  val DefaultInitialDepth = 0
   /** Local default; a cluster deployment sizes this to its target file
     * size (e.g. 256 MB-1 GB). */
   val DefaultMaxBucketBytes: Long = 64L * 1024 * 1024
@@ -93,19 +95,14 @@ object CompactingSink {
   }
 
   /** Routing expression: the key's deepest live bucket match, else its
-    * home at the fallback depth. Prefix-free cover => exactly one live
-    * match exists for any covered residue. The fallback depth is
-    * `initialDepth` for an empty store and the shallowest live depth
-    * otherwise, so a fresh residue of a partly laid-out store (say only
-    * some of the 16 buckets of a depth-4 store) lands beside the existing
-    * buckets, never at an ancestor of one: the shallowest live depth only
-    * grows, so no live bucket lies below a fresh one and the live set
-    * stays a prefix-free cover, which splits rely on. */
-  private[streaming] def bucketOf(keyCols: Seq[String], live: Seq[Long],
-                                  initialDepth: Int): Column = {
+    * home at the shallowest live depth (`bucket=1` for an empty store).
+    * Every store starts as `bucket=1` and grows only by splitting, so the
+    * live set is a prefix-free cover and exactly one live match exists
+    * for every key. */
+  private[streaming] def bucketOf(keyCols: Seq[String], live: Seq[Long]): Column = {
     val h = xxhash64(keyCols.map(col): _*)
     def candidate(d: Int): Column = pmod(h, lit(1L << d)) + lit(1L << d)
-    val fallback = if (live.isEmpty) initialDepth else live.map(depthOf).min
+    val fallback = if (live.isEmpty) 0 else live.map(depthOf).min
     val deeper = live.map(depthOf).distinct.filter(_ > fallback).sorted.reverse
     val d0 = candidate(fallback)
     deeper.foldRight(d0) { (d, shallower) =>
@@ -131,13 +128,12 @@ object CompactingSink {
     * any touched bucket that outgrew `maxBucketBytes`. `bucket` is a
     * reserved column name in the store. */
   def upsertCompact(storeDir: String, keyCols: Seq[String], orderCols: Seq[String],
-                    initialDepth: Int = DefaultInitialDepth,
                     maxBucketBytes: Long = DefaultMaxBucketBytes)
                    (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     recover(storeDir)
     val live = liveBuckets(storeDir)
-    val withB = batch.withColumn("bucket", bucketOf(keyCols, live, initialDepth))
+    val withB = batch.withColumn("bucket", bucketOf(keyCols, live))
     // one job, one stage: each task dedups its partition and the driver
     // merges, with no exchange. Bounded driver metadata: per task at most
     // |live buckets| + 2^(fallback depth) values
@@ -156,7 +152,7 @@ object CompactingSink {
       if (existingDirs.nonEmpty)
         Some(spark.read.schema(GraftStats.fileSchema(spark, existingDirs.head._2.head))
           .parquet(existingDirs.map(_._1.toString): _*)
-          .withColumn("bucket", bucketOf(keyCols, live, initialDepth)))
+          .withColumn("bucket", bucketOf(keyCols, live)))
       else None
     val all = existing.map(_.unionByName(withB)).getOrElse(withB)
     val compacted = Graft.compactLatest(all, keyCols, orderCols)
@@ -209,63 +205,6 @@ object CompactingSink {
     deleteRecursively(splitRoot)
   }
 
-  // ---------- snapshot log: time travel + snapshot-isolated reads ----------
-
-  /** Record the store's current live contents as immutable snapshot
-    * `v<version>` under `_snapshots/`. Local stand-in for a table format's
-    * manifest: instead of listing file paths in a metadata file, the
-    * snapshot HARDLINKS every live data file into a versioned dir — zero
-    * data copy, and the links keep the bytes alive after later merges
-    * delete the live dirs' own links. Crash-safe the same way as merges:
-    * staged under `_snapshots/_staging_v<n>`, atomic-renamed into place,
-    * leftovers dropped by [[recover]]. Idempotent per version (a
-    * checkpoint-replayed batch re-snapshots the identical compacted state,
-    * so the existing snapshot stands). At cluster scale this becomes a
-    * manifest JSON naming immutable object-store files — same commit
-    * protocol (stage, then one atomic rename), no hardlinks needed because
-    * data files there are never deleted in place, only unreferenced. */
-  def snapshot(storeDir: String, version: Long): Unit = {
-    val root = Paths.get(storeDir)
-    val snapRoot = root.resolve("_snapshots")
-    Files.createDirectories(snapRoot)
-    val target = snapRoot.resolve(s"v$version")
-    if (Files.exists(target)) return
-    val staging = snapRoot.resolve(s"_staging_v$version")
-    deleteRecursively(staging)
-    liveBuckets(storeDir).foreach { b =>
-      val files = dataFiles(root.resolve(s"bucket=$b"))
-      if (files.nonEmpty) {
-        val dst = staging.resolve(s"bucket=$b")
-        Files.createDirectories(dst)
-        files.foreach(f => Files.createLink(dst.resolve(f.getFileName), f))
-      }
-    }
-    Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Committed snapshot versions, ascending. */
-  def snapshotVersions(storeDir: String): Seq[Long] = {
-    val snapRoot = Paths.get(storeDir).resolve("_snapshots")
-    if (!Files.isDirectory(snapRoot)) return Seq.empty
-    val s = Files.list(snapRoot)
-    try s.iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith("v") && !n.startsWith("_"))
-      .map(_.stripPrefix("v").toLong).toSeq.sorted
-    finally s.close()
-  }
-
-  /** Time-travel read: the store exactly as of snapshot `version`. The
-    * returned frame is stable under any amount of subsequent store
-    * mutation (snapshot files are immutable link targets). */
-  def readSnapshot(spark: SparkSession, storeDir: String, version: Long): DataFrame =
-    spark.read.parquet(s"$storeDir/_snapshots/v$version")
-
-  /** Retention: drop all but the newest `keepLast` snapshots. */
-  def expireSnapshots(storeDir: String, keepLast: Int): Unit =
-    snapshotVersions(storeDir).dropRight(keepLast).foreach { v =>
-      deleteRecursively(Paths.get(storeDir).resolve("_snapshots").resolve(s"v$v"))
-    }
-
   /** Crash recovery, run before every merge (and safe to call at startup):
     * roll back interrupted splits (children derived from a parked parent
     * are dropped, the parent restored), restore any `_old_bucket=N` whose
@@ -305,14 +244,6 @@ object CompactingSink {
         if (!Files.exists(live)) Files.move(p, live, StandardCopyOption.ATOMIC_MOVE)
         else deleteRecursively(p)
       } else if (n.startsWith("_tmp_")) deleteRecursively(p)
-    }
-    // 3. interrupted snapshot staging (committed v* dirs are immutable)
-    val snapRoot = root.resolve("_snapshots")
-    if (Files.isDirectory(snapRoot)) {
-      val s = Files.list(snapRoot)
-      try s.iterator().asScala.toList.foreach { p =>
-        if (p.getFileName.toString.startsWith("_staging_")) deleteRecursively(p)
-      } finally s.close()
     }
   }
 

@@ -359,31 +359,38 @@ object StreamingQueries {
             FROM events) t
       WHERE rn = 1 ORDER BY user_id""")),
 
-    // ----- T7: streaming materialized aggregate view — the stream lands
-    // per-batch partial aggregates as immutable deltas (AggregatingSink;
-    // additive LSM companion of the latest-per-key compacting store), the
-    // fold step compacts the delta log, and the VIEW read back from disk
-    // must equal the batch aggregate oracle. Additive state is where
-    // at-least-once silently corrupts (a replayed batch double-counts) —
-    // here replay is a no-op because a batch's delta commit is keyed by its
-    // batchId (idempotence + crash-protocol tests in StreamingSpec).
+    // ----- T7: streaming materialized aggregate view — a materialized
+    // view is defined over a still-empty keyless graft table, the events
+    // stream lands in that table through `writeStream.toTable` (one
+    // exactly-once commit per epoch: a replayed epoch is a no-op, never a
+    // double-count), and `REFRESH` folds the table's all-insert changelog
+    // into the view, which must equal the batch aggregate oracle.
+    // `folded_to_one` checks that the view covers every committed epoch:
+    // the refresh ran incrementally and a second refresh has nothing left
+    // to fold.
     GraftQuery("t7_stream_agg_view", (s, d) => {
       import s.implicits._
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_t7_store").toString + "/view"
-      val src = eventsStream(s, d)
-        .select($"event_type", vcents($"value").as("cents"), lit(1L).as("n"))
-      val q = src.writeStream
+      graft.operators.DmlFixture.register(s)
+      s.sql("DROP MATERIALIZED VIEW IF EXISTS graftdml.t7_view")
+      s.sql("DROP TABLE IF EXISTS graftdml.t7_events")
+      s.sql("""CREATE TABLE graftdml.t7_events (event_type STRING, cents BIGINT)
+        USING graft TBLPROPERTIES ('append_only'='true', 'buckets'='4')""")
+      s.sql("""CREATE MATERIALIZED VIEW graftdml.t7_view AS
+        SELECT event_type, SUM(cents) AS cents, COUNT(*) AS n
+        FROM graftdml.t7_events GROUP BY event_type""")
+      val q = eventsStream(s, d)
+        .select($"event_type", vcents($"value").as("cents"))
+        .writeStream
         .option("checkpointLocation",
           java.nio.file.Files.createTempDirectory("graft_t7_ckpt").toString)
-        .foreachBatch(AggregatingSink.appendDelta(
-          store, Seq("event_type"), Seq("cents", "n")) _)
-        .outputMode(OutputMode.Append()).start()
+        .toTable("graftdml.t7_events")
       try { q.processAllAvailable() } finally { q.stop() }
-      AggregatingSink.fold(s, store, Seq("event_type"), Seq("cents", "n"))
-      val oneDelta = AggregatingSink.deltaIds(store).size == 1
-      AggregatingSink.read(s, store, Seq("event_type"), Seq("cents", "n"))
-        .select($"event_type", $"cents", $"n", lit(oneDelta).as("folded_to_one"))
+      val refreshed = s.sql("REFRESH MATERIALIZED VIEW graftdml.t7_view").head()
+      val again = s.sql("CALL graftdml.refresh_mv(view => 't7_view')").head()
+      val covered = refreshed.getString(1) == "incremental" &&
+        again.getString(1) == "noop"
+      s.sql("SELECT event_type, cents, n FROM graftdml.t7_view")
+        .withColumn("folded_to_one", lit(covered))
         .orderBy($"event_type")
     }, Some(s"""
       SELECT event_type, CAST(SUM(${sql.vcents("value")}) AS BIGINT) AS cents,
@@ -391,14 +398,15 @@ object StreamingQueries {
       FROM events GROUP BY event_type ORDER BY event_type""")),
 
     // ----- T6 growth variant: the compacted store splits its buckets as
-    // data arrives. Rows are padded (~2 KB) and the store starts at depth 2
-    // (4 buckets) with a 6 KB bucket cap, so splits genuinely trigger at
-    // every test SF; three deterministic merge batches (event_id mod 3)
-    // exercise merge → split → merge-into-children. The store contents are
-    // then checked against the same latest-per-key batch oracle as t6 (pad
-    // is derived from user_id, so it survives compaction unchanged), plus
-    // two in-query invariants the oracle asserts: the store grew past its
-    // initial depth, and the live bucket set is a prefix-free cover (every
+    // data arrives. Rows are padded (~2 KB) and the store starts as one
+    // bucket with a 3 KB bucket cap, so splits genuinely trigger at every
+    // test SF; three deterministic merge batches (event_id mod 3) exercise
+    // merge → split → merge-into-children. The store contents are then
+    // checked against the same latest-per-key batch oracle as t6 (pad is
+    // derived from user_id, so it survives compaction unchanged), plus two
+    // in-query invariants the oracle asserts: the store grew (three
+    // splitting epochs from depth 0 reach depth 3, so `grew` is depth > 2),
+    // and the live bucket set is a prefix-free cover (every
     // residue at max depth covered exactly once — no key lost or
     // double-homed by the growth).
     GraftQuery("t6_bucket_split", (s, d) => {
@@ -414,7 +422,7 @@ object StreamingQueries {
             "i -> md5(concat(user_id, '-', i))))").as("pad"))
       (0 until 3).foreach { i =>
         CompactingSink.upsertCompact(store, Seq("user_id"), Seq("ts", "event_id"),
-          initialDepth = 2, maxBucketBytes = 3 * 1024)(
+          maxBucketBytes = 3 * 1024)(
           src.filter(pmod($"event_id", lit(3)) === i), i.toLong)
       }
       val live = CompactingSink.liveBuckets(store)
@@ -435,28 +443,38 @@ object StreamingQueries {
             FROM events) t
       WHERE rn = 1 ORDER BY user_id""")),
 
-    // ----- T6 snapshot log: time travel over the compacted store. Three
-    // deterministic merge batches (event_id mod 3), a snapshot committed
-    // after each; the query reads snapshot v1 (state after batches 0-1)
-    // AND the live store, full-outer-joined per user. The oracle recomputes
-    // both compactions straight from events, so the snapshot is pinned to
+    // ----- T6 time travel over a compacted graft table. Three
+    // deterministic batches (event_id mod 3), each compacted to its latest
+    // row per user and MERGEd latest-wins into a table keyed by user_id,
+    // with a tag `b<i>` on the version each batch committed; the query
+    // reads `VERSION AS OF 'b1'` (state after batches 0-1) AND the latest
+    // table, full-outer-joined per user. The oracle recomputes both
+    // compactions straight from events, so the tagged version is pinned to
     // exactly the batch-0/1 latest-per-key state — proving later merges
-    // never leak into a committed snapshot (the hardlinked files outlive
-    // the live dirs' own links).
+    // never leak into a committed version.
     GraftQuery("t6_time_travel", (s, d) => {
       import s.implicits._
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_t6_tt").toString + "/store"
+      graft.operators.DmlFixture.register(s)
+      s.sql("DROP TABLE IF EXISTS graftdml.t6_tt")
+      s.sql("""CREATE TABLE graftdml.t6_tt
+        (user_id BIGINT NOT NULL, event_id BIGINT, ts TIMESTAMP, cents BIGINT)
+        USING graft TBLPROPERTIES ('merge_key'='user_id', 'buckets'='8')""")
       val src = T.events(s, d)
         .select($"user_id", $"event_id", $"ts", vcents($"value").as("cents"))
       (0 until 3).foreach { i =>
-        CompactingSink.upsertCompact(store, Seq("user_id"), Seq("ts", "event_id"))(
-          src.filter(pmod($"event_id", lit(3)) === i), i.toLong)
-        CompactingSink.snapshot(store, i.toLong)
+        graft.Graft.compactLatest(src.filter(pmod($"event_id", lit(3)) === i),
+          Seq("user_id"), Seq("ts", "event_id")).createOrReplaceTempView("t6_tt_batch")
+        s.sql("""MERGE INTO graftdml.t6_tt t USING t6_tt_batch b
+          ON t.user_id = b.user_id
+          WHEN MATCHED AND struct(b.ts, b.event_id) > struct(t.ts, t.event_id)
+            THEN UPDATE SET event_id = b.event_id, ts = b.ts, cents = b.cents
+          WHEN NOT MATCHED THEN INSERT (user_id, event_id, ts, cents)
+            VALUES (b.user_id, b.event_id, b.ts, b.cents)""")
+        s.sql(s"CALL graftdml.create_tag(`table` => 't6_tt', name => 'b$i')")
       }
-      val v1 = CompactingSink.readSnapshot(s, store, 1L)
-        .select($"user_id", $"event_id".as("eid_v1"), $"cents".as("cents_v1"))
-      val latest = s.read.parquet(store)
+      val v1 = s.sql("SELECT user_id, event_id AS eid_v1, cents AS cents_v1 " +
+        "FROM graftdml.t6_tt VERSION AS OF 'b1'")
+      val latest = s.table("graftdml.t6_tt")
         .select($"user_id", $"event_id".as("eid_latest"), $"cents".as("cents_latest"))
       latest.join(v1, Seq("user_id"), "full_outer")
         .select($"user_id", $"eid_v1", $"cents_v1", $"eid_latest", $"cents_latest")

@@ -114,6 +114,43 @@ class KeylessTableSpec extends SparkTestBase {
       .map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
   }
 
+  test("a streaming epoch replayed after its checkpoint commit was lost appends nothing") {
+    // the additive double-count hazard: the table committed epoch 1 but the
+    // checkpoint never recorded it, so a restart replays epoch 1, here with
+    // different rows. The table's (queryId, epoch) marker acknowledges the
+    // replay without a commit.
+    warehouse
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    spark.sql(s"DROP TABLE IF EXISTS $cat.kl_replay")
+    spark.sql(s"""CREATE TABLE $cat.kl_replay (k BIGINT, v BIGINT) USING graft
+      TBLPROPERTIES ('append_only'='true', 'buckets'='2')""")
+    val dir = s"$warehouse/kl_replay"
+    val ckpt = Files.createTempDirectory("graft_kl_replay_ckpt").toString
+    def start(in: MemoryStream[(Long, Long)]) = in.toDS().toDF("k", "v")
+      .writeStream.option("checkpointLocation", ckpt).toTable(s"$cat.kl_replay")
+    def contents(): Seq[(Long, Long)] = spark.table(s"$cat.kl_replay")
+      .as[(Long, Long)].collect().toSeq.sorted
+    val in1 = MemoryStream[(Long, Long)]
+    val q1 = start(in1)
+    try {
+      in1.addData((1L, 10L)); q1.processAllAvailable()
+      in1.addData((2L, 20L)); q1.processAllAvailable()
+    } finally q1.stop()
+    val version = GraftStore.currentVersion(dir)
+    assert(contents() === Seq((1L, 10L), (2L, 20L)))
+    Seq("1", ".1.crc").foreach(f =>
+      Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", f)))
+    val in2 = MemoryStream[(Long, Long)]
+    in2.addData((1L, 10L))
+    in2.addData((2L, 999L))
+    val q2 = start(in2)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(GraftStore.currentVersion(dir) === version)
+    assert(contents() === Seq((1L, 10L), (2L, 20L)))
+  }
+
   test("streaming upsert is rejected; plain streaming append lands") {
     warehouse
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -8,9 +8,10 @@ import graft.SparkTestBase
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 
 /** The compacting store's layout and schema contract: a store starts as
-  * one bucket and grows only by splitting, a store laid out at another
-  * depth keeps merging under the default, and a batch whose columns
-  * differ from the stored ones is rejected before anything is written. */
+  * one bucket and grows only by splitting, so its live buckets stay a
+  * prefix-free cover that routes every key to the bucket holding it, and
+  * a batch whose columns differ from the stored ones is rejected before
+  * anything is written. */
 class CompactingStoreSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -87,39 +88,12 @@ class CompactingStoreSpec extends SparkTestBase {
     assert(state(store) == want2 ++ (0 until 5).map(i => s"key$i" -> (5L, s"value-$i-5")))
   }
 
-  test("a store written at initialDepth = 4 merges correctly under the default depth") {
-    val store = tmp("depth4")
-    val up4 = CompactingSink.upsertCompact(store, Seq("k"), Seq("off"), initialDepth = 4) _
-    // few keys: only some of the 16 depth-4 buckets exist
-    up4(batch(0 until 3, 1L), 0L)
-    val before = CompactingSink.liveBuckets(store)
-    assert(before.nonEmpty && before.forall(b => b >= 16 && b < 32), before)
-    val up = CompactingSink.upsertCompact(store, Seq("k"), Seq("off")) _
-    up(batch(0 until 30, 2L), 1L)
-    up(batch(10 until 40, 3L), 2L)
-    // a key present in a depth-4 bucket stays there: no key is stored twice
-    val rows = spark.read.parquet(store).select("k").as[String].collect()
-    assert(rows.length == rows.distinct.length)
-    assert(state(store) == (0 until 40).map { i =>
-      val off = if (i >= 10) 3L else 2L
-      s"key$i" -> (off, s"value-$i-$off")
-    }.toMap)
-    before.foreach(b => assert(CompactingSink.liveBuckets(store).contains(b)))
-    // fresh keys land beside the depth-4 buckets, not in bucket=1
-    assert(CompactingSink.liveBuckets(store).forall(_ >= 16))
-    assertPrefixFree(store)
-  }
-
-  test("a partly laid-out depth-4 store splits under the default depth and " +
-      "keeps every key") {
-    val store = tmp("depth4_split")
-    CompactingSink.upsertCompact(store, Seq("k"), Seq("off"), initialDepth = 4)(
-      batch(0 until 3, 1L), 0L)
-    assert(CompactingSink.liveBuckets(store).size < 16)
+  test("a store split every epoch keeps every key in the bucket it routes to") {
+    val store = tmp("split_each_epoch")
     // a 1-byte bound: every touched bucket holding data splits each epoch
     val up = CompactingSink.upsertCompact(store, Seq("k"), Seq("off"),
       maxBucketBytes = 1) _
-    var want = (0 until 3).map(i => s"key$i" -> (1L, s"value-$i-1")).toMap
+    var want = Map.empty[String, (Long, String)]
     (1 to 4).foreach { e =>
       val ids = (e - 1) * 8 until e * 8 + 4
       up(batch(ids, e + 1L), e.toLong)
@@ -128,9 +102,14 @@ class CompactingStoreSpec extends SparkTestBase {
       val rows = spark.read.parquet(store).select("k").as[String].collect()
       assert(rows.length == rows.distinct.length, s"epoch $e")
       assert(state(store) == want, s"epoch $e")
+      // each key's row sits in the `bucket=` dir that bucketOf routes it to
+      val live = CompactingSink.liveBuckets(store)
+      val misplaced = spark.read.parquet(store)
+        .select($"k", $"bucket", CompactingSink.bucketOf(Seq("k"), live).as("routed"))
+        .filter($"bucket" =!= $"routed").as[(String, Long, Long)].collect()
+      assert(misplaced.isEmpty, s"epoch $e: ${misplaced.toSeq} in $live")
     }
-    val live = CompactingSink.liveBuckets(store)
-    assert(live.forall(_ >= 16) && live.exists(_ >= 32), live)
+    assert(CompactingSink.liveBuckets(store).size > 2)
   }
 
   test("an epoch whose batch lacks a stored column or adds one throws and " +

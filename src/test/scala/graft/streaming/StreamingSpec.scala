@@ -134,18 +134,19 @@ class StreamingSpec extends SparkTestBase {
     import spark.implicits._
     import java.nio.file.Paths
     val store = tmp("bucket_store") + "/store"
-    // find two keys that land in different buckets (hash is stable)
+    // find two keys that land in different depth-1 buckets (hash is stable)
     val keys = ('a' to 'p').map(_.toString)
     val bucketOf = keys.map(k => k ->
-      spark.range(1).select(pmod(xxhash64(lit(k)), lit(16L)) + lit(16L)).head().getLong(0)).toMap
+      spark.range(1).select(pmod(xxhash64(lit(k)), lit(2L)) + lit(2L)).head().getLong(0)).toMap
     val k1 = keys.head
     val k2 = keys.find(k => bucketOf(k) != bucketOf(k1)).get
-    CompactingSink.upsertCompact(store, Seq("k"), Seq("off"), initialDepth = 4)(
+    // a 1-byte bound splits the first epoch's bucket=1 into bucket=2 and 3
+    CompactingSink.upsertCompact(store, Seq("k"), Seq("off"), maxBucketBytes = 1)(
       Seq((k1, 1L, "a"), (k2, 1L, "b")).toDF("k", "off", "v"), 0L)
     val k2DirBefore = bucketBytes(Paths.get(s"$store/bucket=${bucketOf(k2)}"))
     assert(k2DirBefore.nonEmpty)
     // second batch touches only k1's bucket
-    CompactingSink.upsertCompact(store, Seq("k"), Seq("off"), initialDepth = 4)(
+    CompactingSink.upsertCompact(store, Seq("k"), Seq("off"))(
       Seq((k1, 2L, "a2")).toDF("k", "off", "v"), 1L)
     val k2DirAfter = bucketBytes(Paths.get(s"$store/bucket=${bucketOf(k2)}"))
     assert(k2DirAfter == k2DirBefore, "untouched bucket was rewritten")
@@ -189,12 +190,12 @@ class StreamingSpec extends SparkTestBase {
       .map(i => (s"key$i", off, "v" * 2000)) // ~2KB payload per row
       .toDF("k", "off", "v")
     val up = CompactingSink.upsertCompact(store, Seq("k"), Seq("off"),
-      initialDepth = 1, maxBucketBytes = 4096) _
+      maxBucketBytes = 4096) _
     up(batch(0 until 30, 1L), 0L)
     val live1 = CompactingSink.liveBuckets(store)
     def depth(n: Long): Int = 63 - java.lang.Long.numberOfLeadingZeros(n)
-    assert(live1.map(depth).max > 1,
-      s"30 x 2KB rows in 2 depth-1 buckets must have split: $live1")
+    assert(live1.map(depth).max > 0,
+      s"30 x 2KB rows in the depth-0 bucket=1 must have split: $live1")
     // prefix-free cover: every residue at max depth is covered exactly once
     val maxD = live1.map(depth).max
     (0L until (1L << maxD)).foreach { r =>
@@ -605,44 +606,6 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("aggregating sink: batch replay is a no-op; fold compacts; crashed fold recovers (T7)") {
-    import spark.implicits._
-    import java.nio.file.{Paths, StandardCopyOption}
-    val store = tmp("t7sink") + "/view"
-    def commit(id: Long, rows: (String, Long)*): Unit =
-      AggregatingSink.appendDelta(store, Seq("k"), Seq("v"))(rows.toDF("k", "v"), id)
-    def view(): Map[String, Long] =
-      AggregatingSink.read(spark, store, Seq("k"), Seq("v"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    commit(0, ("a", 1L), ("b", 2L))
-    commit(1, ("a", 10L))
-    // checkpoint replay of batch 1 (worst case: with different content) —
-    // the committed delta stands, nothing double-counts
-    commit(1, ("a", 999L))
-    assert(view() == Map("a" -> 11L, "b" -> 2L))
-    // fold compacts the delta log to one delta, view unchanged
-    AggregatingSink.fold(spark, store, Seq("k"), Seq("v"))
-    assert(AggregatingSink.deltaIds(store) == Seq(1L))
-    assert(view() == Map("a" -> 11L, "b" -> 2L))
-    // crash window: fold committed (_fold_commit_ present) but cleanup not
-    // run — recover completes it: folded sources dropped, view intact
-    commit(2, ("b", 5L))
-    AggregatingSink.read(spark, store, Seq("k"), Seq("v"))
-      .write.mode("overwrite").parquet(s"$store/_fold_staging_2")
-    Files.move(Paths.get(s"$store/_fold_staging_2"),
-      Paths.get(s"$store/_fold_commit_2"), StandardCopyOption.ATOMIC_MOVE)
-    AggregatingSink.recover(store)
-    assert(AggregatingSink.deltaIds(store) == Seq(2L))
-    assert(view() == Map("a" -> 11L, "b" -> 7L))
-    // uncommitted staging from a crash mid-write is dropped, not applied
-    commit(3, ("a", 100L))
-    AggregatingSink.read(spark, store, Seq("k"), Seq("v"))
-      .write.mode("overwrite").parquet(s"$store/_fold_staging_3")
-    AggregatingSink.recover(store)
-    assert(AggregatingSink.deltaIds(store) == Seq(2L, 3L))
-    assert(view() == Map("a" -> 111L, "b" -> 7L))
-  }
-
   test("transformWithState runs a keyed running total (T4, Spark-4 arbitrary-state API)") {
     // the successor API to mapGroupsWithState: explicit typed state handles
     // (ValueState here), RocksDB-only state backend — the forward path for
@@ -704,42 +667,6 @@ class StreamingSpec extends SparkTestBase {
         s"expected gate to keep 1 and 4 (junk gated, dup dropped): ${rows.keySet}")
       assert(rows(1L) == good1 && rows(4L) == good2)
     } finally q.stop()
-  }
-
-  test("snapshot log: time travel stable under later merges; staging recovery; retention (T6)") {
-    import spark.implicits._
-    val store = tmp("snap") + "/store"
-    def batch(rows: (Long, Long, Long)*) = rows.toSeq.toDF("k", "ord", "v")
-    def contents(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.select($"k", $"v").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    CompactingSink.upsertCompact(store, Seq("k"), Seq("ord"))(
-      batch((1L, 1L, 10L), (2L, 1L, 20L)), 0L)
-    CompactingSink.snapshot(store, 0L)
-    CompactingSink.upsertCompact(store, Seq("k"), Seq("ord"))(batch((1L, 2L, 11L)), 1L)
-    CompactingSink.snapshot(store, 1L)
-    assert(contents(CompactingSink.readSnapshot(spark, store, 0L)) == Map(1L -> 10L, 2L -> 20L))
-    assert(contents(CompactingSink.readSnapshot(spark, store, 1L)) == Map(1L -> 11L, 2L -> 20L))
-    // isolation: a frame pinned to v0 is byte-stable across a later merge
-    // that rewrites key 1's bucket (the snapshot's hardlinks keep the old
-    // files alive after the live dir swap deletes its links)
-    val pinned = CompactingSink.readSnapshot(spark, store, 0L)
-    CompactingSink.upsertCompact(store, Seq("k"), Seq("ord"))(batch((1L, 3L, 12L)), 2L)
-    assert(contents(pinned) == Map(1L -> 10L, 2L -> 20L),
-      "committed snapshot changed under a later merge")
-    assert(contents(spark.read.parquet(store)) == Map(1L -> 12L, 2L -> 20L))
-    // idempotent re-snapshot (checkpoint replay): existing version stands
-    CompactingSink.snapshot(store, 0L)
-    assert(contents(CompactingSink.readSnapshot(spark, store, 0L)) == Map(1L -> 10L, 2L -> 20L))
-    // interrupted staging is dropped by recover; committed versions survive
-    val staging = java.nio.file.Paths.get(store, "_snapshots", "_staging_v9")
-    java.nio.file.Files.createDirectories(staging)
-    CompactingSink.recover(store)
-    assert(!java.nio.file.Files.exists(staging), "staging leftover survived recover")
-    assert(CompactingSink.snapshotVersions(store) == Seq(0L, 1L))
-    // retention keeps the newest N
-    CompactingSink.snapshot(store, 2L)
-    CompactingSink.expireSnapshots(store, keepLast = 2)
-    assert(CompactingSink.snapshotVersions(store) == Seq(1L, 2L))
   }
 
   test("Append-mode session window: emits only after the watermark closes the session (T2)") {
