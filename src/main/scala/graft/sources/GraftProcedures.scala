@@ -231,10 +231,9 @@ object GraftProcedures {
         }
         (!fresh, pct)
     }
-    // the threshold COLUMN must mirror the configurable bound the
-    // triggered flag is computed from, or the row contradicts itself
-    // under a non-default graft.store.statsMaxStaleFraction
-    val stalePct = math.round(GraftStore.statsMaxStaleFraction * 100)
+    // the threshold COLUMN mirrors the bound the triggered flag is
+    // computed from
+    val stalePct = math.round(GraftStore.StatsMaxStaleFraction * 100)
     // retention debt (observed-only — the right keep_last/horizon is a
     // policy choice): retained versions, retained changelog slices, and
     // retired-but-still-referenced `_expired` file hosts (shrink as

@@ -637,7 +637,7 @@ object GraftStats {
   }
 
   // A ZERO histogram selectivity is "no evidence", not a fact: the stats
-  // may be up to statsMaxStaleFraction stale, and rows inserted after
+  // may be up to GraftStore.StatsMaxStaleFraction stale, and rows inserted after
   // ANALYZE can live beyond the analyzed domain (or in a gap) — letting a
   // stale zero collapse the estimate to 1 row would override the
   // always-current zone-map bound and broadcast a huge scan side. Zones

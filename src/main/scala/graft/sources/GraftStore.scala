@@ -187,52 +187,62 @@ object GraftStore {
       staleMs: Long = 60000L)(f: => A): A = {
     if (metaLockHeld.get.contains(dir)) return f
     val lock = Paths.get(dir, "_meta_lock")
-    // ownership token (same discipline as claimCommit): release only
-    // deletes the lock if it still holds OUR token, and a stale lock is
-    // broken by ATOMIC RENAME to a tomb — never delete+create, whose
-    // non-atomic window lets two racing breakers each think they created a
-    // fresh lock (one of them would then delete the NEW holder's lock and
-    // two ALTERs could fold over the same base meta, silently losing DDL).
-    val token = java.util.UUID.randomUUID().toString
-    var attempt = 0
-    while (attempt < 600) {
-      val acquired =
-        try { Files.write(lock, token.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW); true }
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            val age = try System.currentTimeMillis() -
-              Files.getLastModifiedTime(lock).toMillis
-            catch { case _: java.nio.file.NoSuchFileException => Long.MaxValue }
-            if (age > staleMs && age != Long.MaxValue) {
-              // exactly one breaker wins the rename; losers see
-              // NoSuchFileException and just retry the create
-              val tomb = Paths.get(s"$lock.stale-${System.nanoTime()}")
-              try {
-                Files.move(lock, tomb, StandardCopyOption.ATOMIC_MOVE)
-                Files.deleteIfExists(tomb)
-              } catch { case _: java.nio.file.NoSuchFileException => () }
-            }
-            false
-        }
-      if (acquired) {
-        metaLockHeld.set(metaLockHeld.get + dir)
-        try return f
-        finally {
-          metaLockHeld.set(metaLockHeld.get - dir)
-          // token check: after a stale takeover, the ORIGINAL holder's
-          // release must not remove the successor's lock
-          try {
-            if (new String(Files.readAllBytes(lock), "UTF-8") == token)
-              Files.deleteIfExists(lock)
-          } catch { case _: java.io.IOException => () }
-        }
-      }
-      attempt += 1
-      Thread.sleep(10)
+    // a lease (see tryLease): a lost stale takeover can never let two
+    // ALTERs fold over the same base meta and silently lose DDL
+    val token = Iterator.range(0, 600).flatMap { i =>
+      if (i > 0) Thread.sleep(10)
+      tryLease(lock, staleMs)
+    }.nextOption().getOrElse(throw new java.util.ConcurrentModificationException(
+      s"meta lock busy for $dir"))
+    metaLockHeld.set(metaLockHeld.get + dir)
+    try f
+    finally {
+      metaLockHeld.set(metaLockHeld.get - dir)
+      releaseClaim(lock, token)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"meta lock busy for $dir")
+  }
+
+  // ------------------------------------------------------------ file lease
+  //
+  // One token-guarded file lease is both the per-version commit claim
+  // (`_commit-N`, [[claimCommit]]) and the meta lock (`_meta_lock`,
+  // [[withMetaLock]]). It is taken by CREATE_NEW with a fresh token
+  // inside. A stale lease is broken by ATOMIC RENAME to
+  // `<path>.stale-<nanos>` (the tomb name vacuum sweeps), never by
+  // delete+create: two breakers deleting concurrently could each create a
+  // "fresh" lease and both think they won, while the rename has exactly
+  // one winner. Release deletes the file only while it still holds the
+  // releaser's token, so after a stale takeover the original holder can
+  // never remove its successor's lease.
+
+  /** The lease's one staleness test: `p` exists and its holder last
+    * proved liveness (its mtime, kept fresh by [[withClaimHeartbeat]])
+    * more than `staleMs` ago. */
+  private def leaseStale(p: Path, staleMs: Long): Boolean =
+    try System.currentTimeMillis() - Files.getLastModifiedTime(p).toMillis >
+      staleMs
+    catch { case _: java.nio.file.NoSuchFileException => false }
+
+  /** One attempt to take the lease at `p`, breaking it first if stale:
+    * the new token, or None while another holder has it. */
+  private def tryLease(p: Path, staleMs: Long): Option[String] = {
+    val token = java.util.UUID.randomUUID().toString
+    def create(): Boolean =
+      try {
+        Files.write(p, token.getBytes("UTF-8"),
+          java.nio.file.StandardOpenOption.CREATE_NEW)
+        true
+      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    def break(): Boolean = {
+      val tomb = Paths.get(s"$p.stale-${System.nanoTime()}")
+      try Files.move(p, tomb, StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.nio.file.NoSuchFileException => return false }
+      Files.deleteIfExists(tomb)
+      true
+    }
+    if (create() || (leaseStale(p, staleMs) && break() && create()))
+      Some(token)
+    else None
   }
 
   // -------------------------------------------------- slot-owner manifest
@@ -590,9 +600,8 @@ object GraftStore {
       val target = new String(bytes, 0, nl, "UTF-8").trim.toLong
       if (currentVersion(dir) >= target) { Files.deleteIfExists(b); return }
       val claim = Paths.get(dir, f"_commit-$target%010d")
-      val fresh = Files.exists(claim) && (System.currentTimeMillis() -
-        Files.getLastModifiedTime(claim).toMillis) <= defaultStaleClaimMillis
-      if (fresh) return // in-flight replace: leave it alone
+      if (Files.exists(claim) && !leaseStale(claim, defaultStaleClaimMillis))
+        return // in-flight replace: leave it alone
       // under the meta lock so a concurrent ALTER can't be clobbered by
       // the rollback; re-check the backup inside (another reader may have
       // already restored it)
@@ -661,17 +670,6 @@ object GraftStore {
         Paths.get(versionDir(dir, v), "_expired")))
   }
 
-  /** Multi-writer commit coordination: version `next` is CLAIMED by
-    * create-exclusive marker file before any commit work begins, so two
-    * concurrent writers can never both build (and one silently lose) the
-    * same version — the create that loses throws and the loser either
-    * retries on a recomputed version (appends, which commute) or surfaces
-    * a clean conflict error (row-level deltas, whose read snapshot is
-    * stale once another commit lands — serializable behavior). The marker
-    * is released after the pointer flip; a crashed writer's marker goes
-    * stale and is broken by age (`staleClaimMillis`, default 1 h — claims
-    * are held for the duration of the rewrite job, so the threshold errs
-    * long; an operator can delete `_commit-*` after a known crash). */
   /** Default stale-claim threshold: 1 h, overridable via the
     * `graft.store.staleClaimMillis` system property (deployments with
     * fast commits — or crash-injection harnesses — can shorten the
@@ -685,50 +683,30 @@ object GraftStore {
   private[sources] def claimCommit(dir: String, next: Long): (Path, String) =
     claimCommit(dir, next, defaultStaleClaimMillis)
 
+  /** Multi-writer commit coordination: version `next` is CLAIMED by a
+    * lease on its `_commit-N` marker before any commit work begins, so two
+    * concurrent writers can never both build (and one silently lose) the
+    * same version — the loser gets a ConcurrentModificationException and
+    * either retries on a recomputed version (appends, which commute) or
+    * surfaces a clean conflict error (row-level deltas, whose read
+    * snapshot is stale once another commit lands — serializable
+    * behavior). The marker is released after the pointer flip; a crashed
+    * writer's marker goes stale and is broken by age (`staleClaimMillis`,
+    * default 1 h — claims are held for the duration of the rewrite job,
+    * so the threshold errs long; an operator can delete `_commit-*` after
+    * a known crash). */
   private[sources] def claimCommit(dir: String, next: Long,
       staleClaimMillis: Long): (Path, String) = {
     val marker = Paths.get(dir, f"_commit-$next%010d")
-    // ownership token: release only deletes the marker if it still holds
-    // OUR token — after a stale takeover the original writer's release
-    // must NOT remove the new owner's claim (that would re-open the
-    // version to a third writer mid-commit)
-    val token = java.util.UUID.randomUUID().toString
-    try Files.write(marker, token.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        val age = try System.currentTimeMillis() -
-          Files.getLastModifiedTime(marker).toMillis
-        catch { case _: java.nio.file.NoSuchFileException => Long.MaxValue }
-        if (age > staleClaimMillis) {
-          // Break the stale claim by ATOMIC RENAME, not delete+create: two
-          // breakers deleting concurrently could each create "fresh"
-          // markers and both think they won — the rename has exactly one
-          // winner (the loser's move throws), who then re-claims.
-          val tomb = Paths.get(s"$marker.stale-${System.nanoTime()}")
-          try Files.move(marker, tomb, StandardCopyOption.ATOMIC_MOVE)
-          catch {
-            case _: java.nio.file.NoSuchFileException =>
-              throw new java.util.ConcurrentModificationException(
-                s"concurrent commit in flight for version $next of $dir " +
-                  "(stale claim broken by another writer)")
-          }
-          Files.deleteIfExists(tomb)
-          try Files.write(marker, token.getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              throw new java.util.ConcurrentModificationException(
-                s"concurrent commit in flight for version $next of $dir")
-          }
-        } else throw new java.util.ConcurrentModificationException(
-          s"concurrent commit in flight for version $next of $dir " +
-            s"(claim age ${age} ms)")
-    }
+    val token = tryLease(marker, staleClaimMillis).getOrElse(
+      throw new java.util.ConcurrentModificationException(
+        s"concurrent commit in flight for version $next of $dir " +
+          "(claim held by another writer)"))
     (marker, token)
   }
 
-  /** Release a claim ONLY if we still own it (token match). */
+  /** Release a lease (a commit claim or the meta lock) ONLY if it still
+    * holds `token`. */
   private[sources] def releaseClaim(marker: Path, token: String): Unit =
     try {
       if (new String(Files.readAllBytes(marker), "UTF-8") == token)
@@ -764,15 +742,17 @@ object GraftStore {
     * lazily for its whole duration) ride the same schedule so vacuum's age
     * check can't reap in-use staging.
     *
-    * Residual TOCTOU, documented: [[verifyClaim]] → publishVersion →
-    * writePointer is unfenced — a writer stalled past the stale threshold
-    * AFTER its verifyClaim passed but BEFORE its pointer flip could still
-    * clobber a successor's published version. The heartbeat shrinks the
-    * exposure to "stall begins inside the microseconds between verify and
-    * flip AND lasts the full stale threshold"; closing it entirely needs a
-    * fencing rename (flip = atomic move of a token-named pointer), which
-    * local rename-atomic filesystems get for free via the claim marker but
-    * a generic object store would need conditional puts for. */
+    * Residual TOCTOU, documented: [[VersionBuild.flip]] (verifyClaim →
+    * publishVersion → writePointer, the one single-version publish step)
+    * is unfenced — a writer stalled past the stale threshold AFTER its
+    * verifyClaim passed but BEFORE its pointer flip could still clobber a
+    * successor's published version. The heartbeat shrinks the exposure to
+    * "stall begins inside the microseconds between verify and flip AND
+    * lasts the full stale threshold"; closing it entirely needs a fencing
+    * rename (flip = atomic move of a token-named pointer), which local
+    * rename-atomic filesystems get for free via the claim marker but a
+    * generic object store would need conditional puts for; that fix
+    * belongs in `flip` alone. */
   private[sources] def withClaimHeartbeat[A](paths: Seq[Path],
       periodMs: Long = heartbeatPeriodMs)(f: => A): A = {
     val task = heartbeatPool.scheduleAtFixedRate(() => paths.foreach { p =>
@@ -794,6 +774,49 @@ object GraftStore {
     if (!held) throw new java.util.ConcurrentModificationException(
       s"commit claim $marker was broken and taken over during the rewrite; " +
         "aborting before the pointer flip (another writer owns this version now)")
+  }
+
+  /** A claimed build of version `next`: the writer-private build dir
+    * `vN.build-<token>` and the claim that owns it. [[flip]] is the one
+    * single-version publish step — re-verify the claim, rename the build
+    * dir to its final name, move the pointer. */
+  private final class VersionBuild(dir: String, val next: Long,
+      marker: Path, token: String) {
+    val path: String = s"${versionDir(dir, next)}.build-$token"
+    var flipped = false
+    def flip(): Unit = {
+      verifyClaim(marker, token)
+      publishVersion(path, versionDir(dir, next))
+      writePointer(dir, next)
+      flipped = true
+    }
+  }
+
+  /** Commit version `cur + 1` of `dir` through one claimed build: claim
+    * it, heartbeat the claim marker and the build dir, re-check that the
+    * pointer is still at `cur` (a claim can be won after another writer
+    * committed `cur + 1` and released), clear a remnant build dir, then run
+    * `body`, which builds [[VersionBuild.path]] and calls
+    * [[VersionBuild.flip]] itself — so a body can wrap the flip (RTAS's
+    * meta-swap rollback) or act just before it. The build dir is NOT
+    * created here: Spark writes it under the default ErrorIfExists mode.
+    * Returns the new version. */
+  private def publishNext(dir: String, cur: Long, op: String)(
+      body: VersionBuild => Unit): Long = {
+    val (marker, token) = claimCommit(dir, cur + 1)
+    try {
+      val b = new VersionBuild(dir, cur + 1, marker, token)
+      withClaimHeartbeat(Seq(marker, Paths.get(b.path))) {
+        if (currentVersion(dir) != cur)
+          throw new java.util.ConcurrentModificationException(
+            s"table $dir advanced past version $cur during $op; re-run")
+        deleteRecursively(Paths.get(b.path))
+        body(b)
+      }
+      if (!b.flipped) throw new IllegalStateException(
+        s"$op built version ${b.next} of $dir but never published it")
+      b.next
+    } finally releaseClaim(marker, token)
   }
 
   /** Per-version bucket fan-out marker (`<versionDir>/_buckets`). The
@@ -936,30 +959,20 @@ object GraftStore {
     val stagedMeta = readMeta(stagedDir)
     val sv = currentVersion(stagedDir)
     val svDir = versionDir(stagedDir, sv)
-    val cur = currentVersion(dir)
-    val next = cur + 1
-    val (marker, token) = claimCommit(dir, next)
-    try withClaimHeartbeat(Seq(marker,
-        Paths.get(s"${versionDir(dir, next)}.build-$token"))) {
-      if (currentVersion(dir) != cur)
-        throw new java.util.ConcurrentModificationException(
-          s"table $dir advanced past version $cur during REPLACE; re-run")
-      val nextDir = versionDir(dir, next)
-      val buildDir = s"$nextDir.build-$token"
-      deleteRecursively(Paths.get(buildDir))
-      Files.createDirectories(Paths.get(buildDir))
+    publishNext(dir, currentVersion(dir), "REPLACE") { b =>
+      Files.createDirectories(Paths.get(b.path))
       // materialize the staged table's resolved snapshot — the stage dir
       // is dropped right after the swap, so references into it would
       // dangle; the staged data is this statement's own output, so the
       // link pass is O(new files) by construction
-      materializeInto(stagedDir, sv, buildDir)
-      linkDvCarry(svDir, buildDir, Set.empty) // staged DVs (none today) carry
-      sealVersion(buildDir,
-        localSlots(buildDir).map(s => s -> Seq(next)).toMap,
-        ownFileSeq(buildDir, next),
+      materializeInto(stagedDir, sv, b.path)
+      linkDvCarry(svDir, b.path, Set.empty) // staged DVs (none today) carry
+      sealVersion(b.path,
+        localSlots(b.path).map(s => s -> Seq(b.next)).toMap,
+        ownFileSeq(b.path, b.next),
         mergedManifest(stagedDir, sv), // reuse staged footers
         versionBuckets(stagedDir, sv), versionPartSpec(stagedDir, sv))
-      writeBoundaryMarker(buildDir) // snapshot boundary for CDC consumers
+      writeBoundaryMarker(b.path) // snapshot boundary for CDC consumers
       // crash-safe meta swap: stamp the OLD meta + target version into
       // _meta_backup first. If this commit dies between the meta write
       // and the pointer flip (in-process failure handled right here;
@@ -969,14 +982,12 @@ object GraftStore {
       val backup = Paths.get(dir, MetaBackupName)
       val oldMeta = Files.readAllBytes(metaPath(dir))
       val tmpB = Paths.get(dir, MetaBackupName + ".tmp")
-      Files.write(tmpB, s"$next\n".getBytes("UTF-8") ++ oldMeta)
+      Files.write(tmpB, s"${b.next}\n".getBytes("UTF-8") ++ oldMeta)
       Files.move(tmpB, backup, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
       try {
         withMetaLock(dir) { writeMeta(dir, stagedMeta) }
-        verifyClaim(marker, token)
-        publishVersion(buildDir, nextDir)
-        writePointer(dir, next)
+        b.flip()
       } catch {
         case e: Throwable =>
           val tmpR = Paths.get(dir, "_meta.json.rollback")
@@ -987,8 +998,7 @@ object GraftStore {
           throw e
       }
       Files.deleteIfExists(backup)
-      next
-    } finally releaseClaim(marker, token)
+    }
   }
 
   /** Stamp the partition spec a version's OWN dirs were written with —
@@ -1067,26 +1077,14 @@ object GraftStore {
       s"cannot evolve an identity-partitioned table's grain " +
         "(ordinal domains differ); use RTAS")
     if (curSpec == ((newFn, physCol))) return cur
-    val next = cur + 1
-    val (marker, token) = claimCommit(dir, next)
-    try withClaimHeartbeat(Seq(marker)) {
-      if (currentVersion(dir) != cur)
-        throw new java.util.ConcurrentModificationException(
-          s"table $dir advanced past version $cur during " +
-            "set_partition_spec; re-run")
-      val nextDir = versionDir(dir, next)
-      val buildDir = s"$nextDir.build-$token"
-      deleteRecursively(Paths.get(buildDir))
-      Files.createDirectories(Paths.get(buildDir))
+    publishNext(dir, cur, "set_partition_spec") { b =>
+      Files.createDirectories(Paths.get(b.path))
       // pure metadata commit: carry the whole snapshot by reference
-      linkDvCarry(versionDir(dir, cur), buildDir, Set.empty)
-      sealVersion(buildDir, ownersOf(dir, cur), Map.empty, Map.empty,
+      linkDvCarry(versionDir(dir, cur), b.path, Set.empty)
+      sealVersion(b.path, ownersOf(dir, cur), Map.empty, Map.empty,
         versionBuckets(dir, cur), Some((newFn, physCol)))
-      verifyClaim(marker, token)
-      publishVersion(buildDir, nextDir)
-      writePointer(dir, next)
-      next
-    } finally releaseClaim(marker, token)
+      b.flip()
+    }
   }
 
   /** The bucket count version `v` was written with — what writers must
@@ -1528,23 +1526,13 @@ object GraftStore {
   def truncate(dir: String): Unit = {
     recoverChangelog(dir)
     val cur = currentVersion(dir)
-    val next = cur + 1
-    val (marker, token) = claimCommit(dir, next)
-    try {
-      if (currentVersion(dir) != cur)
-        throw new java.util.ConcurrentModificationException(
-          s"table $dir advanced past version $cur during TRUNCATE")
-      val nd = versionDir(dir, next)
-      val bd = s"$nd.build-$token"
-      deleteRecursively(Paths.get(bd))
-      Files.createDirectories(Paths.get(bd))
-      sealVersion(bd, Map.empty, Map.empty, Map.empty,
+    publishNext(dir, cur, "TRUNCATE") { b =>
+      Files.createDirectories(Paths.get(b.path))
+      sealVersion(b.path, Map.empty, Map.empty, Map.empty,
         versionBuckets(dir, cur), versionPartSpec(dir, cur))
-      writeBoundaryMarker(bd) // truncation = snapshot boundary for CDC
-      verifyClaim(marker, token)
-      publishVersion(bd, nd)
-      writePointer(dir, next)
-    } finally releaseClaim(marker, token)
+      writeBoundaryMarker(b.path) // truncation = snapshot boundary for CDC
+      b.flip()
+    }
   }
 
   def dropTable(dir: String): Unit = {
@@ -2349,11 +2337,7 @@ object GraftStore {
         // inert (invisible to every reader; vacuum sweeps them)
         Files.deleteIfExists(marker)
       case None =>
-        val age =
-          try System.currentTimeMillis() -
-            Files.getLastModifiedTime(marker).toMillis
-          catch { case _: java.nio.file.NoSuchFileException => return }
-        if (age > defaultStaleClaimMillis) {
+        if (leaseStale(marker, defaultStaleClaimMillis)) {
           // the coordinator is presumed dead (markers ride its claim
           // heartbeat while alive): abort by WINNING the decision file —
           // if the zombie wakes it loses its own CREATE_NEW and backs out
@@ -2927,13 +2911,7 @@ object GraftStore {
         claimed.foreach { case (marker, token) =>
           try {
             if (currentVersion(dir) == cur) {
-              // heartbeat for the whole rewrite: the claim marker (so a
-              // long commit's claim never reads as stale) and the caller's
-              // staging dirs (so vacuum never reaps in-use .bin files the
-              // decode jobs read lazily until the last leg finishes)
-              // heartbeat also covers the writer-private build dir so a
-              // very long rewrite can't age past vacuum's threshold
-              val buildPath = Paths.get(s"${versionDir(dir, next)}.build-$token")
+              val build = new VersionBuild(dir, next, marker, token)
               // authoritative idempotence check: the claim serializes
               // writers per version, so a racing retry of the same
               // (appId, txnVersion) that lost the earlier claim sees the
@@ -2941,10 +2919,13 @@ object GraftStore {
               if (txn.exists { case (a, v) =>
                     lastTxnVersion(dir, a).exists(_ >= v) }) {
                 committed = cur
-              } else committed = withClaimHeartbeat(marker +: buildPath +: heartbeatPaths) {
-                commitVersion(spark, dir, meta, ch, touched,
-                  cur, allInserts, overwrite, bucketedFor, marker, token, txn,
-                  smallKeyed, smallBatchHint)
+              } else committed = withClaimHeartbeat(marker +:
+                  Paths.get(build.path) +: heartbeatPaths) {
+                // the caller's staging dirs ride the heartbeat so vacuum
+                // never reaps .bin files the decode jobs read lazily until
+                // the last leg finishes
+                commitVersion(spark, dir, meta, ch, touched, allInserts,
+                  overwrite, bucketedFor, build, txn, smallKeyed, smallBatchHint)
               }
             } else {
               // claim won but the pointer moved first (stale pre-claim
@@ -2991,21 +2972,21 @@ object GraftStore {
       catch { case _: java.util.ConcurrentModificationException => () }
   }
 
-  /** One claimed commit attempt: build version `cur + 1` from the bucketed
-    * change batch and flip the pointer. Caller holds the commit claim (and
-    * its heartbeat); ownership is re-verified immediately before the flip. */
+  /** One claimed commit attempt: build `build.next` from the bucketed
+    * change batch and flip it. Caller holds the commit claim (and its
+    * heartbeat); [[VersionBuild.flip]] re-verifies ownership. */
   private def commitVersion(spark: SparkSession, dir: String,
-      meta: GraftTableMeta, ch: DataFrame, touched: Set[Int], cur: Long,
+      meta: GraftTableMeta, ch: DataFrame, touched: Set[Int],
       allInserts: Boolean, overwrite: Boolean, buckets: Int,
-      marker: Path, token: String,
+      build: VersionBuild,
       txn: Option[(String, Long)] = None,
       smallKeyed: Boolean = false,
       smallBatchHint: Boolean = false): Long = {
-    val next = cur + 1
-    val nextDir = versionDir(dir, next)
+    val next = build.next
+    val cur = next - 1
     // writer-private build dir: the final vN name appears only after the
     // last ownership re-check (see publishVersion)
-    val buildDir = s"$nextDir.build-$token"
+    val buildDir = build.path
     deleteRecursively(Paths.get(buildDir))
     val cols = meta.schema.fieldNames.toSeq
     locally {
@@ -3292,11 +3273,9 @@ object GraftStore {
       txn.foreach { case (a, v) => writeTxnMarker(buildDir, a, v) }
       // a commit that outlived even the heartbeat-refreshed stale window
       // (or whose heartbeat was starved) may have lost its claim to a
-      // takeover — re-verify ownership at the last instant so we never
-      // flip a pointer onto a version another writer now owns
-      verifyClaim(marker, token)
-      publishVersion(buildDir, nextDir)
-      writePointer(dir, next)
+      // takeover — flip re-verifies ownership at the last instant so we
+      // never flip a pointer onto a version another writer now owns
+      build.flip()
       // Publish the changelog: visible name only after the commit point.
       // If staging is already gone, a reader won the publish — done.
       if (!overwrite) {
@@ -3374,16 +3353,7 @@ object GraftStore {
     // table in mor-scan mode (probe + withheld stats) forever — the
     // clearing commit below must still run, with nothing to rewrite
     if (fragmented.isEmpty && dvB.isEmpty) return cur
-    val next = cur + 1
-    val (marker, token) = claimCommit(dir, next)
-    try withClaimHeartbeat(Seq(marker,
-        Paths.get(s"${versionDir(dir, next)}.build-$token"))) {
-      if (currentVersion(dir) != cur)
-        throw new java.util.ConcurrentModificationException(
-          s"table $dir advanced past version $cur during OPTIMIZE; re-run")
-      val nextDir = versionDir(dir, next)
-      val buildDir = s"$nextDir.build-$token"
-      deleteRecursively(Paths.get(buildDir))
+    publishNext(dir, cur, "OPTIMIZE") { b =>
       // repartition BY the layout columns: each slot's rows land wholly in
       // one task, so partitionBy writes exactly one compact file per slot.
       // Task count caps at 4× the cores — a full compaction of a
@@ -3412,29 +3382,26 @@ object GraftStore {
         (if (targetFileRows > 0)
           clustered.write.option("maxRecordsPerFile", targetFileRows)
         else clustered.write).options(bloomOptions(meta))
-      writer.partitionBy(layoutCols(meta): _*).parquet(buildDir)
+      writer.partitionBy(layoutCols(meta): _*).parquet(b.path)
       // carry the un-fragmented slots by manifest reference; rewritten
       // slots own themselves (a slot whose live rows all fell to deletes
       // simply leaves the map)
-      val local = localSlots(buildDir).toSet
+      val local = localSlots(b.path).toSet
       val prevOwners = ownersOf(dir, cur)
       val owners = (prevOwners.keySet ++ local).flatMap { slot =>
         if (fragmented.contains(slot))
-          if (local.contains(slot)) Some(slot -> Seq(next)) else None
+          if (local.contains(slot)) Some(slot -> Seq(b.next)) else None
         else prevOwners.get(slot).map(slot -> _)
       }.toMap
       // every slot of every DV-carrying bucket is in `fragmented`, so no
       // delete slice survives compaction; rewrites stamp `next` (≥ any
       // dseq — stale entries could never match even if one leaked);
       // carried files keep their seqs in their owners' manifests
-      sealVersion(buildDir, owners, ownFileSeq(buildDir, next),
-        GraftStats.footerManifest(buildDir), versionBuckets(dir, cur),
+      sealVersion(b.path, owners, ownFileSeq(b.path, b.next),
+        GraftStats.footerManifest(b.path), versionBuckets(dir, cur),
         versionPartSpec(dir, cur))
-      verifyClaim(marker, token)
-      publishVersion(buildDir, nextDir)
-      writePointer(dir, next)
-      next
-    } finally releaseClaim(marker, token)
+      b.flip()
+    }
   }
 
   /** Change the table's hash-bucket fan-out — `CALL rebucket(table, n)`:
@@ -3468,16 +3435,7 @@ object GraftStore {
         meta.buckets == newBuckets &&
         snapshotPartSpecs(dir, cur, meta).size <= 1)
       return cur
-    val next = cur + 1
-    val (marker, token) = claimCommit(dir, next)
-    try withClaimHeartbeat(Seq(marker,
-        Paths.get(s"${versionDir(dir, next)}.build-$token"))) {
-      if (currentVersion(dir) != cur)
-        throw new java.util.ConcurrentModificationException(
-          s"table $dir advanced past version $cur during REBUCKET; re-run")
-      val nextDir = versionDir(dir, next)
-      val buildDir = s"$nextDir.build-$token"
-      deleteRecursively(Paths.get(buildDir))
+    publishNext(dir, cur, "REBUCKET") { b =>
       val physKeys = bucketColsOf(meta).map(k => physicalName(meta.schema(k)))
       withPartCol(readVersionPhysical(spark, dir, meta, cur)
           .drop(BucketCol)
@@ -3485,21 +3443,18 @@ object GraftStore {
           versionPartSpec(dir, cur))
         .repartition(newBuckets, col(BucketCol))
         .write.options(bloomOptions(meta))
-            .partitionBy(layoutCols(meta): _*).parquet(buildDir)
+            .partitionBy(layoutCols(meta): _*).parquet(b.path)
       // every file rewritten (DVs applied)
-      sealVersion(buildDir,
-        localSlots(buildDir).map(s => s -> Seq(next)).toMap,
-        ownFileSeq(buildDir, next), GraftStats.footerManifest(buildDir),
+      sealVersion(b.path,
+        localSlots(b.path).map(s => s -> Seq(b.next)).toMap,
+        ownFileSeq(b.path, b.next), GraftStats.footerManifest(b.path),
         newBuckets, versionPartSpec(dir, cur))
       withMetaLock(dir) {
         val m = readMeta(dir) // re-read: fold over concurrent ALTERs
         writeMeta(dir, m.copy(buckets = newBuckets))
       }
-      verifyClaim(marker, token)
-      publishVersion(buildDir, nextDir)
-      writePointer(dir, next)
-      next
-    } finally releaseClaim(marker, token)
+      b.flip()
+    }
   }
 
   /** Roll the table back to a retained earlier version — `CALL
@@ -3522,18 +3477,9 @@ object GraftStore {
       s"table $dir has no retained version $toVersion " +
         s"(have ${listVersions(dir)})")
     if (toVersion == cur) return cur
-    val next = cur + 1
-    val (marker, token) = claimCommit(dir, next)
-    try withClaimHeartbeat(Seq(marker,
-        Paths.get(s"${versionDir(dir, next)}.build-$token"))) {
-      if (currentVersion(dir) != cur)
-        throw new java.util.ConcurrentModificationException(
-          s"table $dir advanced past version $cur during RESTORE; re-run")
+    publishNext(dir, cur, "RESTORE") { b =>
       val srcV = versionDir(dir, toVersion)
-      val nextDir = versionDir(dir, next)
-      val buildDir = s"$nextDir.build-$token"
-      deleteRecursively(Paths.get(buildDir))
-      Files.createDirectories(Paths.get(buildDir))
+      Files.createDirectories(Paths.get(b.path))
       // pure metadata commit: the new version's bucket map is the
       // target's resolved owner map verbatim — O(buckets), no per-file
       // pass at any table size
@@ -3542,11 +3488,10 @@ object GraftStore {
       // verbatim (physical cap-bounded links) — a merge-on-read version
       // restores to exactly the rows it read as; file seqs stay in the
       // owner versions' manifests
-      linkDvCarry(srcV, buildDir, Set.empty)
-      sealVersion(buildDir, ownerMap, Map.empty, Map.empty,
+      linkDvCarry(srcV, b.path, Set.empty)
+      sealVersion(b.path, ownerMap, Map.empty, Map.empty,
         versionBuckets(dir, toVersion), versionPartSpec(dir, toVersion))
-      writeBoundaryMarker(buildDir) // restore = snapshot boundary for CDC
-      verifyClaim(marker, token)
+      writeBoundaryMarker(b.path) // restore = snapshot boundary for CDC
       // Re-check against a concurrent expireVersions (a maintenance op that
       // runs without a commit claim): since restore is a pure metadata
       // commit, nothing before this point touched the owner slot dirs the
@@ -3566,10 +3511,8 @@ object GraftStore {
         throw new java.util.ConcurrentModificationException(
           s"RESTORE of $dir to version $toVersion lost referenced slot dirs " +
             s"to a concurrent expire (${gone.take(3).mkString(", ")}…); aborting")
-      publishVersion(buildDir, nextDir)
-      writePointer(dir, next)
-      next
-    } finally releaseClaim(marker, token)
+      b.flip()
+    }
   }
 
   /** ANALYZE — `CALL analyze(table)`: ONE aggregate job over the current
@@ -3695,17 +3638,15 @@ object GraftStore {
 
   /** Staleness bound for served ANALYZE stats: column stats survive DML
     * after the analyzed version only while the CURRENT snapshot's row
-    * count stays within this fraction of the analyzed one (default 0.5 —
-    * a table that grew or shrank past ±50% serves estimates worse than
-    * none, so the scan withholds them until the next `CALL analyze`). */
-  private[sources] def statsMaxStaleFraction: Double =
-    sys.props.get("graft.store.statsMaxStaleFraction").map(_.toDouble)
-      .getOrElse(0.5)
+    * count stays within this fraction of the analyzed one — a table that
+    * grew or shrank past ±50% serves estimates worse than none, so the
+    * scan withholds them until the next `CALL analyze`. */
+  private[sources] val StatsMaxStaleFraction = 0.5
 
   /** ANALYZE column stats for scanning (`dir`, `version`) — EMPTY when the
     * persisted stats are stale. Fresh means: analyzed at this exact
     * version, or the scanned snapshot's manifest row count drifted less
-    * than [[statsMaxStaleFraction]] from the analyzed row count. Row/byte
+    * than [[StatsMaxStaleFraction]] from the analyzed row count. Row/byte
     * estimates are per-scan from zone maps and never go through here —
     * only column NDV/min-max age. */
   def freshTableColStats(dir: String, version: Long)
@@ -3716,7 +3657,7 @@ object GraftStore {
         snapshotRowCount(dir, version) match {
           case Some(cur)
               if math.abs(cur - arows).toDouble <=
-                statsMaxStaleFraction * math.max(arows, 1L) => m
+                StatsMaxStaleFraction * math.max(arows, 1L) => m
           case _ => Map.empty
         }
       case _ => Map.empty
@@ -3797,17 +3738,8 @@ object GraftStore {
       !slotPart(slot).exists(lt)
     }
     if (keepMap.size == owners.size) return cur
-    val next = cur + 1
-    val (marker, token) = claimCommit(dir, next)
-    try withClaimHeartbeat(Seq(marker,
-        Paths.get(s"${versionDir(dir, next)}.build-$token"))) {
-      if (currentVersion(dir) != cur)
-        throw new java.util.ConcurrentModificationException(
-          s"table $dir advanced past version $cur during EXPIRE PARTITIONS")
-      val nextDir = versionDir(dir, next)
-      val buildDir = s"$nextDir.build-$token"
-      deleteRecursively(Paths.get(buildDir))
-      Files.createDirectories(Paths.get(buildDir))
+    publishNext(dir, cur, "EXPIRE PARTITIONS") { b =>
+      Files.createDirectories(Paths.get(b.path))
       // a merge-on-read table's live delete slices MUST carry across the
       // retention commit: slices are keyed (bucket, key), deliberately NOT
       // partition-scoped (an update that moves a row between partitions
@@ -3815,15 +3747,12 @@ object GraftStore {
       // the read mor exists to avoid), so dropping partitions never makes
       // a slice obsolete and dropping the slices would resurrect deleted
       // rows in every KEPT partition. Cap-bounded links, O(changed rows).
-      linkDvCarry(versionDir(dir, cur), buildDir, Set.empty)
-      sealVersion(buildDir, keepMap, Map.empty, Map.empty,
+      linkDvCarry(versionDir(dir, cur), b.path, Set.empty)
+      sealVersion(b.path, keepMap, Map.empty, Map.empty,
         versionBuckets(dir, cur), versionPartSpec(dir, cur))
-      writeBoundaryMarker(buildDir) // rows vanish with no changelog slice
-      verifyClaim(marker, token)
-      publishVersion(buildDir, nextDir)
-      writePointer(dir, next)
-      next
-    } finally releaseClaim(marker, token)
+      writeBoundaryMarker(b.path) // rows vanish with no changelog slice
+      b.flip()
+    }
   }
 
   /** Drop changelog slices below `keepFromVersion` — changelog retention.
@@ -3967,9 +3896,7 @@ object GraftStore {
           val v = p.getFileName.toString.drop(1).toLong
           val claim = Paths.get(dir, f"_commit-$v%010d")
           val claimFresh = Files.exists(claim) &&
-            (now - (try Files.getLastModifiedTime(claim).toMillis
-              catch { case _: java.nio.file.NoSuchFileException => 0L })) <=
-              olderThanMillis
+            !leaseStale(claim, olderThanMillis)
           val age = try now - Files.getLastModifiedTime(p).toMillis
           catch { case _: java.nio.file.NoSuchFileException => -1L }
           if (!claimFresh && age > olderThanMillis) {

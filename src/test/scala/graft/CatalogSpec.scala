@@ -633,24 +633,61 @@ class CatalogSpec extends SparkTestBase {
     assert(perV === (1L to 8L).map(_ -> 10L).toMap)
   }
 
-  test("a row-level delta loses cleanly to a concurrent commit claim") {
-    val t = mkTable("t_conflict")
-    val dir = s"$warehouse/t_conflict"
-    spark.sql(s"INSERT INTO $cat.$t VALUES (1, 'a', 10)")
-    // another writer holds the claim for the next version
-    val next = GraftStore.currentVersion(dir) + 1
-    val marker = java.nio.file.Paths.get(dir, f"_commit-$next%010d")
-    Files.write(marker, Array.emptyByteArray)
-    val e = intercept[Exception] {
-      spark.sql(s"UPDATE $cat.$t SET amount = 99 WHERE k = 1")
+  test("every single-version publish loses cleanly to a concurrent commit claim") {
+    warehouse
+    val day2 = java.time.LocalDate.parse("2026-01-02").toEpochDay
+    // one statement per single-version publish path, each against a fresh
+    // days-partitioned table at v2 so every one has a real version to build
+    val ops: Seq[(String, String => String)] = Seq(
+      "update" -> (t => s"UPDATE $cat.$t SET amount = 99 WHERE k = 1"),
+      "truncate" -> (t => s"TRUNCATE TABLE $cat.$t"),
+      "set_partition_spec" -> (t => s"CALL $cat.set_partition_spec(" +
+        s"table => '$t', transform => 'hours(ts)')"),
+      "optimize" -> (t =>
+        s"CALL $cat.optimize(table => '$t', max_files_per_bucket => 0)"),
+      "rebucket" -> (t => s"CALL $cat.rebucket(table => '$t', buckets => 4)"),
+      "restore" -> (t => s"CALL $cat.restore(table => '$t', version => 1)"),
+      "expire_partitions" -> (t =>
+        s"CALL $cat.expire_partitions(table => '$t', below => '$day2')"),
+      "rtas" -> (t => s"REPLACE TABLE $cat.$t USING graft " +
+        "TBLPROPERTIES ('merge_key'='k', 'buckets'='2') " +
+        "AS SELECT id AS k, id * 2 AS amount FROM range(0, 3)"))
+    ops.foreach { case (op, stmt) =>
+      val t = s"t_claim_$op"
+      val dir = s"$warehouse/$t"
+      spark.sql(s"DROP TABLE IF EXISTS $cat.$t")
+      spark.sql(s"""CREATE TABLE $cat.$t
+        (k BIGINT NOT NULL, ts TIMESTAMP, amount BIGINT) USING graft
+        PARTITIONED BY (days(ts))
+        TBLPROPERTIES ('merge_key'='k', 'buckets'='2')""")
+      spark.sql(s"""INSERT INTO $cat.$t VALUES
+        (1, TIMESTAMP'2026-01-01 06:00:00', 10),
+        (2, TIMESTAMP'2026-01-02 06:00:00', 20)""")
+      spark.sql(s"INSERT INTO $cat.$t VALUES " +
+        "(3, TIMESTAMP'2026-01-03 06:00:00', 30)")
+      val cur = GraftStore.currentVersion(dir)
+      def entries(p: String => Boolean): Seq[String] =
+        new java.io.File(dir).list().toSeq.filter(p)
+      // another writer holds the claim for the next version
+      val marker = java.nio.file.Paths.get(dir, f"_commit-${cur + 1}%010d")
+      Files.write(marker, "foreign-writer".getBytes("UTF-8"))
+      val e = intercept[Exception](spark.sql(stmt(t)))
+      assert(causeChain(e).exists(
+        _.isInstanceOf[java.util.ConcurrentModificationException]),
+        s"$op: expected a clean conflict error, got $e")
+      assert(new String(Files.readAllBytes(marker), "UTF-8") === "foreign-writer",
+        s"$op must leave the foreign claim untouched")
+      assert(GraftStore.currentVersion(dir) === cur, s"$op moved the pointer")
+      assert(entries(_.startsWith(f"v${cur + 1}%010d.build-")).isEmpty,
+        s"$op left a build dir behind")
+      // the statement succeeds once the claim clears, and leaves no claim
+      // marker or build dir of its own
+      Files.delete(marker)
+      spark.sql(stmt(t))
+      assert(GraftStore.currentVersion(dir) === cur + 1, s"$op did not publish")
+      assert(entries(n => n.startsWith("_commit-") || n.contains(".build-"))
+        .isEmpty, s"$op left protocol debris: ${entries(_ => true)}")
     }
-    assert(causeChain(e).exists(_.isInstanceOf[java.util.ConcurrentModificationException]),
-      s"expected a clean conflict error, got $e")
-    // the table is untouched and the statement succeeds once the claim clears
-    assert(rows(t) === Seq((1L, "a", 10L)))
-    Files.delete(marker)
-    spark.sql(s"UPDATE $cat.$t SET amount = 99 WHERE k = 1")
-    assert(rows(t) === Seq((1L, "a", 99L)))
   }
 
   test("changelog publication survives a concurrent reader's recovery") {
