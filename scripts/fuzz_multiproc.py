@@ -9,6 +9,10 @@ table directory — interleaved appends, keyed upserts, optimize and
 rebucket — then runs `verify`, which checks: contiguous versions, no
 orphan claims, no duplicate keys, live contents == the union of what
 every writer recorded as committed, and changelog replay from v0 == live.
+Each writer also reports how its optimize / expire_partitions / rebucket
+calls ended (committed, conflicted, no-op); the script prints the totals
+and says so when no such call reached the commit claim, since a PASS then
+shows nothing about maintenance contention.
 
 Usage: python3 scripts/fuzz_multiproc.py [nWriters] [nOps] [seed] [--crash] [--mor] [--part] [--tags] [--branches] [--group] [--txn]
 
@@ -61,7 +65,7 @@ sweep, changelog replay == live — the torn-commit detector).
 
 Requires `sbt -batch compile` to have populated target/scala-2.13/classes.
 """
-import glob, os, random, signal, subprocess, sys, tempfile, time
+import glob, os, random, re, signal, subprocess, sys, tempfile, time
 
 args = [a for a in sys.argv[1:]
         if a not in ("--crash", "--mor", "--part", "--tags", "--branches",
@@ -204,17 +208,30 @@ if crash:
 
 fail = False
 outs = []
+# maintenance outcomes summed over the writers that finished: op ->
+# [committed, conflicted, no-op] (a SIGKILLed writer prints no counts)
+maintenance = {}
 for w, p, out in procs:
     so, se = p.communicate(timeout=900)
     if w in killed:
         continue  # killed writers: no record used, no rc expectations
     line = next((l for l in so.splitlines() if "[multiwriter]" in l), "?")
     print(f"writer {w}: rc={p.returncode} {line}")
+    for op, *counts in re.findall(
+            r"(\w+) (\d+) committed (\d+) conflicted (\d+) no-op", line):
+        tally = maintenance.setdefault(op, [0, 0, 0])
+        for i, c in enumerate(counts):
+            tally[i] += int(c)
     if p.returncode != 0:
         fail = True
         print(se[-3000:])
     else:
         outs.append(out)
+for op, (c, x, n) in maintenance.items():
+    print(f"maintenance {op}: {c} committed, {x} conflicted, {n} no-op")
+if not any(c + x for c, x, _ in maintenance.values()):
+    print("maintenance: no optimize, expire_partitions or rebucket call "
+          "reached the commit claim in the finished writers")
 
 for j, p in branch_procs:
     so, se = p.communicate(timeout=900)

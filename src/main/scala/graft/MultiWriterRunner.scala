@@ -685,6 +685,21 @@ object MultiWriterRunner {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
+    // per maintenance op: calls that committed a version, lost the claim
+    // race (ConcurrentModificationException, skipped), or found nothing to
+    // do. A call counts as committed when it returns a version past the
+    // pointer read just before it, so a no-op that races another writer's
+    // commit into that window counts as committed too.
+    val maintenance = scala.collection.mutable.LinkedHashMap(
+      "optimize" -> Array(0, 0, 0), "expire_partitions" -> Array(0, 0, 0),
+      "rebucket" -> Array(0, 0, 0))
+    def maintain(op: String)(call: => Long): Unit = {
+      val before = GraftStore.currentVersion(dir)
+      val outcome =
+        try { if (call > before) 0 else 2 }
+        catch { case _: java.util.ConcurrentModificationException => 1 }
+      maintenance(op)(outcome) += 1
+    }
     (0 until nOps).foreach { i =>
       rng.nextInt(10) match {
         case r if r < 5 => // append a small batch of fresh keys
@@ -714,21 +729,24 @@ object MultiWriterRunner {
             flushRecord()
           }
         case 8 => // compaction: layout-only, may lose a cross-process race
-          try GraftStore.optimize(spark, dir, maxFilesPerBucket = 2)
-          catch { case _: java.util.ConcurrentModificationException => () }
+          maintain("optimize")(
+            GraftStore.optimize(spark, dir, maxFilesPerBucket = 2))
         case _ if part && rng.nextBoolean() =>
           // partition retention racing live writers: a claimed boundary
           // commit that drops the sacrificial day's slots (content-neutral
           // for every recorded key, and a claim contender by construction)
-          try GraftStore.expirePartitions(dir, ExpireBound)
-          catch { case _: java.util.ConcurrentModificationException => () }
+          maintain("expire_partitions")(
+            GraftStore.expirePartitions(dir, ExpireBound))
         case _ => // fan-out change: the claim-heaviest maintenance op
-          try GraftStore.rebucket(spark, dir, if (rng.nextBoolean()) 8 else 4)
-          catch { case _: java.util.ConcurrentModificationException => () }
+          maintain("rebucket")(
+            GraftStore.rebucket(spark, dir, if (rng.nextBoolean()) 8 else 4))
       }
     }
     flushRecord()
-    println(s"[multiwriter] writer $writerId committed ${expected.size} keys")
+    println(s"[multiwriter] writer $writerId committed ${expected.size} keys" +
+      maintenance.map { case (op, Array(c, x, n)) =>
+        s" | $op $c committed $x conflicted $n no-op"
+      }.mkString)
     spark.stop()
   }
 

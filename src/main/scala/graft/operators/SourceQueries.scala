@@ -77,8 +77,7 @@ object SourceQueries {
     }
     leaves(df.queryExecution.executedPlan).collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-          if b.toString.contains("GraftRenaming") ||
-            b.toString.contains("GraftMor") =>
+          if b.toString.contains("GraftScan") =>
         b.inputRDDs().head.partitions.map {
           case p: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
             p.inputPartitions.map {

@@ -538,7 +538,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     *    resurrect under it.
     *  - RENAME COLUMN: logical name changes in meta; the field keeps its
     *    original PHYSICAL name (recorded under [[GraftStore.PhysicalKey]]),
-    *    and every scan maps logical↔physical (see GraftRenamingScanBuilder).
+    *    and every scan maps logical↔physical (see GraftScanBuilder).
     *    Renaming a merge-key column updates the key list. Time travel
     *    reads any version under the CURRENT logical names.
     *  - DROP COLUMN: the field leaves the schema; its physical name is
@@ -1443,7 +1443,7 @@ final class GraftMvInfoTable(tableName: String, g: GraftCatalog,
 /** A table's changelog as a read-only DSv2 table: every committed change
   * row (full image + `change_op` I/U/D) partitioned by `change_version`,
   * whose batch scan plans only the slices its pushed version predicates
-  * admit ([[org.apache.spark.sql.GraftChangesScanBuilder]]) and whose
+  * admit ([[org.apache.spark.sql.GraftSnapshotScan.changesRange]]) and whose
   * stream is [[GraftChangesMicroBatchStream]]. This is the CDC *producer*
   * half of the S9/S11 story: downstream consumers read a version range
   * and fold it with [[GraftStore.replayChanges]] instead of diffing
@@ -1464,33 +1464,20 @@ final class GraftChangesTable(tableName: String, dir: String)
     // `readStream.table` on this table streams the changelog with
     // VERSION-ALIGNED micro-batches (GraftChangesMicroBatchStream);
     // maxVersionsPerTrigger / maxRowsPerTrigger bound each batch
-    new org.apache.spark.sql.GraftStreamableScanBuilder(batchScanBuilder,
-      () => new GraftChangesMicroBatchStream(dir, meta,
-        GraftStreamLimits.parse(options, "maxVersionsPerTrigger"),
-        GraftStreamLimits.parse(options, "maxRowsPerTrigger")))
-  }
-
-  private def batchScanBuilder: ScanBuilder = {
-    val delegate = new org.apache.spark.sql.GraftChangesScanBuilder(
-      SparkSession.active, dir, meta)
-    if (!GraftStore.hasRenames(meta.schema)) delegate
-    else {
+    val spark = SparkSession.active
+    new org.apache.spark.sql.GraftScanBuilder(
+      filters => {
+        val (lo, hi) = org.apache.spark.sql.GraftSnapshotScan.changesRange(filters)
+        org.apache.spark.sql.GraftSnapshotScan.changesScanBuilder(spark, dir,
+          meta, lo, hi)
+      },
       // flat data columns rename; the before-image struct's INNER fields
       // rename too (ordinal-safe — only names differ)
-      val l2p = GraftStore.logToPhys(meta.schema)
-      val p2l = l2p.map(_.swap)
-      def mapChanges(m: Map[String, String])(s: StructType): StructType =
-        StructType(s.fields.map {
-          case f if f.name == GraftStore.ChangeBeforeCol &&
-              f.dataType.isInstanceOf[StructType] =>
-            val inner = f.dataType.asInstanceOf[StructType]
-            f.copy(dataType = StructType(inner.fields.map(g =>
-              g.copy(name = m.getOrElse(g.name, g.name))).toSeq))
-          case f => f.copy(name = m.getOrElse(f.name, f.name))
-        }.toSeq)
-      new org.apache.spark.sql.GraftRenamingScanBuilder(delegate,
-        l2p, mapChanges(l2p), mapChanges(p2l))
-    }
+      org.apache.spark.sql.GraftNameMap(GraftStore.logToPhys(meta.schema),
+        Set(GraftStore.ChangeBeforeCol)),
+      stream = Some(() => new GraftChangesMicroBatchStream(dir, meta,
+        GraftStreamLimits.parse(options, "maxVersionsPerTrigger"),
+        GraftStreamLimits.parse(options, "maxRowsPerTrigger"))))
   }
 }
 
@@ -1563,12 +1550,12 @@ final class GraftTable(tableName: String, dir: String, pinnedVersion: Option[Lon
         : org.apache.spark.sql.connector.catalog.constraints.Constraint
     }.toArray
 
-  /** Delegate scans to Spark's parquet DSv2 table over the resolved
-    * version directory: pruning/pushdown/vectorization are the stock
-    * parquet ones. The bucket partition column is appended to the parquet
-    * table's schema (its directories are Hive-style `gbucket=k`) but never
-    * appears in this table's logical schema, so no query can request it
-    * and column pruning drops it from every read. */
+  /** The scan of the pinned (or current) version: manifest-planned
+    * (see [[org.apache.spark.sql.GraftSnapshotScan]]) through
+    * [[GraftTable.scanBuilder]], with SPJ grouping when the session opts
+    * in and the append stream for `readStream.table`. The bucket and
+    * partition columns never appear in this table's logical schema, so
+    * no query can request them and column pruning drops them. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // a decided-but-incomplete table-group publish (S44) rolls forward
     // HERE, before the version resolves — a reader can never plan a
@@ -1577,40 +1564,22 @@ final class GraftTable(tableName: String, dir: String, pinnedVersion: Option[Lon
       GraftStore.recoverGroupCommit(dir)
       GraftStore.currentVersion(dir)
     }
-    // the fan-out is a property of the scanned VERSION's layout (the
-    // per-version `_buckets` marker — CALL rebucket changes it across
-    // versions), so pruning and SPJ derive from it, never from meta alone
-    val vBuckets = GraftStore.versionBuckets(dir, version)
     // opt-in storage-partitioned-join mode: report bucket partitioning so
     // same-keyed graft⋈graft joins drop both Exchanges (one partition per
     // bucket — the right trade when a co-located join dominates the scan)
     val spj = SparkSession.active.conf
       .getOption("spark.graft.store.spj").exists(_.toBoolean)
-    val wrap: Option[org.apache.spark.sql.connector.read.Scan =>
-        org.apache.spark.sql.connector.read.Scan] =
-      // keyless tables bucket by whole-row hash: there is no key to
-      // group partitions by, and a zero-column bucket transform is at
-      // best meaningless to report (at worst a reference-resolution
-      // failure) — SPJ stays off for them
-      if (!spj || meta.keyCols.isEmpty) None
-      else Some(scan => new org.apache.spark.sql.GraftKeyGroupedScan(scan,
-        Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(
-          vBuckets, meta.keyCols: _*))))
-    val batch =
-      GraftTable.parquetScanBuilder(tableName, dir, meta, version, options, wrap)
-    // `readStream.table` on the TABLE ITSELF: snapshot-then-tail append
-    // stream ([[GraftTableAppendStream]]); batch queries flow through
-    // `batch` untouched (the streamable wrapper forwards pruning,
-    // pushdown, SPJ partitioning and runtime filtering)
-    new org.apache.spark.sql.GraftStreamableScanBuilder(batch,
-      () => new GraftTableAppendStream(dir, meta,
+    GraftTable.scanBuilder(dir, meta, version, options, spj,
+      // `readStream.table` on the TABLE ITSELF: snapshot-then-tail append
+      // stream ([[GraftTableAppendStream]])
+      Some(() => new GraftTableAppendStream(dir, meta,
         ignoreDeletes = options.getBoolean("ignoreDeletes", false),
         ignoreChanges = options.getBoolean("ignoreChanges", false),
         skipChangeCommits = options.getBoolean("skipChangeCommits", false),
         maxVersionsPerTrigger =
           GraftStreamLimits.parse(options, "maxVersionsPerTrigger"),
         maxRowsPerTrigger =
-          GraftStreamLimits.parse(options, "maxRowsPerTrigger")))
+          GraftStreamLimits.parse(options, "maxRowsPerTrigger"))))
   }
 
   /** INSERT INTO / INSERT OVERWRITE / CTAS append path: a V1 fallback write
@@ -1745,73 +1714,67 @@ final class GraftTable(tableName: String, dir: String, pinnedVersion: Option[Lon
 }
 
 object GraftTable {
-  /** Build the delegated parquet scan for one version of a store table —
-    * shared by table scans and the row-level operation's target scan. The
-    * parquet table is built over PHYSICAL names (what the files store);
-    * when any column has been renamed, a GraftRenamingScanBuilder maps
-    * pruning/pushdown logical→physical and the read schema back — tables
-    * that never renamed take the delegate untouched (identical plan to
-    * pre-evolution builds, aggregate pushdown included). */
-  private[sources] def parquetScanBuilder(tableName: String, dir: String,
-      meta: GraftTableMeta, version: Long,
-      options: CaseInsensitiveStringMap,
-      wrapScan: Option[org.apache.spark.sql.connector.read.Scan =>
-        org.apache.spark.sql.connector.read.Scan] = None): ScanBuilder = {
+  /** The scan of one version of a store table — shared by table scans
+    * and the row-level operation's target scan: the manifest-resolved
+    * snapshot over PHYSICAL names, mapped to the table's logical names,
+    * with merge-key → bucket and partition pruning, zone maps and
+    * manifest statistics, and the version's delete probe while it has
+    * live delete slices. `spj` reports bucket partitioning for keyed
+    * tables; `stream` serves `readStream.table`. */
+  private[sources] def scanBuilder(dir: String, meta: GraftTableMeta,
+      version: Long, options: CaseInsensitiveStringMap, spj: Boolean = false,
+      stream: Option[() => org.apache.spark.sql.connector.read.streaming
+        .MicroBatchStream] = None): ScanBuilder = {
+    val spark = SparkSession.active
     val vdir = GraftStore.versionDir(dir, version)
-    // manifest-resolved snapshot scan: the file index is authored from
-    // `_bucketmap` (files live in their writing versions' dirs), partition
-    // values served per bucket dir — see GraftSnapshotScan
-    val delegate = org.apache.spark.sql.GraftSnapshotScan.parquetScanBuilder(
-      SparkSession.active, dir, version, meta,
-      GraftStore.physicalSchema(meta.schema), options)
-    // always wrapped: name mapping is identity for never-renamed tables
-    // (aggregate pushdown forwards), and the wrapper adds merge-key →
-    // bucket file pruning for point/IN lookups on every table
+    val physSchema = GraftStore.physicalSchema(meta.schema)
     val l2p = GraftStore.logToPhys(meta.schema)
     val p2l = l2p.map(_.swap)
-    def mapFlat(m: Map[String, String])(s: StructType): StructType =
-      StructType(s.fields.map(f => f.copy(name = m.getOrElse(f.name, f.name))).toSeq)
-    // live merge-on-read delete slices change the scan contract: footer-
-    // served aggregates and exact manifest row counts would count dead
-    // rows, and SPJ's one-partition-per-bucket regrouping conflicts with
-    // the per-file delete filter — all three resume after OPTIMIZE clears
-    // the slices (hasLiveDv gates them below and in the renaming scan)
-    val morProbe =
-      if (!GraftStore.hasLiveDv(vdir)) None
-      else GraftStore.loadDvProbe(SparkSession.active, dir, version, meta)
-    val renaming = new org.apache.spark.sql.GraftRenamingScanBuilder(
-      delegate,
-      l2p, mapFlat(l2p), mapFlat(p2l),
-      if (morProbe.isDefined) identity else wrapScan.getOrElse(identity),
-      Some(new org.apache.spark.sql.GraftBucketDerivation(
-        meta.keyCols, GraftStore.versionBuckets(dir, version),
-        GraftStore.BucketCol)),
-      versionDir = Some(vdir),
-      // staleness-gated: heavy DML past the analyzed version withholds
-      // the column stats rather than serving pre-mutation NDV/min-max
-      colStats = () => GraftStore.freshTableColStats(dir, version)
-        .flatMap { case (phys, st) => p2l.get(phys).map(_ -> st) },
+    // the fan-out is a property of the scanned VERSION's layout (the
+    // per-version `_buckets` marker — CALL rebucket changes it across
+    // versions), so pruning and SPJ derive from it, never from meta alone
+    val vBuckets = GraftStore.versionBuckets(dir, version)
+    val derivations = org.apache.spark.sql.GraftDerivations(
+      new org.apache.spark.sql.GraftBucketDerivation(
+        meta.keyCols, vBuckets, GraftStore.BucketCol),
       // partition pruning is era-aware: sound only when every owner dir
       // of THIS snapshot was written under one partition grain — a mixed
       // snapshot (mid set_partition_spec migration) derives nothing (the
       // source-column predicates stay in the residue, so reads are exact;
       // CALL rebucket re-grains and pruning resumes)
-      partitioning = (GraftStore.snapshotPartSpecs(dir, version, meta) match {
+      (GraftStore.snapshotPartSpecs(dir, version, meta) match {
         case Seq(one) => Some(one)
         case Seq() => GraftStore.versionPartSpec(dir, version)
         case _ => None // mixed eras
       }).map { case (fn, physCol) =>
         new org.apache.spark.sql.GraftPartDerivation(fn,
           p2l.getOrElse(physCol, physCol),
-          org.apache.spark.sql.GraftSnapshotScan.partType(meta,
-            GraftStore.physicalSchema(meta.schema)).get)
-      })
-    morProbe match {
-      case None => renaming
-      case Some((fileSeq, dv)) =>
-        new org.apache.spark.sql.GraftMorScanBuilder(renaming,
-          meta.keyCols, meta.schema, dv, fileSeq)
-    }
+          org.apache.spark.sql.GraftSnapshotScan.partType(meta, physSchema).get)
+      },
+      vdir,
+      // staleness-gated: heavy DML past the analyzed version withholds
+      // the column stats rather than serving pre-mutation NDV/min-max
+      () => GraftStore.freshTableColStats(dir, version)
+        .flatMap { case (phys, st) => p2l.get(phys).map(_ -> st) })
+    new org.apache.spark.sql.GraftScanBuilder(
+      _ => org.apache.spark.sql.GraftSnapshotScan.parquetScanBuilder(
+        spark, dir, version, meta, physSchema, options),
+      org.apache.spark.sql.GraftNameMap(l2p),
+      Some(derivations),
+      // live merge-on-read delete slices change the scan contract: footer-
+      // served aggregates, exact manifest row counts and SPJ's
+      // one-partition-per-bucket regrouping all pause until OPTIMIZE
+      // clears the slices
+      if (GraftStore.hasLiveDv(vdir))
+        org.apache.spark.sql.GraftDeleteProbe.load(spark, dir, version, meta)
+      else None,
+      // keyless tables bucket by whole-row hash: there is no key to
+      // group partitions by, and a zero-column bucket transform is at
+      // best meaningless to report (at worst a reference-resolution
+      // failure) — SPJ stays off for them
+      if (!spj || meta.keyCols.isEmpty) None
+      else Some(Array(org.apache.spark.sql.connector.expressions.Expressions
+        .bucket(vBuckets, meta.keyCols: _*))),
+      stream)
   }
-
 }

@@ -378,7 +378,7 @@ final class GraftTableAppendStream(dir: String, meta: GraftTableMeta,
       new org.apache.spark.sql.GraftMorReaderFactory(
         rawSnapshotScan(GraftStore.currentVersion(dir))
           .toBatch.createReaderFactory(),
-        keyOrdinals, keyTypes, None, forceRowBased = true),
+        keyOrdinals, keyTypes, None),
       GraftSnapshotScan.changesScanBuilder(spark, dir, meta, 1L, 0L).build()
         .toBatch.createReaderFactory(),
       phys.fields.map(_.dataType),
@@ -402,7 +402,7 @@ final class GraftTableAppendStream(dir: String, meta: GraftTableMeta,
     * state rides in the PARTITIONS (planned against `v`), so the factory
     * being built from a later version can't skew the snapshot. */
   private def snapshotScan(v: Long) =
-    GraftSnapshotScan.morScanBuilder(spark, dir, v, meta).build()
+    GraftSnapshotScan.versionScanBuilder(spark, dir, v, meta).build()
 }
 
 /** Tags an input partition with which leg planned it — the reader factory

@@ -59,7 +59,7 @@ final class GraftDeltaOperation(tableName: String, dir: String,
     * a plain SELECT (pruned, pushed-down, vectorized), pinned to the
     * snapshot version. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    GraftTable.parquetScanBuilder(tableName, dir, meta, snapshotVersion, options)
+    GraftTable.scanBuilder(dir, meta, snapshotVersion, options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {

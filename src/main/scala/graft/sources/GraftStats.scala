@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the parquet FOOTERS of the files that version dir holds (metadata-only,
   * cost ∝ files written); carried files keep their entries in their owner
   * versions' manifests, so manifest cost tracks the commit, not the table.
-  * The scan side ([[org.apache.spark.sql.GraftRenamingScan]]) drops whole
+  * The scan side ([[org.apache.spark.sql.GraftScan]]) drops whole
   * files whose stats PROVE no row can satisfy the pushed conjuncts. Absent
   * entries — unreadable footers, unsupported physical types (INT96,
   * decimals, nested) — simply keep their files: pruning only ever narrows

@@ -125,9 +125,6 @@ object GraftStore {
   def logToPhys(schema: StructType): Map[String, String] =
     schema.fields.map(f => f.name -> physicalName(f)).toMap
 
-  def hasRenames(schema: StructType): Boolean =
-    schema.fields.exists(f => physicalName(f) != f.name)
-
   /** The schema as stored in parquet files: physical field names. */
   def physicalSchema(schema: StructType): StructType =
     StructType(schema.fields.map(f => f.copy(name = physicalName(f))).toSeq)
@@ -1251,8 +1248,8 @@ object GraftStore {
     }
   }
 
-  /** Driver-side probe structures for the scan wrapper
-    * ([[org.apache.spark.sql.GraftMorScanBuilder]]): the per-file seq map
+  /** Driver-side structures of the scan's delete probe
+    * ([[org.apache.spark.sql.GraftDeleteProbe]]): the per-file seq map
     * and, per bucket, each deleted key's newest delete seq — key values in
     * CATALYST form so executors compare them against `InternalRow.get`
     * directly. Cost: one job reading the (cap-bounded) delete slices,
@@ -2681,7 +2678,7 @@ object GraftStore {
     * exact file layout, for maintenance rewrites that must write the same
     * names back ([[optimize]]). Plans the same manifest-resolved snapshot
     * scan and merge-on-read delete application as every other read
-    * ([[org.apache.spark.sql.GraftSnapshotScan.morScanBuilder]]): a
+    * ([[org.apache.spark.sql.GraftSnapshotScan.versionScanBuilder]]): a
     * `buckets` restriction is a `gbucket` partition filter pushed into
     * the authored file index, a `slots` restriction narrows the authored
     * index itself. */
@@ -3519,7 +3516,7 @@ object GraftStore {
     * version computing per-column approximate NDV, null count, and
     * min/max (atomic columns), persisted at the table level and served to
     * the planner through the scan's `Statistics.columnStats()`
-    * ([[org.apache.spark.sql.GraftRenamingScan.estimateStatistics]]) — the
+    * ([[org.apache.spark.sql.GraftScan.estimateStatistics]]) — the
     * cardinality input Spark's CBO join estimation works from. Returns the
     * analyzed version. Values normalize into the zone-map comparison
     * domains (dates → epoch days, timestamps → micros), so the planner

@@ -5,12 +5,9 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, EqualTo, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.execution.datasources.{PartitioningAwareFileIndex, PartitionPath, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
-import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -150,22 +147,16 @@ object GraftSnapshotScan {
   /** The scan of version `v` that every read outside the catalog's table
     * scan plans — commit legs, maintenance rewrites, ANALYZE, MV refresh
     * (through [[GraftVersionTable]]) and the changes stream's snapshot
-    * leg: the snapshot scan over the physical columns, wrapped in
-    * [[GraftMorScanBuilder]] with the version's cached delete probe while
-    * it has live delete slices. Read schema: [[readSchema]]. */
-  def morScanBuilder(spark: SparkSession, tableDir: String, v: Long,
-      meta: GraftTableMeta, slots: Option[Set[String]] = None): ScanBuilder = {
-    val raw = parquetScanBuilder(spark, tableDir, v, meta,
-      GraftStore.physicalSchema(meta.schema),
-      CaseInsensitiveStringMap.empty(), slots)
-    GraftStore.loadDvProbe(spark, tableDir, v, meta) match {
-      case None => raw
-      case Some((fileSeq, dv)) =>
-        new GraftMorScanBuilder(raw,
-          meta.keyCols.map(k => GraftStore.physicalName(meta.schema(k))),
-          raw.schema, dv, fileSeq)
-    }
-  }
+    * leg: the snapshot scan over the physical columns, applying the
+    * version's cached delete probe while it has live delete slices, with
+    * no derivations and no statistics. Read schema: [[readSchema]]. */
+  def versionScanBuilder(spark: SparkSession, tableDir: String, v: Long,
+      meta: GraftTableMeta, slots: Option[Set[String]] = None)
+      : GraftScanBuilder =
+    new GraftScanBuilder(_ => parquetScanBuilder(spark, tableDir, v, meta,
+        GraftStore.physicalSchema(meta.schema),
+        CaseInsensitiveStringMap.empty(), slots),
+      probe = GraftDeleteProbe.load(spark, tableDir, v, meta))
 
   /** The one scan of a table's changelog: a ParquetScanBuilder over the
     * published slices of versions [`fromV`, `toV`] (capped at the
@@ -195,23 +186,12 @@ object GraftSnapshotScan {
     ParquetScanBuilder(spark, index, StructType(dataSchema ++ partCols),
       StructType(dataSchema), CaseInsensitiveStringMap.empty())
   }
-}
 
-/** The batch scan of `t$changes` (and so of `GraftStore.readChanges`):
-  * [[GraftSnapshotScan.changesScanBuilder]] over the range that the pushed
-  * `change_version` comparisons with literals admit (all retained slices
-  * if none). The filters are still pushed into that builder, so results
-  * never depend on which shapes the range derivation recognizes. */
-final class GraftChangesScanBuilder(spark: SparkSession, dir: String,
-    meta: GraftTableMeta)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownCatalystFilters with SupportsPushDownAggregates {
-
-  private var range = (Long.MinValue, Long.MaxValue)
-  private lazy val delegate =
-    GraftSnapshotScan.changesScanBuilder(spark, dir, meta, range._1, range._2)
-
-  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
+  /** The `change_version` range [lo, hi] that pushed comparisons with
+    * literals admit (unbounded if none) — what a `t$changes` scan plans.
+    * The filters are still pushed into the range's builder, so results
+    * never depend on which shapes this recognizes. */
+  def changesRange(filters: Seq[Expression]): (Long, Long) = {
     def v(e: Expression): Option[Long] = e match {
       case Literal(n: java.lang.Long, LongType) => Some(n.longValue)
       case _ => None
@@ -230,22 +210,13 @@ final class GraftChangesScanBuilder(spark: SparkSession, dir: String,
       case In(a, ls) if isV(a) && ls.nonEmpty && ls.forall(v(_).isDefined) =>
         Some((ls.flatMap(v).min, ls.flatMap(v).max))
       case _ => None
-    }.foreach { case (l, h) =>
-      range = (math.max(range._1, l), math.min(range._2, h)) }
-    delegate.pushFilters(filters)
+    }.foldLeft((lo, hi)) { case ((l0, h0), (l, h)) =>
+      (math.max(l0, l), math.min(h0, h)) }
   }
-  override def pushedFilters: Array[Predicate] = delegate.pushedFilters
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    delegate.pruneColumns(requiredSchema)
-  override def pushAggregation(aggregation: Aggregation): Boolean =
-    delegate.pushAggregation(aggregation)
-  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    delegate.supportCompletePushDown(aggregation)
-  override def build(): Scan = delegate.build()
 }
 
 /** One version of a graft table as a bare readable table over
-  * [[GraftSnapshotScan.morScanBuilder]] — the relation behind
+  * [[GraftSnapshotScan.versionScanBuilder]] — the relation behind
   * `GraftStore.readVersion`. Deliberately not a `GraftTable`: materialized
   * view shape derivation and rewrite match relations over `GraftTable`, so
   * they never take a commit-leg or maintenance read of a user table. */
@@ -259,7 +230,7 @@ final class GraftVersionTable(spark: SparkSession, tableDir: String, v: Long,
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    GraftSnapshotScan.morScanBuilder(spark, tableDir, v, meta, slots)
+    GraftSnapshotScan.versionScanBuilder(spark, tableDir, v, meta, slots)
 }
 
 /** A [[PartitioningAwareFileIndex]] whose partition spec AND file listing

@@ -1424,7 +1424,7 @@ class CatalogSpec extends SparkTestBase {
       df.collect()
       leaves(df.queryExecution.executedPlan).collectFirst {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-            if b.toString.contains("GraftRenaming") => b
+            if b.toString.contains("GraftScan") => b
       }.get
     }
     val full = fileCount(scanOf(spark.sql(s"SELECT * FROM $cat.$t")))

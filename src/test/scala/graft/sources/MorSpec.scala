@@ -325,7 +325,7 @@ class MorSpec extends SparkTestBase {
       df.collect()
       val scan = leaves(df.queryExecution.executedPlan).collectFirst {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-            if b.toString.contains("GraftMor") => b
+            if b.toString.contains("GraftScan") => b
       }.get
       val n = scan.inputRDDs().head.partitions.flatMap {
         case p: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
@@ -352,6 +352,46 @@ class MorSpec extends SparkTestBase {
     assert(hasRf, "DPP must plant a runtime filter on the DV-live scan")
     assert(pruned < full,
       s"runtime filter should narrow the DV-live scan: $pruned vs $full")
+  }
+
+  test("a join on a non-key column plans a DV-live scan that drops the key") {
+    import spark.implicits._
+    // the delete probe reads the merge key, but neither the join nor the
+    // projection asks for it: DPP must not be offered a column the pruned
+    // relation does not output
+    val (m, c) = twinCheck("t_dpp_name", Seq(
+      "DELETE FROM %s WHERE k %% 7 = 3",
+      "UPDATE %s SET amount = amount + 1 WHERE k %% 5 = 0"))
+    assert(GraftStore.hasLiveDv(curVdir(m)))
+    val dimPath =
+      Files.createTempDirectory("graft_mor_dpp_name").toString + "/dim"
+    (0 until 60).map(i => (s"n$i", if (i % 3 == 0) "a" else "b"))
+      .toDF("name", "grp").write.parquet(dimPath)
+    spark.read.parquet(dimPath).createOrReplaceTempView("mor_dpp_name_dim")
+    def amounts(t: String): Seq[Long] = spark.sql(
+      s"SELECT t.amount FROM $cat.$t t JOIN mor_dpp_name_dim d " +
+        "ON t.name = d.name WHERE d.grp = 'a'")
+      .collect().map(_.getLong(0)).toSeq.sorted
+    val expected = amounts(c)
+    assert(expected.nonEmpty)
+    assert(amounts(m) === expected)
+  }
+
+  test("a version read that prunes the key keeps its bucket column") {
+    // the probe's key column is read between the data and the partition
+    // columns; projecting it away must not shift the bucket column
+    val m = mkTable("t_vread", "mor")
+    seed(m, 100)
+    spark.sql(s"DELETE FROM $cat.$m WHERE k % 9 = 4")
+    assert(GraftStore.hasLiveDv(curVdir(m)))
+    val df = GraftStore.readVersion(spark, dir(m),
+      GraftStore.currentVersion(dir(m)))
+    val withKey = df.select("k", "name", GraftStore.BucketCol).collect()
+      .map(r => (r.getString(1), r.getInt(2))).toSet
+    val keyPruned = df.select("name", GraftStore.BucketCol).collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSet
+    assert(withKey.size === 89)
+    assert(keyPruned === withKey)
   }
 
   test("DROP + re-CREATE at the same path never serves a stale delete probe") {
