@@ -1754,6 +1754,113 @@ object GraftStore {
       }.distinct.sorted
     })
 
+  /** A branch frozen by [[freezeBranch]]: its `head + 1` claim is held,
+    * so no branch commit lands until the caller releases `claim`. */
+  private final case class FrozenBranch(dir: String, name: String,
+      bd: String, fork: Long, head: Long, incarnation: String,
+      claim: (Path, String))
+
+  /** The one meta comparison every branch publish and rebase makes. NOT
+    * a ConcurrentModificationException: retrying never heals a
+    * branch-side ALTER, so conflict-retry loops must not spin on it. */
+  private def requireSameMeta(f: FrozenBranch, op: String): Unit =
+    if (readMeta(f.dir) != readMeta(f.bd))
+      throw new IllegalStateException(
+        s"branch '${f.name}' of ${f.dir} diverged in SCHEMA/layout from " +
+          "main (an ALTER landed on the branch or on main since the fork); " +
+          s"$op aborted — re-branch and replay, or use RTAS")
+
+  /** Freeze branch `name` for `op` (fast_forward, publish_group, rebase):
+    * recover both changelogs, read fork and head, claim the BRANCH's
+    * `head + 1`, then re-check the head under the claim (a commit may have
+    * landed between the read and the claim) and compare the metas. The
+    * publish CONSUMES the branch and the rebase REPLACES it, so a branch
+    * commit racing either would be silently dropped — with the claim held
+    * branch writers conflict loudly instead, and a writer already holding
+    * it makes THIS call the loud loser. The claim is released here when a
+    * check fails and by the caller otherwise. */
+  private def freezeBranch(dir: String, name: String, op: String)
+      : FrozenBranch = {
+    require(branchExists(dir, name),
+      s"table $dir has no branch '$name' (have " +
+        s"${listBranches(dir).mkString("[", ", ", "]")})")
+    recoverChangelog(dir)
+    val bd = branchDir(dir, name)
+    recoverChangelog(bd)
+    val fork = branchForkBase(dir, name)
+    val head = currentVersion(bd)
+    val claim = claimCommit(bd, head + 1)
+    try {
+      if (currentVersion(bd) != head)
+        throw new java.util.ConcurrentModificationException(
+          s"branch '$name' of $dir advanced past v$head while $op was " +
+            "starting; re-run against the new head")
+      val f = FrozenBranch(dir, name, bd, fork, head,
+        storedIncarnation(bd).getOrElse(throw new IllegalStateException(
+          s"branch '$name' of $dir has no $IncarnationName stamp")), claim)
+      requireSameMeta(f, op)
+      f
+    } catch {
+      case e: Throwable => releaseClaim(claim._1, claim._2); throw e
+    }
+  }
+
+  /** Adopt frozen branch `f`'s versions above its fork into main, all
+    * invisible until [[completePublish]] moves the pointer: claim EVERY
+    * adopted version on main (appended to `held`, which already holds the
+    * branch claim and which the caller releases — also after a
+    * mid-acquisition loss), then, under the heartbeat of `held`, re-check
+    * that main is still at the fork and that the metas still agree (an
+    * ALTER is meta-only, so the fork check cannot see it), and link through
+    * [[adoptBranchVersions]]. The fork+1 claim serializes against main's
+    * writers; the higher claims keep a concurrent reader's
+    * recoverChangelog from sweeping the staged slices (it preserves
+    * stagings whose version holds a live claim). */
+  private def adoptBranch(f: FrozenBranch, op: String,
+      held: scala.collection.mutable.ArrayBuffer[(Path, String)]): Unit = {
+    val branchVs = listDir(Paths.get(f.bd))(_.map(_.getFileName.toString)
+      .filter(_.matches("v\\d{10}")).map(_.drop(1).toLong).toSeq)
+      .filter(_ > f.fork).sorted
+    require(f.head == f.fork || branchVs.nonEmpty,
+      s"branch '${f.name}' advanced its pointer to v${f.head} but retains " +
+        s"no version dirs above the fork v${f.fork}")
+    branchVs.foreach(v => held += claimCommit(f.dir, v))
+    withClaimHeartbeat(held.map(_._1).toSeq) {
+      if (currentVersion(f.dir) != f.fork)
+        throw new java.util.ConcurrentModificationException(
+          s"table ${f.dir} advanced past the fork point v${f.fork} of " +
+            s"branch '${f.name}' (now v${currentVersion(f.dir)}); $op " +
+            "aborted — rebase the branch onto the new head and re-run")
+      requireSameMeta(f, op)
+      adoptBranchVersions(f.dir, f.bd, f.fork, branchVs, f.claim._2)
+    }
+  }
+
+  /** Complete a publish of branch `branch` at `head` on `dir`: move the
+    * pointer up to `head` (never back), publish the changelog slices it
+    * now covers, and consume the branch — ONLY the incarnation `inc` that
+    * was published: a resolver acting on a stale marker read can find the
+    * same NAME already re-created for the next publish, and that branch is
+    * not ours to drop. The stamp is read, never written: a missing
+    * directory or stamp (a racing resolver mid-drop, or a tree we cannot
+    * identify) means "not ours". Idempotent and safe to race; the one place
+    * outside a claimed build where main's pointer moves. */
+  private def completePublish(dir: String, branch: String, head: Long,
+      inc: String): Unit = {
+    if (currentVersion(dir) < head) {
+      writePointer(dir, head)
+      invalidateDvCache(dir)
+    }
+    recoverChangelog(dir) // the pointer now covers the staged slices
+    if (storedIncarnation(branchDir(dir, branch)).contains(inc) &&
+        branchExists(dir, branch))
+      try dropBranch(dir, branch)
+      catch { // raced: another resolver consumed it first
+        case _: IllegalArgumentException => ()
+        case _: java.nio.file.NoSuchFileException => ()
+      }
+  }
+
   /** Publish branch `name` into main — a TRUE fast-forward: requires main
     * still at the fork point (loud conflict otherwise), adopts every
     * branch-era version dir (including `_expired` file hosts) and
@@ -1762,128 +1869,56 @@ object GraftStore {
     * metadata + hard links: O(branch's own files), never a data copy or
     * a byte of main rewritten. Crash-safe: the branch stays intact until
     * the pointer flips (adopted dirs above the pointer are invisible and
-    * a retry skips them), changelog slices stage under per-version commit
-    * claims and publish only once the pointer covers them. Schema-
+    * a retry relinks them), changelog slices stage under per-version
+    * commit claims and publish only once the pointer covers them. Schema-
     * diverged branches (ALTER on the branch) are rejected — re-create the
-    * table via RTAS instead. */
+    * table via RTAS instead. A commit-less branch is consumed as a no-op. */
   def fastForward(dir: String, name: String): Long = {
-    require(branchExists(dir, name),
-      s"table $dir has no branch '$name' (have " +
-        s"${listBranches(dir).mkString("[", ", ", "]")})")
-    recoverChangelog(dir)
-    val bd = branchDir(dir, name)
-    recoverChangelog(bd)
-    val fork = branchForkBase(dir, name)
-    val bHead = currentVersion(bd)
-    // A fast-forward CONSUMES the branch, so a branch commit racing the
-    // publish window would be silently dropped with it — claim the
-    // BRANCH's next version for the whole operation: branch writers
-    // conflict loudly instead (and a writer already holding the claim
-    // makes THIS call the loud loser). Re-verify the head under the
-    // claim: a commit may have landed between the read and the claim.
-    val (bMarker, bToken) = claimCommit(bd, bHead + 1)
+    val f = freezeBranch(dir, name, "fast_forward")
+    val claims = scala.collection.mutable.ArrayBuffer(f.claim)
     try {
-    if (currentVersion(bd) != bHead)
-      throw new java.util.ConcurrentModificationException(
-        s"branch '$name' of $dir advanced past v$bHead while fast_forward " +
-          "was starting; re-run to publish the new head")
-    if (bHead == fork) { // nothing to publish: consume the branch
-      dropBranch(dir, name)
-      return currentVersion(dir)
-    }
-    // fail fast on an already-visible schema/layout divergence before
-    // taking any claims (the authoritative re-check runs inside the claim
-    // to close the race window)
-    if (readMeta(dir) != readMeta(bd))
-      throw new IllegalStateException(
-        s"branch '$name' of $dir diverged in SCHEMA/layout from main " +
-          "(an ALTER landed on the branch or on main since the fork); " +
-          "fast_forward aborted — re-branch and replay, or use RTAS")
-    val branchVs = listDir(Paths.get(bd))(_.map(_.getFileName.toString)
-      .filter(_.matches("v\\d{10}")).map(_.drop(1).toLong).toSeq)
-      .filter(_ > fork).sorted
-    require(branchVs.nonEmpty, s"branch '$name' advanced its pointer to " +
-      s"v$bHead but retains no version dirs above the fork v$fork")
-    // claim EVERY version being adopted: the fork+1 claim serializes
-    // against normal writers; the higher claims keep a concurrent
-    // reader's recoverChangelog from sweeping the staged slices (it
-    // preserves stagings whose version holds a live claim). Acquired
-    // INSIDE the try: a mid-acquisition loss (a writer holds fork+1)
-    // must release the claims already taken, not leak them for the
-    // stale-claim window.
-    val claims = scala.collection.mutable.ArrayBuffer.empty[(Path, String)]
-    try {
-      branchVs.foreach(v => claims += claimCommit(dir, v))
-      withClaimHeartbeat((bMarker +: claims.map(_._1)).toSeq) {
-      if (currentVersion(dir) != fork)
-        throw new java.util.ConcurrentModificationException(
-          s"table $dir advanced past the fork point v$fork of branch " +
-            s"'$name' (now v${currentVersion(dir)}); fast_forward " +
-            "aborted — re-branch from the new head and replay")
-      // SCHEMA/layout divergence re-check under the claim — an ALTER is
-      // meta-only, so the fork-point check above cannot see it. NOT a
-      // ConcurrentModificationException: retrying never heals a
-      // branch-side ALTER, so conflict-retry loops must not spin on it.
-      if (readMeta(dir) != readMeta(bd))
-        throw new IllegalStateException(
-          s"branch '$name' of $dir diverged in SCHEMA/layout from main " +
-            "(an ALTER landed on the branch or on main since the fork); " +
-            "fast_forward aborted — re-branch and replay, or use RTAS")
-      adoptBranchVersions(dir, bd, fork, branchVs, claims.head._2,
-        rebuild = false)
-      claims.foreach { case (m, t) => verifyClaim(m, t) }
-      writePointer(dir, bHead)
-      invalidateDvCache(dir)
+      if (f.head > f.fork) {
+        adoptBranch(f, "fast_forward", claims)
+        claims.foreach { case (m, t) => verifyClaim(m, t) }
       }
+      completePublish(dir, name, f.head, f.incarnation)
+      if (f.head > f.fork) f.head else currentVersion(dir)
+      // dropBranch removed the branch claim's marker with the dir, which
+      // releaseClaim tolerates
     } finally claims.foreach { case (m, t) => releaseClaim(m, t) }
-    recoverChangelog(dir) // the pointer now covers the staged slices
-    dropBranch(dir, name) // a fast-forward consumes the branch
-    bHead
-    // the branch claim releases in the outer finally: dropBranch removed
-    // the marker with the dir, which releaseClaim tolerates
-    } finally releaseClaim(bMarker, bToken)
   }
 
   /** Adopt a branch's version dirs, changelog slices, and boundary
     * markers above `fork` into main — hard links only, every artifact
     * landing ABOVE main's pointer (invisible until it flips) or under a
     * dot-prefixed staging name. Caller holds the claims for every
-    * adopted version. `rebuild = false` skips a dst that already exists
-    * (the crashed-same-branch-retry case fast_forward relies on);
-    * `rebuild = true` deletes and relinks it (the group-publish case: an
-    * ABORTED earlier group may have left an adopted dir from a branch
-    * that no longer exists — same version number, different content). */
+    * adopted version and has checked that main is still at `fork`, so
+    * anything already under those names is debris — a crashed retry of
+    * this publish, or an ABORTED group or txn whose branch may no longer
+    * exist (same version number, different content) — and is always
+    * relinked, never trusted. */
   private def adoptBranchVersions(dir: String, bd: String, fork: Long,
-      branchVs: Seq[Long], token: String, rebuild: Boolean): Unit = {
+      branchVs: Seq[Long], token: String): Unit = {
     val mainOwners = ownersOf(dir, fork)
     branchVs.foreach { v =>
-      val dst = Paths.get(versionDir(dir, v))
-      if (rebuild && Files.isDirectory(dst)) deleteRecursively(dst)
-      if (!Files.isDirectory(dst)) { // a crashed retry already adopted it
-        val build = Paths.get(s"${versionDir(dir, v)}.build-$token")
-        deleteRecursively(build)
-        linkTree(Paths.get(versionDir(bd, v)), build)
-        rewriteOwnerRefs(build.toString, fork, mainOwners)
-        publishVersion(build.toString, versionDir(dir, v))
-      }
-      val srcSlice = Paths.get(s"${changesRoot(bd)}/$ChangeVersionCol=$v")
-      val dstSlice = Paths.get(s"${changesRoot(dir)}/$ChangeVersionCol=$v")
-      val stage = Paths.get(s"${changesRoot(dir)}/.staging-$v")
-      if (Files.isDirectory(srcSlice) && !Files.exists(dstSlice)) {
-        // a pre-existing staging is a crashed attempt's possibly-TORN
-        // link pass — we hold this version's claim, the branch slice is
-        // immutable: rebuild it whole rather than publish a partial one
-        deleteRecursively(stage)
+      val build = Paths.get(s"${versionDir(dir, v)}.build-$token")
+      deleteRecursively(build)
+      linkTree(Paths.get(versionDir(bd, v)), build)
+      rewriteOwnerRefs(build.toString, fork, mainOwners)
+      publishVersion(build.toString, versionDir(dir, v))
+      val srcSlice = Paths.get(changesDir(bd, v))
+      val stage = Paths.get(changesStaging(dir, v))
+      deleteRecursively(stage)
+      if (Files.isDirectory(srcSlice)) {
         Files.createDirectories(Paths.get(changesRoot(dir)))
         linkTree(srcSlice, stage)
       }
       // expiry-promoted boundary markers on the branch follow along
-      val bm = Paths.get(changesRoot(bd), f"_boundary-$v%010d")
-      if (Files.exists(bm)) {
+      val m = Paths.get(changesRoot(dir), f"_boundary-$v%010d")
+      if (Files.exists(Paths.get(changesRoot(bd), f"_boundary-$v%010d"))) {
         Files.createDirectories(Paths.get(changesRoot(dir)))
-        val m = Paths.get(changesRoot(dir), f"_boundary-$v%010d")
         if (!Files.exists(m)) Files.write(m, Array.empty[Byte])
-      }
+      } else Files.deleteIfExists(m)
     }
   }
 
@@ -1909,33 +1944,14 @@ object GraftStore {
     * branch's per-commit history — the rebased branch fast-forwards
     * commit-by-commit like any other. */
   def rebaseBranch(spark: SparkSession, dir: String, name: String): Long = {
-    require(branchExists(dir, name),
-      s"table $dir has no branch '$name' (have " +
-        s"${listBranches(dir).mkString("[", ", ", "]")})")
-    val bd = branchDir(dir, name)
-    recoverChangelog(dir)
-    recoverChangelog(bd)
-    val fork = branchForkBase(dir, name)
-    val bHead = currentVersion(bd)
-    // the swap at the end REPLACES the branch dir, so a branch commit
-    // racing the (long) rebase window would be silently destroyed with
-    // the displaced original — claim the branch's next version for the
-    // whole rebase: racing writers conflict loudly instead, and a writer
-    // already holding the claim makes THIS call the loud loser. The
-    // marker is heartbeated below (replay can be long) and travels into
-    // the .prerebase- dir with the swap, which releaseClaim tolerates.
-    val (bMarker, bToken) = claimCommit(bd, bHead + 1)
+    // the frozen branch's claim is held for the whole (long) rebase and
+    // heartbeated below; its marker travels into the .prerebase- dir with
+    // the swap, which releaseClaim tolerates
+    val f = freezeBranch(dir, name, "rebase")
+    val (bd, fork, bHead) = (f.bd, f.fork, f.head)
+    val (bMarker, bToken) = f.claim
     try {
     withClaimHeartbeat(Seq(bMarker)) {
-    if (currentVersion(bd) != bHead)
-      throw new java.util.ConcurrentModificationException(
-        s"branch '$name' of $dir advanced past v$bHead while rebase was " +
-          "starting; re-run against the new head")
-    if (readMeta(dir) != readMeta(bd))
-      throw new IllegalStateException(
-        s"branch '$name' of $dir diverged in SCHEMA/layout from main " +
-          "(an ALTER landed on the branch or on main since the fork); " +
-          "rebase aborted — re-branch and replay, or use RTAS")
     if (bHead > fork) {
       require(changesHorizon(bd) <= fork + 1,
         s"branch '$name' of $dir expired changelog slices since its fork " +
@@ -2032,19 +2048,20 @@ object GraftStore {
   // forwards EVERY branch or NONE — two-phase with a single decision
   // point and roll-FORWARD recovery:
   //
-  //   PREPARE (per member, under the same claims fast_forward takes):
-  //     freeze the branch, verify the fork point and schema, adopt the
-  //     branch's version dirs + changelog stagings into main — all
-  //     INVISIBLE (above the pointer / dot-prefixed), then drop a
-  //     `_groupcommit` marker in the table dir pointing at the group
+  //   PREPARE (per member, through the freezeBranch and adoptBranch steps
+  //     fast_forward takes): freeze the branch, verify the fork point and
+  //     schema, adopt the branch's version dirs + changelog stagings into
+  //     main — all INVISIBLE (above the pointer / dot-prefixed), then drop
+  //     a `_groupcommit` marker in the table dir pointing at the group
   //     manifest. Main stays readable at the fork throughout (the fork+1
   //     claim freezes writers, never readers).
   //   DECIDE: one CREATE_NEW of `<group>.decision` = "committed" — the
   //     single atomic action that makes the whole group's outcome. A
   //     concurrent recovery that aborted a stalled group wins the same
   //     CREATE_NEW with "aborted"; exactly one of the two ever exists.
-  //   COMPLETE (per member): flip the pointer to the branch head, publish
-  //     the staged slices, consume the branch, remove the marker.
+  //   COMPLETE (per member): completePublish, as fast_forward — flip the
+  //     pointer to the branch head, publish the staged slices, consume the
+  //     branch — then remove the marker.
   //
   // Crash windows: before DECIDE → no pointer moved, every reader saw
   // (and keeps seeing) the pre-publish contents of every member; the
@@ -2162,10 +2179,9 @@ object GraftStore {
     val id = java.util.UUID.randomUUID().toString
     val manifest = groupsRoot.resolve(s"group-$id.json")
     val decision = groupDecisionPath(manifest)
-    // (dir, bd, branch, fork, head, marker)
-    val preps = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, String, Long, Long, Path)]
+    val preps = scala.collection.mutable.ArrayBuffer.empty[FrozenBranch]
     val claims = scala.collection.mutable.ArrayBuffer.empty[(Path, String)]
+    def marker(f: FrozenBranch): Path = Paths.get(f.dir, GroupMarkerName)
     var injected = false
     try {
       try {
@@ -2173,59 +2189,27 @@ object GraftStore {
         // groups over overlapping tables deadlock-free — the loser
         // conflicts on the first shared table's claim
         members.sortBy(_._1).foreach { case (dir, name) =>
-          require(branchExists(dir, name),
-            s"table $dir has no branch '$name' (have " +
-              s"${listBranches(dir).mkString("[", ", ", "]")})")
-          recoverChangelog(dir)
-          val bd = branchDir(dir, name)
-          recoverChangelog(bd)
-          val fork = branchForkBase(dir, name)
-          val bHead = currentVersion(bd)
-          val bc = claimCommit(bd, bHead + 1) // freeze the branch
-          claims += bc
-          if (currentVersion(bd) != bHead)
-            throw new java.util.ConcurrentModificationException(
-              s"branch '$name' of $dir advanced while publish_group was " +
-                "starting; re-run")
-          if (readMeta(dir) != readMeta(bd))
-            throw new IllegalStateException(
-              s"branch '$name' of $dir diverged in SCHEMA/layout from " +
-                "main; publish_group aborted — re-branch and replay")
-          val branchVs = listDir(Paths.get(bd))(
-            _.map(_.getFileName.toString).filter(_.matches("v\\d{10}"))
-              .map(_.drop(1).toLong).toSeq).filter(_ > fork).sorted
-          branchVs.foreach(v => claims += claimCommit(dir, v))
-          if (currentVersion(dir) != fork)
-            throw new java.util.ConcurrentModificationException(
-              s"table $dir advanced past the fork point v$fork of branch " +
-                s"'$name'; publish_group aborted — rebase and re-run")
-          if (readMeta(dir) != readMeta(bd)) // re-check under the claims
-            throw new IllegalStateException(
-              s"branch '$name' of $dir diverged in SCHEMA/layout from " +
-                "main; publish_group aborted — re-branch and replay")
-          adoptBranchVersions(dir, bd, fork, branchVs, bc._2, rebuild = true)
-          val marker = Paths.get(dir, GroupMarkerName)
-          preps += ((dir, bd, name, fork, bHead, marker))
+          val f = freezeBranch(dir, name, "publish_group")
+          claims += f.claim
+          adoptBranch(f, "publish_group", claims)
+          preps += f
         }
-        writeGroupManifest(manifest, preps.toSeq.map {
-          case (d, bd, b, f, h, _) => (d, b, f, h,
-            storedIncarnation(bd).getOrElse(throw new IllegalStateException(
-              s"branch '$b' of $d has no ${IncarnationName} stamp"))) })
-        preps.foreach { case (_, _, _, _, _, marker) =>
-          try Files.write(marker,
+        writeGroupManifest(manifest,
+          preps.toSeq.map(f => (f.dir, f.name, f.fork, f.head, f.incarnation)))
+        preps.foreach { f =>
+          try Files.write(marker(f),
             manifest.toAbsolutePath.toString.getBytes("UTF-8"),
             java.nio.file.StandardOpenOption.CREATE_NEW)
           catch {
             case _: java.nio.file.FileAlreadyExistsException =>
               throw new java.util.ConcurrentModificationException(
-                s"another table group holds ${marker.getParent}; " +
+                s"another table group holds ${f.dir}; " +
                   "resolve it (any read recovers a decided/stalled group) " +
                   "and re-run")
           }
         }
         groupFailpoint("before-decision")
-        withClaimHeartbeat(
-            (claims.map(_._1) ++ preps.map(_._6)).toSeq) {
+        withClaimHeartbeat((claims.map(_._1) ++ preps.map(marker)).toSeq) {
           // last-instant fencing, then the single decision point
           claims.foreach { case (m, t) => verifyClaim(m, t) }
           try Files.write(decision, "committed".getBytes("UTF-8"),
@@ -2238,9 +2222,9 @@ object GraftStore {
                   "re-run")
           }
           // COMPLETE every member; a crash from here on rolls forward
-          preps.zipWithIndex.foreach { case ((dir, _, _, _, _, _), i) =>
+          preps.zipWithIndex.foreach { case (f, i) =>
             if (i > 0) groupFailpoint("between-flips")
-            completeGroupMember(dir)
+            completeGroupMember(f.dir)
           }
         }
       } catch {
@@ -2260,26 +2244,24 @@ object GraftStore {
             try new String(Files.readAllBytes(decision), "UTF-8").trim ==
               "committed"
             catch { case _: java.io.IOException => false }
-          if (!decided) preps.foreach { case (_, _, _, _, _, marker) =>
+          if (!decided) preps.map(marker).foreach { m =>
             try {
-              if (new String(Files.readAllBytes(marker), "UTF-8").trim ==
+              if (new String(Files.readAllBytes(m), "UTF-8").trim ==
                   manifest.toAbsolutePath.toString)
-                Files.deleteIfExists(marker)
+                Files.deleteIfExists(m)
             } catch { case _: java.io.IOException => () }
           }
           throw e
       }
     } finally if (!injected)
       claims.foreach { case (m, t) => releaseClaim(m, t) }
-    val heads = members.map { case (d, _) =>
-      d -> preps.collectFirst { case (`d`, _, _, _, h, _) => h }.get }
-    heads.map(_._2)
+    members.map { case (d, _) => preps.find(_.dir == d).get.head }
   }
 
-  /** Roll a decided group forward on one member: flip the pointer to the
-    * recorded head, publish the staged changelog slices, consume the
-    * branch, drop the marker. Idempotent and safe to race — every step
-    * either tolerates or ignores an already-done state. */
+  /** Roll a decided group forward on one member: [[completePublish]] at
+    * the recorded head and incarnation, then drop the marker. Idempotent
+    * and safe to race — every step either tolerates or ignores an
+    * already-done state. */
   private def completeGroupMember(dir: String): Unit = {
     val marker = Paths.get(dir, GroupMarkerName)
     val manifest =
@@ -2287,23 +2269,7 @@ object GraftStore {
       catch { case _: java.nio.file.NoSuchFileException => return }
     val mine = readGroupManifest(manifest).find(_._1 == dir).getOrElse(return)
     val (_, branch, _, head, inc) = mine
-    if (currentVersion(dir) < head) {
-      writePointer(dir, head)
-      invalidateDvCache(dir)
-    }
-    recoverChangelog(dir) // the pointer now covers the staged slices
-    // consume ONLY the published incarnation: a resolver acting on a
-    // stale marker read can find the same NAME already re-created for
-    // the next publish — that branch is not ours to drop. The stamp is
-    // read, never written: a missing directory or stamp (a racing
-    // resolver mid-drop, or a tree we cannot identify) means "not ours".
-    if (storedIncarnation(branchDir(dir, branch)).contains(inc) &&
-        branchExists(dir, branch))
-      try dropBranch(dir, branch)
-      catch { // raced: another resolver consumed it first
-        case _: IllegalArgumentException => ()
-        case _: java.nio.file.NoSuchFileException => ()
-      }
+    completePublish(dir, branch, head, inc)
     Files.deleteIfExists(marker)
   }
 
@@ -3877,12 +3843,12 @@ object GraftStore {
         catch { case _: java.nio.file.NoSuchFileException => -1L }
         if (isTomb || age > olderThanMillis) { deleteRecursively(p); removed += 1 }
       }
-    // final-named version dirs ABOVE the pointer are a crashed
-    // fast_forward's adoption debris (a live fast_forward heartbeats a
-    // claim per adopted version — the claim check keeps an in-flight
-    // publish safe). Invisible to listVersions (pointer-capped), so
-    // reclaiming them is pure space hygiene; a retried fast_forward
-    // rebuilds them from the still-intact branch.
+    // final-named version dirs ABOVE the pointer are branch-publish
+    // adoption debris: a crashed fast_forward or publish_group, or an
+    // ABORTED group or txn (a live publish heartbeats a claim per adopted
+    // version — the claim check keeps it safe). Invisible to listVersions
+    // (pointer-capped), so reclaiming them is pure space hygiene; any
+    // later publish that reaches their versions relinks them whole.
     locally {
       val cur = currentVersion(dir)
       listDir(Paths.get(dir))(_.filter { p =>

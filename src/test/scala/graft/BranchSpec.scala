@@ -215,9 +215,10 @@ class BranchSpec extends SparkTestBase {
     assert(rows(s"$cat.`$t$$branch$$tt` VERSION AS OF 1") === Seq((1L, 0L, 10L)))
     assert(rows(s"$cat.`$t$$branch$$tt` VERSION AS OF 2") ===
       Seq((1L, 0L, 10L), (2L, 0L, 20L)))
-    // a final-named version dir ABOVE main's pointer (a crashed
-    // fast_forward's debris shape) is invisible to the version listing,
-    // unreadable via time travel, and reclaimed by vacuum once unclaimed
+    // a final-named version dir ABOVE main's pointer (debris of a crashed
+    // publish, or of an aborted group or txn) is invisible to the version
+    // listing, unreadable via time travel, reclaimed by vacuum once
+    // unclaimed, and relinked by any later publish that reaches it
     val stray = java.nio.file.Paths.get(GraftStore.versionDir(dir, 7L))
     Files.createDirectories(stray)
     assert(GraftStore.listVersions(dir) === Seq(0L, 1L))
@@ -227,7 +228,11 @@ class BranchSpec extends SparkTestBase {
     assert(chain(e).exists(_.getMessage.contains("no version 7")))
     GraftStore.vacuum(dir, olderThanMillis = 0L)
     assert(!Files.isDirectory(stray), "vacuum must reclaim unclaimed FF debris")
-    spark.sql(s"CALL $cat.drop_branch(table => '$t', name => 'tt')")
+    // the same debris at fork+1 — exactly the version the publish adopts
+    Files.createDirectories(
+      java.nio.file.Paths.get(GraftStore.versionDir(dir, 2L)))
+    spark.sql(s"CALL $cat.fast_forward(table => '$t', name => 'tt')")
+    assert(rows(s"$cat.$t") === Seq((1L, 0L, 10L), (2L, 0L, 20L)))
   }
 
   test("rebase replays disjoint-key divergence onto main's head") {
@@ -463,6 +468,40 @@ class BranchSpec extends SparkTestBase {
     // "not ours": the drop is declined and nothing is written into the tree
     assert(GraftStore.branchExists(bDir, "wap"))
     assert(!Files.exists(stamp))
+  }
+
+  test("a publish after an aborted group adopts its own branch, not the debris") {
+    val a = mkTable("grpab_a")
+    val b = mkTable("grpab_b")
+    val aDir = s"$warehouse/$a"
+    spark.sql(s"INSERT INTO $cat.$a VALUES (1, 0, 10)")
+    spark.sql(s"INSERT INTO $cat.$b VALUES (5, 0, 50)")
+    Seq(a, b).foreach(t =>
+      spark.sql(s"CALL $cat.create_branch(table => '$t', name => 'x')"))
+    spark.sql(s"INSERT INTO $cat.`$a$$branch$$x` VALUES (2, 0, 20)")
+    spark.sql(s"INSERT INTO $cat.`$b$$branch$$x` VALUES (6, 0, 60)")
+    spark.sql(s"INSERT INTO $cat.$b VALUES (7, 1, 70)") // b moved off fork
+    val e = intercept[Exception] {
+      spark.sql(s"CALL $cat.publish_group(tables => '$a,$b', name => 'x')")
+    }
+    assert(chain(e).exists(x => Option(x.getMessage).exists(
+      _.contains("fork point"))))
+    // a's adoption of branch x's v2 stays above a's pointer, unread
+    assert(Files.isDirectory(java.nio.file.Paths.get(
+      GraftStore.versionDir(aDir, 2L))))
+    assert(rows(s"$cat.$a") === Seq((1L, 0L, 10L)))
+    // an unrelated branch publishes its own v2 over that debris
+    spark.sql(s"CALL $cat.drop_branch(table => '$a', name => 'x')")
+    spark.sql(s"CALL $cat.create_branch(table => '$a', name => 'y')")
+    spark.sql(s"INSERT INTO $cat.`$a$$branch$$y` VALUES (3, 0, 30)")
+    spark.sql(s"CALL $cat.fast_forward(table => '$a', name => 'y')")
+    assert(GraftStore.currentVersion(aDir) === 2L)
+    assert(rows(s"$cat.$a") === Seq((1L, 0L, 10L), (3L, 0L, 30L)))
+    // the snapshot and its changelog name the same keys
+    val changed = spark.sql(s"SELECT k, change_op FROM $cat.`$a$$changes` " +
+        "WHERE change_version = 2 ORDER BY k")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(changed === Seq((3L, "I")))
   }
 
   test("publish_group conflicts when one member's main moved off its fork") {
