@@ -5,7 +5,7 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FileSystem, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -78,10 +78,27 @@ object GraftLocalFileSystem {
     * filesystem unless something other than Hadoop's `core-default.xml`
     * set it: a user-set implementation wins. Hadoop caches one
     * `FileSystem` per scheme and user, whatever the configuration, so this
-    * takes effect only for a JVM that has not resolved `file:` yet. */
-  def install(conf: Configuration): Unit = Impls.foreach { case (key, cls) =>
-    val sources = conf.getPropertySources(key)
-    if (sources == null || sources.forall(_ == "core-default.xml"))
-      conf.set(key, cls)
+    * takes effect only for a JVM that has not resolved `file:` yet. When
+    * the JVM already has — Spark's event log on a `file:` dir resolves it
+    * at context start, before any session exists — the cached class stays
+    * and one WARN names the settings that take effect at context start.
+    * Cached filesystems are never closed or evicted: other holders may
+    * use them. */
+  def install(conf: Configuration): Unit = {
+    Impls.foreach { case (key, cls) =>
+      val sources = conf.getPropertySources(key)
+      if (sources == null || sources.forall(_ == "core-default.xml"))
+        conf.set(key, cls)
+    }
+    val fs = FileSystem.get(URI.create("file:///"), conf)
+    if (conf.get("fs.file.impl") == classOf[GraftLocalFileSystem].getName &&
+        !fs.isInstanceOf[GraftLocalFileSystem])
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"file: resolves to the cached ${fs.getClass.getName}, not " +
+        s"${classOf[GraftLocalFileSystem].getName}: the JVM resolved file: " +
+        "before this session (e.g. Spark's event log on a file: dir), so " +
+        "local writes fork a chmod per file. Set " +
+        Impls.map { case (k, c) => s"spark.hadoop.$k=$c" }.mkString(" and ") +
+        " when the SparkContext is created; they take effect at context start.")
   }
 }

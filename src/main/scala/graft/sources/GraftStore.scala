@@ -145,13 +145,23 @@ object GraftStore {
 
   /** Driver-side pool for a commit's two independent write legs (daemon
     * threads; Spark handles concurrent job submission). */
-  private lazy val commitPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-commit-leg")
-        t.setDaemon(true)
-        t
-      }))
+  private lazy val commitPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newCachedThreadPool(r => {
+      val t = new Thread(r, "graft-commit-leg")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Run one commit leg on [[commitPool]] under the CALLER's active
+    * session and Spark local properties (job group, description, job
+    * tags, scheduler pool, SQL execution id). A pooled thread otherwise
+    * keeps the properties it inherited from whichever statement created
+    * it, and the leg's jobs would carry that stale statement's. */
+  private def commitLeg[A](spark: SparkSession)(body: => A)
+      : java.util.concurrent.CompletableFuture[A] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      commitPool)(body)
 
   private def metaPath(dir: String): Path = Paths.get(dir, "_meta.json")
   private def pointerPath(dir: String): Path = Paths.get(dir, "_current")
@@ -348,6 +358,74 @@ object GraftStore {
   private def bloomOptions(meta: GraftTableMeta): Map[String, String] =
     meta.bloomCols
       .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
+
+  /** Write `df` as parquet under `out`, one directory level per
+    * `partCols` (the `partitionBy` layout). A `small` batch whose rows the
+    * driver already holds ([[localRows]]) is written on the driver by
+    * [[writeOnDriver]], with no Spark job; any other batch by a Spark
+    * write, a small one coalesced to one task (one file per slot, no
+    * exchange) and a large one rebalanced on `partCols`. `distinct`
+    * deduplicates the rows first; a small batch coalesces BEFORE the
+    * distinct, since one partition already satisfies the aggregate's
+    * distribution and no exchange (and no second AQE job) is planned. */
+  private def writeSlices(spark: SparkSession, df: DataFrame, out: String,
+      partCols: Seq[String], options: Map[String, String], small: Boolean,
+      distinct: Boolean = false): Unit =
+    (if (small) localRows(df) else None) match {
+      case Some(rows) => writeOnDriver(spark, df.schema,
+        if (distinct) rows.distinct else rows, out, partCols, options)
+      case None =>
+        val one = if (small) df.coalesce(1) else df
+        val deduped = if (distinct) one.distinct() else one
+        (if (small) deduped else deduped.hint("rebalance", partCols.map(col): _*))
+          .write.options(options).partitionBy(partCols: _*).parquet(out)
+    }
+
+  /** The driver-side write: `rows` (of `schema`) through Spark's own
+    * parquet writer (`ParquetFileFormat.prepareWrite` → one
+    * `OutputWriter` per slot, under the session's Hadoop conf plus
+    * `options`), one `part-<n>-<uuid>` file per `partCols` slot, slot dirs
+    * named as Spark names them. A write without `partCols` always writes
+    * one file, an empty one for no rows, as Spark's does. There is no
+    * output committer: every caller writes into a writer-private dir (a
+    * version build dir or the changelog staging dir) that the commit
+    * publishes by rename. */
+  private def writeOnDriver(spark: SparkSession, schema: StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow], out: String,
+      partCols: Seq[String], options: Map[String, String]): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
+    val partIdx = partCols.map(schema.fieldIndex)
+    val dataIdx = schema.fields.indices.filterNot(partIdx.contains)
+    val dataSchema = StructType(dataIdx.map(schema.fields(_)))
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConfWithOptions(options))
+    val factory = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().prepareWrite(spark, job, options, dataSchema)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    val name = s"${java.util.UUID.randomUUID()}${factory.getFileExtension(ctx)}"
+    // slot dir values as Spark's partitioned write renders them
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val partStr = partIdx.map(i => Cast(BoundReference(i,
+      schema.fields(i).dataType, nullable = true), StringType, tz))
+    val slots =
+      if (partCols.isEmpty) Seq("" -> rows)
+      else rows.groupBy(r => partCols.zip(partStr).map { case (c, e) =>
+          org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .getPartitionPathString(c, Option(e.eval(r)).map(_.toString).orNull)
+        }.mkString("", "/", "/")).toSeq
+    Files.createDirectories(Paths.get(out))
+    slots.zipWithIndex.foreach { case ((slot, rs), n) =>
+      val w = factory.newInstance(s"$out/${slot}part-$n-$name", dataSchema, ctx)
+      val data = new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(dataIdx.size)
+      try rs.foreach { r =>
+        dataIdx.indices.foreach(j => data.update(j,
+          r.get(dataIdx(j), dataSchema.fields(j).dataType)))
+        w.write(data)
+      } finally w.close()
+    }
+  }
 
   private def writeBucketMap(buildDir: String,
       map: Map[String, Seq[Long]]): Unit = {
@@ -2707,6 +2785,40 @@ object GraftStore {
       case _ => None
     }
 
+  /** A merge key as the driver-side before-image attach compares it:
+    * catalyst values under the join's equality (signed zeros fold), or
+    * None when a value is null (a null key equals nothing). */
+  private def normalizedKey(k: Seq[Any]): Option[Seq[Any]] =
+    if (k.contains(null)) None
+    else Some(k.map(org.apache.spark.sql.GraftMorScanSupport.normalizeKey))
+
+  /** Filter predicate: the row's merge key ([[normalizedKey]] of the
+    * `children`) is in the broadcast key set. Evaluated in the scan's
+    * tasks; the set ships once per executor as a broadcast variable. */
+  private final case class KeyIn(
+      children: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      keys: org.apache.spark.broadcast.Broadcast[Set[Seq[Any]]])
+      extends org.apache.spark.sql.catalyst.expressions.Expression
+      with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+    override def nullable: Boolean = false
+    override def dataType: DataType = BooleanType
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+      normalizedKey(children.map(_.eval(input))).exists(keys.value.contains)
+    override protected def withNewChildrenInternal(
+        c: IndexedSeq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      copy(children = c)
+  }
+
+  /** Collect `df`'s rows as catalyst values (one action, tracked as a SQL
+    * execution like `collect`), with no round trip through external
+    * types. */
+  private def collectInternal(df: DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
   /** Apply a change batch. `changes` columns: [[OpCol]] (one of I/U/D) plus
     * the full table schema (delete rows carry the key columns, the rest
     * null). Returns the committed version.
@@ -2985,26 +3097,11 @@ object GraftStore {
       // changelog never spans a truncation; consumers re-snapshot.
       val chDir = changesStaging(dir, next)
       deleteRecursively(Paths.get(chDir))
-      val nullBefore = {
-        val structType = StructType(meta.schema.fields.map(_.copy(nullable = true)).toSeq)
-        lit(null).cast(structType).as(ChangeBeforeCol)
-      }
       // Files store PHYSICAL names (flat columns AND the before-image's
       // inner fields — the struct cast renames by position), so renames
       // stay metadata-only across the whole changelog history.
       val physBefore = StructType(physicalSchema(meta.schema)
         .fields.map(_.copy(nullable = true)).toSeq)
-      def writeChangelog(df: DataFrame): Unit =
-        // right-size the slice's file count to its data volume — CDC
-        // readers stream every slice, so a 32-task commit must not cost
-        // them 32 near-empty file opens. Small keyed batches coalesce to
-        // one file with NO exchange (the broadcast plan's output is a
-        // handful of tiny cached partitions); everything else rebalances
-        toPhysical(df.withColumn(ChangeBeforeCol,
-            col(ChangeBeforeCol).cast(physBefore)), meta.schema)
-          .transform(d => if (smallKeyed && !allInserts) d.coalesce(1)
-            else d.hint("rebalance"))
-          .write.parquet(chDir)
       // All-insert commits: the data files ARE the changelog rows — the op
       // is the constant 'I' and the before-image the constant NULL, so the
       // data leg writes those two columns into its files (constant-encoded:
@@ -3018,34 +3115,77 @@ object GraftStore {
       // the exact rows+columns the old slice write produced.
       val linkChangelog = allInserts && !overwrite
       val baseTouched = () => readVersion(spark, dir, cur, Some(touched))
-      val changelogLeg: () => Unit = () =>
-        if (allInserts) {
-          writeChangelog(ch.select((OpCol +: cols).map(col) :+ nullBefore: _*)
-            .withColumnRenamed(OpCol, ChangeOpCol)
-            .select((cols :+ ChangeOpCol :+ ChangeBeforeCol).map(col): _*))
-        } else {
-          // small batch: semi-filter the base's before-images down to the
-          // batch's keys through a broadcast of the (bounded) key set,
-          // then broadcast the filtered images into the left-outer attach
-          // — the touched-bucket base is scanned once and never shuffled
-          // (a point UPDATE over a billion-row bucket moves its changed
-          // keys, not the bucket). Large batches keep the shuffle join.
-          val beforeImages0 = baseTouched()
-            .select(struct(cols.map(col): _*).as(ChangeBeforeCol) +:
-              meta.keyCols.map(col): _*)
-          val beforeImages =
-            if (smallKeyed)
-              broadcast(beforeImages0.join(
-                broadcast(ch.select(meta.keyCols.map(col): _*)),
-                meta.keyCols, "left_semi"))
-            else beforeImages0
-          writeChangelog(ch.select((OpCol +: cols).map(col): _*)
-            .join(beforeImages, meta.keyCols, "left_outer")
-            .withColumn(ChangeBeforeCol,
-              when(col(OpCol) === "I", lit(null)).otherwise(col(ChangeBeforeCol)))
-            .withColumnRenamed(OpCol, ChangeOpCol)
-            .select((cols :+ ChangeOpCol :+ ChangeBeforeCol).map(col): _*))
+      // The changelog leg runs only for keyed deltas: an overwrite writes
+      // no slice and an append links its data files (see the legs' launch
+      // below).
+      val changelogLeg: () => Unit = () => {
+        val base = baseTouched()
+        val beforeImages0 = base
+          .select(struct(cols.map(col): _*).as(ChangeBeforeCol) +:
+            meta.keyCols.map(col): _*)
+        // small batch: semi-filter the base's before-images down to the
+        // batch's keys through a broadcast of the (bounded) key set,
+        // then broadcast the filtered images into the left-outer attach
+        // — the touched-bucket base is scanned once and never shuffled
+        // (a point UPDATE over a billion-row bucket moves its changed
+        // keys, not the bucket). Large batches keep the shuffle join.
+        val beforeImages =
+          if (smallKeyed)
+            broadcast(beforeImages0.join(
+              broadcast(ch.select(meta.keyCols.map(col): _*)),
+              meta.keyCols, "left_semi"))
+          else beforeImages0
+        val changed = ch.select((OpCol +: cols).map(col): _*)
+        val slice = toPhysical(changed
+          .join(beforeImages, meta.keyCols, "left_outer")
+          .withColumn(ChangeBeforeCol,
+            when(col(OpCol) === "I", lit(null)).otherwise(col(ChangeBeforeCol)))
+          .withColumnRenamed(OpCol, ChangeOpCol)
+          .select((cols :+ ChangeOpCol :+ ChangeBeforeCol).map(col): _*)
+          .withColumn(ChangeBeforeCol, col(ChangeBeforeCol).cast(physBefore)),
+          meta.schema)
+        // A small batch the driver holds attaches its before-images on
+        // the driver instead: ONE job collects the base rows whose keys
+        // are in the batch (at most one per batch row, keys being
+        // unique), filtered through a broadcast VARIABLE of the key set —
+        // a broadcast join's build side would cost a job of its own — and
+        // the slice goes through the driver-side write. Keys compare as
+        // catalyst values with the join's equality (signed zeros fold, a
+        // key with a null matches nothing), for the key types whose values
+        // compare that way; others keep the join.
+        val keyIdx = meta.keyCols.map(k => cols.indexOf(k))
+        val keyTypes = meta.keyCols.map(k => meta.schema(k).dataType)
+        def keyOf(r: org.apache.spark.sql.catalyst.InternalRow,
+            at: Int): Option[Seq[Any]] =
+          normalizedKey(keyIdx.zip(keyTypes).map { case (i, t) => r.get(at + i, t) })
+        (if (smallKeyed && keyTypes.forall(morKeyTypeOk)) localRows(changed)
+          else None) match {
+          case Some(rows) =>
+            val keys = spark.sparkContext.broadcast(rows.flatMap(keyOf(_, 1)).toSet)
+            val befores =
+              try collectInternal(base.filter(org.apache.spark.sql.GraftSqlShim
+                  .column(KeyIn(meta.keyCols.map(k =>
+                    org.apache.spark.sql.GraftSqlShim.expression(col(k))), keys)))
+                .select(struct(cols.map(col): _*)))
+              finally keys.destroy()
+            val byKey = befores.toSeq.map(_.getStruct(0, cols.size))
+              .flatMap(b => keyOf(b, 0).map(_ -> b)).groupMap(_._1)(_._2)
+            val types = meta.schema.fields.map(_.dataType)
+            val insert = org.apache.spark.unsafe.types.UTF8String.fromString("I")
+            writeOnDriver(spark, slice.schema, rows.flatMap { r =>
+              val op = r.getUTF8String(0)
+              keyOf(r, 1).flatMap(byKey.get).getOrElse(Seq(null)).map { b =>
+                new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+                  (types.indices.map(i => r.get(i + 1, types(i))) :+ op :+
+                    (if (op == insert) null else b)).toArray)
+              }
+            }, chDir, Nil, Map.empty)
+          // right-size the slice's file count to its data volume — CDC
+          // readers stream every slice, so a 32-task commit must not cost
+          // them 32 near-empty file opens
+          case None => writeSlices(spark, slice, chDir, Nil, Map.empty, smallKeyed)
         }
+      }
 
       // Data leg. Append fast path: write only the new rows; every
       // existing bucket's files are hard-linked alongside (part-file names
@@ -3124,28 +3264,19 @@ object GraftStore {
           // the common path pays zero extra passes over the change batch;
           // only the rare over-cap commit discards this small staged write
           // and escalates.
-          // both merge-on-read legs write O(batch) bytes, so a small batch
-          // (same bound as the broadcast legs) coalesces to one task with
-          // no exchange — partitionBy still splits per slot, and one task
-          // per tiny slice beats an AQE rebalance round per write
-          def sizeSlice(df: DataFrame, cols: Seq[Column]): DataFrame =
-            if (smallKeyed) df.coalesce(1) else df.hint("rebalance", cols: _*)
-          sizeSlice(withPartCol(toPhysical(ch.filter(col(OpCol).isin("I", "U"))
-              .select((cols :+ BucketCol).map(col): _*), meta.schema),
-              meta, curPartSpec), layoutCols(meta).map(col))
-            .write.options(bloomOptions(meta))
-            .partitionBy(layoutCols(meta): _*).parquet(buildDir)
-          // the delete slice dedups its keys; a small batch coalesces
-          // BEFORE the distinct — one partition already satisfies the
-          // aggregate's distribution, so no exchange (and no second AQE
-          // job) is planned
-          val removed = ch.filter(col(OpCol).isin("U", "D"))
-            .select((meta.keyCols :+ BucketCol).map(col): _*)
-          (if (smallKeyed) toPhysical(removed.coalesce(1).distinct(), meta.schema)
-            else sizeSlice(toPhysical(removed.distinct(), meta.schema),
-              Seq(col(BucketCol))))
-            .write.partitionBy(BucketCol)
-            .parquet(s"$buildDir/$DvDirName/$DvSeqCol=$next")
+          // both merge-on-read legs write O(batch) bytes: a small batch the
+          // driver holds is written on the driver, a small distributed one
+          // by one task with no exchange (see writeSlices) — partitionBy
+          // still splits per slot. The delete slice dedups its keys.
+          writeSlices(spark, withPartCol(toPhysical(
+              ch.filter(col(OpCol).isin("I", "U"))
+                .select((cols :+ BucketCol).map(col): _*), meta.schema),
+              meta, curPartSpec),
+            buildDir, layoutCols(meta), bloomOptions(meta), smallKeyed)
+          writeSlices(spark, toPhysical(ch.filter(col(OpCol).isin("U", "D"))
+              .select((meta.keyCols :+ BucketCol).map(col): _*), meta.schema),
+            s"$buildDir/$DvDirName/$DvSeqCol=$next", Seq(BucketCol), Map.empty,
+            smallKeyed, distinct = true)
           val newRemoveRows = dvLiveRows(buildDir)
           // subtraction form: dvLiveRows saturates to Long.MaxValue on a
           // corrupt footer, and MaxValue + n would WRAP past the cap —
@@ -3174,16 +3305,15 @@ object GraftStore {
       // commit's latency is then max(legs), not their sum; per-statement
       // overhead matters when a pipeline issues many small commits).
       val rewritten: Set[Int] = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
         val chF =
           if (overwrite || linkChangelog)
-            Future.successful(()) // no separate changelog write
-          else Future(changelogLeg())(commitPool)
-        val dataF = Future(dataLeg())(commitPool)
+            // no separate changelog write
+            java.util.concurrent.CompletableFuture.completedFuture(())
+          else commitLeg(spark)(changelogLeg())
+        val dataF = commitLeg(spark)(dataLeg())
         try {
-          val r = Await.result(dataF, Duration.Inf)
-          Await.result(chF, Duration.Inf)
+          val r = dataF.get()
+          chF.get()
           // link AFTER the data write: the slice is the data files
           if (linkChangelog) linkChangelogSlice(buildDir, chDir)
           r

@@ -38,7 +38,8 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
   *
   * Applying the extensions also installs the fork-free `file:` filesystem
   * ([[graft.fs.GraftLocalFileSystem.install]]) on the SparkContext's
-  * Hadoop configuration, unless the user set one.
+  * Hadoop configuration, unless the user set one, and warns when the JVM
+  * already cached another `file:` class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -110,35 +110,67 @@ class GraftLocalFsSpec extends SparkTestBase {
     assert(chain(e).exists(_.isInstanceOf[ChecksumException]), e)
   }
 
-  test("a session that sets spark.hadoop.fs.file.impl keeps that class") {
-    // a fresh JVM: Hadoop caches `file:` once per JVM, and this one's
-    // session resolved it long ago
+  /** Output of a fresh JVM running [[FileImplSession]] with `confs`:
+    * Hadoop caches `file:` once per JVM, and this one's session resolved
+    * it long ago. */
+  private def freshSession(confs: (String, String)*): Seq[String] = {
     val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
     val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString) ++
       rt.getInputArguments.asScala.filterNot(_.startsWith("-Xmx")) ++
       Seq("-Xmx1g", "-cp", sys.props("java.class.path"),
-        UserFileImplSession.getClass.getName.stripSuffix("$"))
+        FileImplSession.getClass.getName.stripSuffix("$")) ++
+      confs.map { case (k, v) => s"$k=$v" }
     val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
     val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
     assert(p.waitFor(120, TimeUnit.SECONDS) && p.exitValue() == 0, out)
-    val resolved = out.linesIterator.filter(_.matches("a?fs=.*")).toSeq
+    out.linesIterator.toSeq
+  }
+
+  private def resolved(out: Seq[String]): Seq[String] =
+    out.filter(_.matches("a?fs=.*"))
+
+  test("a session that sets spark.hadoop.fs.file.impl keeps that class") {
+    val out = freshSession(
+      "spark.hadoop.fs.file.impl" -> classOf[LocalFileSystem].getName)
     // the key the user left unset still gets the fork-free filesystem
-    assert(resolved === Seq(s"fs=${classOf[LocalFileSystem].getName}",
+    assert(resolved(out) === Seq(s"fs=${classOf[LocalFileSystem].getName}",
       s"afs=${classOf[GraftLocalFs].getName}"))
+  }
+
+  test("an event log on file: caches another class first: one WARN names " +
+      "the spark.hadoop settings, which install the fork-free one") {
+    val eventLog = Seq("spark.eventLog.enabled" -> "true",
+      "spark.eventLog.dir" -> s"file:${tmp("localfs_eventlog")}")
+    val remedy = s"spark.hadoop.fs.file.impl=${classOf[GraftLocalFileSystem].getName}"
+    def warnings(out: Seq[String]) =
+      out.filter(l => l.contains("WARN") && l.contains(remedy))
+    val cached = freshSession(eventLog: _*)
+    // the class Hadoop's service loader registers for file:, not graft's
+    assert(resolved(cached).head !== s"fs=${classOf[GraftLocalFileSystem].getName}")
+    assert(warnings(cached).size === 1, cached.mkString("\n"))
+    val fixed = freshSession(eventLog ++ Seq(
+      "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+        classOf[GraftLocalFs].getName): _*)
+    assert(resolved(fixed) === Seq(s"fs=${classOf[GraftLocalFileSystem].getName}",
+      s"afs=${classOf[GraftLocalFs].getName}"))
+    assert(warnings(fixed).isEmpty, fixed.mkString("\n"))
   }
 }
 
-/** The child JVM of the user-override case: a graft session created with
-  * `spark.hadoop.fs.file.impl` set to Hadoop's stock class; prints the
-  * `file:` classes the JVM then resolves. */
-object UserFileImplSession {
+/** The child JVM of the fresh-session cases: a graft session created with
+  * the `key=value` confs given as arguments; prints the `file:` classes
+  * the JVM then resolves. */
+object FileImplSession {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[1]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[LocalFileSystem].getName)
-      .config("spark.sql.extensions",
-        classOf[graft.sources.GraftExtensions].getName)
+    val spark = args.map(_.split("=", 2)).foldLeft(
+        org.apache.spark.sql.SparkSession.builder()
+          .master("local[1]")
+          .config("spark.ui.enabled", "false")
+          .config("spark.sql.extensions",
+            classOf[graft.sources.GraftExtensions].getName)) {
+        case (b, Array(k, v)) => b.config(k, v)
+      }
       .getOrCreate()
     try {
       val conf = spark.sparkContext.hadoopConfiguration

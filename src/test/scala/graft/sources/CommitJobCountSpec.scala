@@ -1,7 +1,10 @@
 package graft.sources
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 import org.apache.spark.GraftTestBus
@@ -16,15 +19,16 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * Jobs are counted between two drained points of the listener bus.
   *
   * The bounds pin the small-batch commit path: the change batch decoded
-  * on the driver (no decode, persist or touched-set jobs), the delete
-  * slice written in one job, and the delete-slice probe read in one job
-  * with no schema inference. Commit legs and `CALL optimize` read a
-  * version through the same scan and cached delete probe as a query, so
-  * a MERGE over a version whose probe a read already loaded runs no more
-  * jobs than one over a version without live deletes. A small batch that
-  * is not local (here an RDD-backed DataFrame handed to `applyChanges`)
-  * keeps the persisted path and must still be sized small from its
-  * cached plan. */
+  * on the driver (no decode, persist or touched-set jobs), the
+  * after-images, delete slice and changelog slice written on the driver
+  * (no write jobs), the before-images collected in one job, and the
+  * delete-slice probe read in one job with no schema inference. Commit
+  * legs and `CALL optimize` read a version through the same scan and
+  * cached delete probe as a query, so a MERGE over a version whose probe
+  * a read already loaded runs no more jobs than one over a version
+  * without live deletes. A small batch that is not local (here an
+  * RDD-backed DataFrame handed to `applyChanges`) keeps the persisted
+  * path and must still be sized small from its cached plan. */
 class CommitJobCountSpec extends SparkTestBase {
 
   private lazy val cat = "jobcount"
@@ -101,8 +105,8 @@ class CommitJobCountSpec extends SparkTestBase {
     info(s"jobs: MERGE without live deletes $noLive, with live deletes " +
       s"$live, first point read of a new version $firstRead, optimize " +
       s"with live deletes $optimizeLive")
-    assert(noLive <= 8)
-    assert(live <= 8)
+    assert(noLive <= 4)
+    assert(live <= 4)
     assert(firstRead <= 2)
     assert(optimizeLive <= 3)
     // the statements above still produced the right table
@@ -145,5 +149,49 @@ class CommitJobCountSpec extends SparkTestBase {
       .getLong(0) == 5)
     assert(spark.sql(s"SELECT count(*) FROM $cat.dist").head().getLong(0) ==
       6000 + 2 * 5 - 2 * 5)
+  }
+
+  test("a MERGE's commit legs run their jobs under the statement's job group") {
+    warehouse
+    spark.sql(s"DROP TABLE IF EXISTS $cat.grp")
+    spark.sql(s"""CREATE TABLE $cat.grp (k BIGINT NOT NULL, orderkey BIGINT,
+      cents BIGINT, flag STRING) USING graft
+      TBLPROPERTIES ('merge_key'='k', 'buckets'='8', 'merge_mode'='mor')""")
+    spark.sql(s"INSERT INTO $cat.grp SELECT id, id % 97, id * 10, 'N' " +
+      "FROM range(0, 6000)")
+    val sc = spark.sparkContext
+    def mergeUnder(group: String, round: Int): Seq[String] = {
+      val groups = new ConcurrentLinkedQueue[String]()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      }
+      sc.setJobGroup(group, s"merge round $round")
+      GraftTestBus.drain(sc)
+      sc.addSparkListener(l)
+      try {
+        spark.sql(s"""MERGE INTO $cat.grp t USING (SELECT * FROM VALUES
+          (${round * 100}, 1), (${round * 100 + 1}, 2), (${1000000 + round}, 3)
+          AS s(k, cents)) s ON t.k = s.k
+          WHEN MATCHED AND s.cents = 2 THEN DELETE
+          WHEN MATCHED THEN UPDATE SET cents = s.cents
+          WHEN NOT MATCHED THEN INSERT (k, orderkey, cents, flag)
+            VALUES (s.k, 0, s.cents, 'R')""")
+        GraftTestBus.drain(sc)
+      } finally {
+        sc.removeSparkListener(l)
+        sc.clearJobGroup()
+      }
+      groups.asScala.toSeq
+    }
+    // the first MERGE leaves the commit legs' pooled threads idle; the
+    // second reuses them, and its jobs must carry its own group, not one
+    // a pooled thread inherited when it was created
+    assert(mergeUnder("graft-a", 1).nonEmpty)
+    val second = mergeUnder("graft-b", 2)
+    assert(second.nonEmpty)
+    assert(second.forall(_ == "graft-b"), second)
+    assert(spark.sql(s"SELECT cents FROM $cat.grp WHERE k = 200").head()
+      .getLong(0) == 1)
   }
 }

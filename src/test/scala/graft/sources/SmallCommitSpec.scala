@@ -1,12 +1,16 @@
 package graft.sources
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 import org.apache.spark.GraftTestBus
 import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** r16 optimization guard: a keyed commit whose change batch is under the
@@ -19,10 +23,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * The bounds also pick how the staged change batch is decoded: under
   * them on the driver into a local batch, over them by a distributed job
-  * into a persisted batch. Each run asserts the decode it took, so the
-  * diff covers both decodes. The key shapes are a BIGINT key and a
-  * composite (STRING, DATE) key; under merge-on-read the latter's delete
-  * probe compares the driver-decoded key values with the scanned rows as
+  * into a persisted batch; and how the merge-on-read after-images and
+  * delete slices and the changelog slices are written: under them on the
+  * driver, over them by Spark jobs. Each run asserts the decode and the
+  * writer it took, so the diff covers both decodes and both writers. The
+  * key shapes are a BIGINT key and a composite (STRING, DATE) key; under
+  * merge-on-read the latter's delete probe compares the driver-decoded key values with the scanned rows as
   * catalyst values, and its reads must match copy-on-write's. */
 class SmallCommitSpec extends SparkTestBase {
 
@@ -82,37 +88,60 @@ class SmallCommitSpec extends SparkTestBase {
       .collect().toSeq.map(_.toString).sorted
   }
 
-  /** Whether a query run by `body` read a change batch decoded by a
-    * distributed job and persisted (an in-memory relation over an RDD
-    * scan) — the decode a batch over the bounds takes. */
-  private def persistedDecode(body: => Unit): Boolean = {
+  /** What the commits of `body` ran: whether a query read a change batch
+    * decoded by a distributed job and persisted (an in-memory relation
+    * over an RDD scan — the decode a batch over the bounds takes), and
+    * the output dirs of the Spark file writes. A batch under the bounds
+    * writes its merge-on-read after-images, delete slice and changelog
+    * slice on the driver, with no Spark write. */
+  private final case class Commits(persistedDecode: Boolean,
+      sparkWrites: Seq[String])
+
+  private def commitsOf(body: => Unit): Commits = {
     val seen = new AtomicBoolean(false)
+    val writes = new ConcurrentLinkedQueue[String]()
     val l = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
         if (qe.optimizedPlan.collectWithSubqueries {
               case m: InMemoryRelation
                   if m.cacheBuilder.cachedPlan.exists(_.isInstanceOf[RDDScanExec]) => m
             }.nonEmpty) seen.set(true)
+        qe.logical.foreach {
+          case w: InsertIntoHadoopFsRelationCommand => writes.add(w.outputPath.toString)
+          case _ =>
+        }
+      }
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
     try { body; GraftTestBus.drain(spark.sparkContext) }
     finally spark.listenerManager.unregister(l)
-    seen.get
+    Commits(seen.get, writes.asScala.toSeq)
   }
+
+  private def sliceWrites(c: Commits, dirPart: String): Int =
+    c.sparkWrites.count(_.contains(dirPart))
 
   for (key <- Seq(bigintKey, stringDateKey); mode <- Seq("cow", "mor")) {
     val tag = if (key == bigintKey) mode else s"${mode}_sd"
     test(s"broadcast and shuffle commit legs produce identical " +
         s"content and changelog ($mode${key.label})") {
       // default bounds: every batch here is small -> driver decode,
-      // broadcast legs
-      assert(!persistedDecode(run(s"bc_$tag", mode, key)))
+      // broadcast legs, driver-side slice writes: the only Spark writes
+      // are the INSERT's and, on copy-on-write, the three rewrites
+      val small = commitsOf(run(s"bc_$tag", mode, key))
+      assert(!small.persistedDecode)
+      assert(small.sparkWrites.size == (if (mode == "mor") 1 else 4), small)
+      assert(sliceWrites(small, "/_changes/") == 0, small)
       // rows bound 0: every batch is "large" -> distributed decode,
-      // persisted batch, shuffle legs
-      withConf("spark.graft.commit.broadcastMaxRows" -> "0") {
-        assert(persistedDecode(run(s"sh_$tag", mode, key)))
+      // persisted batch, shuffle legs, Spark slice writes
+      val large = withConf("spark.graft.commit.broadcastMaxRows" -> "0") {
+        commitsOf(run(s"sh_$tag", mode, key))
       }
+      assert(large.persistedDecode)
+      assert(sliceWrites(large, "/_changes/") == 3, large)
+      assert(sliceWrites(large, s"/${GraftStore.DvDirName}/") ==
+        (if (mode == "mor") 3 else 0), large)
       assert(content(s"bc_$tag", key) == content(s"sh_$tag", key))
       assert(changes(s"bc_$tag", key) == changes(s"sh_$tag", key))
       assert(content(s"bc_$tag", key).nonEmpty)
