@@ -71,7 +71,7 @@ object Bench {
     * × 8 buckets ≈ 1200 leaf dirs), then runs a batch of pruned one-day
     * aggregates and partition∩bucket point lookups across the span. With
     * [[org.apache.spark.sql.GraftSlotFileIndex]] authoring the scan's file
-    * listing from the `_bucketmap`/`_fileseq` manifests, each pruned query
+    * listing from the version manifests, each pruned query
     * plans from metadata in milliseconds regardless of slot count; a
     * regression to plan-time directory listing multiplies this row several
     * times over (the pre-r12 shape measured ~4 s PER QUERY at 2k slots;

@@ -709,7 +709,7 @@ object SourceQueries {
       FROM latest WHERE user_id IN (1, 2, 3) ORDER BY user_id""")),
 
     // ----- S25: zone-map file skipping, with measured plan evidence.
-    // Every store commit writes `_stats` — per-file min/max/nullCount
+    // Every store commit's manifest records per-file min/max/nullCount
     // column statistics read from the parquet FOOTERS of its new files
     // (hard-linked carry-over reuses the previous manifest's entries, so
     // manifest cost tracks the commit, not the table). The scan drops
@@ -960,7 +960,7 @@ object SourceQueries {
     // rewrites a populated table under a NEW hash fan-out in one claimed,
     // changelog-less commit, and every downstream layout consumer follows:
     // merge-key bucket pruning, SPJ partitioning and the CoW write path
-    // all derive the count from the new version's `_buckets` marker (old
+    // all derive the count from the new version's manifest (old
     // versions keep their own — time travel prunes correctly under the
     // layout each version was written with). This is the operational
     // escape hatch a CREATE-time fan-out needs at 100 TB: when buckets
@@ -1653,8 +1653,7 @@ object SourceQueries {
       s.sql(s"CALL graftdml.expire_partitions(table => 'part_t', " +
         s"below => '${d1.toEpochDay}')")
       val v = G.currentVersion(dir)
-      val metadataOnly = graft.sources.GraftStats
-        .listDataFiles(G.versionDir(dir, v)).isEmpty
+      val metadataOnly = G.manifestOf(G.versionDir(dir, v)).files.isEmpty
       val boundary = G.isBoundary(dir, v) && !G.hasChangelog(dir, v)
       // time travel still reads the full pre-retention snapshot
       val ttFull = s.sql(
@@ -3876,8 +3875,8 @@ object SourceQueries {
     // changes a time-partitioned table's GRAIN (days(ts) -> hours(ts))
     // for FUTURE commits as ONE metadata-only commit: no data file
     // touched, no changelog slice, not a boundary. Old owner dirs keep
-    // the ordinals they were written with under per-version `_partspec`
-    // markers (the `_buckets` pattern mirrored), so old versions keep
+    // the ordinals they were written with under the partition spec each
+    // version's manifest records (like its bucket count), so old versions keep
     // PRUNING under their own grain; mixed-era snapshots read exactly
     // with pruning paused (the source-column predicate always stays in
     // the residue), and `CALL rebucket` re-grains everything so pruning
@@ -3988,8 +3987,8 @@ object SourceQueries {
 
     // ----- S33: manifest-referenced commit metadata — the driver gate for
     // the r12 store layout. A commit's version dir physically holds ONLY
-    // the files that commit wrote plus a `_bucketmap` manifest (slot →
-    // owner versions); untouched buckets are carried by REFERENCE, so
+    // the files that commit wrote plus a manifest (slot → owner
+    // versions); untouched buckets are carried by REFERENCE, so
     // commit cost is O(changed files) at any table size and scans resolve
     // the full snapshot across owner dirs with zero plan-time listing.
     // The gate runs INSERT + two single-key UPDATEs + a single-key DELETE

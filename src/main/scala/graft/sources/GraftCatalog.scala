@@ -270,7 +270,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
 
   /** `TIMESTAMP AS OF <ts>` time travel: the latest version committed at
     * or before the timestamp (micros from Spark), resolved off each
-    * version's `_committed_at` stamp. */
+    * version's manifest commit stamp. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val dir = dirOf(ident) // time travel works on branch addresses too
     // same txn fallback as the version overload: a timestamp before the
@@ -1122,7 +1122,7 @@ object GraftCatalog {
   * for files without manifest entries (unreadable footers). Column names are
   * mapped physical→LOGICAL where the current schema knows them
   * (tombstoned physical columns show as-is). Driver-local: rows ∝ files ×
-  * columns, directory + manifest metadata only, never data. */
+  * columns, manifest metadata only, never data. */
 final class GraftFilesTable(tableName: String, dir: String)
     extends Table with SupportsRead {
   import org.apache.spark.sql.types._
@@ -1152,11 +1152,8 @@ final class GraftFilesTable(tableName: String, dir: String)
         val physToLog = meta.schema.fields
           .map(f => GraftStore.physicalName(f) -> f.name).toMap
         val cur = GraftStore.currentVersion(dir)
-        def mk(rel: String, bucket: Int, abs: java.nio.file.Path,
+        def mk(rel: String, bucket: Int, size: Long,
             col: Option[(String, GraftStats.ColStats)]) = {
-          val size =
-            try java.nio.file.Files.size(abs)
-            catch { case _: Exception => 0L }
           // no tuple destructuring here: a typed pattern (even `: Any`)
           // never matches null in Scala 2.13, so the stats-less legs would
           // MatchError instead of producing the documented null row
@@ -1172,25 +1169,12 @@ final class GraftFilesTable(tableName: String, dir: String)
           new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
             Array[Any](UTF8String.fromString(rel), bucket, size) ++ tail)
         }
-        // live files resolved through the bucket manifest; each file's
-        // stats come from its OWNING version dir's zone-map manifest
-        val manifests = scala.collection.mutable.Map
-          .empty[String, Map[String, GraftStats.FileStats]]
-        GraftStore.resolvedSlotDirs(dir, cur).flatMap { case (slot, ds) =>
-          val b = GraftStore.slotBucket(slot)
-          ds.flatMap { d =>
-            val ownerDir = d.stripSuffix(s"/$slot")
-            val manifest = manifests.getOrElseUpdate(ownerDir,
-              GraftStats.readManifest(ownerDir))
-            GraftStore.listBucketFiles(d).flatMap { f =>
-              val rel = s"$slot/${f.getFileName}"
-              manifest.get(rel) match {
-                case Some(cols) if cols.nonEmpty =>
-                  cols.toSeq.sortBy(_._1).map(c => mk(rel, b, f, Some(c)))
-                case _ => Seq(mk(rel, b, f, None))
-              }
-            }
-          }
+        // live files resolved through the version manifests; each file's
+        // size and stats come from its OWNING version dir's manifest
+        GraftStore.snapshotFileEntries(dir, cur).flatMap { e =>
+          val b = GraftStore.slotBucket(e.slot)
+          if (e.stats.isEmpty) Seq(mk(e.rel, b, e.size, None))
+          else e.stats.toSeq.sortBy(_._1).map(c => mk(e.rel, b, e.size, Some(c)))
         }.toArray
       }
     }
@@ -1342,16 +1326,16 @@ final class GraftVersionsTable(tableName: String, dir: String)
           .groupMap(_._2)(_._1).view.mapValues(_.sorted).toMap
         GraftStore.listVersions(dir).map { v =>
           val (nb, nf, bytes) = GraftStore.versionStats(dir, v)
-          // `buckets` = the fan-out this version was WRITTEN with (the
-          // layout marker — CALL rebucket changes it across versions);
+          // `buckets` = the fan-out this version was WRITTEN with (its
+          // manifest's layout — CALL rebucket changes it across versions);
           // `n_buckets` = non-empty bucket dirs it actually has;
           // `committed_at` = the stamp TIMESTAMP AS OF resolves against;
           // `is_boundary` = restore/truncate/overwrite snapshot boundary
           // (a CDC fold may not cross it — the stream fails loudly there);
           // `live_deletes` = merge-on-read delete rows still applied at
           // scan time (0 on a compacted or copy-on-write version — the
-          // operator signal for scheduling OPTIMIZE; footer counts only,
-          // cap-bounded by the write side)
+          // operator signal for scheduling OPTIMIZE; the manifest's
+          // counts, cap-bounded by the write side)
           new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
             Array[Any](v, v == cur, GraftStore.committedAt(dir, v) * 1000L,
               GraftStore.versionBuckets(dir, v),
@@ -1730,8 +1714,8 @@ object GraftTable {
     val physSchema = GraftStore.physicalSchema(meta.schema)
     val l2p = GraftStore.logToPhys(meta.schema)
     val p2l = l2p.map(_.swap)
-    // the fan-out is a property of the scanned VERSION's layout (the
-    // per-version `_buckets` marker — CALL rebucket changes it across
+    // the fan-out is a property of the scanned VERSION's layout (its
+    // manifest's bucket count — CALL rebucket changes it across
     // versions), so pruning and SPJ derive from it, never from meta alone
     val vBuckets = GraftStore.versionBuckets(dir, version)
     val derivations = org.apache.spark.sql.GraftDerivations(

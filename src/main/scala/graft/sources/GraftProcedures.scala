@@ -200,7 +200,7 @@ object GraftProcedures {
   }
 
   /** The `maintenance_report` rows for one table: (signal, triggered,
-    * observed, threshold, action). Metadata-only — manifests, footers and
+    * observed, threshold, action). Metadata-only — version manifests and
     * the stats file; never a data read, never a commit. */
   private[sources] def maintenanceReport(dir: String,
       maxFilesPerSlot: Int): Array[InternalRow] = {

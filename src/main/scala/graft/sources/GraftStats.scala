@@ -26,11 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * file opens (parquet's own row-group skipping still applies below, but
   * only after every file was listed, opened, and footer-read by a task).
   *
-  * Mechanics: every commit writes `_stats` into its version dir — one line
-  * per (file, top-level primitive column) with min/max/nullCount read from
-  * the parquet FOOTERS of the files that version dir holds (metadata-only,
-  * cost ∝ files written); carried files keep their entries in their owner
-  * versions' manifests, so manifest cost tracks the commit, not the table.
+  * Mechanics: every commit records, in its version manifest
+  * ([[GraftStore.VersionManifest]]), one entry per (file, top-level
+  * primitive column) with min/max/nullCount read from the parquet FOOTERS
+  * of the files that version dir holds (metadata-only, cost ∝ files
+  * written); carried files keep their entries in their owner versions'
+  * manifests, so manifest cost tracks the commit, not the table.
   * The scan side ([[org.apache.spark.sql.GraftScan]]) drops whole
   * files whose stats PROVE no row can satisfy the pushed conjuncts. Absent
   * entries — unreadable footers, unsupported physical types (INT96,
@@ -46,8 +47,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * (/root/reference/module/internal/roblox/task_scheduler/scheduler.cpp);
   * a Spark-first store wants plan-time skipping, hence the manifest. */
 object GraftStats {
-
-  val ManifestName = "_stats"
 
   /** One column's footer aggregate for one file. `min`/`max` are EXTERNAL
     * Scala values (Long / Double / String / Boolean); `kind` tags the
@@ -94,22 +93,6 @@ object GraftStats {
         }.toMap
       finally pool.shutdown()
     }
-  }
-
-  /** Write `buildDir/_stats` from per-file entries: a commit's own
-    * [[footerManifest]], or — for a materialized copy (clone/RTAS) — the
-    * entries already in the source owners' manifests (no footer
-    * re-reads). */
-  def writeManifest(buildDir: String,
-      entries: Map[String, FileStats]): Unit = {
-    val sb = new StringBuilder
-    entries.toSeq.sortBy(_._1).foreach { case (rel, fs) =>
-      fs.foreach { case (col, cs) =>
-        sb.append(encodeLine(rel, col, cs)).append('\n')
-      }
-    }
-    Files.write(Paths.get(buildDir, ManifestName),
-      sb.toString.getBytes(StandardCharsets.UTF_8))
   }
 
   /** Relative paths (`gbucket=N/part-...`) of the data files in a version
@@ -328,44 +311,29 @@ object GraftStats {
     }
   }
 
-  private def encodeLine(rel: String, col: String, cs: ColStats): String =
-    Seq(rel, col, cs.kind, cs.nullCount.toString, cs.rowCount.toString,
-      enc(cs.kind, cs.min), enc(cs.kind, cs.max)).mkString("\t")
+  /** One column's stats as manifest fields: kind, null count, row count,
+    * min, max. */
+  private[sources] def encodeColStats(cs: ColStats): Seq[String] =
+    Seq(cs.kind, cs.nullCount.toString, cs.rowCount.toString,
+      enc(cs.kind, cs.min), enc(cs.kind, cs.max))
 
-  /** Exact row count of a version from its manifest — every data file
-    * covered with a known per-file rowCount — or None (a file whose
-    * footer read failed, or a missing manifest). Metadata-only; this is the
-    * `numRows` leg of the scan's `estimateStatistics`, so Spark's
-    * join-size estimation sees an exact count instead of guessing from
-    * compressed bytes. */
-  def manifestRowCount(versionDir: String): Option[Long] = {
-    val manifest = readManifest(versionDir)
-    val files = listDataFiles(versionDir)
-    if (files.isEmpty) return Some(0L)
-    val perFile = files.map { rel =>
-      manifest.get(rel).flatMap(
-        _.values.map(_.rowCount).filter(_ >= 0).headOption)
+  /** The inverse of [[encodeColStats]]; any other shape is an
+    * IllegalArgumentException. */
+  private[sources] def decodeColStats(fields: Seq[String]): ColStats =
+    fields match {
+      case Seq(kind @ (KindLong | KindDouble | KindString | KindBool), nulls,
+          rows, mn, mx) =>
+        ColStats(kind, nulls.toLong, rows.toLong, dec(kind, mn), dec(kind, mx))
+      case _ => throw new IllegalArgumentException(
+        s"column stats ${fields.mkString("[", ",", "]")}")
     }
-    if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten.sum)
-  }
 
-  /** Read a version dir's manifest; empty when absent (nothing skips). */
-  def readManifest(versionDir: String): Map[String, FileStats] = {
-    val p = Paths.get(versionDir, ManifestName)
-    if (!Files.exists(p)) return Map.empty
-    Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).flatMap { line =>
-        line.split('\t') match {
-          case Array(rel, col, kind, nulls, rows, mn, mx) =>
-            try Some((rel, col, ColStats(kind, nulls.toLong, rows.toLong,
-              dec(kind, mn), dec(kind, mx))))
-            catch { case _: Exception => None }
-          case _ => None
-        }
-      }
-      .groupBy(_._1)
-      .map { case (rel, es) => rel -> es.map(e => e._2 -> e._3).toMap }
-  }
+  /** A version dir's own files' zone maps, from its sealed manifest
+    * (files without usable footer stats have no entry). */
+  def readManifest(versionDir: String): Map[String, FileStats] =
+    GraftStore.manifestOf(versionDir).files.collect {
+      case (rel, f) if f.stats.nonEmpty => rel -> f.stats
+    }
 
   // ------------------------------------------------- table column stats
   //

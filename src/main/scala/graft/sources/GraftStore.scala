@@ -62,18 +62,19 @@ final case class GraftTableMeta(schema: StructType, keyCols: Seq[String],
   *   <dir>/_current              atomic pointer: current version number
   *   <dir>/_incarnation          identity stamp, written at creation
   *   <dir>/v0000000007/          one immutable directory per version:
-  *     _bucketmap                  slot → owner versions (the manifest)
-  *     _fileseq                    own file → write version, size
-  *     _stats                      own files' zone maps
-  *     _buckets, _committed_at     bucket fan-out, commit instant
-  *     _partspec                   partition spec (partitioned tables)
+  *     _manifest                   the sealed version manifest: bucket
+  *                                 fan-out, commit instant, partition
+  *                                 spec, slot → owner versions, own files
+  *                                 (write version, size, zone maps), live
+  *                                 delete-slice files with row counts
   *     gbucket=<k>/part-*.parquet  ONLY the files THIS commit wrote
+  *     _dv/dseq=<s>/gbucket=<k>/   live merge-on-read delete slices
   *   <dir>/_staging/<queryId>/   delta-write staging frames
   * }}}
   *
   * Commit = copy-on-write at BUCKET granularity: a change batch only
   * rewrites the buckets its keys hash into. Untouched buckets carry by
-  * MANIFEST REFERENCE — the new version's `_bucketmap` names, per bucket,
+  * MANIFEST REFERENCE — the new version's manifest names, per bucket,
   * the versions whose dirs physically hold its live files — so commit
   * metadata costs O(changed files + buckets), never O(table files)
   * (hard-linking every untouched file forward would make that driver-side
@@ -252,26 +253,180 @@ object GraftStore {
     else None
   }
 
-  // -------------------------------------------------- slot-owner manifest
+  // ------------------------------------------------------ version manifest
   //
   // Commit metadata is O(changed files + slots), never O(table files): a
-  // version dir physically holds ONLY the files its commit wrote, plus a
-  // `_bucketmap` manifest naming, per SLOT, the versions whose dirs hold
-  // that slot's live files (its OWNERS, ascending — the version of a
-  // file's enclosing dir is by construction the version that wrote it).
-  // A slot is one leaf data directory of the layout: `gbucket=<k>` for an
-  // unpartitioned table, `gpart=<ordinal>/gbucket=<k>` for a PARTITIONED
-  // BY table (partition above bucket — the standard fact-table layout, so
-  // date-grained retention and coarse pruning compose with the key-hash
-  // fan-out). Untouched slots are carried by rewriting one manifest line,
-  // not by re-linking every file — at 100 TB / ~1M files a per-commit
-  // hard-link pass would be an O(table) driver-side cost. Readers resolve
-  // a snapshot to (slot → owner dirs)
-  // and scan those paths directly; expireVersions keeps an old version
-  // dir's referenced slots alive (marked `_expired`, excluded from the
-  // version listing) until no retained snapshot references them.
+  // version dir physically holds ONLY the files its commit wrote, plus ONE
+  // sealed `_manifest` that is the version's whole description — its
+  // layout (bucket fan-out, partition spec), its commit stamp, per SLOT
+  // the versions whose dirs hold that slot's live files (its OWNERS,
+  // ascending — the version of a file's enclosing dir is by construction
+  // the version that wrote it), the dir's own data files (write version,
+  // size, footer zone maps) and the version's live delete-slice files
+  // with their row counts. A slot is one leaf data directory of the
+  // layout: `gbucket=<k>` for an unpartitioned table,
+  // `gpart=<ordinal>/gbucket=<k>` for a PARTITIONED BY table (partition
+  // above bucket — the standard fact-table layout, so date-grained
+  // retention and coarse pruning compose with the key-hash fan-out).
+  // Untouched slots are carried by rewriting one manifest line, not by
+  // re-linking every file — at 100 TB / ~1M files a per-commit hard-link
+  // pass would be an O(table) driver-side cost. Every reader of a
+  // version's contents goes through [[manifestOf]]: a snapshot resolves
+  // to (slot → owner dirs → the owners' listed files) with no directory
+  // listing and no footer read, so a file the manifest does not name is
+  // not part of any version. Only writers list their own build dir and
+  // only sweepers list version dirs. expireVersions keeps an old version
+  // dir's referenced slots (and its manifest) alive, marked `_expired`
+  // and excluded from the version listing, until no retained snapshot
+  // references them.
 
-  val BucketMapName = "_bucketmap"
+  val ManifestName = "_manifest"
+  private val ManifestHeader = "graft-manifest\t1"
+
+  /** One data file a version dir holds: the version that WROTE it (a
+    * materialized clone keeps the original), its size — what scans plan
+    * splits from — and its footer zone maps (empty when the footer had
+    * none usable: the file is then never skipped). */
+  final case class ManifestFile(seq: Long, bytes: Long,
+      stats: GraftStats.FileStats)
+
+  /** A version's sealed manifest. `owners`: slot → owner versions;
+    * `files`: the dir's own data files by path relative to it; `deletes`:
+    * the version's live delete-slice files (relative, under [[DvDirName]])
+    * → row count. */
+  final case class VersionManifest(buckets: Int, committedAt: Long,
+      partSpec: Option[(String, String)], owners: Map[String, Seq[Long]],
+      files: Map[String, ManifestFile], deletes: Map[String, Long]) {
+    /** A version sealed on top of this one: same layout, stamped strictly
+      * after it. `TIMESTAMP AS OF` assumes stamps are MONOTONE per table,
+      * and writers on several hosts stamp from their own clocks — the
+      * clamp makes monotonicity hold by construction. */
+    def next(owners: Map[String, Seq[Long]],
+        files: Map[String, ManifestFile] = Map.empty,
+        deletes: Map[String, Long] = Map.empty): VersionManifest =
+      VersionManifest(buckets,
+        math.max(System.currentTimeMillis(), committedAt + 1), partSpec,
+        owners, files, deletes)
+  }
+
+  private def encodeManifest(m: VersionManifest): String = {
+    val enc = (s: String) => java.net.URLEncoder.encode(s, "UTF-8")
+    val sb = new StringBuilder(ManifestHeader).append('\n')
+    def line(fields: Any*): Unit =
+      sb.append(fields.mkString("\t")).append('\n')
+    line("buckets", m.buckets)
+    line("committed_at", m.committedAt)
+    line("partspec", m.partSpec.map { case (fn, c) => s"$fn:${enc(c)}" }
+      .getOrElse("-"))
+    m.owners.toSeq.sortBy(_._1).foreach { case (slot, os) =>
+      if (os.nonEmpty) line("slot", slot, os.mkString(","))
+    }
+    m.files.toSeq.sortBy(_._1).foreach { case (rel, f) =>
+      line("file", rel, f.seq, f.bytes)
+      f.stats.toSeq.sortBy(_._1).foreach { case (c, cs) =>
+        line(Seq("stat", rel, enc(c)) ++ GraftStats.encodeColStats(cs): _*)
+      }
+    }
+    m.deletes.toSeq.sortBy(_._1).foreach { case (rel, n) =>
+      line("delete", rel, n)
+    }
+    sb.toString
+  }
+
+  /** The one manifest decoder: exactly what [[encodeManifest]] writes.
+    * Anything else — a missing header, an unknown or repeated line, a
+    * field that does not parse, a stat for an unlisted file — fails
+    * loudly instead of being skipped. */
+  private def decodeManifest(vdir: String, text: String): VersionManifest = {
+    def bad(why: String): Nothing = throw new IllegalStateException(
+      s"malformed version manifest in $vdir: $why")
+    val dec = (s: String) => java.net.URLDecoder.decode(s, "UTF-8")
+    val lines = text.split("\n", -1)
+    if (lines.head != ManifestHeader) bad("no manifest header")
+    if (lines.last.nonEmpty) bad("truncated")
+    var buckets = Option.empty[Int]
+    var stamp = Option.empty[Long]
+    var spec = Option.empty[Option[(String, String)]]
+    val owners = scala.collection.mutable.Map.empty[String, Seq[Long]]
+    val files = scala.collection.mutable.Map.empty[String, ManifestFile]
+    val deletes = scala.collection.mutable.Map.empty[String, Long]
+    lines.slice(1, lines.length - 1).foreach { l =>
+      try l.split("\t", -1) match {
+        case Array("buckets", n) if buckets.isEmpty => buckets = Some(n.toInt)
+        case Array("committed_at", t) if stamp.isEmpty => stamp = Some(t.toLong)
+        case Array("partspec", p) if spec.isEmpty =>
+          spec = Some(if (p == "-") None else p.split(":", 2) match {
+            case Array(fn, c) => Some((fn, dec(c)))
+            case _ => bad(s"partition spec '$p'")
+          })
+        case Array("slot", s, os) if !owners.contains(s) =>
+          owners(s) = os.split(',').map(_.toLong).toSeq
+        case Array("file", rel, seq, bytes) if !files.contains(rel) =>
+          files(rel) = ManifestFile(seq.toLong, bytes.toLong, Map.empty)
+        case Array("stat", rel, c, cs @ _*) if files.contains(rel) =>
+          files(rel) = files(rel).copy(stats =
+            files(rel).stats + (dec(c) -> GraftStats.decodeColStats(cs)))
+        case Array("delete", rel, n) if !deletes.contains(rel) =>
+          deletes(rel) = n.toLong
+        case _ => bad(s"unexpected line '$l'")
+      } catch {
+        case e: IllegalArgumentException => bad(s"line '$l': ${e.getMessage}")
+      }
+    }
+    VersionManifest(buckets.getOrElse(bad("no bucket count")),
+      stamp.getOrElse(bad("no commit stamp")),
+      spec.getOrElse(bad("no partition spec line")), owners.toMap,
+      files.toMap, deletes.toMap)
+  }
+
+  /** Write `m` as the manifest of `buildDir` under a temp name, renamed
+    * into place: never through an existing path, which in an adopted
+    * build dir is a hard link to the branch's own manifest. Every version
+    * dir is sealed here and nowhere else — v0 of a CREATE, a clone's
+    * base, every commit, maintenance publish and branch adoption. */
+  private[sources] def sealVersion(buildDir: String,
+      m: VersionManifest): Unit = {
+    val tmp = Paths.get(buildDir,
+      s"$ManifestName.tmp-${java.util.UUID.randomUUID()}")
+    Files.write(tmp, encodeManifest(m).getBytes("UTF-8"))
+    Files.move(tmp, Paths.get(buildDir, ManifestName),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  // a published manifest is immutable, so decoded manifests cache per
+  // version dir: the planner reads layout, owners and stats of several
+  // versions per query. Entries carry the manifest file's identity
+  // (inode, mtime, size): a version-dir path reused by a drop/recreate,
+  // a rebase swap or a branch re-create in ANOTHER process holds a new
+  // file, and a stale entry must never seed a commit's owner map
+  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Any, VersionManifest)]()
+
+  /** The sealed manifest of version dir `vdir` — the one read of a
+    * version's contents. A missing or malformed manifest fails loudly. */
+  def manifestOf(vdir: String): VersionManifest = {
+    val p = Paths.get(vdir, ManifestName)
+    val a = Files.readAttributes(p,
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    val id = (a.fileKey, a.lastModifiedTime, a.size)
+    val hit = manifestCache.get(vdir)
+    if (hit != null && hit._1 == id) return hit._2
+    val e0 = cacheEpoch.get()
+    val m = decodeManifest(vdir, new String(Files.readAllBytes(p), "UTF-8"))
+    if (manifestCache.size > 4096) manifestCache.clear()
+    if (cacheEpoch.get() == e0) manifestCache.put(vdir, (id, m))
+    m
+  }
+
+  /** The slot of a file path relative to its version dir. */
+  private def slotOf(rel: String): String =
+    rel.substring(0, rel.lastIndexOf('/'))
+
+  /** Slot → `v` for every slot `files` has a file in: the owner map of a
+    * version that physically holds its whole snapshot. */
+  private def selfOwned(files: Map[String, ManifestFile],
+      v: Long): Map[String, Seq[Long]] =
+    files.keySet.map(r => slotOf(r) -> Seq(v)).toMap
 
   /** Partition-ordinal directory name (above [[BucketCol]]). Like the
     * bucket column it must NOT start with `_`/`.` (partition discovery
@@ -367,18 +522,21 @@ object GraftStore {
     * exchange) and a large one rebalanced on `partCols`. `distinct`
     * deduplicates the rows first; a small batch coalesces BEFORE the
     * distinct, since one partition already satisfies the aggregate's
-    * distribution and no exchange (and no second AQE job) is planned. */
+    * distribution and no exchange (and no second AQE job) is planned.
+    * Returns the driver-side write's row count per file (relative to
+    * `out`), None after a Spark write. */
   private def writeSlices(spark: SparkSession, df: DataFrame, out: String,
       partCols: Seq[String], options: Map[String, String], small: Boolean,
-      distinct: Boolean = false): Unit =
+      distinct: Boolean = false): Option[Map[String, Long]] =
     (if (small) localRows(df) else None) match {
-      case Some(rows) => writeOnDriver(spark, df.schema,
-        if (distinct) rows.distinct else rows, out, partCols, options)
+      case Some(rows) => Some(writeOnDriver(spark, df.schema,
+        if (distinct) rows.distinct else rows, out, partCols, options))
       case None =>
         val one = if (small) df.coalesce(1) else df
         val deduped = if (distinct) one.distinct() else one
         (if (small) deduped else deduped.hint("rebalance", partCols.map(col): _*))
           .write.options(options).partitionBy(partCols: _*).parquet(out)
+        None
     }
 
   /** The driver-side write: `rows` (of `schema`) through Spark's own
@@ -389,10 +547,12 @@ object GraftStore {
     * one file, an empty one for no rows, as Spark's does. There is no
     * output committer: every caller writes into a writer-private dir (a
     * version build dir or the changelog staging dir) that the commit
-    * publishes by rename. */
+    * publishes by rename. Returns each written file (relative to `out`)
+    * with its row count. */
   private def writeOnDriver(spark: SparkSession, schema: StructType,
       rows: Seq[org.apache.spark.sql.catalyst.InternalRow], out: String,
-      partCols: Seq[String], options: Map[String, String]): Unit = {
+      partCols: Seq[String], options: Map[String, String])
+      : Map[String, Long] = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
     val partIdx = partCols.map(schema.fieldIndex)
     val dataIdx = schema.fields.indices.filterNot(partIdx.contains)
@@ -415,8 +575,9 @@ object GraftStore {
             .getPartitionPathString(c, Option(e.eval(r)).map(_.toString).orNull)
         }.mkString("", "/", "/")).toSeq
     Files.createDirectories(Paths.get(out))
-    slots.zipWithIndex.foreach { case ((slot, rs), n) =>
-      val w = factory.newInstance(s"$out/${slot}part-$n-$name", dataSchema, ctx)
+    slots.zipWithIndex.map { case ((slot, rs), n) =>
+      val rel = s"${slot}part-$n-$name"
+      val w = factory.newInstance(s"$out/$rel", dataSchema, ctx)
       val data = new org.apache.spark.sql.catalyst.expressions
         .GenericInternalRow(dataIdx.size)
       try rs.foreach { r =>
@@ -424,22 +585,13 @@ object GraftStore {
           r.get(dataIdx(j), dataSchema.fields(j).dataType)))
         w.write(data)
       } finally w.close()
-    }
+      rel -> rs.size.toLong
+    }.toMap
   }
 
-  private def writeBucketMap(buildDir: String,
-      map: Map[String, Seq[Long]]): Unit = {
-    val sb = new StringBuilder
-    map.toSeq.sortBy(_._1).foreach { case (slot, vs) =>
-      if (vs.nonEmpty)
-        sb.append(slot).append('\t').append(vs.mkString(",")).append('\n')
-    }
-    Files.write(Paths.get(buildDir, BucketMapName),
-      sb.toString.getBytes("UTF-8"))
-  }
-
-  /** Slots PHYSICALLY present in a version/build dir (its own files only):
-    * `gbucket=k` entries plus `gpart=v/gbucket=k` one level down. */
+  /** Slots PHYSICALLY present in a version dir (its own files only):
+    * `gbucket=k` entries plus `gpart=v/gbucket=k` one level down — the
+    * sweeper's view ([[expireVersions]]), never a reader's. */
   private[sources] def localSlots(vdir: String): Seq[String] = {
     val p = Paths.get(vdir)
     if (!Files.isDirectory(p)) return Seq.empty
@@ -455,54 +607,18 @@ object GraftStore {
 
   /** Per-slot owner versions of version `v` (ascending). */
   def ownersOf(dir: String, v: Long): Map[String, Seq[Long]] =
-    readBucketMap(versionDir(dir, v))
-
-  private def readBucketMap(vdir: String): Map[String, Seq[Long]] =
-    Files.readAllLines(Paths.get(vdir, BucketMapName),
-        java.nio.charset.StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).flatMap { line =>
-        line.split('\t') match {
-          case Array(slot, vs) =>
-            try Some(slot -> vs.split(',').map(_.toLong).toSeq)
-            catch { case _: Exception => None }
-          case _ => None
-        }
-      }.toMap
-
-  /** Physical slot directories of a snapshot: slot → the owner versions'
-    * dirs (existing ones only). */
-  def resolvedSlotDirs(dir: String, v: Long): Seq[(String, Seq[String])] =
-    ownersOf(dir, v).toSeq
-      .sortBy(_._1)
-      .map { case (s, os) =>
-        s -> os.map(o => s"${versionDir(dir, o)}/$s")
-          .filter(d => Files.isDirectory(Paths.get(d)))
-      }
-      .filter(_._2.nonEmpty)
-
-  /** Data files of one physical slot dir (no recursion — slot dirs hold
-    * only files). */
-  private[sources] def listBucketFiles(slotDir: String): Seq[Path] =
-    listDir(Paths.get(slotDir))(_.filter { f =>
-      val n = f.getFileName.toString
-      Files.isRegularFile(f) && !n.startsWith(".") && !n.startsWith("_")
-    }.toSeq)
+    manifestOf(versionDir(dir, v)).owners
 
   /** ABSOLUTE paths of every live data file of a snapshot, resolved
-    * through the slot manifest (spanning owner version dirs). */
+    * through the manifests (spanning owner version dirs). */
   def snapshotFiles(dir: String, v: Long): Seq[String] =
-    resolvedSlotDirs(dir, v).flatMap { case (_, ds) =>
-      ds.flatMap(d => listBucketFiles(d).map(_.toString))
-    }
+    snapshotFileEntries(dir, v).map(_.path)
 
   /** Per-bucket live data-file count of a snapshot (summed over a
     * partitioned bucket's slots). */
   def bucketFileCounts(dir: String, v: Long): Map[Int, Int] =
-    resolvedSlotDirs(dir, v)
-      .groupBy { case (s, _) => slotBucket(s) }
-      .map { case (b, entries) =>
-        b -> entries.flatMap(_._2).map(d => listBucketFiles(d).size).sum
-      }
+    snapshotFileEntries(dir, v).groupBy(e => slotBucket(e.slot))
+      .map { case (b, es) => b -> es.size }
 
   /** Per-SLOT live data-file count of a snapshot — the fragmentation
     * signal [[optimize]] acts on. Slot-scoped on purpose: on a partitioned
@@ -511,67 +627,51 @@ object GraftStore {
     * as permanently fragmented and compaction would rewrite whole buckets
     * across all history instead of just the hot slots. */
   def slotFileCounts(dir: String, v: Long): Map[String, Int] =
-    resolvedSlotDirs(dir, v).map { case (s, ds) =>
-      s -> ds.map(d => listBucketFiles(d).size).sum
-    }.toMap
+    snapshotFileEntries(dir, v).groupBy(_.slot)
+      .map { case (s, es) => s -> es.size }
 
-  /** Merged per-file write-version map of a snapshot: each owner dir's
-    * local `_fileseq` (rel → version), rel paths being identical relative
-    * to whichever version dir physically holds the file — exactly how the
-    * scan extracts them from file paths. */
-  def resolvedFileSeq(dir: String, v: Long): Map[String, Long] = {
-    val owners = ownersOf(dir, v).values.flatten.toSet + v
-    owners.toSeq.sorted.foldLeft(Map.empty[String, Long])(
-      (acc, o) => acc ++ readFileSeq(versionDir(dir, o)))
-  }
+  /** Per-file write-version map of a snapshot, keyed by the file's path
+    * relative to whichever version dir holds it — exactly how the scan
+    * extracts it from file paths. */
+  def resolvedFileSeq(dir: String, v: Long): Map[String, Long] =
+    snapshotFileEntries(dir, v).map(e => e.rel -> e.file.seq).toMap
 
-  /** One live file of a snapshot, with its zone-map manifest entry (from
-    * the owning version dir) when one exists. */
+  /** One live file of a snapshot: its slot, its path relative to and
+    * absolute under the owner version dir holding it, and that owner's
+    * manifest entry. */
   final case class SnapshotFile(slot: String, rel: String, path: String,
-      size: Long, stats: Option[GraftStats.FileStats]) {
-    def rowCount: Option[Long] =
-      stats.flatMap(_.values.map(_.rowCount).filter(_ >= 0).headOption)
+      file: ManifestFile) {
+    def size: Long = file.bytes
+    def stats: GraftStats.FileStats = file.stats
+    def rowCount: Option[Long] = stats.values.map(_.rowCount).find(_ >= 0)
   }
 
   // published version dirs are immutable, so the resolved (file, stats)
   // view of a snapshot caches per version dir — the planner may ask for
   // statistics several times per query and must not pay the O(live files)
-  // metadata walk each time (same discipline as dvProbeCache)
+  // resolution each time (same discipline as dvProbeCache)
   private val snapshotFilesCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[SnapshotFile]]()
 
-  /** Every live data file of snapshot (`dir`, `v`) with its stats entry —
-    * ONE resolution walk, cached per immutable version dir; the shared
-    * backbone of row counting, match estimation and manifest merging. */
+  /** Every live data file of snapshot (`dir`, `v`): each slot of `v`'s
+    * manifest, each owner of the slot, each file the owner's manifest
+    * lists in that slot. ONE resolution, cached per immutable version
+    * dir; the shared backbone of scan planning, row counting, match
+    * estimation and materialization. */
   def snapshotFileEntries(dir: String, v: Long): Seq[SnapshotFile] = {
     val key = versionDir(dir, v)
     val cached = snapshotFilesCache.get(key)
     if (cached != null) return cached
     val epoch0 = cacheEpoch.get()
-    val manifests = scala.collection.mutable.Map
-      .empty[String, Map[String, GraftStats.FileStats]]
-    // per-owner fileseq entries grouped by slot: the manifest, not a
-    // filesystem listing, is the source of the snapshot's file set — at
-    // ~1M files / thousands of slots the per-slot dir listings were the
-    // dominant PLAN-time cost, and a manifest row already carries the
-    // size the scan needs for split planning
     val bySlot = scala.collection.mutable.Map
-      .empty[String, Map[String, Seq[(String, Long)]]]
-    def ownerSlots(od: String): Map[String, Seq[(String, Long)]] =
-      bySlot.getOrElseUpdate(od,
-        readFileSeqFull(od).toSeq.collect {
-          case (rel, (_, bytes)) if rel.lastIndexOf('/') > 0 =>
-            (rel.substring(0, rel.lastIndexOf('/')), rel, bytes)
-        }.groupBy(_._1).map { case (s, es) =>
-          s -> es.map(e => (e._2, e._3))
-        })
+      .empty[Long, Map[String, Seq[(String, ManifestFile)]]]
     val computed: Seq[SnapshotFile] = for {
-      (slot, ds) <- resolvedSlotDirs(dir, v)
-      d <- ds
-      od = ownerDirOf(d, slot)
-      man = manifests.getOrElseUpdate(od, GraftStats.readManifest(od))
-      (rel, bytes) <- ownerSlots(od).getOrElse(slot, Seq.empty)
-    } yield SnapshotFile(slot, rel, s"$od/$rel", bytes, man.get(rel))
+      (slot, os) <- manifestOf(key).owners.toSeq.sortBy(_._1)
+      o <- os
+      od = versionDir(dir, o)
+      (rel, f) <- bySlot.getOrElseUpdate(o, manifestOf(od).files.toSeq
+        .sortBy(_._1).groupBy(e => slotOf(e._1))).getOrElse(slot, Nil)
+    } yield SnapshotFile(slot, rel, s"$od/$rel", f)
     if (snapshotFilesCache.size > 64) snapshotFilesCache.clear()
     if (cacheEpoch.get() == epoch0) snapshotFilesCache.put(key, computed)
     computed
@@ -586,52 +686,33 @@ object GraftStore {
       conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : Option[Long] = {
     val perFile = snapshotFileEntries(dir, v)
-      .filter(e => e.stats.forall(GraftStats.mayContain(conjuncts, _)))
+      .filter(e => GraftStats.mayContain(conjuncts, e.stats))
       .map(_.rowCount)
     if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten.sum)
   }
 
   /** Exact live-row count of a snapshot from the owner dirs' zone-map
-    * manifests — None when any resolved file lacks a footer rowCount. The
+    * entries — None when any resolved file lacks a footer rowCount. The
     * caller gates on live delete slices separately. */
   def snapshotRowCount(dir: String, v: Long): Option[Long] = {
     val perFile = snapshotFileEntries(dir, v).map(_.rowCount)
     if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten.sum)
   }
 
-  /** The version dir that owns slot dir `d` (strips the slot's one or two
-    * path segments). */
-  private def ownerDirOf(d: String, slot: String): String =
-    d.stripSuffix(s"/$slot")
-
-  /** Owner VERSION NUMBER of a slot dir. */
-  private def ownerVersionOf(d: String, slot: String): Long =
-    Paths.get(ownerDirOf(d, slot)).getFileName.toString.drop(1).toLong
-
   /** Hard-link EVERY live file of snapshot (`srcDir`, `srcV`) into
     * `buildDir`, flattening multi-owner slots into self-contained slot
     * dirs — the cross-table materialization clone/RTAS need (their source
     * dirs get dropped or evolve independently, so manifest references
-    * would dangle). Returns rel → write version for the linked files so
-    * the caller can persist seqs that keep delete ordering meaningful. */
+    * would dangle). Returns the linked files' manifest entries, keeping
+    * their ORIGINAL write versions so delete ordering stays meaningful. */
   private def materializeInto(srcDir: String, srcV: Long,
-      buildDir: String): Map[String, Long] = {
-    val seq = resolvedFileSeq(srcDir, srcV)
-    val out = Map.newBuilder[String, Long]
-    resolvedSlotDirs(srcDir, srcV).foreach { case (slot, ds) =>
-      val dst = Paths.get(buildDir, slot)
-      Files.createDirectories(dst)
-      ds.foreach { d =>
-        val ownerV = ownerVersionOf(d, slot)
-        listBucketFiles(d).foreach { f =>
-          Files.createLink(dst.resolve(f.getFileName), f)
-          val rel = s"$slot/${f.getFileName}"
-          out += rel -> seq.getOrElse(rel, ownerV)
-        }
-      }
-    }
-    out.result()
-  }
+      buildDir: String): Map[String, ManifestFile] =
+    snapshotFileEntries(srcDir, srcV).map { e =>
+      val dst = Paths.get(buildDir, e.rel)
+      Files.createDirectories(dst.getParent)
+      Files.createLink(dst, Paths.get(e.path))
+      e.rel -> e.file
+    }.toMap
 
   def writeMeta(dir: String, meta: GraftTableMeta): Unit = {
     Files.createDirectories(Paths.get(dir))
@@ -894,40 +975,10 @@ object GraftStore {
     } finally releaseClaim(marker, token)
   }
 
-  /** Per-version bucket fan-out marker (`<versionDir>/_buckets`). The
-    * bucket COUNT is a property of a version's physical layout, not of the
-    * table: [[rebucket]] changes it, and time travel must prune/SPJ old
-    * versions under the count they were WRITTEN with — deriving buckets
-    * from the current meta against an older layout would silently prune to
-    * the wrong files. A `_committed_at` stamp (epoch millis, written just
-    * before the pointer flip) rides along — the clock behind
-    * `TIMESTAMP AS OF`. */
-  private def writeBucketMarker(vdir: String, buckets: Int): Unit = {
-    Files.write(Paths.get(vdir, "_buckets"), buckets.toString.getBytes("UTF-8"))
-    // `TIMESTAMP AS OF` resolution assumes commit stamps are MONOTONE per
-    // table; with multiple Spark drivers on a shared filesystem (the
-    // MultiWriterRunner deployment) each writer stamps from its own wall
-    // clock, and skew could make a later version carry an earlier instant.
-    // Clamp every stamp to strictly after the previous version's so
-    // monotonicity holds by construction, not by synchronized clocks.
-    val p = Paths.get(vdir)
-    val vname = p.getFileName.toString.takeWhile(_ != '.') // strip .build-<token>
-    val prevStamp =
-      if (vname.matches("v\\d{10}")) {
-        val v = vname.drop(1).toLong
-        val tableDir = p.getParent.toString
-        listVersions(tableDir).filter(_ < v).lastOption
-          .map(committedAt(tableDir, _)).getOrElse(Long.MinValue)
-      } else Long.MinValue
-    val stamp = math.max(System.currentTimeMillis(), prevStamp + 1)
-    Files.write(Paths.get(vdir, "_committed_at"),
-      stamp.toString.getBytes("UTF-8"))
-  }
-
-  /** When version `v` committed (epoch millis). */
+  /** When version `v` committed (epoch millis) — the clock behind
+    * `TIMESTAMP AS OF`, stamped at seal time ([[VersionManifest.next]]). */
   def committedAt(dir: String, v: Long): Long =
-    new String(Files.readAllBytes(Paths.get(versionDir(dir, v),
-      "_committed_at")), "UTF-8").trim.toLong
+    manifestOf(versionDir(dir, v)).committedAt
 
   /** Latest retained version committed at or before `tsMillis` —
     * `TIMESTAMP AS OF` resolution (commit stamps are monotone because
@@ -972,12 +1023,12 @@ object GraftStore {
     // SELF-CONTAINED base: the clone must survive the source's vacuum /
     // expire independently, so manifest references across tables are out.
     // Linked files keep their ORIGINAL write versions in the clone's
-    // fileseq so carried delete seqs stay meaningful.
-    val linkedSeq = materializeInto(srcDir, cur, base)
-    linkDvCarry(srcV, base, Set.empty)
-    sealVersion(base, localSlots(base).map(s => s -> Seq(cur)).toMap,
-      linkedSeq, mergedManifest(srcDir, cur), versionBuckets(srcDir, cur),
-      versionPartSpec(srcDir, cur))
+    // manifest so carried delete seqs stay meaningful.
+    val files = materializeInto(srcDir, cur, base)
+    val srcM = manifestOf(srcV)
+    sealVersion(base, VersionManifest(srcM.buckets,
+      System.currentTimeMillis(), srcM.partSpec, selfOwned(files, cur),
+      files, linkDvCarry(srcV, base, Set.empty)))
     Files.createDirectories(Paths.get(changesRoot(tmp)))
     writePointer(tmp, cur)
     writeMeta(tmp, meta)
@@ -1034,19 +1085,21 @@ object GraftStore {
     val stagedMeta = readMeta(stagedDir)
     val sv = currentVersion(stagedDir)
     val svDir = versionDir(stagedDir, sv)
-    publishNext(dir, currentVersion(dir), "REPLACE") { b =>
+    val cur = currentVersion(dir)
+    publishNext(dir, cur, "REPLACE") { b =>
       Files.createDirectories(Paths.get(b.path))
       // materialize the staged table's resolved snapshot — the stage dir
       // is dropped right after the swap, so references into it would
       // dangle; the staged data is this statement's own output, so the
-      // link pass is O(new files) by construction
-      materializeInto(stagedDir, sv, b.path)
-      linkDvCarry(svDir, b.path, Set.empty) // staged DVs (none today) carry
-      sealVersion(b.path,
-        localSlots(b.path).map(s => s -> Seq(b.next)).toMap,
-        ownFileSeq(b.path, b.next),
-        mergedManifest(stagedDir, sv), // reuse staged footers
-        versionBuckets(stagedDir, sv), versionPartSpec(stagedDir, sv))
+      // link pass is O(new files) by construction. The staged manifest
+      // entries (footer stats) are reused, stamped with this version.
+      val files = materializeInto(stagedDir, sv, b.path)
+        .map { case (rel, f) => rel -> f.copy(seq = b.next) }
+      val stagedM = manifestOf(svDir)
+      sealVersion(b.path, manifestOf(versionDir(dir, cur))
+        .next(selfOwned(files, b.next), files,
+          linkDvCarry(svDir, b.path, Set.empty)) // staged DVs (none today)
+        .copy(buckets = stagedM.buckets, partSpec = stagedM.partSpec))
       writeBoundaryMarker(b.path) // snapshot boundary for CDC consumers
       // crash-safe meta swap: stamp the OLD meta + target version into
       // _meta_backup first. If this commit dies between the meta write
@@ -1076,44 +1129,10 @@ object GraftStore {
     }
   }
 
-  /** Stamp the partition spec a version's OWN dirs were written with —
-    * the per-version layout marker partition-spec evolution reads (the
-    * `_buckets` pattern, mirrored). Only written for partitioned tables. */
-  private def writePartSpecMarker(vdir: String,
-      spec: Option[(String, String)]): Unit =
-    spec.foreach { case (fn, c) =>
-      Files.write(Paths.get(vdir, "_partspec"),
-        s"$fn:${java.net.URLEncoder.encode(c, "UTF-8")}".getBytes("UTF-8"))
-    }
-
-  /** Per-version-dir partition-spec marker cache: snapshotPartSpecs runs
-    * at every partitioned scan build over every owner version, and the
-    * markers are immutable once a version publishes — without the cache
-    * a long-history table pays O(retained versions) small-file probes
-    * per query at plan time. Epoch-guarded like the DV caches (a
-    * drop/recreate mid-compute must not re-insert a stale entry). */
-  private val partSpecCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[(String, String)]]()
-
   /** The partition spec version `v`'s OWN dirs were written with (None on
     * an unpartitioned table). */
-  def versionPartSpec(dir: String, v: Long): Option[(String, String)] = {
-    val key = versionDir(dir, v)
-    val hit = partSpecCache.get(key)
-    if (hit != null) return hit
-    val e0 = cacheEpoch.get()
-    val p = Paths.get(key, "_partspec")
-    val computed =
-      if (!Files.exists(p)) None
-      else {
-        val Array(fn, c) =
-          new String(Files.readAllBytes(p), "UTF-8").trim.split(":", 2)
-        Some((fn, java.net.URLDecoder.decode(c, "UTF-8")))
-      }
-    if (partSpecCache.size > 65536) partSpecCache.clear() // backstop
-    if (cacheEpoch.get() == e0) partSpecCache.put(key, computed)
-    computed
-  }
+  def versionPartSpec(dir: String, v: Long): Option[(String, String)] =
+    manifestOf(versionDir(dir, v)).partSpec
 
   /** Distinct partition specs among the owner versions of snapshot `v` —
     * size 1 means era-uniform (partition pruning is sound under that one
@@ -1130,7 +1149,7 @@ object GraftStore {
     * GRAIN for FUTURE commits as one metadata-only commit — no data file
     * touched, no changelog slice, NOT a boundary (content is unchanged).
     * Old owner dirs keep the ordinals they were written with and the
-    * per-version markers keep every reader interpreting each dir under
+    * per-version manifests keep every reader interpreting each dir under
     * its own era; scans over mixed-era snapshots stay exact (pruning
     * just derives nothing until `CALL rebucket` re-grains the data).
     * Time-grain transforms only (years/months/days/hours over the SAME
@@ -1155,9 +1174,11 @@ object GraftStore {
     publishNext(dir, cur, "set_partition_spec") { b =>
       Files.createDirectories(Paths.get(b.path))
       // pure metadata commit: carry the whole snapshot by reference
-      linkDvCarry(versionDir(dir, cur), b.path, Set.empty)
-      sealVersion(b.path, ownersOf(dir, cur), Map.empty, Map.empty,
-        versionBuckets(dir, cur), Some((newFn, physCol)))
+      val curDir = versionDir(dir, cur)
+      val curM = manifestOf(curDir)
+      sealVersion(b.path, curM.next(curM.owners,
+          deletes = linkDvCarry(curDir, b.path, Set.empty))
+        .copy(partSpec = Some((newFn, physCol))))
       b.flip()
     }
   }
@@ -1167,8 +1188,7 @@ object GraftStore {
     * `meta.buckets`, which can lag the layout across a crashed
     * [[rebucket]]'s meta-update/pointer-flip window). */
   def versionBuckets(dir: String, v: Long): Int =
-    new String(Files.readAllBytes(Paths.get(versionDir(dir, v), "_buckets")),
-      "UTF-8").trim.toInt
+    manifestOf(versionDir(dir, v)).buckets
 
   // --------------------------------------------------------- merge-on-read
   //
@@ -1178,7 +1198,7 @@ object GraftStore {
   // slice under the hidden `_dv/dseq=<version>/gbucket=<k>/` layout. Reads
   // apply the delete set with a sequence rule — a delete at commit S drops
   // a key's rows only from files written BEFORE S (per-file sequence from
-  // the `_fileseq` manifest), so a key deleted and later re-inserted keeps
+  // the version manifests), so a key deleted and later re-inserted keeps
   // exactly the re-inserted row. Cost shape at 100 TB: a spread MERGE
   // writes O(changed rows), never O(touched buckets); the price is a
   // bounded read-side probe that [[optimize]] (or the write-side cap —
@@ -1192,51 +1212,19 @@ object GraftStore {
 
   def dvRoot(vdir: String): String = s"$vdir/$DvDirName"
 
-  /** Delete-slice versions present in a version dir (slices that actually
-    * carry buckets — an empty remnant dir is not a slice). */
-  def dvSeqDirs(vdir: String): Seq[Long] = {
-    val root = Paths.get(dvRoot(vdir))
-    if (!Files.isDirectory(root)) return Seq.empty
-    listDir(root)(_.filter { p =>
-      p.getFileName.toString.startsWith(s"$DvSeqCol=") &&
-        listDir(p)(_.exists(_.getFileName.toString.startsWith(s"$BucketCol=")))
-    }.map(_.getFileName.toString.split("=")(1).toLong).toSeq.sorted)
-  }
+  def hasLiveDv(vdir: String): Boolean = manifestOf(vdir).deletes.nonEmpty
 
-  def hasLiveDv(vdir: String): Boolean = dvSeqDirs(vdir).nonEmpty
+  /** The bucket of a delete-slice file (`_dv/dseq=<s>/gbucket=<k>/…`). */
+  private def dvBucket(rel: String): Int = slotBucket(slotOf(rel))
 
   /** Buckets with at least one live delete entry in this version. */
   def dvBuckets(vdir: String): Set[Int] =
-    dvSeqDirs(vdir).flatMap { s =>
-      listDir(Paths.get(dvRoot(vdir), s"$DvSeqCol=$s"))(
-        _.map(_.getFileName.toString).filter(_.startsWith(s"$BucketCol="))
-          .map(_.split("=")(1).toInt).toSeq)
-    }.toSet
+    manifestOf(vdir).deletes.keySet.map(dvBucket)
 
-  /** Total live delete rows in a version — parquet FOOTER metadata only
-    * (cost ∝ delete files, which the cap keeps small). Unreadable footers
-    * count as `Long.MaxValue` so a corrupt slice forces the safe
-    * escalation path instead of unbounded growth. */
-  def dvLiveRows(vdir: String): Long = {
-    val root = Paths.get(dvRoot(vdir))
-    if (!Files.isDirectory(root)) return 0L
-    val s = Files.walk(root)
-    val files =
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        Files.isRegularFile(p) && !n.startsWith(".") && !n.startsWith("_")
-      }.toList
-      finally s.close()
-    files.map(f => GraftStats.fileRowCount(f).getOrElse(Long.MaxValue))
-      .foldLeft(0L)((a, b) => if (a == Long.MaxValue || b == Long.MaxValue)
-        Long.MaxValue else a + b)
-  }
+  /** Total live delete rows in a version, as its manifest records them
+    * (each slice's rows are counted once, when its commit writes it). */
+  def dvLiveRows(vdir: String): Long = manifestOf(vdir).deletes.values.sum
 
-  /** Write-side cap on the LIVE delete set (rows): a merge-on-read commit
-    * that would push past it escalates to the copy-on-write rewrite and
-    * clears every delete slice — so the read-side probe (driver load +
-    * per-task set) stays bounded by construction, the same way an LSM
-    * bounds its level-0 run count. */
   /** Key types merge-on-read can probe by value equality in the scan —
     * the atomic family (same set bucket hashing covers); nested types are
     * out. */
@@ -1248,6 +1236,11 @@ object GraftStore {
     case _ => false
   }
 
+  /** Write-side cap on the LIVE delete set (rows): a merge-on-read commit
+    * that would push past it escalates to the copy-on-write rewrite and
+    * clears every delete slice — so the read-side probe (driver load +
+    * per-task set) stays bounded by construction, the same way an LSM
+    * bounds its level-0 run count. */
   private[sources] def morMaxLiveDeletes: Long =
     sys.props.get("graft.store.morMaxLiveDeletes").map(_.toLong)
       .getOrElse(200000L)
@@ -1280,27 +1273,20 @@ object GraftStore {
 
   /** Hard-link the previous version's still-applicable delete slices into
     * a build dir, skipping buckets this commit rewrites (their deletes are
-    * APPLIED by the rewrite). Dropping a slice for a rewritten bucket is a
-    * must for hygiene but not for correctness — rewritten files carry a
-    * file-seq >= every existing dseq, so stale entries can never match
+    * APPLIED by the rewrite), and return the linked files with their row
+    * counts for the new manifest. Dropping a slice for a rewritten bucket
+    * is a must for hygiene but not for correctness — rewritten files carry
+    * a file-seq >= every existing dseq, so stale entries can never match
     * them. */
   private def linkDvCarry(srcVdir: String, buildDir: String,
-      rewritten: Set[Int]): Unit =
-    dvSeqDirs(srcVdir).foreach { s =>
-      val seqDir = Paths.get(dvRoot(srcVdir), s"$DvSeqCol=$s")
-      listDir(seqDir)(_.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith(s"$BucketCol=") &&
-          !rewritten.contains(n.split("=")(1).toInt)
-      }.toList).foreach { bdir =>
-        val dst = Paths.get(dvRoot(buildDir), s"$DvSeqCol=$s",
-          bdir.getFileName.toString)
-        Files.createDirectories(dst)
-        listDir(bdir)(_.filter(f => Files.isRegularFile(f) &&
-            !f.getFileName.toString.startsWith(".") &&
-            !f.getFileName.toString.startsWith("_"))
-          .foreach(f => Files.createLink(dst.resolve(f.getFileName), f)))
-      }
+      rewritten: Set[Int]): Map[String, Long] =
+    manifestOf(srcVdir).deletes.filter { case (rel, _) =>
+      !rewritten.contains(dvBucket(rel))
+    }.map { case (rel, n) =>
+      val dst = Paths.get(buildDir, rel)
+      Files.createDirectories(dst.getParent)
+      Files.createLink(dst, Paths.get(srcVdir, rel))
+      rel -> n
     }
 
   /** Build an all-insert commit's changelog slice by hard-linking the
@@ -1312,18 +1298,9 @@ object GraftStore {
     * batch yields an empty slice dir — same zero rows the old empty
     * parquet write produced. */
   private def linkChangelogSlice(buildDir: String, chDir: String): Unit = {
-    val root = Paths.get(buildDir)
     Files.createDirectories(Paths.get(chDir))
-    localSlots(buildDir).foreach { slot =>
-      val slotDir = root.resolve(slot)
-      listDir(slotDir)(_.filter { f =>
-        val n = f.getFileName.toString
-        Files.isRegularFile(f) && !n.startsWith(".") && !n.startsWith("_")
-      }.foreach { f =>
-        val flat = s"${slot.replace('/', '_')}_${f.getFileName}"
-        Files.createLink(Paths.get(chDir, flat), f)
-      })
-    }
+    GraftStats.listDataFiles(buildDir).foreach(rel => Files.createLink(
+      Paths.get(chDir, rel.replace('/', '_')), Paths.get(buildDir, rel)))
   }
 
   /** Driver-side structures of the scan's delete probe
@@ -1353,38 +1330,37 @@ object GraftStore {
   private val dvProbeCache = new java.util.concurrent.ConcurrentHashMap[
     String, Option[(Map[String, Long], Map[Int, Map[Seq[Any], Long]])]]()
 
-  /** Drop cached probes under a table dir — version-dir paths stop being
-    * unique identities the moment a table is dropped/recreated/adopted at
-    * the same path. */
   /** Bumped by every invalidation — computing threads racing a concurrent
     * drop/recreate skip their put instead of re-inserting a stale entry
     * after the sweep (the get-miss → compute → put window). */
   private val cacheEpoch = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Drop cached manifests, snapshots and probes under a table dir —
+    * version-dir paths stop being unique identities the moment a table is
+    * dropped/recreated/adopted at the same path. */
   private[sources] def invalidateDvCache(tableDir: String): Unit = {
     cacheEpoch.incrementAndGet()
     // path-segment-scoped: dropping 'wh/t' must not evict 'wh/t2'
     val prefix = tableDir + java.io.File.separator
-    dvProbeCache.keySet.removeIf(k => k == tableDir || k.startsWith(prefix))
-    snapshotFilesCache.keySet.removeIf(k =>
-      k == tableDir || k.startsWith(prefix))
-    partSpecCache.keySet.removeIf(k => k == tableDir || k.startsWith(prefix))
+    Seq(dvProbeCache, snapshotFilesCache, manifestCache).foreach(
+      _.keySet.removeIf(k => k == tableDir || k.startsWith(prefix)))
     org.apache.spark.sql.GraftSnapshotScan.invalidate(tableDir)
     GraftStreamLimits.invalidate(tableDir)
   }
 
-  /** Reads every live delete slice of the version — the only read of the
-    * `_dv` files. The slice schema (PHYSICAL key columns + [[DvSeqCol]]
-    * long + [[BucketCol]] int) is passed to the reader — merge-key types
-    * never change (ALTER refuses it) — so the read plans without a
-    * schema-inference job. The slices hold at most the live-delete cap
-    * of rows: one collect, then max-seq-per-key folds here on the driver. */
+  /** Reads every live delete-slice file the version's manifest lists —
+    * the only read of the `_dv` files. The slice schema (PHYSICAL key
+    * columns + [[DvSeqCol]] long + [[BucketCol]] int) is passed to the
+    * reader — merge-key types never change (ALTER refuses it) — so the
+    * read plans without a schema-inference job. The slices hold at most
+    * the live-delete cap of rows: one collect, then max-seq-per-key folds
+    * here on the driver. */
   private def loadDvProbeUncached(spark: SparkSession, dir: String, v: Long,
       meta: GraftTableMeta)
       : Option[(Map[String, Long], Map[Int, Map[Seq[Any], Long]])] = {
     val vdir = versionDir(dir, v)
-    val seqs = dvSeqDirs(vdir)
-    if (seqs.isEmpty) return None
+    val slices = manifestOf(vdir).deletes.keys.toSeq.sorted
+    if (slices.isEmpty) return None
     val keyFields = meta.keyCols.map(k => meta.schema(k))
     val physKeys = keyFields.map(physicalName)
     val sliceSchema = StructType(keyFields.map(f =>
@@ -1393,7 +1369,7 @@ object GraftStore {
       StructField(BucketCol, IntegerType, nullable = true))
     val rows = spark.read.schema(sliceSchema)
       .option("basePath", dvRoot(vdir))
-      .parquet(seqs.map(s => s"${dvRoot(vdir)}/$DvSeqCol=$s"): _*)
+      .parquet(slices.map(rel => s"$vdir/$rel"): _*)
       .select((BucketCol +: DvSeqCol +: physKeys).map(col): _*)
       .collect()
     val convs = keyFields.map(f => org.apache.spark.sql.catalyst
@@ -1408,78 +1384,23 @@ object GraftStore {
     Some((resolvedFileSeq(dir, v), m))
   }
 
-  // ------------------------------------------------- per-file sequence map
-
-  /** Per-version manifest mapping each data file the version dir holds to
-    * the version that WROTE it and its size (`rel\tseq\tbytes` lines) —
-    * the read side's evidence for "is this file older than that delete",
-    * and what lets scans plan from the manifest with zero filesystem
-    * listing (see snapshotFileEntries). Hard-linked materialized files
-    * (clone) keep their original seq. */
-  val FileSeqName = "_fileseq"
-
-  /** A size that cannot be read fails the seal, and with it the commit:
-    * a recorded size is what scans plan splits from. */
-  private def writeFileSeq(buildDir: String,
-      entries: Map[String, Long]): Unit = {
-    val sb = new StringBuilder
-    entries.toSeq.sorted.foreach { case (rel, seq) =>
-      val bytes = Files.size(Paths.get(buildDir, rel))
-      sb.append(rel).append('\t').append(seq).append('\t').append(bytes)
-        .append('\n')
+  /** Every data file of a build dir — a writer reading its own output —
+    * stamped with the committing version, with its size and footer zone
+    * maps. A size that cannot be read fails the seal, and with it the
+    * commit: a recorded size is what scans plan splits from. */
+  private def ownFiles(buildDir: String,
+      version: Long): Map[String, ManifestFile] =
+    GraftStats.footerManifest(buildDir).map { case (rel, st) =>
+      rel -> ManifestFile(version, Files.size(Paths.get(buildDir, rel)), st)
     }
-    Files.write(Paths.get(buildDir, FileSeqName),
-      sb.toString.getBytes("UTF-8"))
-  }
-
-  /** Every data file of a build dir stamped with the committing version. */
-  private def ownFileSeq(buildDir: String, version: Long): Map[String, Long] =
-    GraftStats.listDataFiles(buildDir).map(_ -> version).toMap
 
   /** Zone-map entries of every live file of a snapshot, merged across its
-    * owner versions' manifests — what a MATERIALIZED copy of the snapshot
-    * (clone/RTAS) persists as its own manifest, reusing footer reads. */
+    * owner versions' manifests (files without footer stats have none). */
   private[sources] def mergedManifest(dir: String, v: Long)
       : Map[String, GraftStats.FileStats] =
-    snapshotFileEntries(dir, v)
-      .flatMap(e => e.stats.map(e.rel -> _)).toMap
-
-  def readFileSeq(vdir: String): Map[String, Long] =
-    readFileSeqFull(vdir).map { case (rel, (seq, _)) => rel -> seq }
-
-  /** rel → (write seq, size bytes). */
-  private[sources] def readFileSeqFull(vdir: String)
-      : Map[String, (Long, Long)] = {
-    val p = Paths.get(vdir, FileSeqName)
-    if (!Files.exists(p)) return Map.empty
-    Files.readAllLines(p, java.nio.charset.StandardCharsets.UTF_8).asScala
-      .filter(_.nonEmpty).flatMap { line =>
-        line.split('\t') match {
-          case Array(rel, seq, bytes) =>
-            try Some(rel -> (seq.toLong, bytes.toLong))
-            catch { case _: Exception => None }
-          case _ => None
-        }
-      }.toMap
-  }
-
-  /** Seal a build dir as a complete version. Every version directory —
-    * v0 of a CREATE, a clone's base, every commit and maintenance
-    * publish — carries the same file set, written here and nowhere else:
-    * `_bucketmap` (slot → owner versions), `_fileseq` (the dir's own
-    * files with write version and size), `_stats` (their zone maps),
-    * `_buckets` + `_committed_at`, and `_partspec` on a partitioned
-    * table. Readers therefore never fall back on a listing, the meta or
-    * a directory mtime. */
-  private def sealVersion(buildDir: String, owners: Map[String, Seq[Long]],
-      fileSeq: Map[String, Long], stats: Map[String, GraftStats.FileStats],
-      buckets: Int, partSpec: Option[(String, String)]): Unit = {
-    writeBucketMap(buildDir, owners)
-    writeFileSeq(buildDir, fileSeq)
-    GraftStats.writeManifest(buildDir, stats)
-    writeBucketMarker(buildDir, buckets)
-    writePartSpecMarker(buildDir, partSpec)
-  }
+    snapshotFileEntries(dir, v).collect {
+      case e if e.stats.nonEmpty => e.rel -> e.stats
+    }.toMap
 
   /** Publish a writer-private build directory under its final version
     * name (atomic rename), clearing any crash remnant first. Versions are
@@ -1513,8 +1434,8 @@ object GraftStore {
     stampIncarnation(dir)
     val v0 = versionDir(dir, 0L)
     Files.createDirectories(Paths.get(v0))
-    sealVersion(v0, Map.empty, Map.empty, Map.empty, meta.buckets,
-      meta.partition)
+    sealVersion(v0, VersionManifest(meta.buckets, System.currentTimeMillis(),
+      meta.partition, Map.empty, Map.empty, Map.empty))
     Files.createDirectories(Paths.get(changesRoot(dir)))
     writePointer(dir, 0L)
   }
@@ -1603,8 +1524,7 @@ object GraftStore {
     val cur = currentVersion(dir)
     publishNext(dir, cur, "TRUNCATE") { b =>
       Files.createDirectories(Paths.get(b.path))
-      sealVersion(b.path, Map.empty, Map.empty, Map.empty,
-        versionBuckets(dir, cur), versionPartSpec(dir, cur))
+      sealVersion(b.path, manifestOf(versionDir(dir, cur)).next(Map.empty))
       writeBoundaryMarker(b.path) // truncation = snapshot boundary for CDC
       b.flip()
     }
@@ -1823,9 +1743,9 @@ object GraftStore {
     * through older owners — same files, different indirection. Owners
     * above the fork are branch-era commits adopted alongside and keep
     * their numbers. */
-  private def rewriteOwnerRefs(buildDir: String, fork: Long,
-      mainOwners: Map[String, Seq[Long]]): Unit =
-    writeBucketMap(buildDir, readBucketMap(buildDir).map { case (slot, os) =>
+  private def rewriteOwnerRefs(m: VersionManifest, fork: Long,
+      mainOwners: Map[String, Seq[Long]]): VersionManifest =
+    m.copy(owners = m.owners.map { case (slot, os) =>
       slot -> os.flatMap { o =>
         if (o > fork) Seq(o)
         else mainOwners.getOrElse(slot, Seq(o))
@@ -1982,7 +1902,9 @@ object GraftStore {
       val build = Paths.get(s"${versionDir(dir, v)}.build-$token")
       deleteRecursively(build)
       linkTree(Paths.get(versionDir(bd, v)), build)
-      rewriteOwnerRefs(build.toString, fork, mainOwners)
+      // re-sealed, never written through the linked branch manifest
+      sealVersion(build.toString,
+        rewriteOwnerRefs(manifestOf(versionDir(bd, v)), fork, mainOwners))
       publishVersion(build.toString, versionDir(dir, v))
       val srcSlice = Paths.get(changesDir(bd, v))
       val stage = Paths.get(changesStaging(dir, v))
@@ -2554,11 +2476,11 @@ object GraftStore {
 
   /** Keep the newest `keepLast` versions readable, retire older ones. A
     * retired version whose dir still OWNS files a kept snapshot references
-    * (via `_bucketmap`) is marked `_expired` — dropped from the version
+    * (via its owner map) is marked `_expired` — dropped from the version
     * listing (no time travel to it, no restore) but kept on disk as a file
     * host, with its UNREFERENCED bucket dirs and delete slices reclaimed;
-    * its zone-map/fileseq manifests stay (kept snapshots look entries up
-    * by owning dir). A retired dir nothing references is deleted outright,
+    * its manifest stays (kept snapshots look their files up by owning
+    * dir). A retired dir nothing references is deleted outright,
     * and previously-retired hosts are re-swept each call so they shrink to
     * nothing as references age out. */
   def expireVersions(dir: String, keepLast: Int): Unit = {
@@ -2839,8 +2761,9 @@ object GraftStore {
     * changelog never spans a truncation, and the MISSING slice is the
     * detectable boundary (`hasChangelog(v) == false`): a CDC consumer
     * folding past it would silently resurrect overwritten rows, so it
-    * must re-snapshot instead. */
-  /** `smallBatchHint`: the caller asserts (from metadata it holds — e.g.
+    * must re-snapshot instead.
+    *
+    * `smallBatchHint`: the caller asserts (from metadata it holds — e.g.
     * the MV layer's prior-state byte size) that this all-insert batch is
     * small enough for one write task. The data leg then coalesces to a
     * single task instead of paying an AQE rebalance round — the right
@@ -2880,7 +2803,7 @@ object GraftStore {
     recoverChangelog(dir)
 
     // The change batch is bucketed by the CURRENT VERSION's layout count
-    // (the per-version `_buckets` marker), re-derived per attempt: a
+    // (its manifest's bucket count), re-derived per attempt: a
     // concurrent `CALL rebucket` landing between attempts changes the
     // fan-out, and rows bucketed under the old count written into the new
     // layout would strand keys in directories their hash no longer maps
@@ -3000,7 +2923,7 @@ object GraftStore {
                 // never reaps .bin files the decode jobs read lazily until
                 // the last leg finishes
                 commitVersion(spark, dir, meta, ch, touched, allInserts,
-                  overwrite, bucketedFor, build, txn, smallKeyed, smallBatchHint)
+                  overwrite, build, txn, smallKeyed, smallBatchHint)
               }
             } else {
               // claim won but the pointer moved first (stale pre-claim
@@ -3035,14 +2958,10 @@ object GraftStore {
       meta: GraftTableMeta, committed: Long): Unit = {
     val cap = meta.autoOptimize
     if (cap <= 0) return
-    val own = localSlots(versionDir(dir, committed))
+    val own = manifestOf(versionDir(dir, committed)).files.keySet.map(slotOf)
     if (own.isEmpty) return
-    val owners = ownersOf(dir, committed)
-    val hot = own.exists { s =>
-      owners.getOrElse(s, Nil).map(o =>
-        listBucketFiles(s"${versionDir(dir, o)}/$s").size).sum > cap
-    }
-    if (hot)
+    val counts = slotFileCounts(dir, committed)
+    if (own.exists(s => counts.getOrElse(s, 0) > cap))
       try optimize(spark, dir, cap)
       catch { case _: java.util.ConcurrentModificationException => () }
   }
@@ -3052,8 +2971,7 @@ object GraftStore {
     * heartbeat); [[VersionBuild.flip]] re-verifies ownership. */
   private def commitVersion(spark: SparkSession, dir: String,
       meta: GraftTableMeta, ch: DataFrame, touched: Set[Int],
-      allInserts: Boolean, overwrite: Boolean, buckets: Int,
-      build: VersionBuild,
+      allInserts: Boolean, overwrite: Boolean, build: VersionBuild,
       txn: Option[(String, Long)] = None,
       smallKeyed: Boolean = false,
       smallBatchHint: Boolean = false): Long = {
@@ -3079,9 +2997,10 @@ object GraftStore {
 
       // the LAYOUT's partition spec: new dirs are written under the grain
       // the current layout declares (set_partition_spec evolves it), and
-      // the commit stamps its own marker so readers interpret its dirs
+      // the commit's manifest records it so readers interpret its dirs
       // under the era they were written with
-      val curPartSpec = versionPartSpec(dir, cur)
+      val curM = manifestOf(curDir)
+      val curPartSpec = curM.partSpec
 
       // Changelog leg: persist the change batch itself, one immutable dir
       // per version. Written to a dot-prefixed STAGING dir now and renamed
@@ -3209,7 +3128,7 @@ object GraftStore {
       // escalation it also folds in every DV-carrying bucket, whose
       // (merge-on-read-applied) live rows re-materialize plainly —
       // clearing the slices.
-      def cowRewrite(rewriteBuckets: Set[Int]): Set[Int] = {
+      def cowRewrite(rewriteBuckets: Set[Int]): (Set[Int], Map[String, Long]) = {
         // small batch: broadcast the removed keys into the anti-join —
         // the kept base streams through unshuffled (and undistincted
         // duplicates in the build side cannot change an anti-join's
@@ -3229,10 +3148,12 @@ object GraftStore {
           .hint("rebalance", layoutCols(meta).map(col): _*)
           .write.options(bloomOptions(meta))
             .partitionBy(layoutCols(meta): _*).parquet(buildDir)
-        rewriteBuckets
+        (rewriteBuckets, Map.empty)
       }
 
-      val dataLeg: () => Set[Int] = () =>
+      // the data leg returns the buckets it rewrote and the delete-slice
+      // files it wrote (relative to the build dir) with their row counts
+      val dataLeg: () => (Set[Int], Map[String, Long]) = () =>
         if (allInserts) {
           // unconditional write: an empty batch produces an empty version
           // dir, and skipping the touched-set job saves one Spark action
@@ -3253,17 +3174,18 @@ object GraftStore {
               else d.hint("rebalance", layoutCols(meta).map(col): _*))
             .write.options(bloomOptions(meta))
             .partitionBy(layoutCols(meta): _*).parquet(buildDir)
-          Set.empty
+          (Set.empty, Map.empty)
         } else if (morRequested) {
           // merge-on-read: after-images land like an append; removed keys
           // land as an equality-delete slice under _dv/dseq=<next>. Every
           // base bucket (and every still-live older slice) hard-links over
           // — the commit writes O(changed rows), never O(touched buckets).
-          // The cap decision is made AFTER the slice write from its parquet
-          // footers (free metadata reads) instead of a separate count job —
-          // the common path pays zero extra passes over the change batch;
-          // only the rare over-cap commit discards this small staged write
-          // and escalates.
+          // The cap decision is made AFTER the slice write from its row
+          // counts (the driver-side write counts its rows, a Spark write's
+          // files are footer-read once) against the live count the base
+          // manifest records — no separate count job, no re-read of older
+          // slices; only the rare over-cap commit discards this small
+          // staged write and escalates.
           // both merge-on-read legs write O(batch) bytes: a small batch the
           // driver holds is written on the driver, a small distributed one
           // by one task with no exchange (see writeSlices) — partitionBy
@@ -3273,38 +3195,45 @@ object GraftStore {
                 .select((cols :+ BucketCol).map(col): _*), meta.schema),
               meta, curPartSpec),
             buildDir, layoutCols(meta), bloomOptions(meta), smallKeyed)
-          writeSlices(spark, toPhysical(ch.filter(col(OpCol).isin("U", "D"))
-              .select((meta.keyCols :+ BucketCol).map(col): _*), meta.schema),
-            s"$buildDir/$DvDirName/$DvSeqCol=$next", Seq(BucketCol), Map.empty,
-            smallKeyed, distinct = true)
-          val newRemoveRows = dvLiveRows(buildDir)
-          // subtraction form: dvLiveRows saturates to Long.MaxValue on a
-          // corrupt footer, and MaxValue + n would WRAP past the cap —
-          // `live <= cap - new` keeps the forced escalation intact
-          if (dvLiveRows(curDir) <= morMaxLiveDeletes - newRemoveRows) {
-            if (newRemoveRows == 0) // nothing removed: no slice to keep
+          val slice = s"$DvDirName/$DvSeqCol=$next"
+          val sliceDir = s"$buildDir/$slice"
+          val newDeletes = writeSlices(spark,
+              toPhysical(ch.filter(col(OpCol).isin("U", "D"))
+                .select((meta.keyCols :+ BucketCol).map(col): _*), meta.schema),
+              sliceDir, Seq(BucketCol), Map.empty, smallKeyed, distinct = true)
+            .getOrElse(GraftStats.listDataFiles(sliceDir).map { rel =>
+              val f = Paths.get(sliceDir, rel)
+              rel -> GraftStats.fileRowCount(f).getOrElse(throw
+                new IllegalStateException(s"unreadable delete slice $f"))
+            }.toMap)
+            .map { case (rel, n) => s"$slice/$rel" -> n }
+          val newRemoveRows = newDeletes.values.sum
+          if (curM.deletes.values.sum + newRemoveRows <= morMaxLiveDeletes) {
+            if (newRemoveRows > 0) (Set.empty, newDeletes)
+            else { // nothing removed: no slice to keep
               deleteRecursively(Paths.get(dvRoot(buildDir)))
-            Set.empty
+              (Set.empty, Map.empty)
+            }
           } else {
             // escalate: discard the staged merge-on-read build and rewrite
             // (touched ∪ every DV-carrying bucket) copy-on-write, applying
             // and clearing all slices in one claimed commit — the
             // LSM-style bound keeping the reader's probe set under the cap
             deleteRecursively(Paths.get(buildDir))
-            cowRewrite(touched ++ dvBuckets(curDir))
+            cowRewrite(touched ++ curM.deletes.keySet.map(dvBucket))
           }
         } else if (touched.nonEmpty) {
           cowRewrite(touched)
         } else {
           Files.createDirectories(Paths.get(buildDir))
-          Set.empty
+          (Set.empty, Map.empty)
         }
 
       // The two legs write to DIFFERENT staging locations from the same
       // persisted change batch — run their Spark jobs concurrently (the
       // commit's latency is then max(legs), not their sum; per-statement
       // overhead matters when a pipeline issues many small commits).
-      val rewritten: Set[Int] = {
+      val (rewritten, newDeletes) = {
         val chF =
           if (overwrite || linkChangelog)
             // no separate changelog write
@@ -3320,15 +3249,21 @@ object GraftStore {
         } catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
       }
 
+      // per-file write versions and zone maps for the LOCAL files only
+      // (all stamped `next` — a file lives forever in the version dir
+      // that wrote it; cost ∝ files written); carried files keep their
+      // entries in their owner versions' manifests, which is where
+      // snapshot resolution looks them up
+      val files = ownFiles(buildDir, next)
       // Carry untouched buckets by MANIFEST REFERENCE: the new version's
-      // `_bucketmap` points at the owner versions still holding their
-      // files — one line per bucket, never a per-file pass. Buckets this
-      // commit rewrote own themselves; buckets it appended to gain `next`
-      // as an additional owner; an overwrite carries nothing (the new
-      // data IS the version).
-      val local = localSlots(buildDir).toSet
+      // manifest points at the owner versions still holding their files —
+      // one line per bucket, never a per-file pass. Buckets this commit
+      // rewrote own themselves; buckets it appended to gain `next` as an
+      // additional owner; an overwrite carries nothing (the new data IS
+      // the version).
+      val local = files.keySet.map(slotOf)
       val prevOwners =
-        if (overwrite) Map.empty[String, Seq[Long]] else ownersOf(dir, cur)
+        if (overwrite) Map.empty[String, Seq[Long]] else curM.owners
       val newMap = (prevOwners.keySet ++ local).flatMap { slot =>
         val owners =
           if (rewritten.contains(slotBucket(slot)) || overwrite)
@@ -3342,7 +3277,9 @@ object GraftStore {
       // starts from nothing). Physical links stay correct here: the live
       // delete set is cap-bounded, so this is O(changed rows), not
       // O(table).
-      if (!overwrite) linkDvCarry(curDir, buildDir, rewritten)
+      val carried =
+        if (overwrite) Map.empty[String, Long]
+        else linkDvCarry(curDir, buildDir, rewritten)
       // A remnant final-named change dir for `next` can only predate this
       // commit (publication always happens after the flip, so a live one
       // would imply pointer >= next). Clear it BEFORE the flip — after the
@@ -3351,13 +3288,7 @@ object GraftStore {
       // moved, and deleting it then would destroy the committed changelog.
       val chFinal = Paths.get(changesDir(dir, next))
       deleteRecursively(chFinal)
-      // per-file write versions and zone maps for the LOCAL files only
-      // (all stamped `next` — a file lives forever in the version dir
-      // that wrote it; cost ∝ files written); carried files keep their
-      // entries in their owner versions' manifests, which is where the
-      // scan looks them up (per-file path → owning version dir)
-      sealVersion(buildDir, newMap, ownFileSeq(buildDir, next),
-        GraftStats.footerManifest(buildDir), buckets, curPartSpec)
+      sealVersion(buildDir, curM.next(newMap, files, carried ++ newDeletes))
       if (overwrite) writeBoundaryMarker(buildDir) // snapshot boundary for CDC
       // idempotent-write record publishes atomically WITH the commit: in
       // the build dir before the rename, so neither "recorded but not
@@ -3479,8 +3410,10 @@ object GraftStore {
       // carry the un-fragmented slots by manifest reference; rewritten
       // slots own themselves (a slot whose live rows all fell to deletes
       // simply leaves the map)
-      val local = localSlots(b.path).toSet
-      val prevOwners = ownersOf(dir, cur)
+      val files = ownFiles(b.path, b.next)
+      val local = files.keySet.map(slotOf)
+      val curM = manifestOf(curDir)
+      val prevOwners = curM.owners
       val owners = (prevOwners.keySet ++ local).flatMap { slot =>
         if (fragmented.contains(slot))
           if (local.contains(slot)) Some(slot -> Seq(b.next)) else None
@@ -3490,9 +3423,7 @@ object GraftStore {
       // delete slice survives compaction; rewrites stamp `next` (≥ any
       // dseq — stale entries could never match even if one leaked);
       // carried files keep their seqs in their owners' manifests
-      sealVersion(b.path, owners, ownFileSeq(b.path, b.next),
-        GraftStats.footerManifest(b.path), versionBuckets(dir, cur),
-        versionPartSpec(dir, cur))
+      sealVersion(b.path, curM.next(owners, files))
       b.flip()
     }
   }
@@ -3506,14 +3437,14 @@ object GraftStore {
     * hatch the fixed CREATE-time count needs at 100 TB: when buckets
     * outgrow "a few GB each", re-bucket to a higher fan-out and point
     * lookups/SPJ/CoW granularity all follow (their machinery reads the
-    * per-version `_buckets` marker, so old versions keep pruning correctly
-    * under their own layout and time travel is unaffected).
+    * per-version manifest's bucket count, so old versions keep pruning
+    * correctly under their own layout and time travel is unaffected).
     *
-    * Crash-safe at every boundary: the new version dir + its marker land
+    * Crash-safe at every boundary: the new version dir + its manifest land
     * before the meta update, the meta update (under the meta lock) before
     * the pointer flip; a crash in between leaves meta.buckets ahead of the
     * layout, which is harmless — every reader AND writer derives the
-    * effective fan-out from the current version's marker
+    * effective fan-out from the current version's manifest
     * ([[versionBuckets]]), never from meta alone. */
   def rebucket(spark: SparkSession, dir: String, newBuckets: Int): Long = {
     require(newBuckets > 0, "buckets must be positive")
@@ -3538,10 +3469,9 @@ object GraftStore {
         .write.options(bloomOptions(meta))
             .partitionBy(layoutCols(meta): _*).parquet(b.path)
       // every file rewritten (DVs applied)
-      sealVersion(b.path,
-        localSlots(b.path).map(s => s -> Seq(b.next)).toMap,
-        ownFileSeq(b.path, b.next), GraftStats.footerManifest(b.path),
-        newBuckets, versionPartSpec(dir, cur))
+      val files = ownFiles(b.path, b.next)
+      sealVersion(b.path, manifestOf(versionDir(dir, cur))
+        .next(selfOwned(files, b.next), files).copy(buckets = newBuckets))
       withMetaLock(dir) {
         val m = readMeta(dir) // re-read: fold over concurrent ALTERs
         writeMeta(dir, m.copy(buckets = newBuckets))
@@ -3560,7 +3490,7 @@ object GraftStore {
     * writes NO changelog slice: the missing slice is the detectable
     * snapshot boundary — a CDC consumer folding past it would resurrect
     * the undone writes, so it must re-snapshot instead. The restored
-    * version keeps the TARGET's bucket fan-out (marker copied), so a
+    * version keeps the TARGET's bucket fan-out and partition spec, so a
     * restore across a [[rebucket]] prunes correctly under the old layout
     * and later writes re-derive from it. */
   def restore(dir: String, toVersion: Long): Long = {
@@ -3573,25 +3503,26 @@ object GraftStore {
     publishNext(dir, cur, "RESTORE") { b =>
       val srcV = versionDir(dir, toVersion)
       Files.createDirectories(Paths.get(b.path))
-      // pure metadata commit: the new version's bucket map is the
-      // target's resolved owner map verbatim — O(buckets), no per-file
-      // pass at any table size
-      val ownerMap = ownersOf(dir, toVersion)
+      // pure metadata commit: the new version's owner map is the
+      // target's verbatim — O(buckets), no per-file pass at any table
+      // size — under the target's layout, stamped after the current head
+      val target = manifestOf(srcV)
+      val ownerMap = target.owners
       // the restored state includes the target's live delete slices
       // verbatim (physical cap-bounded links) — a merge-on-read version
       // restores to exactly the rows it read as; file seqs stay in the
       // owner versions' manifests
-      linkDvCarry(srcV, b.path, Set.empty)
-      sealVersion(b.path, ownerMap, Map.empty, Map.empty,
-        versionBuckets(dir, toVersion), versionPartSpec(dir, toVersion))
+      sealVersion(b.path, manifestOf(versionDir(dir, cur))
+        .next(ownerMap, deletes = linkDvCarry(srcV, b.path, Set.empty))
+        .copy(buckets = target.buckets, partSpec = target.partSpec))
       writeBoundaryMarker(b.path) // restore = snapshot boundary for CDC
       // Re-check against a concurrent expireVersions (a maintenance op that
       // runs without a commit claim): since restore is a pure metadata
       // commit, nothing before this point touched the owner slot dirs the
       // new manifest points at — an expire racing us could have retired the
       // target and deleted some of them, and publishing anyway would ship a
-      // manifest whose reads silently drop those buckets (resolvedSlotDirs
-      // filters missing dirs). Fail loudly instead; the residual window
+      // manifest whose reads fail on the swept files. Fail loudly
+      // instead; the residual window
       // between this check and the pointer flip is the same documented
       // class as the verifyClaim→flip TOCTOU.
       if (!listVersions(dir).contains(toVersion))
@@ -3766,7 +3697,7 @@ object GraftStore {
 
   /** Partition-scoped retention — `CALL expire_partitions(table, below)`:
     * ONE claimed commit whose new version simply OMITS every slot whose
-    * partition ordinal is below the bound from its `_bucketmap`. Pure
+    * partition ordinal is below the bound from its owner map. Pure
     * metadata at any table size (no file is read, moved, or deleted —
     * older versions still reference the dropped partitions until
     * [[expireVersions]] reclaims them), which is exactly what makes
@@ -3840,9 +3771,9 @@ object GraftStore {
       // the read mor exists to avoid), so dropping partitions never makes
       // a slice obsolete and dropping the slices would resurrect deleted
       // rows in every KEPT partition. Cap-bounded links, O(changed rows).
-      linkDvCarry(versionDir(dir, cur), b.path, Set.empty)
-      sealVersion(b.path, keepMap, Map.empty, Map.empty,
-        versionBuckets(dir, cur), versionPartSpec(dir, cur))
+      val curDir = versionDir(dir, cur)
+      sealVersion(b.path, manifestOf(curDir).next(keepMap,
+        deletes = linkDvCarry(curDir, b.path, Set.empty)))
       writeBoundaryMarker(b.path) // rows vanish with no changelog slice
       b.flip()
     }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * The read rule is per (key, file): a row is dead iff the newest delete
   * entry for its key is NEWER than the file that holds the row (per-file
-  * seq from the `_fileseq` manifest). The delete set is cap-bounded by the
+  * seq from the version manifests). The delete set is cap-bounded by the
   * write side ([[graft.sources.GraftStore.morMaxLiveDeletes]]), so it
   * ships to executors as a plain in-memory probe map — the Iceberg
   * equality-delete shape, minus the shuffle a join-based application would

@@ -280,22 +280,23 @@ final class GraftScan(files: Scan, names: GraftNameMap,
   }
 
   /** Drops files outside `admitted` buckets and files the zone maps
-    * prove empty. A file with no bucket segment, no manifest, or no
-    * usable stats entry is kept. */
+    * prove empty. A file with no bucket segment, outside a version dir,
+    * or without usable stats is kept. */
   private def prune(parts: Array[InputPartition],
       admitted: Option[Set[Int]]): Array[InputPartition] =
     if (admitted.isEmpty && statsFilters.isEmpty) parts
     else if (!parts.forall(_.isInstanceOf[FilePartition])) parts // unknown: no pruning
     else {
       val vre = "^(.*/v\\d{10})/(.+)$".r
-      // one manifest read per version dir seen in this plan (usually one)
-      val manifests = scala.collection.mutable.Map
-        .empty[String, Map[String, graft.sources.GraftStats.FileStats]]
+      // one (cached) manifest lookup per version dir seen in this plan
+      val manifests = scala.collection.mutable.Map.empty[String,
+        Map[String, graft.sources.GraftStore.ManifestFile]]
       def statsKeep(path: String): Boolean = path match {
         case vre(vdir, rel) =>
-          manifests.getOrElseUpdate(vdir,
-            graft.sources.GraftStats.readManifest(GraftScan.localPath(vdir)))
-            .get(rel).forall(graft.sources.GraftStats.mayContain(statsFilters, _))
+          manifests.getOrElseUpdate(vdir, graft.sources.GraftStore
+              .manifestOf(GraftScan.localPath(vdir)).files)
+            .get(rel).forall(f =>
+              graft.sources.GraftStats.mayContain(statsFilters, f.stats))
         case _ => true
       }
       def bucketKeep(path: String): Boolean =

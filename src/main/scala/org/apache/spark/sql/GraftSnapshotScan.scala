@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Builds the delegated parquet scan for one graft-store SNAPSHOT under
   * the manifest layout: a version's live files stay in the version
-  * dirs that WROTE them (`_bucketmap` slot references, no per-commit link
+  * dirs that WROTE them (manifest slot references, no per-commit link
   * pass), so a snapshot is not one directory — it is a resolved list of
   * `[gpart=<v>/]gbucket=<k>` leaf dirs spread across owner versions.
   * Hive-style partition discovery cannot serve that (mixed non-partition
@@ -85,8 +85,8 @@ object GraftSnapshotScan {
     * `physSchema` = the data columns as stored in files; the partition
     * columns ([`gpart`,] `gbucket`) are appended here.
     *
-    * The file index is built ENTIRELY from the store's manifests
-    * (`_bucketmap` slots + `_fileseq` names/sizes) — zero filesystem
+    * The file index is built ENTIRELY from the store's version manifests
+    * (slot owners + file names/sizes) — zero filesystem
     * listing at plan time. An InMemoryFileIndex lists every slot dir
     * before pruning can run, so a one-day scan of a 129-day × 16-bucket
     * table paid a ~2000-directory listing job per query (measured ~4 s at
@@ -237,7 +237,7 @@ final class GraftVersionTable(spark: SparkSession, tableDir: String, v: Long,
   * are authored from the graft store's manifests — the parent's
   * `listFiles` prunes partitions and looks children up in these maps, so
   * planning never touches the filesystem (file names and sizes come from
-  * `_fileseq`, written at commit). Version dirs are immutable once
+  * the version manifests, written at commit). Version dirs are immutable once
   * published, which is what makes the authored listing sound. */
 final class GraftSlotFileIndex(spark: SparkSession, spec0: PartitionSpec,
     filesByDir: Map[Path, Array[FileStatus]])

@@ -504,6 +504,33 @@ class BranchSpec extends SparkTestBase {
     assert(changed === Seq((3L, "I")))
   }
 
+  test("an aborted publish_group leaves the adopted branch's versions intact") {
+    val a = mkTable("grpkeep_a")
+    val b = mkTable("grpkeep_b")
+    spark.sql(s"INSERT INTO $cat.$a SELECT id, 0, id * 10 FROM range(1, 21)") // v1
+    spark.sql(s"INSERT INTO $cat.$a VALUES (100, 0, 1000)") // v2
+    spark.sql(s"INSERT INTO $cat.$b VALUES (5, 0, 50)")
+    Seq(a, b).foreach(t =>
+      spark.sql(s"CALL $cat.create_branch(table => '$t', name => 'x')"))
+    spark.sql(s"INSERT INTO $cat.`$a$$branch$$x` VALUES (200, 0, 2000)") // v3
+    spark.sql(s"INSERT INTO $cat.`$b$$branch$$x` VALUES (6, 0, 60)")
+    spark.sql(s"INSERT INTO $cat.$b VALUES (7, 1, 70)") // b moved off fork
+    val e = intercept[Exception] {
+      spark.sql(s"CALL $cat.publish_group(tables => '$a,$b', name => 'x')")
+    }
+    assert(chain(e).exists(x => Option(x.getMessage).exists(
+      _.contains("fork point"))))
+    // adopting a's branch v3 into main re-pointed the copy's owner
+    // references at main's owners; the branch's own v3 must not change
+    val branchKeys = ((1L to 20L) ++ Seq(100L, 200L)).toSeq
+    assert(rows(s"$cat.`$a$$branch$$x`").map(_._1) === branchKeys)
+    assert(rows(s"$cat.$a").map(_._1) === (1L to 20L) :+ 100L)
+    // and the branch still publishes once b is rebased
+    spark.sql(s"CALL $cat.rebase_branch(table => '$b', name => 'x')")
+    spark.sql(s"CALL $cat.publish_group(tables => '$a,$b', name => 'x')")
+    assert(rows(s"$cat.$a").map(_._1) === branchKeys)
+  }
+
   test("publish_group conflicts when one member's main moved off its fork") {
     val a = mkTable("grpx_a")
     val b = mkTable("grpx_b")

@@ -1581,15 +1581,6 @@ class CatalogSpec extends SparkTestBase {
     assert(rows.forall(r => r.getInt(1) == 0 || r.getInt(1) == 1))
     // row_count sums to the table count across any one column's rows
     assert(centsStats.map(_.getLong(5)).sum === 100L)
-    // a version without a manifest (legacy) lists stats-less rows instead
-    // of crashing (null column/stats fields)
-    val vdir = GraftStore.versionDir(s"$warehouse/t_files",
-      GraftStore.currentVersion(s"$warehouse/t_files"))
-    Files.delete(java.nio.file.Paths.get(vdir,
-      graft.sources.GraftStats.ManifestName))
-    val bare = spark.sql(s"SELECT file, column FROM $cat.`t_files$$files`").collect()
-    assert(bare.nonEmpty && bare.forall(_.isNullAt(1)),
-      s"stats-less files must list with null column, got ${bare.toSeq}")
   }
 
   test("scan statistics report the exact manifest row count") {

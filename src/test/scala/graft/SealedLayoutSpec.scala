@@ -1,16 +1,17 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import graft.sources.{GraftCatalog, GraftStats, GraftStore}
 
-/** One on-disk format: every path that publishes a version leaves the
-  * same complete file set in its version dir (`_bucketmap`, `_fileseq`
-  * with `rel, seq, size` lines for exactly the dir's own data files,
-  * `_stats`, `_buckets`, `_committed_at`, and `_partspec` on a
-  * partitioned table — v0 included), every table, clone and branch
+/** One on-disk format: every path that publishes a version leaves one
+  * sealed manifest in its version dir that its strict decoder reads back
+  * whole (bucket count, commit stamp, the partition spec exactly when the
+  * table is partitioned — v0 included — and the dir's own data files
+  * with their write versions and sizes), the manifest is the one source
+  * of truth for a version's files, every table, clone and branch
   * directory carries its `_incarnation` stamp from the moment it is
   * created, and reads never write into a table directory. */
 class SealedLayoutSpec extends SparkTestBase {
@@ -35,33 +36,25 @@ class SealedLayoutSpec extends SparkTestBase {
     s"$warehouse/$name"
   }
 
-  private def lines(p: Path): Seq[String] =
-    Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
-
-  /** Version `v` of `dir` carries the full sealed file set. */
+  /** Version `v` of `dir` carries a complete sealed manifest: the strict
+    * decoder reads every field back (it throws on a missing or malformed
+    * manifest), and the fields hold the format's invariants. */
   private def assertSealed(dir: String, v: Long, partitioned: Boolean,
       what: String): Unit = {
     val vdir = GraftStore.versionDir(dir, v)
-    val base = Seq("_bucketmap", "_fileseq", "_stats", "_buckets",
-      "_committed_at")
-    val missing = (base ++ (if (partitioned) Seq("_partspec") else Nil))
-      .filterNot(n => Files.isRegularFile(Paths.get(vdir, n)))
-    assert(missing.isEmpty, s"$what: v$v lacks ${missing.mkString(", ")}")
-    if (!partitioned)
-      assert(!Files.exists(Paths.get(vdir, "_partspec")),
-        s"$what: unpartitioned v$v carries a _partspec")
-    val seq = lines(Paths.get(vdir, "_fileseq")).map(_.split('\t').toSeq)
-    assert(seq.forall(_.size == 3),
-      s"$what: v$v _fileseq lines must be rel, seq, size: $seq")
-    seq.foreach { case Seq(rel, s, bytes) =>
-      assert(s.toLong <= v, s"$what: v$v stamps $rel with future seq $s")
-      assert(bytes.toLong === Files.size(Paths.get(vdir, rel)),
+    val m = GraftStore.manifestOf(vdir)
+    assert(m.partSpec.isDefined === partitioned,
+      s"$what: v$v partition spec ${m.partSpec} on a " +
+        s"${if (partitioned) "" else "non-"}partitioned table")
+    m.files.foreach { case (rel, f) =>
+      assert(f.seq <= v, s"$what: v$v stamps $rel with future seq ${f.seq}")
+      assert(f.bytes === Files.size(Paths.get(vdir, rel)),
         s"$what: v$v records a wrong size for $rel")
     }
-    assert(seq.map(_.head).toSet === GraftStats.listDataFiles(vdir).toSet,
-      s"$what: v$v _fileseq must list exactly the dir's own data files")
-    assert(lines(Paths.get(vdir, "_buckets")).head.trim.toInt > 0)
-    assert(lines(Paths.get(vdir, "_committed_at")).head.trim.toLong > 0L)
+    assert(m.files.keySet === GraftStats.listDataFiles(vdir).toSet,
+      s"$what: v$v manifest must list exactly the dir's own data files")
+    assert(m.buckets > 0, s"$what: v$v bucket count ${m.buckets}")
+    assert(m.committedAt > 0L, s"$what: v$v commit stamp ${m.committedAt}")
   }
 
   private def assertCurrentSealed(dir: String, what: String,
@@ -166,6 +159,52 @@ class SealedLayoutSpec extends SparkTestBase {
     assertCurrentSealed(dir, "partitioned TRUNCATE", partitioned = true)
     assertAllSealed(dir, partitioned = true)
     assert(spark.sql(s"SELECT * FROM $cat.$t VERSION AS OF 1").count() === 3L)
+  }
+
+  test("a version's manifest is the one source of truth for its files") {
+    import spark.implicits._
+    warehouse
+    val t = "seal_truth"
+    spark.sql(s"DROP TABLE IF EXISTS $cat.$t")
+    spark.sql(s"""CREATE TABLE $cat.$t
+      (k BIGINT NOT NULL, ts TIMESTAMP, amount BIGINT) USING graft
+      TBLPROPERTIES ('merge_key'='k', 'buckets'='1')""")
+    val dir = s"$warehouse/$t"
+    spark.sql(s"INSERT INTO $cat.$t SELECT id, NULL, id FROM range(0, 5)")
+    spark.sql(s"INSERT INTO $cat.$t SELECT id, NULL, id FROM range(5, 10)")
+    val v = GraftStore.currentVersion(dir)
+    val listed = GraftStore.snapshotFileEntries(dir, v).map(_.path).toSet
+    // a parquet file of the table's shape that no manifest names, put
+    // into a published slot dir
+    val stray = Files.createTempDirectory("graft_seal_stray").toString
+    Seq(100L, 101L, 102L, 103L).toDF("k")
+      .select($"k", org.apache.spark.sql.functions.lit(null)
+        .cast("timestamp").as("ts"), $"k".as("amount"))
+      .coalesce(1).write.mode("overwrite").parquet(stray)
+    val part = GraftStats.listDataFiles(stray)
+      .filter(_.endsWith(".parquet")).head
+    Files.copy(Paths.get(stray, part),
+      Paths.get(GraftStore.versionDir(dir, v), "gbucket=0", "part-stray.parquet"))
+    def keys(table: String): Seq[Long] =
+      spark.sql(s"SELECT k FROM $table").collect().map(_.getLong(0)).toSeq.sorted
+    val expected = (0L until 10L).toSeq
+    assert(keys(s"$cat.$t") === expected, "the scan reads the manifest's rows")
+    val filesTable = spark.sql(
+      s"SELECT DISTINCT file FROM $cat.`$t$$files`").count()
+    assert(filesTable === listed.size.toLong, "t$files lists the manifest's files")
+    assert(GraftStore.snapshotFiles(dir, v).toSet === listed)
+    assert(GraftStore.slotFileCounts(dir, v) === Map("gbucket=0" -> listed.size))
+    val fragmented = spark.sql(s"CALL $cat.maintenance_report(`table` => '$t', " +
+        s"max_files_per_bucket => ${listed.size})").collect()
+      .find(_.getString(0) == "fragmented_slots").get
+    assert(!fragmented.getBoolean(1) && fragmented.getLong(2) === 0L,
+      s"maintenance_report counts the manifest's files: $fragmented")
+    spark.sql(s"CALL $cat.create_branch(table => '$t', name => 'truth')")
+    assert(keys(s"$cat.`$t$$branch$$truth`") === expected,
+      "a branch materializes the manifest's files only")
+    val bdir = GraftStore.branchDir(dir, "truth")
+    assert(GraftStore.snapshotFiles(bdir, GraftStore.currentVersion(bdir))
+      .size === listed.size)
   }
 
   test("tables, clones and branches are stamped with _incarnation at creation") {

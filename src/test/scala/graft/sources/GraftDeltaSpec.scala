@@ -336,8 +336,9 @@ class GraftDeltaSpec extends SparkTestBase {
     // simulate a skewed earlier writer: v1's stamp is an hour in the
     // future relative to THIS writer's clock
     val future = System.currentTimeMillis() + 3600000L
-    Files.write(Paths.get(GraftStore.versionDir(dir, 1L), "_committed_at"),
-      future.toString.getBytes("UTF-8"))
+    val v1 = GraftStore.versionDir(dir, 1L)
+    GraftStore.sealVersion(v1,
+      GraftStore.manifestOf(v1).copy(committedAt = future))
     commit(2L) // v2 — stamped from the "slow" local clock
     val (t1, t2) = (GraftStore.committedAt(dir, 1L), GraftStore.committedAt(dir, 2L))
     assert(t2 === t1 + 1, s"stamp must clamp to prev+1, got $t1 then $t2")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.SparkTestBase
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, Literal, Or}
@@ -182,8 +182,5 @@ class GraftStatsSpec extends SparkTestBase {
     assert(amounts.flatMap(_.max).map(_.asInstanceOf[Long]).max === 890L)
     // string stats present with the string kind
     assert(merged.values.flatMap(_.get("name")).forall(_.kind == "s"))
-    // a version with no manifest reads as empty (legacy: nothing skips)
-    Files.delete(Paths.get(GraftStore.versionDir(dir, 2L), GraftStats.ManifestName))
-    assert(GraftStats.readManifest(GraftStore.versionDir(dir, 2L)).isEmpty)
   }
 }

@@ -142,7 +142,8 @@ class MorSpec extends SparkTestBase {
     assert(liveDeletes() === 0L)
     assert(rows(m) === before)
     // post-compaction scans restore the exact manifest row count
-    assert(GraftStats.manifestRowCount(curVdir(m)) === Some(before.size.toLong))
+    assert(GraftStore.snapshotRowCount(dir(m), GraftStore.currentVersion(dir(m))) ===
+      Some(before.size.toLong))
   }
 
   test("VERSION AS OF applies the pinned version's slices; restore carries them") {
