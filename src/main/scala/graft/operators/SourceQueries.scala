@@ -2266,8 +2266,8 @@ object SourceQueries {
     // version) is at or below the table's recorded high-water. The 100 TB
     // operational story: every serious pipeline retries (task retries,
     // workflow re-runs, at-least-once upstreams), and without write-side
-    // idempotence each retry duplicates rows silently; the record is a
-    // `_txn` file inside the version dir — atomic with the commit itself,
+    // idempotence each retry duplicates rows silently; the record is
+    // sealed in the version's manifest — atomic with the commit itself,
     // so a crash can never leave "recorded but not committed" (lost
     // write) or "committed but not recorded" (duplicate) — and version
     // expiry promotes it to `_txns/<appId>` so the guarantee outlives

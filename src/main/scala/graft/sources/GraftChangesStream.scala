@@ -165,9 +165,10 @@ abstract class GraftVersionStream(dir: String) extends MicroBatchStream
   * time instead of emitting an empty batch — the gap is committed history
   * this consumer never saw, and silently skipping it would corrupt any
   * downstream fold (consumers needing older history re-snapshot). Snapshot
-  * boundaries (restore/truncate/overwrite) fail the same way via their
-  * per-version `_boundary` stamps — see [[GraftStore.writeBoundaryMarker]];
-  * a fresh stream auto-starts past the latest boundary.
+  * boundaries (restore/truncate/overwrite) fail the same way via the
+  * boundary flag sealed in their version manifest — see
+  * [[GraftStore.isBoundary]]; a fresh stream auto-starts past the latest
+  * boundary.
   *
   * Rate limiting (`option("maxVersionsPerTrigger", n)` /
   * `option("maxRowsPerTrigger", n)`) clamps each batch's version range —

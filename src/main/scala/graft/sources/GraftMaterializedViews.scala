@@ -51,13 +51,13 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, 
   *
   * Crash-safety: the refresh watermark is NOT a separate record — the
   * state overwrite commit is stamped with the S37 idempotent-write txn
-  * marker (`txnAppId = "__mv_refresh"`, `txnVersion` = the source version
+  * record (`txnAppId = "__mv_refresh"`, `txnVersion` = the source version
   * refreshed through), so state and watermark publish atomically and a
   * crashed-then-retried refresh can never fold the same changelog slice
   * twice. Snapshot boundaries on the source (RESTORE / TRUNCATE /
   * INSERT OVERWRITE / expire_partitions) poison the delta path exactly
-  * like they poison CDC folds — the refresh detects the `_boundary`
-  * marker in the unfolded range and recomputes.
+  * like they poison CDC folds — the refresh detects a boundary commit
+  * in the unfolded range and recomputes.
   *
   * Reference alignment: the reference system has no table-format layer at
   * all (it is a game-script executor — see SURVEY.md preamble); this is

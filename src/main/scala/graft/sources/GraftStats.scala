@@ -328,13 +328,6 @@ object GraftStats {
         s"column stats ${fields.mkString("[", ",", "]")}")
     }
 
-  /** A version dir's own files' zone maps, from its sealed manifest
-    * (files without usable footer stats have no entry). */
-  def readManifest(versionDir: String): Map[String, FileStats] =
-    GraftStore.manifestOf(versionDir).files.collect {
-      case (rel, f) if f.stats.nonEmpty => rel -> f.stats
-    }
-
   // ------------------------------------------------- table column stats
   //
   // ANALYZE output: per-column NDV / null count / min / max over one

@@ -66,7 +66,9 @@ final case class GraftTableMeta(schema: StructType, keyCols: Seq[String],
   *                                 fan-out, commit instant, partition
   *                                 spec, slot → owner versions, own files
   *                                 (write version, size, zone maps), live
-  *                                 delete-slice files with row counts
+  *                                 delete-slice files with row counts,
+  *                                 snapshot-boundary flag, idempotent-
+  *                                 write record
   *     gbucket=<k>/part-*.parquet  ONLY the files THIS commit wrote
   *     _dv/dseq=<s>/gbucket=<k>/   live merge-on-read delete slices
   *   <dir>/_staging/<queryId>/   delta-write staging frames
@@ -91,14 +93,14 @@ final case class GraftTableMeta(schema: StructType, keyCols: Seq[String],
   * bucket is a few GB and a merge touching 1% of keys rewrites ~1% of
   * files — and the commit's metadata write stays a few KB regardless.
   *
-  * Multi-writer safety: every version commit first CLAIMS its version
-  * number with a create-exclusive `_commit-N` marker and re-verifies the
-  * pointer under the claim (see [[claimCommit]]) — concurrent writers
-  * serialize per version instead of last-writer-wins clobbering. Losing
-  * appends retry on the recomputed version (appends commute); losing
-  * row-level deltas fail with a clean ConcurrentModificationException
-  * (their read snapshot is stale — serializable behavior, re-run the
-  * statement). */
+  * Multi-writer safety: every single-version commit goes through
+  * [[publishNext]], which CLAIMS its version number with a
+  * create-exclusive `_commit-N` marker and re-verifies the pointer under
+  * the claim (see [[claimCommit]]) — concurrent writers serialize per
+  * version instead of last-writer-wins clobbering. Losing appends retry
+  * on the recomputed version (appends commute); losing row-level deltas
+  * fail with a clean ConcurrentModificationException (their read
+  * snapshot is stale — serializable behavior, re-run the statement). */
 object GraftStore {
   /** Reserved partition-column name for the bucket id. Must NOT start with
     * `_` or `.`: Hadoop's hidden-file filter would skip `_bucket=3`
@@ -282,6 +284,7 @@ object GraftStore {
 
   val ManifestName = "_manifest"
   private val ManifestHeader = "graft-manifest\t1"
+  private val ManifestBodyLines = Set("slot", "file", "stat", "delete")
 
   /** One data file a version dir holds: the version that WROTE it (a
     * materialized clone keeps the original), its size — what scans plan
@@ -293,14 +296,19 @@ object GraftStore {
   /** A version's sealed manifest. `owners`: slot → owner versions;
     * `files`: the dir's own data files by path relative to it; `deletes`:
     * the version's live delete-slice files (relative, under [[DvDirName]])
-    * → row count. */
+    * → row count; `boundary`: the commit is a snapshot boundary (see
+    * [[isBoundary]]); `txn`: the (appId, txnVersion) an idempotent write
+    * committed (see [[lastTxnVersion]]). Both are facts about this one
+    * commit, sealed with its files, so they publish atomically with it. */
   final case class VersionManifest(buckets: Int, committedAt: Long,
       partSpec: Option[(String, String)], owners: Map[String, Seq[Long]],
-      files: Map[String, ManifestFile], deletes: Map[String, Long]) {
+      files: Map[String, ManifestFile], deletes: Map[String, Long],
+      boundary: Boolean = false, txn: Option[(String, Long)] = None) {
     /** A version sealed on top of this one: same layout, stamped strictly
-      * after it. `TIMESTAMP AS OF` assumes stamps are MONOTONE per table,
-      * and writers on several hosts stamp from their own clocks — the
-      * clamp makes monotonicity hold by construction. */
+      * after it, with no boundary or txn record of its own. `TIMESTAMP AS
+      * OF` assumes stamps are MONOTONE per table, and writers on several
+      * hosts stamp from their own clocks — the clamp makes monotonicity
+      * hold by construction. */
     def next(owners: Map[String, Seq[Long]],
         files: Map[String, ManifestFile] = Map.empty,
         deletes: Map[String, Long] = Map.empty): VersionManifest =
@@ -318,6 +326,8 @@ object GraftStore {
     line("committed_at", m.committedAt)
     line("partspec", m.partSpec.map { case (fn, c) => s"$fn:${enc(c)}" }
       .getOrElse("-"))
+    if (m.boundary) line("boundary")
+    m.txn.foreach { case (app, v) => line("txn", app, v) }
     m.owners.toSeq.sortBy(_._1).foreach { case (slot, os) =>
       if (os.nonEmpty) line("slot", slot, os.mkString(","))
     }
@@ -333,25 +343,33 @@ object GraftStore {
     sb.toString
   }
 
-  /** The one manifest decoder: exactly what [[encodeManifest]] writes.
-    * Anything else — a missing header, an unknown or repeated line, a
-    * field that does not parse, a stat for an unlisted file — fails
-    * loudly instead of being skipped. */
-  private def decodeManifest(vdir: String, text: String): VersionManifest = {
+  /** The one manifest decoder: exactly what [[encodeManifest]] writes,
+    * the commit's own lines (`buckets`, `committed_at`, `partspec`,
+    * `boundary`, `txn`) ahead of its slot, file, stat and delete lines.
+    * Anything else — a missing header, an unknown, repeated or misplaced
+    * line, a field that does not parse, a stat for an unlisted file —
+    * fails loudly instead of being skipped. */
+  private def decodeManifest(vdir: String,
+      lines: Iterator[String]): VersionManifest = {
     def bad(why: String): Nothing = throw new IllegalStateException(
       s"malformed version manifest in $vdir: $why")
     val dec = (s: String) => java.net.URLDecoder.decode(s, "UTF-8")
-    val lines = text.split("\n", -1)
-    if (lines.head != ManifestHeader) bad("no manifest header")
-    if (lines.last.nonEmpty) bad("truncated")
+    if (!lines.hasNext || lines.next() != ManifestHeader)
+      bad("no manifest header")
     var buckets = Option.empty[Int]
     var stamp = Option.empty[Long]
     var spec = Option.empty[Option[(String, String)]]
     val owners = scala.collection.mutable.Map.empty[String, Seq[Long]]
     val files = scala.collection.mutable.Map.empty[String, ManifestFile]
     val deletes = scala.collection.mutable.Map.empty[String, Long]
-    lines.slice(1, lines.length - 1).foreach { l =>
-      try l.split("\t", -1) match {
+    var boundary = false
+    var txn = Option.empty[(String, Long)]
+    var inBody = false
+    lines.foreach { l =>
+      val f = l.split("\t", -1)
+      if (inBody && !ManifestBodyLines(f(0))) bad(s"'$l' after the file list")
+      inBody = ManifestBodyLines(f(0))
+      try f match {
         case Array("buckets", n) if buckets.isEmpty => buckets = Some(n.toInt)
         case Array("committed_at", t) if stamp.isEmpty => stamp = Some(t.toLong)
         case Array("partspec", p) if spec.isEmpty =>
@@ -359,6 +377,9 @@ object GraftStore {
             case Array(fn, c) => Some((fn, dec(c)))
             case _ => bad(s"partition spec '$p'")
           })
+        case Array("boundary") if !boundary => boundary = true
+        case Array("txn", app, v) if txn.isEmpty &&
+            app.matches(TxnAppIdPattern) => txn = Some((app, v.toLong))
         case Array("slot", s, os) if !owners.contains(s) =>
           owners(s) = os.split(',').map(_.toLong).toSeq
         case Array("file", rel, seq, bytes) if !files.contains(rel) =>
@@ -376,7 +397,7 @@ object GraftStore {
     VersionManifest(buckets.getOrElse(bad("no bucket count")),
       stamp.getOrElse(bad("no commit stamp")),
       spec.getOrElse(bad("no partition spec line")), owners.toMap,
-      files.toMap, deletes.toMap)
+      files.toMap, deletes.toMap, boundary, txn)
   }
 
   /** Write `m` as the manifest of `buildDir` under a temp name, renamed
@@ -393,30 +414,85 @@ object GraftStore {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  // a published manifest is immutable, so decoded manifests cache per
-  // version dir: the planner reads layout, owners and stats of several
-  // versions per query. Entries carry the manifest file's identity
-  // (inode, mtime, size): a version-dir path reused by a drop/recreate,
-  // a rebase swap or a branch re-create in ANOTHER process holds a new
-  // file, and a stale entry must never seed a commit's owner map
-  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Any, VersionManifest)]()
+  /** A cache of values derived from a published version dir (manifests,
+    * snapshots, delete probes, scan indexes), keyed by the dir plus a
+    * `variant`. A version-dir PATH is not an identity — a drop/recreate,
+    * rebase swap or branch re-create in ANOTHER process reuses it — so an
+    * entry is served only while its manifest file keeps the identity
+    * (inode, mtime, size) it had at compute time; a computation racing
+    * [[invalidateDvCache]] skips its put; a full cache (`cap` entries) is
+    * cleared. Every instance is registered, so one invalidation sweeps
+    * them all. */
+  final class VersionCache[A] private[GraftStore] (cap: Int) {
+    private val entries =
+      new java.util.concurrent.ConcurrentHashMap[String, (Any, A)]()
+
+    def apply(vdir: String, variant: String = "")(compute: => A): A = {
+      val key = vdir + variant
+      val a = Files.readAttributes(Paths.get(vdir, ManifestName),
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      val id = (a.fileKey, a.lastModifiedTime, a.size)
+      val hit = entries.get(key)
+      if (hit != null && hit._1 == id) return hit._2
+      val e0 = cacheEpoch.get()
+      val v = compute
+      if (entries.size > cap) entries.clear()
+      if (cacheEpoch.get() == e0) entries.put(key, (id, v))
+      v
+    }
+
+    private[GraftStore] def invalidate(tableDir: String): Unit = {
+      // path-segment-scoped: dropping 'wh/t' must not evict 'wh/t2'
+      val prefix = tableDir + java.io.File.separator
+      entries.keySet.removeIf(k => k == tableDir || k.startsWith(prefix))
+    }
+  }
+
+  private val versionCaches =
+    new java.util.concurrent.ConcurrentLinkedQueue[VersionCache[_]]()
+
+  /** A new registered [[VersionCache]] of at most `cap` entries. */
+  def versionCache[A](cap: Int): VersionCache[A] = {
+    val c = new VersionCache[A](cap)
+    versionCaches.add(c)
+    c
+  }
+
+  /** Bumped by every invalidation — computing threads racing a concurrent
+    * drop/recreate skip their put instead of re-inserting a stale entry
+    * after the sweep (the get-miss → compute → put window). */
+  private val cacheEpoch = new java.util.concurrent.atomic.AtomicLong()
+
+  // the planner reads layout, owners and stats of several versions per
+  // query, and the cached owner map seeds the next commit's manifest
+  private val manifestCache = versionCache[VersionManifest](4096)
 
   /** The sealed manifest of version dir `vdir` — the one read of a
     * version's contents. A missing or malformed manifest fails loudly. */
-  def manifestOf(vdir: String): VersionManifest = {
-    val p = Paths.get(vdir, ManifestName)
-    val a = Files.readAttributes(p,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    val id = (a.fileKey, a.lastModifiedTime, a.size)
-    val hit = manifestCache.get(vdir)
-    if (hit != null && hit._1 == id) return hit._2
-    val e0 = cacheEpoch.get()
-    val m = decodeManifest(vdir, new String(Files.readAllBytes(p), "UTF-8"))
-    if (manifestCache.size > 4096) manifestCache.clear()
-    if (cacheEpoch.get() == e0) manifestCache.put(vdir, (id, m))
-    m
-  }
+  def manifestOf(vdir: String): VersionManifest =
+    manifestCache(vdir) {
+      val lines = new String(Files.readAllBytes(Paths.get(vdir, ManifestName)),
+        "UTF-8").split("\n", -1)
+      if (lines.last.nonEmpty) throw new IllegalStateException(
+        s"malformed version manifest in $vdir: truncated")
+      decodeManifest(vdir, lines.iterator.take(lines.length - 1))
+    }
+
+  private val manifestHeadCache = versionCache[VersionManifest](4096)
+
+  /** The commit's own lines of version dir `vdir` — layout, stamp,
+    * `boundary` and `txn` — decoded up to its first slot, file or delete
+    * line, so `owners`, `files` and `deletes` are empty: a txn or boundary
+    * probe over every retained version decodes no file list or zone map
+    * and evicts no full manifest. None when the manifest is gone: the dir
+    * was retired by [[expireVersions]] after it was listed. */
+  private def manifestHead(vdir: String): Option[VersionManifest] =
+    try Some(manifestHeadCache(vdir) {
+      val r = Files.newBufferedReader(Paths.get(vdir, ManifestName))
+      try decodeManifest(vdir, Iterator.continually(r.readLine())
+        .takeWhile(l => l != null && !ManifestBodyLines(l.split("\t")(0))))
+      finally r.close()
+    }) catch { case _: java.nio.file.NoSuchFileException => None }
 
   /** The slot of a file path relative to its version dir. */
   private def slotOf(rel: String): String =
@@ -505,14 +581,21 @@ object GraftStore {
   private def layoutCols(meta: GraftTableMeta): Seq[String] =
     if (meta.partition.isDefined) Seq(PartCol, BucketCol) else Seq(BucketCol)
 
-  /** Parquet writer options enabling per-column bloom filters for the
-    * table's declared `bloom_filter_columns` — applied by every data-file
-    * write (commit legs, OPTIMIZE, rebucket), consumed automatically by
-    * the stock vectorized reader's row-group filtering on `=`/IN
-    * predicates. Physical column names match what files store. */
-  private def bloomOptions(meta: GraftTableMeta): Map[String, String] =
-    meta.bloomCols
-      .map(c => s"parquet.bloom.filter.enabled#$c" -> "true").toMap
+  /** Writer option keeping Spark's output committer from leaving a
+    * `_SUCCESS` file in a build dir: a version dir holds its manifest,
+    * slot dirs and delete slices only, and the manifest is its commit
+    * record. */
+  private val NoSuccessFile =
+    Map("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
+
+  /** Options of every data-file write into a build dir (commit legs,
+    * OPTIMIZE, rebucket): [[NoSuccessFile]], and per-column bloom filters
+    * for the table's declared `bloom_filter_columns`, consumed
+    * automatically by the stock vectorized reader's row-group filtering
+    * on `=`/IN predicates. Physical column names match what files store. */
+  private def dataWriteOptions(meta: GraftTableMeta): Map[String, String] =
+    NoSuccessFile ++ meta.bloomCols
+      .map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
 
   /** Write `df` as parquet under `out`, one directory level per
     * `partCols` (the `partitionBy` layout). A `small` batch whose rows the
@@ -614,12 +697,6 @@ object GraftStore {
   def snapshotFiles(dir: String, v: Long): Seq[String] =
     snapshotFileEntries(dir, v).map(_.path)
 
-  /** Per-bucket live data-file count of a snapshot (summed over a
-    * partitioned bucket's slots). */
-  def bucketFileCounts(dir: String, v: Long): Map[Int, Int] =
-    snapshotFileEntries(dir, v).groupBy(e => slotBucket(e.slot))
-      .map { case (b, es) => b -> es.size }
-
   /** Per-SLOT live data-file count of a snapshot — the fragmentation
     * signal [[optimize]] acts on. Slot-scoped on purpose: on a partitioned
     * table a per-BUCKET count sums across every partition, so a long
@@ -646,12 +723,9 @@ object GraftStore {
     def rowCount: Option[Long] = stats.values.map(_.rowCount).find(_ >= 0)
   }
 
-  // published version dirs are immutable, so the resolved (file, stats)
-  // view of a snapshot caches per version dir — the planner may ask for
-  // statistics several times per query and must not pay the O(live files)
-  // resolution each time (same discipline as dvProbeCache)
-  private val snapshotFilesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[SnapshotFile]]()
+  // the planner may ask for a snapshot's statistics several times per
+  // query and must not pay the O(live files) resolution each time
+  private val snapshotFilesCache = versionCache[Seq[SnapshotFile]](64)
 
   /** Every live data file of snapshot (`dir`, `v`): each slot of `v`'s
     * manifest, each owner of the slot, each file the owner's manifest
@@ -659,22 +733,18 @@ object GraftStore {
     * dir; the shared backbone of scan planning, row counting, match
     * estimation and materialization. */
   def snapshotFileEntries(dir: String, v: Long): Seq[SnapshotFile] = {
-    val key = versionDir(dir, v)
-    val cached = snapshotFilesCache.get(key)
-    if (cached != null) return cached
-    val epoch0 = cacheEpoch.get()
-    val bySlot = scala.collection.mutable.Map
-      .empty[Long, Map[String, Seq[(String, ManifestFile)]]]
-    val computed: Seq[SnapshotFile] = for {
-      (slot, os) <- manifestOf(key).owners.toSeq.sortBy(_._1)
-      o <- os
-      od = versionDir(dir, o)
-      (rel, f) <- bySlot.getOrElseUpdate(o, manifestOf(od).files.toSeq
-        .sortBy(_._1).groupBy(e => slotOf(e._1))).getOrElse(slot, Nil)
-    } yield SnapshotFile(slot, rel, s"$od/$rel", f)
-    if (snapshotFilesCache.size > 64) snapshotFilesCache.clear()
-    if (cacheEpoch.get() == epoch0) snapshotFilesCache.put(key, computed)
-    computed
+    val vdir = versionDir(dir, v)
+    snapshotFilesCache(vdir) {
+      val bySlot = scala.collection.mutable.Map
+        .empty[Long, Map[String, Seq[(String, ManifestFile)]]]
+      for {
+        (slot, os) <- manifestOf(vdir).owners.toSeq.sortBy(_._1)
+        o <- os
+        od = versionDir(dir, o)
+        (rel, f) <- bySlot.getOrElseUpdate(o, manifestOf(od).files.toSeq
+          .sortBy(_._1).groupBy(e => slotOf(e._1))).getOrElse(slot, Nil)
+      } yield SnapshotFile(slot, rel, s"$od/$rel", f)
+    }
   }
 
   /** Upper bound on the rows of a snapshot that can match `conjuncts`
@@ -855,11 +925,33 @@ object GraftStore {
       staleClaimMillis: Long): (Path, String) = {
     val marker = Paths.get(dir, f"_commit-$next%010d")
     val token = tryLease(marker, staleClaimMillis).getOrElse(
-      throw new java.util.ConcurrentModificationException(
+      throw new CommitContended(
         s"concurrent commit in flight for version $next of $dir " +
           "(claim held by another writer)"))
     (marker, token)
   }
+
+  /** The two conflicts a commit whose batch commutes retries: the next
+    * version's claim is held by another writer ([[claimCommit]]), or the
+    * pointer moved before the claim was won ([[publishNext]]). A conflict
+    * a publish body raises is a plain ConcurrentModificationException. */
+  private[sources] final class CommitContended(msg: String)
+    extends java.util.ConcurrentModificationException(msg)
+
+  /** Run `attempt` up to `maxAttempts` times, backing off after each
+    * [[CommitContended]] conflict; any other failure propagates. */
+  private def retryContended[A](dir: String, maxAttempts: Int, n: Int = 1)(
+      attempt: => A): A =
+    try attempt
+    catch {
+      case _: CommitContended if n < maxAttempts =>
+        Thread.sleep(math.min(500L, 20L * n))
+        retryContended(dir, maxAttempts, n + 1)(attempt)
+      case e: CommitContended if maxAttempts > 1 =>
+        throw new java.util.ConcurrentModificationException(
+          s"table $dir under sustained write contention; gave up after $n " +
+            "attempts", e)
+    }
 
   /** Release a lease (a commit claim or the meta lock) ONLY if it still
     * holds `token`. */
@@ -949,22 +1041,22 @@ object GraftStore {
   }
 
   /** Commit version `cur + 1` of `dir` through one claimed build: claim
-    * it, heartbeat the claim marker and the build dir, re-check that the
-    * pointer is still at `cur` (a claim can be won after another writer
-    * committed `cur + 1` and released), clear a remnant build dir, then run
-    * `body`, which builds [[VersionBuild.path]] and calls
-    * [[VersionBuild.flip]] itself — so a body can wrap the flip (RTAS's
-    * meta-swap rollback) or act just before it. The build dir is NOT
-    * created here: Spark writes it under the default ErrorIfExists mode.
-    * Returns the new version. */
-  private def publishNext(dir: String, cur: Long, op: String)(
-      body: VersionBuild => Unit): Long = {
+    * it, heartbeat the claim marker, the build dir and `heartbeatPaths`,
+    * re-check that the pointer is still at `cur` (a claim can be won after
+    * another writer committed `cur + 1` and released), clear a remnant
+    * build dir, then run `body`, which builds [[VersionBuild.path]] and
+    * calls [[VersionBuild.flip]] itself — so a body can wrap the flip
+    * (RTAS's meta-swap rollback) or act just before it. The build dir is
+    * NOT created here: Spark writes it under the default ErrorIfExists
+    * mode. Returns the new version. */
+  private def publishNext(dir: String, cur: Long, op: String,
+      heartbeatPaths: Seq[Path] = Nil)(body: VersionBuild => Unit): Long = {
     val (marker, token) = claimCommit(dir, cur + 1)
     try {
       val b = new VersionBuild(dir, cur + 1, marker, token)
-      withClaimHeartbeat(Seq(marker, Paths.get(b.path))) {
+      withClaimHeartbeat(marker +: Paths.get(b.path) +: heartbeatPaths) {
         if (currentVersion(dir) != cur)
-          throw new java.util.ConcurrentModificationException(
+          throw new CommitContended(
             s"table $dir advanced past version $cur during $op; re-run")
         deleteRecursively(Paths.get(b.path))
         body(b)
@@ -1099,8 +1191,8 @@ object GraftStore {
       sealVersion(b.path, manifestOf(versionDir(dir, cur))
         .next(selfOwned(files, b.next), files,
           linkDvCarry(svDir, b.path, Set.empty)) // staged DVs (none today)
-        .copy(buckets = stagedM.buckets, partSpec = stagedM.partSpec))
-      writeBoundaryMarker(b.path) // snapshot boundary for CDC consumers
+        .copy(buckets = stagedM.buckets, partSpec = stagedM.partSpec,
+          boundary = true)) // snapshot boundary for CDC consumers
       // crash-safe meta swap: stamp the OLD meta + target version into
       // _meta_backup first. If this commit dies between the meta write
       // and the pointer flip (in-process failure handled right here;
@@ -1313,38 +1405,22 @@ object GraftStore {
   def loadDvProbe(spark: SparkSession, dir: String, v: Long,
       meta: GraftTableMeta)
       : Option[(Map[String, Long], Map[Int, Map[Seq[Any], Long]])] = {
-    // version dirs are immutable once published and the physical key
-    // names never change (renames are logical-only), so the probe caches
-    // per directory — scans against a DV-live version pay the slice-read
-    // job ONCE, not once per query
+    // the physical key names never change (renames are logical-only), so
+    // the probe caches per version — scans against a DV-live version pay
+    // the slice-read job ONCE, not once per query
     val vdir = versionDir(dir, v)
-    val cached = dvProbeCache.get(vdir)
-    if (cached != null) return cached
-    val epoch0 = cacheEpoch.get()
-    val computed = loadDvProbeUncached(spark, dir, v, meta)
-    if (dvProbeCache.size > 64) dvProbeCache.clear()
-    if (cacheEpoch.get() == epoch0) dvProbeCache.put(vdir, computed)
-    computed
+    dvProbeCache(vdir)(loadDvProbeUncached(spark, dir, v, meta))
   }
 
-  private val dvProbeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[(Map[String, Long], Map[Int, Map[Seq[Any], Long]])]]()
+  private val dvProbeCache = versionCache[
+    Option[(Map[String, Long], Map[Int, Map[Seq[Any], Long]])]](64)
 
-  /** Bumped by every invalidation — computing threads racing a concurrent
-    * drop/recreate skip their put instead of re-inserting a stale entry
-    * after the sweep (the get-miss → compute → put window). */
-  private val cacheEpoch = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Drop cached manifests, snapshots and probes under a table dir —
-    * version-dir paths stop being unique identities the moment a table is
+  /** Drop every [[VersionCache]] entry under a table dir — version-dir
+    * paths stop being unique identities the moment a table is
     * dropped/recreated/adopted at the same path. */
   private[sources] def invalidateDvCache(tableDir: String): Unit = {
     cacheEpoch.incrementAndGet()
-    // path-segment-scoped: dropping 'wh/t' must not evict 'wh/t2'
-    val prefix = tableDir + java.io.File.separator
-    Seq(dvProbeCache, snapshotFilesCache, manifestCache).foreach(
-      _.keySet.removeIf(k => k == tableDir || k.startsWith(prefix)))
-    org.apache.spark.sql.GraftSnapshotScan.invalidate(tableDir)
+    versionCaches.forEach(_.invalidate(tableDir))
     GraftStreamLimits.invalidate(tableDir)
   }
 
@@ -1393,14 +1469,6 @@ object GraftStore {
     GraftStats.footerManifest(buildDir).map { case (rel, st) =>
       rel -> ManifestFile(version, Files.size(Paths.get(buildDir, rel)), st)
     }
-
-  /** Zone-map entries of every live file of a snapshot, merged across its
-    * owner versions' manifests (files without footer stats have none). */
-  private[sources] def mergedManifest(dir: String, v: Long)
-      : Map[String, GraftStats.FileStats] =
-    snapshotFileEntries(dir, v).collect {
-      case e if e.stats.nonEmpty => e.rel -> e.stats
-    }.toMap
 
   /** Publish a writer-private build directory under its final version
     * name (atomic rename), clearing any crash remnant first. Versions are
@@ -1524,8 +1592,9 @@ object GraftStore {
     val cur = currentVersion(dir)
     publishNext(dir, cur, "TRUNCATE") { b =>
       Files.createDirectories(Paths.get(b.path))
-      sealVersion(b.path, manifestOf(versionDir(dir, cur)).next(Map.empty))
-      writeBoundaryMarker(b.path) // truncation = snapshot boundary for CDC
+      // truncation = snapshot boundary for CDC
+      sealVersion(b.path, manifestOf(versionDir(dir, cur)).next(Map.empty)
+        .copy(boundary = true))
       b.flip()
     }
   }
@@ -2356,59 +2425,54 @@ object GraftStore {
   // at or below the table's recorded high-water for that app is a NO-OP —
   // so a retried job (Spark task retry frameworks, workflow engines
   // re-running a failed stage, an at-least-once upstream) can never
-  // double-append. The record is a `_txn` file INSIDE the version dir —
-  // written into the writer-private build dir, so it publishes atomically
-  // with the commit itself (no record-vs-data crash window in either
-  // order). Expiry promotes records to `_txns/<appId>` so the guarantee
-  // survives retention (same pattern as boundary-marker promotion).
+  // double-append. The record is the `txn` line of the commit's sealed
+  // manifest, so it publishes atomically with the commit itself (no
+  // record-vs-data crash window in either order). Expiry promotes records
+  // to `_txns/<appId>` so the guarantee survives retention (same pattern
+  // as boundary promotion).
   // --------------------------------------------------------------------
 
   private def txnsRoot(dir: String): Path = Paths.get(dir, "_txns")
-  private[sources] val TxnMarker = "_txn"
   private[sources] val TxnAppIdPattern = "[A-Za-z0-9._-]{1,200}"
 
-  /** The recorded high-water txnVersion for `appId`, across retained
-    * version dirs (including retired-but-referenced `_expired` hosts —
-    * their commits were real; both are at or below the pointer) and
-    * expiry-promoted records. POINTER-CAPPED like [[listVersions]]: a
-    * final-named dir above the pointer is a crashed commit's (or an
-    * in-flight fast_forward adoption's) debris, not committed history —
-    * counting its marker would silently no-op the retried idempotent
-    * write that heals the crash, and for MV refresh would report a
-    * watermark the readable state never folded. */
-  def lastTxnVersion(dir: String, appId: String): Option[Long] = {
-    val promoted = {
-      val p = txnsRoot(dir).resolve(appId)
-      if (!Files.exists(p)) None
-      else try Some(new String(Files.readAllBytes(p), "UTF-8").trim.toLong)
-      catch { case _: Exception => None }
-    }
+  /** The recorded high-water txnVersion for `appId`: the `txn` records of
+    * retained version dirs (including retired-but-referenced `_expired`
+    * hosts — their commits were real; both are at or below the pointer),
+    * then the expiry-promoted record. Manifests FIRST: expireVersions
+    * promotes a record and then removes its dir, so a dir that vanishes
+    * between the two reads has had its record promoted by the second;
+    * the other order can miss it in both and admit the retry twice.
+    * POINTER-CAPPED like [[listVersions]]: a final-named dir above the
+    * pointer is a crashed commit's (or an in-flight fast_forward
+    * adoption's) debris, not committed history — counting its record
+    * would silently no-op the retried idempotent write that heals the
+    * crash, and for MV refresh would report a watermark the readable
+    * state never folded. */
+  def lastTxnVersion(dir: String, appId: String): Option[Long] =
+    lastTxnVersion(dir, appId, () => ())
+
+  /** [[lastTxnVersion]], running `betweenReads` after the manifests are
+    * read and before the promoted record is. */
+  private[sources] def lastTxnVersion(dir: String, appId: String,
+      betweenReads: () => Unit): Option[Long] = {
     val cap =
       try currentVersion(dir)
       catch { case _: java.nio.file.NoSuchFileException => Long.MaxValue }
-    val inVersions = listDir(Paths.get(dir))(_.filter { vp =>
-        val n = vp.getFileName.toString
-        n.matches("v\\d{10}") && n.drop(1).toLong <= cap
-      }.toSeq)
-      .flatMap { vp =>
-        val p = vp.resolve(TxnMarker)
-        if (!Files.exists(p)) None
-        else try {
-          new String(Files.readAllBytes(p), "UTF-8").trim.split('\t') match {
-            case Array(app, v) if app == appId => Some(v.toLong)
-            case _ => None
-          }
-        } catch { case _: Exception => None }
-      }
-    (promoted.toSeq ++ inVersions).maxOption
+    val inVersions = listDir(Paths.get(dir))(_.map(_.getFileName.toString)
+        .filter(n => n.matches("v\\d{10}") && n.drop(1).toLong <= cap).toSeq)
+      .flatMap(n => manifestHead(s"$dir/$n").flatMap(_.txn))
+      .collect { case (`appId`, v) => v }
+    betweenReads()
+    (inVersions ++ promotedTxn(dir, appId)).maxOption
   }
 
-  private[sources] def writeTxnMarker(buildDir: String, appId: String,
-      v: Long): Unit =
-    Files.write(Paths.get(buildDir, TxnMarker),
-      s"$appId\t$v".getBytes("UTF-8"))
+  /** The expiry-promoted high-water of `appId`, if any. */
+  private def promotedTxn(dir: String, appId: String): Option[Long] =
+    try Some(new String(Files.readAllBytes(txnsRoot(dir).resolve(appId)),
+      "UTF-8").trim.toLong)
+    catch { case _: java.nio.file.NoSuchFileException => None }
 
-  /** Promote a retiring version dir's `_txn` record to `_txns/<appId>`
+  /** Promote a retiring version's `txn` record to `_txns/<appId>`
     * (keeping the max — re-promotion after a crash is idempotent). The
     * read-modify-write runs under the table's meta lock and publishes by
     * temp + atomic rename: two CONCURRENT expire_versions calls promoting
@@ -2418,38 +2482,18 @@ object GraftStore {
     * and a torn file must never parse as "no record". IO failures
     * PROPAGATE: the caller must abort this version's retirement (the
     * sweep is crash-resumable), never sweep away the only copy of the
-    * high-water record — a swallowed failure here silently re-admits
-    * the duplicate write the record exists to block. Only a marker
-    * whose CONTENT doesn't parse (torn write of the marker itself, or
-    * a foreign file) is treated as carrying no promotable record. */
-  private def promoteTxnMarker(vdir: String, dir: String): Unit = {
-    val p = Paths.get(vdir, TxnMarker)
-    if (!Files.exists(p)) return
-    val parsed: Option[(String, Long)] =
-      new String(Files.readAllBytes(p), "UTF-8").trim.split('\t') match {
-        case Array(app, v) if app.matches(TxnAppIdPattern) =>
-          try Some((app, v.toLong))
-          catch { case _: NumberFormatException => None }
-        case _ => None
-      }
-    parsed.foreach { case (app, v) =>
-      withMetaLock(dir) {
-        Files.createDirectories(txnsRoot(dir))
-        val dst = txnsRoot(dir).resolve(app)
-        val existing =
-          if (!Files.exists(dst)) None
-          else try Some(new String(Files.readAllBytes(dst), "UTF-8").trim.toLong)
-          catch { case _: NumberFormatException => None }
-        val hi = math.max(v, existing.getOrElse(Long.MinValue))
-        if (!existing.contains(hi)) {
-          val tmp = dst.resolveSibling(s".${app}.tmp-${System.nanoTime()}")
-          Files.write(tmp, hi.toString.getBytes("UTF-8"))
-          Files.move(tmp, dst, StandardCopyOption.REPLACE_EXISTING,
-            StandardCopyOption.ATOMIC_MOVE)
-        }
+    * high-water record. */
+  private def promoteTxn(dir: String, app: String, v: Long): Unit =
+    withMetaLock(dir) {
+      Files.createDirectories(txnsRoot(dir))
+      val existing = promotedTxn(dir, app)
+      if (existing.forall(_ < v)) {
+        val tmp = txnsRoot(dir).resolve(s".${app}.tmp-${System.nanoTime()}")
+        Files.write(tmp, v.toString.getBytes("UTF-8"))
+        Files.move(tmp, txnsRoot(dir).resolve(app),
+          StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
       }
     }
-  }
 
   /** Parse the txnAppId/txnVersion write-option pair, loudly: both or
     * neither, path-safe app id, non-negative version. */
@@ -2506,18 +2550,19 @@ object GraftStore {
       scala.collection.mutable.Map.empty[Long, Map[String, Seq[Long]]]
     retired.foreach { v =>
       val vdir = versionDir(dir, v)
-      // promote the snapshot-boundary marker BEFORE the dir goes away
+      val m = manifestOf(vdir)
+      // promote the snapshot-boundary flag BEFORE the dir goes away
       // (write-then-delete, so a crash can only leave a true boundary
       // recorded twice, never lose one) — a resuming CDC stream must keep
       // detecting the boundary after the version itself is expired
-      if (Files.exists(Paths.get(vdir, "_boundary"))) {
+      if (m.boundary) {
         Files.createDirectories(Paths.get(changesRoot(dir)))
-        val m = Paths.get(changesRoot(dir), f"_boundary-$v%010d")
-        if (!Files.exists(m)) Files.write(m, Array.empty[Byte])
+        val p = Paths.get(changesRoot(dir), f"_boundary-$v%010d")
+        if (!Files.exists(p)) Files.write(p, Array.empty[Byte])
       }
       // same write-then-delete discipline for idempotent-write records:
       // the (appId, txnVersion) high-water must survive the version dir
-      promoteTxnMarker(vdir, dir)
+      m.txn.foreach { case (app, t) => promoteTxn(dir, app, t) }
       // slots of THIS version some kept snapshot references — re-reading
       // the tags here (not just in the keep-set upfront) so a tag that
       // landed (or a version that resurrected) mid-pass still protects
@@ -2780,12 +2825,6 @@ object GraftStore {
       txn: Option[(String, Long)] = None,
       smallBatchHint: Boolean = false): Long = {
     require(!overwrite || allInserts, "overwrite implies an all-insert batch")
-    // idempotent-write fast path: an (appId, version) at or below the
-    // recorded high-water is a retry of an already-applied write — no-op
-    // before any job runs. The authoritative re-check happens under the
-    // commit claim below (two racing retries serialize there).
-    if (txn.exists { case (a, v) => lastTxnVersion(dir, a).exists(_ >= v) })
-      return currentVersion(dir)
     val meta = readMeta(dir)
     // keyless tables have NO row identity: nothing to anti-join a delete
     // or upsert against. Appends (and whole-table overwrites) are the
@@ -2867,87 +2906,53 @@ object GraftStore {
       bucketedFor = n
     }
     try {
-      // Claim-verify-commit loop. claimCommit serializes writers per
-      // version; after winning the claim we re-read the pointer — a claim
-      // for `next` can be won AFTER another writer committed `next` and
-      // released (stale pre-claim read), and flipping then would regress
-      // the store. Appends commute, so a losing append retries on the
-      // recomputed version; a row-level delta's read snapshot is stale the
-      // moment another commit lands, so it surfaces the conflict instead.
-      // a losing append waits out the winner's WHOLE commit job, so the
-      // retry budget is wall-clock-sized (~60 s), not a fixed count.
       // `commutative` marks keyed-upsert batches whose outcome doesn't
-      // depend on the base snapshot (streaming upsert epochs) — they
-      // rebase-and-retry like appends; SQL deltas stay strict.
-      val retriable = allInserts || commutative
-      val maxAttempts = if (retriable) 120 else 1
-      var attempt = 0
-      var committed = -1L
-      while (committed < 0) {
-        val cur = currentVersion(dir)
-        val next = cur + 1
-        bucketFor(versionBuckets(dir, cur))
-        // a row-level delta pins its READ SNAPSHOT when its target scan is
-        // planned; if the table has moved since — anywhere in the long
-        // scan-to-commit window, not just inside this loop — the delta is
-        // stale and must conflict, never silently rebase over the
-        // intervening commit
-        expectedVersion.filter(_ != cur).foreach { v =>
-          throw new java.util.ConcurrentModificationException(
-            s"table $dir advanced from the statement's snapshot v$v to " +
-              s"v$cur during the rewrite; re-run the statement")
-        }
-        val claimed =
-          try Some(claimCommit(dir, next))
-          catch {
-            case e: java.util.ConcurrentModificationException =>
-              attempt += 1
-              if (attempt >= maxAttempts) throw e
-              Thread.sleep(math.min(500L, 20L * attempt))
-              None
-          }
-        claimed.foreach { case (marker, token) =>
-          try {
-            if (currentVersion(dir) == cur) {
-              val build = new VersionBuild(dir, next, marker, token)
-              // authoritative idempotence check: the claim serializes
-              // writers per version, so a racing retry of the same
-              // (appId, txnVersion) that lost the earlier claim sees the
-              // winner's published record here and no-ops
-              if (txn.exists { case (a, v) =>
-                    lastTxnVersion(dir, a).exists(_ >= v) }) {
-                committed = cur
-              } else committed = withClaimHeartbeat(marker +:
-                  Paths.get(build.path) +: heartbeatPaths) {
-                // the caller's staging dirs ride the heartbeat so vacuum
-                // never reaps .bin files the decode jobs read lazily until
-                // the last leg finishes
-                commitVersion(spark, dir, meta, ch, touched, allInserts,
-                  overwrite, build, txn, smallKeyed, smallBatchHint)
-              }
-            } else {
-              // claim won but the pointer moved first (stale pre-claim
-              // read): count it against the retry budget and back off —
-              // without this a contended writer busy-spins claim/release
-              if (!retriable) throw new java.util.ConcurrentModificationException(
-                s"table $dir advanced past version $cur during the delta " +
-                  "rewrite; re-run the statement against the new version")
-              attempt += 1
-              if (attempt >= maxAttempts) throw new java.util.ConcurrentModificationException(
-                s"table $dir under sustained write contention; gave up after $attempt attempts")
-              Thread.sleep(math.min(500L, 20L * attempt))
+      // depend on the base snapshot (streaming upsert epochs): like
+      // appends they rebase onto the recomputed version and retry, and a
+      // losing append waits out the winner's WHOLE commit job, so the
+      // budget is wall-clock-sized (~60 s). A row-level delta's read
+      // snapshot is stale the moment another commit lands: one attempt.
+      val (committed, published) =
+        retryContended(dir, if (allInserts || commutative) 120 else 1) {
+          val cur = currentVersion(dir)
+          // idempotence: every record of a version ≤ `cur` is visible once
+          // `cur` is read, and publishNext's pointer re-check under the
+          // claim proves no version landed after this check — a racing
+          // retry of the same (appId, txnVersion) serializes on the claim
+          // and no-ops on its next attempt
+          if (txn.exists { case (a, v) => lastTxnVersion(dir, a).exists(_ >= v) })
+            (cur, false)
+          else {
+            // a row-level delta pins its READ SNAPSHOT when its target scan
+            // is planned; if the table has moved since — anywhere in the
+            // long scan-to-commit window — the delta is stale and must
+            // conflict, never silently rebase over the intervening commit
+            expectedVersion.filter(_ != cur).foreach { v =>
+              throw new java.util.ConcurrentModificationException(
+                s"table $dir advanced from the statement's snapshot v$v to " +
+                  s"v$cur during the rewrite; re-run the statement")
             }
-          } finally releaseClaim(marker, token)
+            bucketFor(versionBuckets(dir, cur))
+            // the caller's staging dirs ride the heartbeat so vacuum never
+            // reaps .bin files the decode jobs read lazily until the last
+            // leg finishes
+            (publishNext(dir, cur,
+                if (allInserts) "the append" else "the delta rewrite",
+                heartbeatPaths) { b =>
+              commitVersion(spark, dir, meta, ch, touched, allInserts,
+                overwrite, b, txn, smallKeyed, smallBatchHint)
+            }, true)
+          }
         }
-      }
       // auto_optimize: close the fragmentation loop inline — bounded to
       // the slots THIS commit wrote, and only when one of them crossed
       // the cap (optimize itself rewrites only over-cap slots, so cold
       // slots are never touched). Contention is the expected failure
       // (another writer or optimizer holds the next claim): skip, the
       // next commit's hook retries. The DML itself has already
-      // committed; real IO failures propagate loudly.
-      autoOptimizeIfNeeded(spark, dir, meta, committed)
+      // committed; real IO failures propagate loudly. A no-op retry of an
+      // idempotent write wrote nothing, so it compacts nothing either.
+      if (published) autoOptimizeIfNeeded(spark, dir, meta, committed)
       committed
     } finally if (ch != null) ch.unpersist()
   }
@@ -2966,21 +2971,18 @@ object GraftStore {
       catch { case _: java.util.ConcurrentModificationException => () }
   }
 
-  /** One claimed commit attempt: build `build.next` from the bucketed
-    * change batch and flip it. Caller holds the commit claim (and its
-    * heartbeat); [[VersionBuild.flip]] re-verifies ownership. */
+  /** One commit attempt, as [[publishNext]]'s body: build `build.next`
+    * from the bucketed change batch and flip it. */
   private def commitVersion(spark: SparkSession, dir: String,
       meta: GraftTableMeta, ch: DataFrame, touched: Set[Int],
       allInserts: Boolean, overwrite: Boolean, build: VersionBuild,
-      txn: Option[(String, Long)] = None,
-      smallKeyed: Boolean = false,
-      smallBatchHint: Boolean = false): Long = {
+      txn: Option[(String, Long)], smallKeyed: Boolean,
+      smallBatchHint: Boolean): Unit = {
     val next = build.next
     val cur = next - 1
     // writer-private build dir: the final vN name appears only after the
     // last ownership re-check (see publishVersion)
     val buildDir = build.path
-    deleteRecursively(Paths.get(buildDir))
     val cols = meta.schema.fieldNames.toSeq
     locally {
       val curDir = versionDir(dir, cur)
@@ -3146,7 +3148,7 @@ object GraftStore {
         withPartCol(toPhysical(kept.unionByName(adds), meta.schema), meta,
             curPartSpec)
           .hint("rebalance", layoutCols(meta).map(col): _*)
-          .write.options(bloomOptions(meta))
+          .write.options(dataWriteOptions(meta))
             .partitionBy(layoutCols(meta): _*).parquet(buildDir)
         (rewriteBuckets, Map.empty)
       }
@@ -3172,7 +3174,7 @@ object GraftStore {
             // partitionBy still splits one file per slot
             .transform(d => if (smallBatchHint) d.coalesce(1)
               else d.hint("rebalance", layoutCols(meta).map(col): _*))
-            .write.options(bloomOptions(meta))
+            .write.options(dataWriteOptions(meta))
             .partitionBy(layoutCols(meta): _*).parquet(buildDir)
           (Set.empty, Map.empty)
         } else if (morRequested) {
@@ -3194,13 +3196,13 @@ object GraftStore {
               ch.filter(col(OpCol).isin("I", "U"))
                 .select((cols :+ BucketCol).map(col): _*), meta.schema),
               meta, curPartSpec),
-            buildDir, layoutCols(meta), bloomOptions(meta), smallKeyed)
+            buildDir, layoutCols(meta), dataWriteOptions(meta), smallKeyed)
           val slice = s"$DvDirName/$DvSeqCol=$next"
           val sliceDir = s"$buildDir/$slice"
           val newDeletes = writeSlices(spark,
               toPhysical(ch.filter(col(OpCol).isin("U", "D"))
                 .select((meta.keyCols :+ BucketCol).map(col): _*), meta.schema),
-              sliceDir, Seq(BucketCol), Map.empty, smallKeyed, distinct = true)
+              sliceDir, Seq(BucketCol), NoSuccessFile, smallKeyed, distinct = true)
             .getOrElse(GraftStats.listDataFiles(sliceDir).map { rel =>
               val f = Paths.get(sliceDir, rel)
               rel -> GraftStats.fileRowCount(f).getOrElse(throw
@@ -3288,13 +3290,12 @@ object GraftStore {
       // moved, and deleting it then would destroy the committed changelog.
       val chFinal = Paths.get(changesDir(dir, next))
       deleteRecursively(chFinal)
-      sealVersion(buildDir, curM.next(newMap, files, carried ++ newDeletes))
-      if (overwrite) writeBoundaryMarker(buildDir) // snapshot boundary for CDC
-      // idempotent-write record publishes atomically WITH the commit: in
-      // the build dir before the rename, so neither "recorded but not
+      // an overwrite is a snapshot boundary for CDC; the idempotent-write
+      // record is sealed WITH the commit, so neither "recorded but not
       // committed" (lost write on retry) nor "committed but not recorded"
       // (duplicate on retry) can exist after a crash
-      txn.foreach { case (a, v) => writeTxnMarker(buildDir, a, v) }
+      sealVersion(buildDir, curM.next(newMap, files, carried ++ newDeletes)
+        .copy(boundary = overwrite, txn = txn))
       // a commit that outlived even the heartbeat-refreshed stale window
       // (or whose heartbeat was starved) may have lost its claim to a
       // takeover — flip re-verifies ownership at the last instant so we
@@ -3309,7 +3310,6 @@ object GraftStore {
           case _: java.nio.file.FileAlreadyExistsException => ()
         }
       }
-      next
     }
   }
 
@@ -3405,7 +3405,7 @@ object GraftStore {
       val writer =
         (if (targetFileRows > 0)
           clustered.write.option("maxRecordsPerFile", targetFileRows)
-        else clustered.write).options(bloomOptions(meta))
+        else clustered.write).options(dataWriteOptions(meta))
       writer.partitionBy(layoutCols(meta): _*).parquet(b.path)
       // carry the un-fragmented slots by manifest reference; rewritten
       // slots own themselves (a slot whose live rows all fell to deletes
@@ -3466,7 +3466,7 @@ object GraftStore {
           .withColumn(BucketCol, bucketExpr(physKeys, newBuckets)), meta,
           versionPartSpec(dir, cur))
         .repartition(newBuckets, col(BucketCol))
-        .write.options(bloomOptions(meta))
+        .write.options(dataWriteOptions(meta))
             .partitionBy(layoutCols(meta): _*).parquet(b.path)
       // every file rewritten (DVs applied)
       val files = ownFiles(b.path, b.next)
@@ -3512,10 +3512,11 @@ object GraftStore {
       // verbatim (physical cap-bounded links) — a merge-on-read version
       // restores to exactly the rows it read as; file seqs stay in the
       // owner versions' manifests
+      // restore = snapshot boundary for CDC
       sealVersion(b.path, manifestOf(versionDir(dir, cur))
         .next(ownerMap, deletes = linkDvCarry(srcV, b.path, Set.empty))
-        .copy(buckets = target.buckets, partSpec = target.partSpec))
-      writeBoundaryMarker(b.path) // restore = snapshot boundary for CDC
+        .copy(buckets = target.buckets, partSpec = target.partSpec,
+          boundary = true))
       // Re-check against a concurrent expireVersions (a maintenance op that
       // runs without a commit claim): since restore is a pure metadata
       // commit, nothing before this point touched the owner slot dirs the
@@ -3772,9 +3773,9 @@ object GraftStore {
       // a slice obsolete and dropping the slices would resurrect deleted
       // rows in every KEPT partition. Cap-bounded links, O(changed rows).
       val curDir = versionDir(dir, cur)
+      // a boundary: rows vanish with no changelog slice
       sealVersion(b.path, manifestOf(curDir).next(keepMap,
-        deletes = linkDvCarry(curDir, b.path, Set.empty)))
-      writeBoundaryMarker(b.path) // rows vanish with no changelog slice
+        deletes = linkDvCarry(curDir, b.path, Set.empty)).copy(boundary = true))
       b.flip()
     }
   }
@@ -3815,32 +3816,29 @@ object GraftStore {
     else new String(Files.readAllBytes(p), "UTF-8").trim.toLong
   }
 
-  /** Snapshot-boundary marker. TRUNCATE / INSERT OVERWRITE / CALL restore
-    * commit NO changelog slice, and a CDC fold ACROSS one resurrects the
-    * undone rows — but from the changes directory alone a boundary is
+  /** Whether version `v` was a snapshot-boundary commit. TRUNCATE /
+    * INSERT OVERWRITE / RTAS / CALL restore / expire_partitions commit NO
+    * changelog slice, and a CDC fold ACROSS one resurrects the undone rows
+    * — but from the changes directory alone a boundary is
     * indistinguishable from a harmless changelog-less maintenance commit
     * (optimize/rebucket also leave a missing slice). Boundary commits
-    * therefore stamp `_boundary` inside their version dir — atomic with
-    * the publish rename, so a crash pre-flip can never leave a spurious
-    * marker — and [[expireVersions]] promotes the marker to a persistent
-    * `_boundary-<v>` file under the changes root before dropping the dir,
-    * so a resuming CDC stream still detects the boundary after the version
-    * itself is expired. */
-  private[sources] def writeBoundaryMarker(buildDir: String): Unit =
-    Files.write(Paths.get(buildDir, "_boundary"), Array.empty[Byte])
-
-  /** Whether version `v` was a snapshot-boundary commit (restore/truncate/
-    * overwrite — see [[writeBoundaryMarker]]). */
+    * therefore seal the flag in their manifest — atomic with the publish
+    * rename, so a crash pre-flip can never leave a spurious boundary —
+    * and [[expireVersions]] promotes it to a persistent `_boundary-<v>`
+    * file under the changes root before dropping the dir, so a resuming
+    * CDC stream still detects the boundary after the version itself is
+    * expired. The manifest is read BEFORE the promoted file: an expiry
+    * between the two reads promotes the flag before it removes the dir. */
   def isBoundary(dir: String, v: Long): Boolean =
-    Files.exists(Paths.get(versionDir(dir, v), "_boundary")) ||
+    manifestHead(versionDir(dir, v)).exists(_.boundary) ||
       Files.exists(Paths.get(changesRoot(dir), f"_boundary-$v%010d"))
 
-  /** Snapshot-boundary versions in [from, to] — retained version dirs plus
-    * markers promoted by [[expireVersions]]. Metadata-scale: one listing
-    * of the versions dir and one of the changes root. */
+  /** Snapshot-boundary versions in [from, to] — retained versions'
+    * manifests, then the flags [[expireVersions]] promoted (in that order,
+    * see [[isBoundary]]). */
   def boundariesIn(dir: String, from: Long, to: Long): Seq[Long] = {
     val live = listVersions(dir).filter(v => v >= from && v <= to)
-      .filter(v => Files.exists(Paths.get(versionDir(dir, v), "_boundary")))
+      .filter(v => manifestHead(versionDir(dir, v)).exists(_.boundary))
     val root = Paths.get(changesRoot(dir))
     val promoted =
       if (!Files.isDirectory(root)) Seq.empty[Long]

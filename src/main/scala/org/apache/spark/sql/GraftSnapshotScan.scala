@@ -49,29 +49,12 @@ object GraftSnapshotScan {
       dt, Some("UTC")).eval(null)
 
   // the authored (PartitionSpec, dir → files) of a snapshot is a pure
-  // function of the immutable version dir (+ the partition-column type),
-  // but building it is O(slots) — a plan-heavy workload (many pruned
-  // queries against one snapshot) must not re-author 100k PartitionPath /
-  // FileStatus objects per query. Same cache discipline as
-  // GraftStore.snapshotFilesCache: keyed by version dir, cleared at 64,
-  // invalidated per table by GraftStore on drop/recreate/expire.
-  private val authoredCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (PartitionSpec, Map[Path, Array[FileStatus]])]()
-
-  /** Bumped by every invalidation: a scan that was COMPUTING its index
-    * across a concurrent drop/recreate must not re-insert the stale entry
-    * after invalidate() already swept the map (get-miss → compute → put
-    * races the sweep) — the put is skipped when the epoch moved. */
-  private val invalidationEpoch = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Drop cached authored indexes under a table dir (public: the store's
-    * invalidateDvCache calls across packages on drop/recreate/expire). */
-  def invalidate(tableDir: String): Unit = {
-    invalidationEpoch.incrementAndGet()
-    // path-segment-scoped: dropping 'wh/t' must not evict 'wh/t2'
-    val prefix = tableDir + java.io.File.separator
-    authoredCache.keySet.removeIf(k => k == tableDir || k.startsWith(prefix))
-  }
+  // function of the version (+ the partition-column type), but building
+  // it is O(slots) — a plan-heavy workload (many pruned queries against
+  // one snapshot) must not re-author 100k PartitionPath / FileStatus
+  // objects per query
+  private val authoredCache = GraftStore.versionCache[
+    (PartitionSpec, Map[Path, Array[FileStatus]])](64)
 
   /** Data columns as stored plus the partition columns ([`gpart`,]
     * `gbucket`) — the full read schema of a snapshot scan. */
@@ -129,16 +112,9 @@ object GraftSnapshotScan {
       case Some(keep) => author(GraftStore.snapshotFileEntries(tableDir, v)
         .filter(e => keep.contains(e.slot)))
       case None =>
-        val key = GraftStore.versionDir(tableDir, v) +
-          pt.map(t => s"#${t.sql}").getOrElse("")
-        val cached = authoredCache.get(key)
-        val epoch0 = invalidationEpoch.get()
-        if (cached != null) cached else {
-          val computed = author(GraftStore.snapshotFileEntries(tableDir, v))
-          if (authoredCache.size > 64) authoredCache.clear()
-          if (invalidationEpoch.get() == epoch0) authoredCache.put(key, computed)
-          computed
-        }
+        authoredCache(GraftStore.versionDir(tableDir, v),
+            pt.map(t => s"#${t.sql}").getOrElse(""))(
+          author(GraftStore.snapshotFileEntries(tableDir, v)))
     }
     val index = new GraftSlotFileIndex(spark, spec, filesByDir)
     ParquetScanBuilder(spark, index, schema, physSchema, options)

@@ -326,9 +326,10 @@ class CatalogSpec extends SparkTestBase {
     // LIVE file counts per bucket, resolved through the bucket manifest
     // (appended files accumulate across owner version dirs since r12)
     def filesPerBucket(v: Long): Map[String, Int] =
-      GraftStore.bucketFileCounts(dir, v).map { case (b, n) =>
-        s"${GraftStore.BucketCol}=$b" -> n
-      }
+      GraftStore.snapshotFileEntries(dir, v)
+        .groupBy(e => GraftStore.slotBucket(e.slot)).map { case (b, es) =>
+          s"${GraftStore.BucketCol}=$b" -> es.size
+        }
     val pre = filesPerBucket(preVersion)
     assert(pre.values.exists(_ > 2), "fixture must fragment")
     val v2 = GraftStore.optimize(spark, dir, maxFilesPerBucket = 2)
@@ -1550,9 +1551,9 @@ class CatalogSpec extends SparkTestBase {
       "sort_by => 'amount', target_file_rows => 250)")
     // the sorted 1000-row bucket splits into 4 range-disjoint bounded files
     val vdir = GraftStore.versionDir(dir, GraftStore.currentVersion(dir))
-    val m = graft.sources.GraftStats.readManifest(vdir)
+    val m = GraftStore.manifestOf(vdir).files
     assert(m.size === 4, s"expected 4 capped files, got ${m.keys}")
-    val spans = m.values.flatMap(_.get("amount"))
+    val spans = m.values.flatMap(_.stats.get("amount"))
       .map(cs => (cs.min.get.asInstanceOf[Long], cs.max.get.asInstanceOf[Long]))
       .toSeq.sortBy(_._1)
     assert(spans === Seq((0L, 249L), (250L, 499L), (500L, 749L), (750L, 999L)))
@@ -1639,7 +1640,7 @@ class CatalogSpec extends SparkTestBase {
         s"FROM range(${i * 1000}, ${i * 1000 + 100})")
     }
     val vdir = GraftStore.versionDir(dir, GraftStore.currentVersion(dir))
-    val manifest = graft.sources.GraftStats.readManifest(vdir)
+    val manifest = GraftStore.manifestOf(vdir).files.filter(_._2.stats.nonEmpty)
     assert(manifest.nonEmpty, "commit must write a stats manifest")
     val full = fileCount(execScanOf(
       spark.sql(s"SELECT * FROM $cat.$t")))

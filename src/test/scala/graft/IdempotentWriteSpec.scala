@@ -132,6 +132,30 @@ class IdempotentWriteSpec extends SparkTestBase {
     assert(spark.table(s"$cat.$t").count() === 3)
   }
 
+  test("a no-op retry on an auto_optimize table publishes nothing") {
+    import spark.implicits._
+    val t = mkTable("t_txn_auto")
+    val dir = s"$warehouse/$t"
+    // four one-row commits of the same key: its slot holds four files,
+    // and the last commit carries the txn record
+    (1L to 4L).foreach(i => append(t, 7, 1, "etl", i))
+    spark.sql(s"ALTER TABLE $cat.$t SET TBLPROPERTIES ('auto_optimize'='2')")
+    val v = GraftStore.currentVersion(dir)
+    // a retry that reaches the commit (the catalog's own check ran before
+    // the first attempt landed) wrote nothing, so it must not compact the
+    // over-cap slot the previous commit left behind
+    def commit(ver: Long): Long = GraftStore.applyChanges(spark, dir,
+      Seq((7L, 70L)).toDF("k", "amount")
+        .withColumn(GraftStore.OpCol, org.apache.spark.sql.functions.lit("I")),
+      allInserts = true, txn = Some(("etl", ver)))
+    assert(commit(4) === v)
+    assert(GraftStore.currentVersion(dir) === v, "no version on a no-op retry")
+    // the next real commit runs the hook
+    assert(commit(5) === v + 1)
+    assert(GraftStore.currentVersion(dir) === v + 2, "commit + optimize")
+    assert(spark.table(s"$cat.$t").count() === 5)
+  }
+
   test("half-set or malformed txn options fail loudly") {
     import spark.implicits._
     val t = mkTable("t_txn_bad")

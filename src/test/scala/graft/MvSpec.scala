@@ -318,8 +318,10 @@ class MvSpec extends SparkTestBase {
             s"change_version=${GraftStore.currentVersion(src)}", f))).sum >
         (32L << 10), "the insert slice must be over the hint threshold")
       assert(refresh("mv_big")._2 === "incremental")
-      val perBucket = GraftStore.bucketFileCounts(stateDir,
-        GraftStore.currentVersion(stateDir))
+      val perBucket = GraftStore.snapshotFileEntries(stateDir,
+          GraftStore.currentVersion(stateDir))
+        .groupBy(e => GraftStore.slotBucket(e.slot))
+        .map { case (b, es) => b -> es.size }
       assert(perBucket.values.max > 1,
         s"a large slice must keep the rebalanced write: $perBucket")
       assert(rowsOf("mv_big") === recompute(t))

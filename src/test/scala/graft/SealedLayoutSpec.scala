@@ -38,10 +38,22 @@ class SealedLayoutSpec extends SparkTestBase {
 
   /** Version `v` of `dir` carries a complete sealed manifest: the strict
     * decoder reads every field back (it throws on a missing or malformed
-    * manifest), and the fields hold the format's invariants. */
+    * manifest), and the fields hold the format's invariants. Beside the
+    * manifest the dir holds only slot dirs and delete slices (and the
+    * `_expired` mark of a retired file host): no other per-version file. */
   private def assertSealed(dir: String, v: Long, partitioned: Boolean,
       what: String): Unit = {
     val vdir = GraftStore.versionDir(dir, v)
+    val top = {
+      val ls = Files.list(Paths.get(vdir))
+      try ls.iterator().asScala.map(_.getFileName.toString).toList
+      finally ls.close()
+    }
+    val stray = top.filterNot(n => n == GraftStore.ManifestName ||
+      n == GraftStore.DvDirName || n == "_expired" ||
+      n.startsWith(s"${GraftStore.BucketCol}=") ||
+      n.startsWith(s"${GraftStore.PartCol}="))
+    assert(stray.isEmpty, s"$what: v$v holds entries beside its manifest: $stray")
     val m = GraftStore.manifestOf(vdir)
     assert(m.partSpec.isDefined === partitioned,
       s"$what: v$v partition spec ${m.partSpec} on a " +
@@ -92,6 +104,19 @@ class SealedLayoutSpec extends SparkTestBase {
     assertCurrentSealed(dir, "rebucket")
     spark.sql(s"CALL $cat.restore(table => '$t', version => 1)")
     assertCurrentSealed(dir, "restore")
+    spark.sql(s"INSERT OVERWRITE $cat.$t VALUES " +
+      "(6, TIMESTAMP'2026-01-06 00:00:00', 60)")
+    assertCurrentSealed(dir, "INSERT OVERWRITE")
+    locally {
+      import spark.implicits._
+      Seq((7L, 70L)).toDF("k", "amount")
+        .select($"k", org.apache.spark.sql.functions.lit(null)
+          .cast("timestamp").as("ts"), $"amount")
+        .writeTo(s"$cat.$t").option("txnAppId", "seal")
+        .option("txnVersion", "1").append()
+    }
+    assert(GraftStore.lastTxnVersion(dir, "seal") === Some(1L))
+    assertCurrentSealed(dir, "idempotent write")
     spark.sql(s"CALL $cat.clone(table => '$t', target => 'seal_clone')")
     assertCurrentSealed(s"$warehouse/seal_clone", "clone")
     spark.sql(s"TRUNCATE TABLE $cat.$t")

@@ -441,4 +441,107 @@ class GraftDeltaSpec extends SparkTestBase {
     GraftStore.expireChanges(dir, keepFromVersion = 6L)
     assert(GraftStore.boundariesIn(dir, 0L, 6L).isEmpty)
   }
+
+  test("an expiry between lastTxnVersion's two reads cannot hide a txn record") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_txn_race").toString + "/t"
+    GraftStore.create(dir, GraftTableMeta(rowSchema, Seq("k"), buckets = 2))
+    def insert(k: Long, txn: Option[(String, Long)] = None): Long =
+      GraftStore.applyChanges(spark, dir,
+        Seq((k, s"r$k", k)).toDF("k", "name", "amount")
+          .withColumn(GraftStore.OpCol, lit("I")), allInserts = true, txn = txn)
+    insert(1L, Some(("etl", 7L))) // v1 records (etl, 7)
+    GraftStore.truncate(dir)      // v2: nothing kept references v1's files
+    insert(3L)                    // v3
+    // expireVersions promotes v1's record to _txns/ and then removes v1's
+    // dir; run it between the two reads
+    val seen = GraftStore.lastTxnVersion(dir, "etl",
+      () => GraftStore.expireVersions(dir, keepLast = 1))
+    assert(!Files.exists(Paths.get(GraftStore.versionDir(dir, 1L))),
+      "v1's dir is gone")
+    assert(seen === Some(7L), "the record must be in one of the two reads")
+    val v = GraftStore.currentVersion(dir)
+    assert(insert(1L, Some(("etl", 7L))) === v, "the retry stays a no-op")
+    assert(GraftStore.readVersion(spark, dir, v).count() === 1L)
+  }
+
+  test("a version dir replaced behind the store's back is re-read, not " +
+      "served from a cache") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // v1 inserts `keys`, v2 deletes `deleted` merge-on-read: a live slice
+    def mkTable(path: String, keys: Seq[Long], deleted: Long): Unit = {
+      GraftStore.create(path,
+        GraftTableMeta(rowSchema, Seq("k"), buckets = 1, mergeMode = "mor"))
+      GraftStore.applyChanges(spark, path,
+        keys.map(k => (k, s"r$k", k)).toDF("k", "name", "amount")
+          .withColumn(GraftStore.OpCol, lit("I")), allInserts = true)
+      GraftStore.applyChanges(spark, path,
+        Seq((deleted, Option.empty[String], Option.empty[Long]))
+          .toDF("k", "name", "amount").withColumn(GraftStore.OpCol, lit("D")))
+    }
+    val root = Files.createTempDirectory("graft_swap_spec").toString
+    val dir = s"$root/t"
+    def keys(): Seq[Long] = GraftStore.readVersion(spark, dir, 2L)
+      .select("k").as[Long].collect().toSeq.sorted
+    def probed(): Set[Any] = GraftStore.loadDvProbe(spark, dir, 2L,
+        GraftStore.readMeta(dir)).get._2.values.flatMap(_.keys.map(_.head))
+      .toSet
+    def ownFiles(): Set[String] = Seq(1L, 2L).flatMap { v =>
+      val vdir = GraftStore.versionDir(dir, v)
+      GraftStore.manifestOf(vdir).files.keys.map(rel => s"$vdir/$rel")
+    }.toSet
+    mkTable(dir, 0L until 10L, 3L)
+    assert(keys() === (0L until 10L).filterNot(_ == 3L))
+    assert(probed() === Set(3L))
+    assert(GraftStore.snapshotFiles(dir, 2L).toSet === ownFiles())
+    // another process drops the table and recreates it at the same path:
+    // same version numbers, new files, no invalidation in this JVM
+    val other = s"$root/other"
+    mkTable(other, 100L until 105L, 101L)
+    val walk = Files.walk(Paths.get(dir))
+    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => Files.delete(p))
+    finally walk.close()
+    Files.move(Paths.get(other), Paths.get(dir))
+    assert(GraftStore.snapshotFiles(dir, 2L).toSet === ownFiles(),
+      "the resolved file list is the new table's")
+    assert(probed() === Set(101L), "the delete probe is the new table's")
+    assert(keys() === Seq(100L, 102L, 103L, 104L), "the scan reads the new table")
+  }
+
+  test("a commit's txn and boundary lines precede its file list, and a " +
+      "manifest that places them after it is rejected") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_manifest_order").toString + "/t"
+    GraftStore.create(dir, GraftTableMeta(rowSchema, Seq("k"), buckets = 2))
+    GraftStore.applyChanges(spark, dir,
+      Seq((1L, "r1", 1L), (2L, "r2", 2L)).toDF("k", "name", "amount")
+        .withColumn(GraftStore.OpCol, lit("I")), allInserts = true,
+      txn = Some(("etl", 3L)))
+    GraftStore.truncate(dir)
+    def manifest(v: Long) = Paths.get(GraftStore.versionDir(dir, v),
+      GraftStore.ManifestName)
+    def kinds(v: Long): Seq[String] = Files.readAllLines(manifest(v))
+      .toArray.toSeq.map(_.toString.takeWhile(_ != '\t'))
+    val body = Set("slot", "file", "stat", "delete")
+    for ((v, own) <- Seq(1L -> "txn", 2L -> "boundary")) {
+      val ks = kinds(v)
+      assert(ks.contains(own) && ks.contains("file") == (v == 1L))
+      assert(ks.dropWhile(k => !body(k)).forall(body), s"v$v: $ks")
+    }
+    assert(GraftStore.lastTxnVersion(dir, "etl") === Some(3L))
+    assert(GraftStore.isBoundary(dir, 2L) && !GraftStore.isBoundary(dir, 1L))
+    // the same lines moved behind the file list
+    val lines = Files.readAllLines(manifest(1L)).toArray.toSeq.map(_.toString)
+    val (txn, rest) = lines.partition(_.startsWith("txn\t"))
+    Files.write(manifest(1L), (rest ++ txn).mkString("", "\n", "\n")
+      .getBytes("UTF-8"))
+    GraftStore.invalidateDvCache(dir)
+    val e = intercept[IllegalStateException](
+      GraftStore.manifestOf(GraftStore.versionDir(dir, 1L)))
+    assert(e.getMessage.contains("after the file list"), e.getMessage)
+  }
 }

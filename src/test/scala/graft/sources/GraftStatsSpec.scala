@@ -113,8 +113,8 @@ class GraftStatsSpec extends SparkTestBase {
           .cast(TimestampType))
         .toDF("k", "ts")
         .withColumn(GraftStore.OpCol, lit("I")), allInserts = true)
-    val m = GraftStats.readManifest(GraftStore.versionDir(dir, 1L))
-    val ts = m.values.flatMap(_.get("ts")).toSeq
+    val m = GraftStore.manifestOf(GraftStore.versionDir(dir, 1L)).files
+    val ts = m.values.flatMap(_.stats.get("ts")).toSeq
     assert(ts.nonEmpty && ts.forall(_.kind == "l"),
       s"TIMESTAMP_MICROS writes must yield integral zone maps, got $m")
     // endpoints are catalyst micros — 2024-01-01T00:00Z .. +9h
@@ -137,8 +137,8 @@ class GraftStatsSpec extends SparkTestBase {
     GraftStore.applyChanges(spark, dir,
       spark.range(0, 5).select($"id".as("k"), lit(-0.0d).as("d"))
         .withColumn(GraftStore.OpCol, lit("I")), allInserts = true)
-    val m = GraftStats.readManifest(GraftStore.versionDir(dir, 1L))
-    val ds = m.values.flatMap(_.get("d")).toSeq
+    val m = GraftStore.manifestOf(GraftStore.versionDir(dir, 1L)).files
+    val ds = m.values.flatMap(_.stats.get("d")).toSeq
     assert(ds.nonEmpty)
     val d = attr("d", DoubleType)
     ds.foreach { cs =>
@@ -162,8 +162,8 @@ class GraftStatsSpec extends SparkTestBase {
         .withColumn(GraftStore.OpCol, lit("I")), allInserts = true)
     insert(0L, 50L)   // v1
     insert(50L, 90L)  // v2: v1's files carried by manifest reference
-    val m1 = GraftStats.readManifest(GraftStore.versionDir(dir, 1L))
-    val m2 = GraftStats.readManifest(GraftStore.versionDir(dir, 2L))
+    val m1 = GraftStore.manifestOf(GraftStore.versionDir(dir, 1L)).files
+    val m2 = GraftStore.manifestOf(GraftStore.versionDir(dir, 2L)).files
     // each version's manifest covers ONLY its own files (cost ∝ commit);
     // carried files keep their entries in their OWNING version's manifest,
     // byte-identical by construction (no footer re-read can drift them) —
@@ -171,16 +171,17 @@ class GraftStatsSpec extends SparkTestBase {
     assert(m1.nonEmpty && m2.nonEmpty)
     assert(m1.keySet.intersect(m2.keySet).isEmpty,
       "a file's stats entry must live in exactly its writing version")
-    val merged = GraftStore.mergedManifest(dir, 2L)
+    val merged = GraftStore.snapshotFileEntries(dir, 2L)
+      .map(e => e.rel -> e.file).toMap
     assert(merged.size === m1.size + m2.size)
     m1.foreach { case (rel, st) => assert(merged(rel) === st,
       s"carried entry for $rel must resolve unchanged") }
     // amount stats cover the inserted ranges exactly
-    val amounts = merged.values.flatMap(_.get("amount")).toSeq
+    val amounts = merged.values.flatMap(_.stats.get("amount")).toSeq
     assert(amounts.nonEmpty)
     assert(amounts.flatMap(_.min).map(_.asInstanceOf[Long]).min === 0L)
     assert(amounts.flatMap(_.max).map(_.asInstanceOf[Long]).max === 890L)
     // string stats present with the string kind
-    assert(merged.values.flatMap(_.get("name")).forall(_.kind == "s"))
+    assert(merged.values.flatMap(_.stats.get("name")).forall(_.kind == "s"))
   }
 }
