@@ -55,8 +55,10 @@ contenders; sacrificial keys (k%7==0) land on an old day that is expired
 before verification, and changelog replay runs segment-wise between the
 expire boundaries. Composes with --mor (partitioned merge-on-read).
 
---crash adds CRASH INJECTION: after a warm-up, a random subset of writers
-is SIGKILLed mid-commit (claims shortened to 3 s via the
+--crash adds CRASH INJECTION: once the table's pointer has advanced a
+fixed number of versions past its start, a random subset of the writers
+still running is SIGKILLed mid-commit, and a run that killed none fails
+(claims shortened to 3 s via the
 graft.store.staleClaimMillis property so survivors take over quickly),
 replacement writers run against the same table, and verification switches
 to --partial: survivors' ranges value-for-value, killed ranges by the
@@ -175,18 +177,33 @@ if txn:
         txn_procs.append((j, p))
         txn_outs.append(out)
 
+def pointer(d):
+    """The table's pointer hint: the version its newest move recorded."""
+    try:
+        with open(os.path.join(d, "_current")) as f:
+            return int(f.read().split()[0])
+    except (OSError, ValueError, IndexError):
+        return -1
+
+# --crash kills once the table has gained this many versions: writers
+# are then past session startup and committing
+CRASH_AFTER_VERSIONS = 4
+
 killed = set()
 killed_group = set()
 killed_txn = set()
 if crash:
-    # let everyone get past session startup and some commits, then
-    # SIGKILL a random subset mid-flight
-    time.sleep(25)
-    for w, p, _ in rng.sample(procs, max(1, n_writers // 2)):
-        if p.poll() is None:
-            p.send_signal(signal.SIGKILL)
-            killed.add(w)
-            print(f"writer {w}: SIGKILLed mid-run")
+    # wait until the pointer has advanced CRASH_AFTER_VERSIONS past its
+    # start, then SIGKILL a random subset of the writers still running
+    start = pointer(table)
+    while (pointer(table) < start + CRASH_AFTER_VERSIONS
+           and any(p.poll() is None for _, p, _ in procs)):
+        time.sleep(0.05)
+    running = [x for x in procs if x[1].poll() is None]
+    for w, p, _ in rng.sample(running, min(len(running), max(1, n_writers // 2))):
+        p.send_signal(signal.SIGKILL)
+        killed.add(w)
+        print(f"writer {w}: SIGKILLed mid-run at v{pointer(table)}")
     # replacements hammer the same table while the dust settles
     procs += [start_writer(100 + w, max(4, n_ops // 2))
               for w in range(1, 3)]
@@ -338,6 +355,11 @@ for j, p in ref_procs:
     if p.returncode != 0 or "FAIL" in so:
         fail = True
         print(so[-2000:]); print(se[-3000:])
+
+# a crash lane that killed nothing proved nothing about crash recovery
+if crash and not killed:
+    fail = True
+    print("--crash injected no kill: every writer finished first")
 
 if not fail:
     vflags = (["--partial"] if crash or killed_group or killed_txn else []) + (

@@ -2979,13 +2979,14 @@ object SourceQueries {
       stage(1000L)
       // lane 1: coordinator dies BEFORE the decision → NEITHER member
       // moves, both branches stay intact
-      sys.props("graft.store.failpoint.publish_group") = "before-decision"
-      val crashed = try {
-        s.sql("CALL graftdml.publish_group(tables => 's44_f,s44_s', " +
-          "name => 'wap')")
-        false
-      } catch { case _: Exception => true }
-      finally sys.props.remove("graft.store.failpoint.publish_group")
+      val crashed = graft.sources.GraftStore.withCrashAt(
+          "publishGroup.before-decision") {
+        try {
+          s.sql("CALL graftdml.publish_group(tables => 's44_f,s44_s', " +
+            "name => 'wap')")
+          false
+        } catch { case _: Exception => true }
+      }
       val neitherMoved = crashed && fCnt() == f0 && sTot() == t0
       // lane 2: the dead coordinator's claims age out → a retry aborts
       // the stalled group and publishes BOTH atomically
@@ -3003,11 +3004,11 @@ object SourceQueries {
       // lane 3: crash AFTER the decision (between the two pointer flips)
       // → a plain read of the still-old member rolls the group FORWARD
       stage(2000L)
-      sys.props("graft.store.failpoint.publish_group") = "between-flips"
-      try s.sql("CALL graftdml.publish_group(tables => 's44_f,s44_s', " +
-        "name => 'wap')")
-      catch { case _: Exception => () }
-      finally sys.props.remove("graft.store.failpoint.publish_group")
+      graft.sources.GraftStore.withCrashAt("publishGroup.between-flips") {
+        try s.sql("CALL graftdml.publish_group(tables => 's44_f,s44_s', " +
+          "name => 'wap')")
+        catch { case _: Exception => () }
+      }
       val rolledForward = fCnt() == f0 + 10 && sTot() > t0 &&
         !java.nio.file.Files.exists(java.nio.file.Paths.get(
           DmlFixture.warehouse, "s44_s", "_groupcommit"))
@@ -3393,11 +3394,11 @@ object SourceQueries {
       // captures roll the group forward and return POST for BOTH
       val before = snap()
       stage(9000L)
-      sys.props("graft.store.failpoint.publish_group") = "between-flips"
-      try s.sql("CALL graftdml.publish_group(tables => 's46_f,s46_s', " +
-        "name => 'snap')")
-      catch { case _: Exception => () }
-      finally sys.props.remove("graft.store.failpoint.publish_group")
+      graft.sources.GraftStore.withCrashAt("publishGroup.between-flips") {
+        try s.sql("CALL graftdml.publish_group(tables => 's46_f,s46_s', " +
+          "name => 'snap')")
+        catch { case _: Exception => () }
+      }
       val after = snap()
       val rolledForward = after("s46_f") > before("s46_f") &&
         after("s46_s") > before("s46_s") && sumsAgree(after)

@@ -59,7 +59,9 @@ final case class GraftTableMeta(schema: StructType, keyCols: Seq[String],
   * partition discovery never see them):
   * {{{
   *   <dir>/_meta.json            schema + key columns + bucket count
-  *   <dir>/_current              atomic pointer: current version number
+  *   <dir>/_log/<n>              one record per pointer move, created
+  *                               exclusively: the move off version n-1
+  *   <dir>/_current              a hint at the newest move, probed forward
   *   <dir>/_incarnation          identity stamp, written at creation
   *   <dir>/v0000000007/          one immutable directory per version:
   *     _manifest                   the sealed version manifest: bucket
@@ -82,8 +84,9 @@ final case class GraftTableMeta(schema: StructType, keyCols: Seq[String],
   * (hard-linking every untouched file forward would make that driver-side
   * pass the commit bottleneck at ~1M files). A data file lives
   * forever in the version dir that wrote it, which is also what makes its
-  * write-version derivable from its path. The version pointer flips last
-  * with an atomic rename, so readers resolve a complete version or the
+  * write-version derivable from its path. A version is built under a
+  * writer-private name and published by one exclusive pointer-move record
+  * ([[movePointer]]), so readers resolve a complete version or the
   * previous one, never a half-written directory.
   *
   * Scale shape: the rewrite job is `base buckets ⟕anti changes ∪ changes`
@@ -97,7 +100,8 @@ final case class GraftTableMeta(schema: StructType, keyCols: Seq[String],
   * [[publishNext]], which CLAIMS its version number with a
   * create-exclusive `_commit-N` marker and re-verifies the pointer under
   * the claim (see [[claimCommit]]) — concurrent writers serialize per
-  * version instead of last-writer-wins clobbering. Losing appends retry
+  * version — and every publish moves the pointer through [[movePointer]],
+  * which fails when another move left its base first. Losing appends retry
   * on the recomputed version (appends commute); losing row-level deltas
   * fail with a clean ConcurrentModificationException (their read
   * snapshot is stale — serializable behavior, re-run the statement). */
@@ -217,13 +221,10 @@ object GraftStore {
   // One token-guarded file lease is both the per-version commit claim
   // (`_commit-N`, [[claimCommit]]) and the meta lock (`_meta_lock`,
   // [[withMetaLock]]). It is taken by CREATE_NEW with a fresh token
-  // inside. A stale lease is broken by ATOMIC RENAME to
-  // `<path>.stale-<nanos>` (the tomb name vacuum sweeps), never by
-  // delete+create: two breakers deleting concurrently could each create a
-  // "fresh" lease and both think they won, while the rename has exactly
-  // one winner. Release deletes the file only while it still holds the
-  // releaser's token, so after a stale takeover the original holder can
-  // never remove its successor's lease.
+  // inside. Breaking a stale lease and releasing one both go through
+  // [[removeIf]], which removes the file only while it holds the token
+  // the remover read: two breakers can never both win, and after a stale
+  // takeover the original holder can never remove its successor's lease.
 
   /** The lease's one staleness test: `p` exists and its holder last
     * proved liveness (its mtime, kept fresh by [[withClaimHeartbeat]])
@@ -237,22 +238,61 @@ object GraftStore {
     * the new token, or None while another holder has it. */
   private def tryLease(p: Path, staleMs: Long): Option[String] = {
     val token = java.util.UUID.randomUUID().toString
-    def create(): Boolean =
-      try {
-        Files.write(p, token.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    def break(): Boolean = {
+    def break(): Boolean =
+      readText(p).exists(seen => leaseStale(p, staleMs) && removeIf(p, seen))
+    if (createText(p, token) || (break() && createText(p, token))) Some(token)
+    else None
+  }
+
+  /** Create `p` holding `text` unless it exists — the create-exclusive
+    * step of leases, tags, group markers and group decisions. */
+  private def createText(p: Path, text: String): Boolean =
+    try {
+      Files.write(p, text.getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+      true
+    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+
+  /** The one compare-and-remove step (leases and group markers): remove
+    * `p` only while it holds `expected`. `p` is renamed to a private tomb
+    * first — of racing removers exactly one gets the file — compared
+    * there, then deleted, or linked back when it turned out to be another
+    * holder's. A tomb left by a crash is swept by [[vacuum]]. */
+  private def removeIf(p: Path, expected: String): Boolean =
+    readText(p).contains(expected) && {
       val tomb = Paths.get(s"$p.stale-${System.nanoTime()}")
       try Files.move(p, tomb, StandardCopyOption.ATOMIC_MOVE)
       catch { case _: java.nio.file.NoSuchFileException => return false }
+      hook("removeIf.tombed")
+      val mine = readText(tomb).contains(expected)
+      if (!mine) try Files.createLink(p, tomb)
+      catch { case _: java.nio.file.FileAlreadyExistsException => () }
       Files.deleteIfExists(tomb)
-      true
+      mine
     }
-    if (create() || (leaseStale(p, staleMs) && break() && create()))
-      Some(token)
-    else None
+
+  /** A small record file's trimmed text; None when it does not exist. */
+  private def readText(p: Path): Option[String] =
+    try Some(new String(Files.readAllBytes(p), "UTF-8").trim)
+    catch { case _: java.nio.file.NoSuchFileException => None }
+
+  /** Named points on the publish path — in [[VersionBuild.flip]],
+    * [[movePointer]], [[publishGroup]], [[completeGroupMember]],
+    * [[recoverChangelog]], [[removeIf]] and [[deleteRecursively]] — where
+    * a deterministic scheduler or a crash harness stalls or crashes the
+    * calling thread. A no-op unless one is installed. An [[InjectedCrash]]
+    * thrown here is a dead process: [[publishGroup]] then leaves its claims
+    * and markers as they are, for the recovery paths to resolve. */
+  @volatile private[graft] var hook: String => Unit = _ => ()
+
+  private[graft] final class InjectedCrash(at: String)
+    extends RuntimeException(s"injected crash at $at")
+
+  /** Run `body` with a crash injected at hook point `point`. */
+  private[graft] def withCrashAt[A](point: String)(body: => A): A = {
+    val saved = hook
+    hook = p => { saved(p); if (p == point) throw new InjectedCrash(p) }
+    try body finally hook = saved
   }
 
   // ------------------------------------------------------ version manifest
@@ -813,9 +853,9 @@ object GraftStore {
     * flip. A backup whose target version never published AND whose commit
     * claim has gone stale means the replacer died between the meta swap
     * and the flip — restore the old meta so readers never keep seeing the
-    * new schema over the old data. Idempotent and race-safe: a LIVE
-    * replace keeps its claim heartbeated (fresh ⇒ untouched), and
-    * concurrent restorers write identical bytes. */
+    * new schema over the old data. A LIVE replace keeps its claim
+    * heartbeated (fresh ⇒ untouched), and concurrent restorers write
+    * identical bytes. */
   private def recoverMetaBackup(dir: String): Unit = {
     val b = Paths.get(dir, MetaBackupName)
     if (!Files.exists(b)) return
@@ -872,16 +912,177 @@ object GraftStore {
       if (lines(8).trim.isEmpty) 0 else lines(8).trim.toInt)
   }
 
-  def currentVersion(dir: String): Long =
-    new String(Files.readAllBytes(pointerPath(dir)), "UTF-8").trim.toLong
+  // ------------------------------------------------------------- pointer
+  //
+  // A table's pointer is a log of moves. The move off version n-1 is
+  // recorded in `_log/<n>` as "<to> <token> <slot> [<group decision
+  // file>]": the pointer went to `to`, publishing the build dirs
+  // `vK.build-<token>` (n <= K <= to). A record is created exclusively —
+  // a hard link of a fully written temp file, which fails when the name
+  // exists — so of two
+  // movers off one version exactly one wins, and a stale writer's or
+  // stale resolver's move fails on its own: the pointer never moves back
+  // and no published version is ever replaced. A record naming a group
+  // decision file is that group's reservation: it takes effect when the
+  // decision reads "committed", and once it reads "aborted" the next
+  // move off the same version takes the next slot (`_log/<n>.1`, ...),
+  // so no record is ever removed while it can matter. `_current` (the
+  // newest record, renamed from the same temp file; "<v>" as create and
+  // clone write it) is a hint [[currentVersion]] probes forward from: a
+  // hint a stalled mover rolled
+  // back costs probes only, and one whose record expiry trimmed
+  // ([[expireVersions]] trims oldest first) is re-found from the log.
+
+  private def logDir(dir: String): Path = Paths.get(dir, "_log")
+  private def slot(dir: String, n: Long, i: Int): Path =
+    logDir(dir).resolve(if (i == 0) f"$n%010d" else f"$n%010d.$i")
+
+  private def readRecord(p: Path): Option[(Long, String, Option[Path])] =
+    if (!p.toFile.exists()) None
+    else readText(p).map(_.split(" ", 4) match {
+      case Array(to, tok, _) => (to.toLong, tok, None)
+      case Array(to, tok, _, d) => (to.toLong, tok, Some(Paths.get(d)))
+    })
+
+  /** The move off version n-1: its first slot that does not hold a
+    * reservation its group aborted, with the record there, if any. */
+  @scala.annotation.tailrec
+  private def moveRecord(dir: String, n: Long, i: Int = 0)
+      : (Path, Option[(Long, String, Option[Path])]) = {
+    val p = slot(dir, n, i)
+    readRecord(p) match {
+      case Some((_, _, Some(d))) if readText(d).contains("aborted") =>
+        moveRecord(dir, n, i + 1)
+      case r => (p, r)
+    }
+  }
+
+  /** The move off version n-1 as (to, token, slot), once in effect. */
+  private def effective(dir: String, n: Long): Option[(Long, String, Path)] =
+    moveRecord(dir, n) match {
+      case (p, Some((to, tok, d)))
+          if d.forall(readText(_).contains("committed")) => Some((to, tok, p))
+      case _ => None
+    }
+
+  def currentVersion(dir: String): Long = {
+    val hint = new String(Files.readAllBytes(pointerPath(dir)), "UTF-8")
+      .trim.split(" ")
+    probe(dir, hint(0).toLong, hint.lift(2).map(logDir(dir).resolve))
+  }
+
+  /** Follow the log forward from version `v`, reached through record
+    * `via` (None: a create or clone base), rolling forward a move whose
+    * builds are not yet published. The record that reached the answer is
+    * checked AFTER the last probe: gone means `v` came from a hint rolled
+    * back below expiry's trim, and the head is re-found from the newest
+    * move (its base, while that one is a pending reservation). */
+  @scala.annotation.tailrec
+  private def probe(dir: String, v: Long, via: Option[Path]): Long =
+    effective(dir, v + 1) match {
+      case Some((to, tok, p)) =>
+        if (!Paths.get(versionDir(dir, to)).toFile.exists())
+          publishBuilds(dir, v, to, tok)
+        probe(dir, to, Some(p))
+      case None if via.exists(!_.toFile.exists()) =>
+        logIndexes(dir).lastOption match {
+          case Some(n) => effective(dir, n) match {
+            case Some((to, _, p)) => probe(dir, to, Some(p))
+            case None => probe(dir, n - 1, None)
+          }
+          case None => v
+        }
+      case None => v
+    }
+
+  /** The versions n with a recorded move off n-1, ascending. */
+  private def logIndexes(dir: String): Seq[Long] =
+    if (!Files.isDirectory(logDir(dir))) Nil
+    else listDir(logDir(dir))(_.map(_.getFileName.toString)
+      .filter(_.matches("\\d{10}(\\.\\d+)?")).map(_.take(10).toLong)
+      .toSeq.distinct.sorted)
+
+  /** The token of the move that published version `v`: the move off
+    * `v - 1`, or for a version inside a multi-version move the newest
+    * recorded move below it. */
+  private def moveToken(dir: String, v: Long): Option[String] =
+    (if (slot(dir, v, 0).toFile.exists()) Some(v)
+     else logIndexes(dir).filter(_ < v).lastOption)
+      .flatMap(effective(dir, _)).collect { case (to, tok, _) if to >= v => tok }
+
+  /** The one pointer move outside create and clone: move `dir`'s pointer
+    * from `from` to `to`, publishing `token`'s build dirs. With `group`
+    * the record is that group's reservation and takes effect with its
+    * decision. True when the record is this mover's — created now, or
+    * earlier with the same content (a resolver completing a group again)
+    * — false when another move left `from` first, or when the build is
+    * gone. A record created off a version expiry already retired is taken
+    * back: its slot was trimmed, not free. */
+  private[sources] def movePointer(dir: String, from: Long, to: Long,
+      token: String, group: Option[Path] = None): Boolean = {
+    val tmp = Paths.get(dir, s"_current.tmp-${java.util.UUID.randomUUID()}")
+    def content(p: Path) = s"$to $token ${p.getFileName}" + group.fold("")(" " + _)
+    @scala.annotation.tailrec
+    def record(): Option[(Path, Boolean)] = moveRecord(dir, from + 1) match {
+      case (p, Some(_)) =>
+        if (readText(p).contains(content(p))) Some((p, false)) else None
+      case _ if !Files.isDirectory(Paths.get(
+          s"${versionDir(dir, to)}.build-$token")) => None // swept meanwhile
+      case (p, None) =>
+        Files.write(tmp, content(p).getBytes("UTF-8"))
+        try { Files.createLink(p, tmp); Some((p, true)) }
+        catch { case _: java.nio.file.FileAlreadyExistsException => record() }
+    }
+    val base = versionDir(dir, from)
+    try record() match {
+      case None => false
+      case Some((p, true)) if !Paths.get(base, ManifestName).toFile.exists ||
+          Paths.get(base, ExpiredMarker).toFile.exists =>
+        Files.deleteIfExists(p)
+        false
+      case Some((p, won)) =>
+        hook("movePointer.recorded")
+        // in effect now, and still this record: an aborted reservation's
+        // next slot belongs to another mover
+        if (effective(dir, from + 1).exists(_._3 == p) &&
+            (won || !Paths.get(versionDir(dir, to)).toFile.exists)) {
+          publishBuilds(dir, from, to, token)
+          // the record itself becomes the hint
+          if (!won) Files.write(tmp, content(p).getBytes("UTF-8"))
+          Files.move(tmp, pointerPath(dir), StandardCopyOption.ATOMIC_MOVE,
+            StandardCopyOption.REPLACE_EXISTING)
+        }
+        true
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** Rename `token`'s build dirs of versions (from, to] to their final
+    * names, in order — a build already renamed is skipped. */
+  private def publishBuilds(dir: String, from: Long, to: Long,
+      token: String): Unit =
+    (from + 1 to to).foreach { k =>
+      try Files.move(Paths.get(s"${versionDir(dir, k)}.build-$token"),
+        Paths.get(versionDir(dir, k)), StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.nio.file.NoSuchFileException => () }
+    }
+
+  /** Start a new table dir's pointer at version `v`: its empty log and a
+    * hint — [[create]] and [[cloneTable]]. A mover never creates a log: a
+    * table dropped under it must not come back as a stray dir. */
+  private def startPointer(dir: String, v: Long): Unit = {
+    Files.createDirectories(logDir(dir))
+    val tmp = Paths.get(dir, s"_current.tmp-${java.util.UUID.randomUUID()}")
+    Files.write(tmp, v.toString.getBytes("UTF-8"))
+    Files.move(tmp, pointerPath(dir), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
 
   def listVersions(dir: String): Seq[Long] = {
-    // POINTER-CAPPED: a final-named version dir above the pointer is an
-    // in-flight fast_forward adoption (or its crash debris) — not
-    // committed history. Without the cap, a concurrent expireVersions
-    // would count the adopted dirs as the newest keepers and retire the
-    // CURRENT version, and time travel could read uncommitted branch
-    // data. The cap restores the invariant that readable == committed.
+    // POINTER-CAPPED: a version dir above the pointer this call read was
+    // published by a move that landed after the read — not this
+    // snapshot's history. Without the cap, a concurrent expireVersions
+    // could count it as the newest keeper and retire the version it read
+    // as CURRENT. The cap keeps readable == committed as of the read.
     // A table mid-CREATE has no pointer yet (it lands last) — fall back
     // to uncapped there, matching the pre-cap tolerance.
     val cur =
@@ -931,9 +1132,10 @@ object GraftStore {
     (marker, token)
   }
 
-  /** The two conflicts a commit whose batch commutes retries: the next
+  /** The conflicts a commit whose batch commutes retries: the next
     * version's claim is held by another writer ([[claimCommit]]), or the
-    * pointer moved before the claim was won ([[publishNext]]). A conflict
+    * pointer moved before the claim was won ([[publishNext]]) or before
+    * the build was published ([[VersionBuild.flip]]). Any other conflict
     * a publish body raises is a plain ConcurrentModificationException. */
   private[sources] final class CommitContended(msg: String)
     extends java.util.ConcurrentModificationException(msg)
@@ -956,10 +1158,7 @@ object GraftStore {
   /** Release a lease (a commit claim or the meta lock) ONLY if it still
     * holds `token`. */
   private[sources] def releaseClaim(marker: Path, token: String): Unit =
-    try {
-      if (new String(Files.readAllBytes(marker), "UTF-8") == token)
-        Files.deleteIfExists(marker)
-    } catch { case _: java.io.IOException => () }
+    removeIf(marker, token)
 
   private lazy val heartbeatPool =
     java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
@@ -988,19 +1187,9 @@ object GraftStore {
     * since the holder last proved it was alive", not "commit duration".
     * Extra `paths` (delta staging dirs, whose .bin files the commit reads
     * lazily for its whole duration) ride the same schedule so vacuum's age
-    * check can't reap in-use staging.
-    *
-    * Residual TOCTOU, documented: [[VersionBuild.flip]] (verifyClaim →
-    * publishVersion → writePointer, the one single-version publish step)
-    * is unfenced — a writer stalled past the stale threshold AFTER its
-    * verifyClaim passed but BEFORE its pointer flip could still clobber a
-    * successor's published version. The heartbeat shrinks the exposure to
-    * "stall begins inside the microseconds between verify and flip AND
-    * lasts the full stale threshold"; closing it entirely needs a fencing
-    * rename (flip = atomic move of a token-named pointer), which local
-    * rename-atomic filesystems get for free via the claim marker but a
-    * generic object store would need conditional puts for; that fix
-    * belongs in `flip` alone. */
+    * check can't reap in-use staging. A claim broken anyway only costs the
+    * two writers a conflict: the pointer move itself is the fence
+    * ([[movePointer]]). */
   private[sources] def withClaimHeartbeat[A](paths: Seq[Path],
       periodMs: Long = heartbeatPeriodMs)(f: => A): A = {
     val task = heartbeatPool.scheduleAtFixedRate(() => paths.foreach { p =>
@@ -1011,31 +1200,19 @@ object GraftStore {
     try f finally task.cancel(false)
   }
 
-  /** Last-instant ownership re-check before a pointer flip: if the claim
-    * marker no longer holds this writer's token (broken as stale and taken
-    * over), flipping would publish a version another writer now owns —
-    * abort cleanly instead. */
-  private def verifyClaim(marker: Path, token: String): Unit = {
-    val held =
-      try new String(Files.readAllBytes(marker), "UTF-8") == token
-      catch { case _: java.io.IOException => false }
-    if (!held) throw new java.util.ConcurrentModificationException(
-      s"commit claim $marker was broken and taken over during the rewrite; " +
-        "aborting before the pointer flip (another writer owns this version now)")
-  }
-
   /** A claimed build of version `next`: the writer-private build dir
-    * `vN.build-<token>` and the claim that owns it. [[flip]] is the one
-    * single-version publish step — re-verify the claim, rename the build
-    * dir to its final name, move the pointer. */
+    * `vN.build-<token>`, named by the claim's token. [[flip]] is the one
+    * single-version publish step: one [[movePointer]] off `next - 1`,
+    * which fails when another writer published `next` first. */
   private final class VersionBuild(dir: String, val next: Long,
-      marker: Path, token: String) {
+      val token: String) {
     val path: String = s"${versionDir(dir, next)}.build-$token"
     var flipped = false
     def flip(): Unit = {
-      verifyClaim(marker, token)
-      publishVersion(path, versionDir(dir, next))
-      writePointer(dir, next)
+      hook("flip")
+      if (!movePointer(dir, next - 1, next, token))
+        throw new CommitContended(
+          s"version $next of $dir was published by another writer; re-run")
       flipped = true
     }
   }
@@ -1043,22 +1220,20 @@ object GraftStore {
   /** Commit version `cur + 1` of `dir` through one claimed build: claim
     * it, heartbeat the claim marker, the build dir and `heartbeatPaths`,
     * re-check that the pointer is still at `cur` (a claim can be won after
-    * another writer committed `cur + 1` and released), clear a remnant
-    * build dir, then run `body`, which builds [[VersionBuild.path]] and
-    * calls [[VersionBuild.flip]] itself — so a body can wrap the flip
-    * (RTAS's meta-swap rollback) or act just before it. The build dir is
-    * NOT created here: Spark writes it under the default ErrorIfExists
-    * mode. Returns the new version. */
+    * another writer committed `cur + 1` and released), then run `body`,
+    * which builds [[VersionBuild.path]] and calls [[VersionBuild.flip]]
+    * itself — so a body can wrap the flip (RTAS's meta-swap rollback) or
+    * act just before it. The build dir is NOT created here: Spark writes
+    * it under the default ErrorIfExists mode. Returns the new version. */
   private def publishNext(dir: String, cur: Long, op: String,
       heartbeatPaths: Seq[Path] = Nil)(body: VersionBuild => Unit): Long = {
     val (marker, token) = claimCommit(dir, cur + 1)
     try {
-      val b = new VersionBuild(dir, cur + 1, marker, token)
+      val b = new VersionBuild(dir, cur + 1, token)
       withClaimHeartbeat(marker +: Paths.get(b.path) +: heartbeatPaths) {
         if (currentVersion(dir) != cur)
           throw new CommitContended(
             s"table $dir advanced past version $cur during $op; re-run")
-        deleteRecursively(Paths.get(b.path))
         body(b)
       }
       if (!b.flipped) throw new IllegalStateException(
@@ -1122,7 +1297,7 @@ object GraftStore {
       System.currentTimeMillis(), srcM.partSpec, selfOwned(files, cur),
       files, linkDvCarry(srcV, base, Set.empty)))
     Files.createDirectories(Paths.get(changesRoot(tmp)))
-    writePointer(tmp, cur)
+    startPointer(tmp, cur)
     writeMeta(tmp, meta)
     try Files.move(Paths.get(tmp), Paths.get(dstDir),
       StandardCopyOption.ATOMIC_MOVE)
@@ -1470,30 +1645,6 @@ object GraftStore {
       rel -> ManifestFile(version, Files.size(Paths.get(buildDir, rel)), st)
     }
 
-  /** Publish a writer-private build directory under its final version
-    * name (atomic rename), clearing any crash remnant first. Versions are
-    * BUILT under `vN.build-<token>` — never under the final name — so a
-    * writer whose claim was broken mid-commit (a stalled process resuming
-    * after a stale takeover) keeps writing into ITS OWN build dir and can
-    * never contaminate the new claimant's version contents; the final
-    * name exists only after [[verifyClaim]] passed. */
-  private def publishVersion(buildDir: String, finalDir: String): Unit = {
-    deleteRecursively(Paths.get(finalDir))
-    Files.move(Paths.get(buildDir), Paths.get(finalDir),
-      StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** The temp name is writer-private: a group's coordinator and its
-    * resolvers may flip one member's pointer to the same head at once,
-    * and with a shared temp name one writer's rename would consume the
-    * other's file (NoSuchFileException on the loser's move). */
-  private def writePointer(dir: String, v: Long): Unit = {
-    val tmp = Paths.get(dir, s"_current.tmp-${java.util.UUID.randomUUID()}")
-    Files.write(tmp, v.toString.getBytes("UTF-8"))
-    Files.move(tmp, pointerPath(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Create an empty table: meta, identity stamp, empty v0, empty
     * changelog, pointer. */
   def create(dir: String, meta: GraftTableMeta): Unit = {
@@ -1505,7 +1656,7 @@ object GraftStore {
     sealVersion(v0, VersionManifest(meta.buckets, System.currentTimeMillis(),
       meta.partition, Map.empty, Map.empty, Map.empty))
     Files.createDirectories(Paths.get(changesRoot(dir)))
-    writePointer(dir, 0L)
+    startPointer(dir, 0L)
   }
 
   private[sources] val IncarnationName = "_incarnation"
@@ -1526,26 +1677,27 @@ object GraftStore {
     * or its stamp is missing. No reader or resolver ever writes one — they
     * must never write into a tree they do not own. */
   def storedIncarnation(dir: String): Option[String] =
-    try Some(new String(Files.readAllBytes(Paths.get(dir, IncarnationName)),
-      "UTF-8").trim)
-    catch { case _: java.nio.file.NoSuchFileException => None }
+    readText(Paths.get(dir, IncarnationName))
 
   def changesRoot(dir: String): String = s"$dir/_changes"
   private def changesDir(dir: String, v: Long): String =
     s"${changesRoot(dir)}/$ChangeVersionCol=$v"
-  private def changesStaging(dir: String, v: Long): String =
-    s"${changesRoot(dir)}/.staging-$v"
+  /** A commit's changelog slice before its move: writer-private, named by
+    * the build token, so only the move's winner's slice is published. */
+  private[graft] def changesStaging(dir: String, v: Long,
+      token: String): String = s"${changesRoot(dir)}/.staging-$v-$token"
 
   /** Changelog publication recovery (WAL discipline). The changelog for a
     * commit is written to a DOT-PREFIXED staging dir (invisible to every
     * changelog read, which plans published slices only) and renamed to
-    * its `change_version=N` name only AFTER the pointer flips — so a
+    * its `change_version=N` name only AFTER the pointer moves — so a
     * visible change directory always belongs to a committed version and
     * no reader (SQL `$changes` table, CDC stream, readChanges) can ever
-    * observe uncommitted change rows. The two crash windows repair here: staging for a version the
-    * pointer never reached is dropped; staging for a committed version
-    * (crash between flip and rename) is moved into place. Called at the
-    * start of every commit and read path. */
+    * observe uncommitted change rows. The two crash windows repair here:
+    * staging for a version the pointer never reached is dropped; the
+    * winning move's staging for a committed version (crash between move
+    * and rename) is moved into place, and a losing writer's is dropped.
+    * Called at the start of every commit and read path. */
   def recoverChangelog(dir: String): Unit = {
     // piggyback the S44 group-commit recovery on the same every-commit/
     // every-read hook (reentrancy-guarded: completing a group member
@@ -1560,11 +1712,15 @@ object GraftStore {
     val cur = currentVersion(dir)
     val staged = listDir(root)(_.filter(
       _.getFileName.toString.startsWith(".staging-")).toList)
+    hook("recoverChangelog")
     staged.foreach { p =>
-      val v = p.getFileName.toString.stripPrefix(".staging-").toLong
+      val name = p.getFileName.toString.stripPrefix(".staging-")
+      val v = name.takeWhile(_ != '-').toLong
       if (v <= cur) {
         val dst = Paths.get(changesDir(dir, v))
-        if (Files.exists(dst)) deleteRecursively(p)
+        if (Files.exists(dst) ||
+            !moveToken(dir, v).contains(name.drop(s"$v-".length)))
+          deleteRecursively(p)
         else try Files.move(p, dst, StandardCopyOption.ATOMIC_MOVE)
         catch {
           // another reader (or the committing writer) published this
@@ -1584,10 +1740,10 @@ object GraftStore {
     }
   }
 
-  /** New empty version (TRUNCATE). INSERT OVERWRITE does NOT go through
-    * here — it is a single atomic [[applyChanges]] commit with
+  /** New empty version (TRUNCATE); returns it. INSERT OVERWRITE does NOT
+    * go through here — it is a single atomic [[applyChanges]] commit with
     * `overwrite = true`. */
-  def truncate(dir: String): Unit = {
+  def truncate(dir: String): Long = {
     recoverChangelog(dir)
     val cur = currentVersion(dir)
     publishNext(dir, cur, "TRUNCATE") { b =>
@@ -1655,14 +1811,10 @@ object GraftStore {
         s"(have ${listVersions(dir)})")
     Files.createDirectories(refsRoot(dir))
     val p = refsRoot(dir).resolve(name)
-    try Files.write(p, version.toString.getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalArgumentException(
-          s"tag '$name' already exists on $dir (pinned to version " +
-            s"${resolveRef(dir, name).getOrElse("?")}) — CALL drop_tag first")
-    }
+    if (!createText(p, version.toString))
+      throw new IllegalArgumentException(
+        s"tag '$name' already exists on $dir (pinned to version " +
+          s"${resolveRef(dir, name).getOrElse("?")}) — CALL drop_tag first")
     if (!listVersions(dir).contains(version)) {
       Files.deleteIfExists(p)
       throw new IllegalStateException(
@@ -1903,19 +2055,23 @@ object GraftStore {
     }
   }
 
-  /** Complete a publish of branch `branch` at `head` on `dir`: move the
-    * pointer up to `head` (never back), publish the changelog slices it
-    * now covers, and consume the branch — ONLY the incarnation `inc` that
-    * was published: a resolver acting on a stale marker read can find the
-    * same NAME already re-created for the next publish, and that branch is
-    * not ours to drop. The stamp is read, never written: a missing
-    * directory or stamp (a racing resolver mid-drop, or a tree we cannot
-    * identify) means "not ours". Idempotent and safe to race; the one place
-    * outside a claimed build where main's pointer moves. */
-  private def completePublish(dir: String, branch: String, head: Long,
-      inc: String): Unit = {
-    if (currentVersion(dir) < head) {
-      writePointer(dir, head)
+  /** Complete a publish of branch `branch` on `dir`: move the pointer
+    * from `fork` to `head` with the adoption's `token` — for a group
+    * member, the move `group`'s reservation records — publish the
+    * changelog slices it now covers, and consume the branch — ONLY the
+    * incarnation `inc` that was published: a resolver acting on a stale
+    * marker read can find the same NAME already re-created for the next
+    * publish, and that branch is not ours to drop. The stamp is read,
+    * never written: a missing directory or stamp (a racing resolver
+    * mid-drop, or a tree we cannot identify) means "not ours". False,
+    * with nothing consumed, when another move left `fork` first.
+    * Idempotent and safe to race: GroupScheduleSpec runs it from the
+    * coordinator and two resolvers in 600 seeded interleavings. */
+  private def completePublish(dir: String, branch: String, fork: Long,
+      head: Long, inc: String, token: String,
+      group: Option[Path] = None): Boolean = {
+    if (head > fork) {
+      if (!movePointer(dir, fork, head, token, group)) return false
       invalidateDvCache(dir)
     }
     recoverChangelog(dir) // the pointer now covers the staged slices
@@ -1926,29 +2082,33 @@ object GraftStore {
         case _: IllegalArgumentException => ()
         case _: java.nio.file.NoSuchFileException => ()
       }
+    true
   }
 
   /** Publish branch `name` into main — a TRUE fast-forward: requires main
     * still at the fork point (loud conflict otherwise), adopts every
     * branch-era version dir (including `_expired` file hosts) and
-    * changelog slice commit-by-commit, flips the pointer to the branch
+    * changelog slice commit-by-commit, moves the pointer to the branch
     * head as the single atomic publish, and consumes the branch. All
     * metadata + hard links: O(branch's own files), never a data copy or
     * a byte of main rewritten. Crash-safe: the branch stays intact until
-    * the pointer flips (adopted dirs above the pointer are invisible and
-    * a retry relinks them), changelog slices stage under per-version
-    * commit claims and publish only once the pointer covers them. Schema-
-    * diverged branches (ALTER on the branch) are rejected — re-create the
-    * table via RTAS instead. A commit-less branch is consumed as a no-op. */
+    * the pointer moves (adopted build dirs are invisible and a retry
+    * relinks them under its own token), changelog slices stage under
+    * per-version commit claims and publish only once the pointer covers
+    * them. Schema-diverged branches (ALTER on the branch) are rejected —
+    * re-create the table via RTAS instead. A commit-less branch is
+    * consumed as a no-op. */
   def fastForward(dir: String, name: String): Long = {
     val f = freezeBranch(dir, name, "fast_forward")
     val claims = scala.collection.mutable.ArrayBuffer(f.claim)
     try {
-      if (f.head > f.fork) {
-        adoptBranch(f, "fast_forward", claims)
-        claims.foreach { case (m, t) => verifyClaim(m, t) }
-      }
-      completePublish(dir, name, f.head, f.incarnation)
+      if (f.head > f.fork) adoptBranch(f, "fast_forward", claims)
+      if (!completePublish(dir, name, f.fork, f.head, f.incarnation,
+          f.claim._2))
+        throw new java.util.ConcurrentModificationException(
+          s"table $dir advanced past the fork point v${f.fork} of branch " +
+            s"'$name'; fast_forward aborted — rebase the branch onto the " +
+            "new head and re-run")
       if (f.head > f.fork) f.head else currentVersion(dir)
       // dropBranch removed the branch claim's marker with the dir, which
       // releaseClaim tolerates
@@ -1956,28 +2116,22 @@ object GraftStore {
   }
 
   /** Adopt a branch's version dirs, changelog slices, and boundary
-    * markers above `fork` into main — hard links only, every artifact
-    * landing ABOVE main's pointer (invisible until it flips) or under a
-    * dot-prefixed staging name. Caller holds the claims for every
-    * adopted version and has checked that main is still at `fork`, so
-    * anything already under those names is debris — a crashed retry of
-    * this publish, or an ABORTED group or txn whose branch may no longer
-    * exist (same version number, different content) — and is always
-    * relinked, never trusted. */
+    * markers above `fork` into main — hard links only, the versions as
+    * build dirs and the slices as stagings named by `token` (published
+    * by the move [[completePublish]] makes with it), the boundary markers
+    * above main's pointer. Caller holds the claims for every adopted
+    * version and has checked that main is still at `fork`. */
   private def adoptBranchVersions(dir: String, bd: String, fork: Long,
       branchVs: Seq[Long], token: String): Unit = {
     val mainOwners = ownersOf(dir, fork)
     branchVs.foreach { v =>
       val build = Paths.get(s"${versionDir(dir, v)}.build-$token")
-      deleteRecursively(build)
       linkTree(Paths.get(versionDir(bd, v)), build)
       // re-sealed, never written through the linked branch manifest
       sealVersion(build.toString,
         rewriteOwnerRefs(manifestOf(versionDir(bd, v)), fork, mainOwners))
-      publishVersion(build.toString, versionDir(dir, v))
       val srcSlice = Paths.get(changesDir(bd, v))
-      val stage = Paths.get(changesStaging(dir, v))
-      deleteRecursively(stage)
+      val stage = Paths.get(changesStaging(dir, v, token))
       if (Files.isDirectory(srcSlice)) {
         Files.createDirectories(Paths.get(changesRoot(dir)))
         linkTree(srcSlice, stage)
@@ -2119,32 +2273,32 @@ object GraftStore {
   //
   //   PREPARE (per member, through the freezeBranch and adoptBranch steps
   //     fast_forward takes): freeze the branch, verify the fork point and
-  //     schema, adopt the branch's version dirs + changelog stagings into
-  //     main — all INVISIBLE (above the pointer / dot-prefixed), then drop
-  //     a `_groupcommit` marker in the table dir pointing at the group
-  //     manifest. Main stays readable at the fork throughout (the fork+1
-  //     claim freezes writers, never readers).
+  //     schema, adopt the branch's versions and changelog slices into
+  //     main as build dirs and stagings, then drop a `_groupcommit`
+  //     marker in the table dir pointing at the group manifest and
+  //     RESERVE the member's move off its fork: a pointer-move record
+  //     naming the group's decision file ([[movePointer]]). Main stays
+  //     readable at the fork, and no other move off the fork can win.
   //   DECIDE: one CREATE_NEW of `<group>.decision` = "committed" — the
-  //     single atomic action that makes the whole group's outcome. A
-  //     concurrent recovery that aborted a stalled group wins the same
-  //     CREATE_NEW with "aborted"; exactly one of the two ever exists.
-  //   COMPLETE (per member): completePublish, as fast_forward — flip the
-  //     pointer to the branch head, publish the staged slices, consume the
-  //     branch — then remove the marker.
+  //     single atomic action that makes the whole group's outcome: every
+  //     member's reservation takes effect at this instant. A concurrent
+  //     recovery that aborted a stalled group wins the same CREATE_NEW
+  //     with "aborted"; exactly one of the two ever exists, and the next
+  //     move off an aborted member's fork skips its reservation.
+  //   COMPLETE (per member): completePublish, as fast_forward — publish
+  //     the build dirs and staged slices, consume the branch — then
+  //     remove the marker.
   //
   // Crash windows: before DECIDE → no pointer moved, every reader saw
   // (and keeps seeing) the pre-publish contents of every member; the
-  // stalled group's claims go stale and any later access aborts it
-  // loudly via the decision file. After DECIDE → `recoverGroupCommit`
-  // (piggybacked on the scan path's version resolution and every
-  // commit's recoverChangelog) rolls the remaining members FORWARD from
-  // the manifest — a reader that catches a member mid-window completes
-  // the flip itself before resolving the version. The one documented
-  // softness: a reader racing the COMPLETE phase exactly between two
-  // flips can observe member A new and member B old for the instant
-  // before B's read-path recovery fires — the same transient any
-  // catalog-external multi-table commit has without a global snapshot
-  // authority; crash-durability is all-or-nothing regardless.
+  // stalled group's marker goes stale and any later access aborts it
+  // loudly via the decision file. After DECIDE → every member reads at
+  // its branch head (a reader publishes the build dirs itself), and
+  // `recoverGroupCommit` (piggybacked on the scan path's version
+  // resolution and every commit's recoverChangelog) completes the
+  // remaining members from the manifest. Two reads of two members at
+  // different instants can still straddle the decision; snapshotGroup's
+  // double collect gives one consistent cut.
   // --------------------------------------------------------------------
 
   private[sources] val GroupMarkerName = "_groupcommit"
@@ -2153,54 +2307,43 @@ object GraftStore {
     override def initialValue(): Boolean = false
   }
 
-  /** Crash injection for the S44 gate/fuzz only (`graft.store.failpoint
-    * .publish_group` = before-decision | between-flips): throws at the
-    * named point WITHOUT releasing claims or markers — simulating a
-    * dead coordinator the recovery paths must then resolve. */
-  private[sources] final class InjectedGroupCrash(at: String)
-    extends RuntimeException(s"injected publish_group crash at $at")
-  private def groupFailpoint(at: String): Unit =
-    if (sys.props.get("graft.store.failpoint.publish_group").contains(at))
-      throw new InjectedGroupCrash(at)
-
   private def groupDecisionPath(manifest: Path): Path =
     manifest.resolveSibling(
       manifest.getFileName.toString.stripSuffix(".json") + ".decision")
 
   /** One member's manifest line: dir TAB branch TAB fork TAB head TAB
-    * branch-dir incarnation. The incarnation pins WHICH branch the
-    * group published: a resolver completing a member (possibly from a
-    * STALE marker read) must consume only that incarnation — the same
-    * name may already be a freshly re-created branch for the next
-    * publish, and dropping it would destroy an unrelated in-flight
-    * branch (observed as a create_branch "already exists" failure after
-    * the racing publisher crashed on its vanished branch). */
+    * branch-dir incarnation TAB adoption token. The incarnation pins
+    * WHICH branch the group published: a resolver completing a member
+    * (possibly from a STALE marker read) must consume only that
+    * incarnation — the same name may already be a freshly re-created
+    * branch for the next publish, and dropping it would destroy an
+    * unrelated in-flight branch. The token names the member's adopted
+    * build dirs and stagings and its reservation. */
   private def writeGroupManifest(manifest: Path,
-      members: Seq[(String, String, Long, Long, String)]): Unit = {
+      members: Seq[(String, String, Long, Long, String, String)]): Unit = {
     Files.createDirectories(manifest.getParent)
-    val body = members.map { case (d, b, f, h, inc) =>
-      s"${java.net.URLEncoder.encode(d, "UTF-8")}\t" +
-        s"${java.net.URLEncoder.encode(b, "UTF-8")}\t$f\t$h\t" +
-        java.net.URLEncoder.encode(inc, "UTF-8")
+    val enc = (f: String) => java.net.URLEncoder.encode(f, "UTF-8")
+    val body = members.map { case (d, b, f, h, inc, tok) =>
+      s"${enc(d)}\t${enc(b)}\t$f\t$h\t${enc(inc)}\t$tok"
     }.mkString("", "\n", "\n")
     Files.write(manifest, body.getBytes("UTF-8"),
       java.nio.file.StandardOpenOption.CREATE_NEW)
   }
 
-  /** Exactly five fields per line: any other count is a manifest this
+  /** Exactly six fields per line: any other count is a manifest this
     * build did not write, and it fails loudly rather than being read by
     * position. */
   private def readGroupManifest(manifest: Path)
-      : Seq[(String, String, Long, Long, String)] =
+      : Seq[(String, String, Long, Long, String, String)] =
     new String(Files.readAllBytes(manifest), "UTF-8").split("\n").toSeq
       .filter(_.nonEmpty).map { line =>
         val dec = (f: String) => java.net.URLDecoder.decode(f, "UTF-8")
         line.split("\t", -1) match {
-          case Array(d, b, f, h, inc) => (dec(d), dec(b), f.toLong, h.toLong,
-            dec(inc))
+          case Array(d, b, f, h, inc, tok) => (dec(d), dec(b), f.toLong,
+            h.toLong, dec(inc), tok)
           case parts => throw new IllegalStateException(
             s"group manifest $manifest has a line with ${parts.length} " +
-              "fields, expected 5")
+              "fields, expected 6")
         }
       }
 
@@ -2227,19 +2370,10 @@ object GraftStore {
       listDir(groupsRoot)(_.filter(
           _.getFileName.toString.endsWith(".json")).toList).foreach { m =>
         val d = groupDecisionPath(m)
-        val verdict =
-          try Some(new String(Files.readAllBytes(d), "UTF-8").trim)
-          catch { case _: java.io.IOException => None }
         val age = try now - Files.getLastModifiedTime(m).toMillis
         catch { case _: java.nio.file.NoSuchFileException => -1L }
-        if (verdict.isEmpty && age > 86400000L)
-          try Files.write(d, "aborted".getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          catch { case _: java.io.IOException => () }
-        val nowAborted =
-          try new String(Files.readAllBytes(d), "UTF-8").trim == "aborted"
-          catch { case _: java.io.IOException => false }
-        if (nowAborted && age > 86400000L) {
+        if (age > 86400000L && readText(d).isEmpty) createText(d, "aborted")
+        if (age > 86400000L && readText(d).contains("aborted")) {
           Files.deleteIfExists(m)
           Files.deleteIfExists(d)
         }
@@ -2247,6 +2381,7 @@ object GraftStore {
     }
     val id = java.util.UUID.randomUUID().toString
     val manifest = groupsRoot.resolve(s"group-$id.json")
+    val named = manifest.toAbsolutePath.toString
     val decision = groupDecisionPath(manifest)
     val preps = scala.collection.mutable.ArrayBuffer.empty[FrozenBranch]
     val claims = scala.collection.mutable.ArrayBuffer.empty[(Path, String)]
@@ -2263,63 +2398,47 @@ object GraftStore {
           adoptBranch(f, "publish_group", claims)
           preps += f
         }
-        writeGroupManifest(manifest,
-          preps.toSeq.map(f => (f.dir, f.name, f.fork, f.head, f.incarnation)))
+        writeGroupManifest(manifest, preps.toSeq.map(f =>
+          (f.dir, f.name, f.fork, f.head, f.incarnation, f.claim._2)))
         preps.foreach { f =>
-          try Files.write(marker(f),
-            manifest.toAbsolutePath.toString.getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              throw new java.util.ConcurrentModificationException(
-                s"another table group holds ${f.dir}; " +
-                  "resolve it (any read recovers a decided/stalled group) " +
-                  "and re-run")
-          }
+          if (!createText(marker(f), named))
+            throw new java.util.ConcurrentModificationException(
+              s"another table group holds ${f.dir}; " +
+                "resolve it (any read recovers a decided/stalled group) " +
+                "and re-run")
+          if (f.head > f.fork && !movePointer(f.dir, f.fork, f.head,
+              f.claim._2, Some(decision)))
+            throw new java.util.ConcurrentModificationException(
+              s"table ${f.dir} advanced past the fork point v${f.fork}; " +
+                "publish_group aborted — re-run")
         }
-        groupFailpoint("before-decision")
+        hook("publishGroup.before-decision")
         withClaimHeartbeat((claims.map(_._1) ++ preps.map(marker)).toSeq) {
-          // last-instant fencing, then the single decision point
-          claims.foreach { case (m, t) => verifyClaim(m, t) }
-          try Files.write(decision, "committed".getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              // a recovery aborted this group while we stalled
-              throw new java.util.ConcurrentModificationException(
-                s"publish_group $id was aborted by a concurrent recovery; " +
-                  "re-run")
-          }
+          // the single decision point; losing it means a recovery
+          // aborted this group while we stalled
+          if (!createText(decision, "committed"))
+            throw new java.util.ConcurrentModificationException(
+              s"publish_group $id was aborted by a concurrent recovery; " +
+                "re-run")
           // COMPLETE every member; a crash from here on rolls forward
           preps.zipWithIndex.foreach { case (f, i) =>
-            if (i > 0) groupFailpoint("between-flips")
-            completeGroupMember(f.dir)
+            hook(if (i == 0) "publishGroup.decided"
+              else "publishGroup.between-flips")
+            completeGroupMember(f.dir, named)
           }
         }
       } catch {
-        case e: InjectedGroupCrash => injected = true; throw e
+        case e: InjectedCrash => injected = true; throw e
         case e: Throwable =>
           // a LIVE coordinator backing out (claim lost, decision lost,
           // member conflict) must not leave its markers pinning the
           // tables for the stale window: decide ABORT if still undecided
-          // and sweep the markers it wrote. A marker whose CREATE_NEW we
-          // lost belongs to another group and stays. Never runs on the
-          // injected-crash lane — that simulates a DEAD coordinator.
-          if (Files.exists(manifest) && !Files.exists(decision))
-            try Files.write(decision, "aborted".getBytes("UTF-8"),
-              java.nio.file.StandardOpenOption.CREATE_NEW)
-            catch { case _: java.nio.file.FileAlreadyExistsException => () }
-          val decided =
-            try new String(Files.readAllBytes(decision), "UTF-8").trim ==
-              "committed"
-            catch { case _: java.io.IOException => false }
-          if (!decided) preps.map(marker).foreach { m =>
-            try {
-              if (new String(Files.readAllBytes(m), "UTF-8").trim ==
-                  manifest.toAbsolutePath.toString)
-                Files.deleteIfExists(m)
-            } catch { case _: java.io.IOException => () }
-          }
+          // (its reservations are then skipped) and remove the markers
+          // that still name this group. Never runs on the injected-crash
+          // lane — that simulates a DEAD coordinator.
+          if (Files.exists(manifest)) createText(decision, "aborted")
+          if (!readText(decision).contains("committed"))
+            preps.foreach(f => removeIf(marker(f), named))
           throw e
       }
     } finally if (!injected)
@@ -2327,60 +2446,55 @@ object GraftStore {
     members.map { case (d, _) => preps.find(_.dir == d).get.head }
   }
 
-  /** Roll a decided group forward on one member: [[completePublish]] at
-    * the recorded head and incarnation, then drop the marker. Idempotent
-    * and safe to race — every step either tolerates or ignores an
-    * already-done state. */
-  private def completeGroupMember(dir: String): Unit = {
-    val marker = Paths.get(dir, GroupMarkerName)
-    val manifest =
-      try Paths.get(new String(Files.readAllBytes(marker), "UTF-8").trim)
-      catch { case _: java.nio.file.NoSuchFileException => return }
-    val mine = readGroupManifest(manifest).find(_._1 == dir).getOrElse(return)
-    val (_, branch, _, head, inc) = mine
-    completePublish(dir, branch, head, inc)
-    Files.deleteIfExists(marker)
+  /** Roll decided group `named` forward on member `dir`:
+    * [[completePublish]] at the recorded fork, head, incarnation and
+    * token, then remove the marker if it still names this group.
+    * Idempotent and safe to race: GroupScheduleSpec runs the coordinator
+    * and two resolvers over it in 600 seeded interleavings. */
+  private def completeGroupMember(dir: String, named: String): Unit = {
+    val manifest = Paths.get(named)
+    val mine = readGroupManifest(manifest).find(_._1 == dir)
+    hook("completeGroupMember")
+    // false only once expiry trimmed this member's long-completed move
+    mine.foreach { case (_, branch, fork, head, inc, tok) =>
+      completePublish(dir, branch, fork, head, inc, tok,
+        Some(groupDecisionPath(manifest)))
+    }
+    removeIf(Paths.get(dir, GroupMarkerName), named)
   }
 
-  /** Resolve a `_groupcommit` marker found on `dir`: roll FORWARD when
-    * the group decided commit, clean up when it decided abort, ABORT it
-    * (winning the decision file) when the coordinator's claims have gone
-    * stale, and leave an in-flight young group alone. Cheap when no
-    * marker exists — one Files.exists. Called from the scan path's
+  /** Resolve a `_groupcommit` marker found on `dir`, each leg removing
+    * the marker only while it still names the group it resolved: roll
+    * FORWARD when the group decided commit, clean up when it decided
+    * abort, ABORT it (winning the decision file) when the coordinator's
+    * marker has gone stale, and leave an in-flight young group alone.
+    * Each leg is idempotent and safe to race: GroupScheduleSpec reaches
+    * every one from two resolvers, the coordinator and a reader. Cheap
+    * when no marker exists — one stat. Called from the scan path's
     * version resolution and from recoverChangelog (every commit/read). */
   def recoverGroupCommit(dir: String): Unit = {
     val marker = Paths.get(dir, GroupMarkerName)
-    if (!Files.exists(marker)) return
-    val manifest =
-      try Paths.get(new String(Files.readAllBytes(marker), "UTF-8").trim)
-      catch { case _: java.nio.file.NoSuchFileException => return }
+    if (!marker.toFile.exists()) return
+    val named = readText(marker).getOrElse(return)
+    val manifest = Paths.get(named)
     // only aborted/expired-undecided manifests are ever reclaimed
     // (committed ones are retained indefinitely — they are the
     // roll-forward authority), so a marker referencing a MISSING
     // manifest is an aborted group's straggler
-    if (!Files.exists(manifest)) { Files.deleteIfExists(marker); return }
+    if (!Files.exists(manifest)) { removeIf(marker, named); return }
     val decision = groupDecisionPath(manifest)
-    val verdict =
-      try Some(new String(Files.readAllBytes(decision), "UTF-8").trim)
-      catch { case _: java.nio.file.NoSuchFileException => None }
-    verdict match {
-      case Some("committed") => completeGroupMember(dir)
-      case Some(_) => // aborted: the adopted dirs above the pointer are
-        // inert (invisible to every reader; vacuum sweeps them)
-        Files.deleteIfExists(marker)
+    readText(decision) match {
+      case Some("committed") => completeGroupMember(dir, named)
+      case Some(_) => // aborted: its reservations are skipped and its
+        // build dirs are inert (vacuum sweeps them)
+        removeIf(marker, named)
       case None =>
         if (leaseStale(marker, defaultStaleClaimMillis)) {
           // the coordinator is presumed dead (markers ride its claim
           // heartbeat while alive): abort by WINNING the decision file —
           // if the zombie wakes it loses its own CREATE_NEW and backs out
-          try {
-            Files.write(decision, "aborted".getBytes("UTF-8"),
-              java.nio.file.StandardOpenOption.CREATE_NEW)
-            Files.deleteIfExists(marker)
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              recoverGroupCommit(dir) // decided under us — re-dispatch
-          }
+          if (createText(decision, "aborted")) removeIf(marker, named)
+          else recoverGroupCommit(dir) // decided under us — re-dispatch
         } // else: in-flight; readers keep seeing the pre-publish contents
     }
   }
@@ -2468,9 +2582,7 @@ object GraftStore {
 
   /** The expiry-promoted high-water of `appId`, if any. */
   private def promotedTxn(dir: String, appId: String): Option[Long] =
-    try Some(new String(Files.readAllBytes(txnsRoot(dir).resolve(appId)),
-      "UTF-8").trim.toLong)
-    catch { case _: java.nio.file.NoSuchFileException => None }
+    readText(txnsRoot(dir).resolve(appId)).map(_.toLong)
 
   /** Promote a retiring version's `txn` record to `_txns/<appId>`
     * (keeping the max — re-promotion after a crash is idempotent). The
@@ -2630,6 +2742,13 @@ object GraftStore {
         }
         deleteRecursively(Paths.get(dvRoot(vdir))) // kept snapshots hold links
       }
+    }
+    // trim the pointer log: the moves that ended below the oldest retained
+    // version, oldest first (the order currentVersion's hint check needs)
+    listVersions(dir).headOption.foreach { oldest =>
+      logIndexes(dir).takeWhile(effective(dir, _).exists(_._1 < oldest))
+        .foreach(n => Iterator.from(0).map(slot(dir, n, _))
+          .takeWhile(_.toFile.exists).toList.foreach(Files.deleteIfExists))
     }
     // retired version dirs under the table were deleted or mutated — any
     // cached snapshot resolution keyed by their paths is stale now
@@ -2980,8 +3099,8 @@ object GraftStore {
       smallBatchHint: Boolean): Unit = {
     val next = build.next
     val cur = next - 1
-    // writer-private build dir: the final vN name appears only after the
-    // last ownership re-check (see publishVersion)
+    // writer-private build dir: the final vN name appears only when this
+    // build's move wins (see movePointer)
     val buildDir = build.path
     val cols = meta.schema.fieldNames.toSeq
     locally {
@@ -3016,8 +3135,7 @@ object GraftStore {
       // rewrite needs anyway, and the all-insert path skips both. Cost ∝
       // rows changed. TRUNCATE intentionally writes no changelog — a
       // changelog never spans a truncation; consumers re-snapshot.
-      val chDir = changesStaging(dir, next)
-      deleteRecursively(Paths.get(chDir))
+      val chDir = changesStaging(dir, next, build.token)
       // Files store PHYSICAL names (flat columns AND the before-image's
       // inner fields — the struct cast renames by position), so renames
       // stay metadata-only across the whole changelog history.
@@ -3282,24 +3400,13 @@ object GraftStore {
       val carried =
         if (overwrite) Map.empty[String, Long]
         else linkDvCarry(curDir, buildDir, rewritten)
-      // A remnant final-named change dir for `next` can only predate this
-      // commit (publication always happens after the flip, so a live one
-      // would imply pointer >= next). Clear it BEFORE the flip — after the
-      // flip a dir under the final name may be our own batch, published by
-      // a concurrent reader's recoverChangelog the instant the pointer
-      // moved, and deleting it then would destroy the committed changelog.
       val chFinal = Paths.get(changesDir(dir, next))
-      deleteRecursively(chFinal)
       // an overwrite is a snapshot boundary for CDC; the idempotent-write
       // record is sealed WITH the commit, so neither "recorded but not
       // committed" (lost write on retry) nor "committed but not recorded"
       // (duplicate on retry) can exist after a crash
       sealVersion(buildDir, curM.next(newMap, files, carried ++ newDeletes)
         .copy(boundary = overwrite, txn = txn))
-      // a commit that outlived even the heartbeat-refreshed stale window
-      // (or whose heartbeat was starved) may have lost its claim to a
-      // takeover — flip re-verifies ownership at the last instant so we
-      // never flip a pointer onto a version another writer now owns
       build.flip()
       // Publish the changelog: visible name only after the commit point.
       // If staging is already gone, a reader won the publish — done.
@@ -3523,9 +3630,8 @@ object GraftStore {
       // new manifest points at — an expire racing us could have retired the
       // target and deleted some of them, and publishing anyway would ship a
       // manifest whose reads fail on the swept files. Fail loudly
-      // instead; the residual window
-      // between this check and the pointer flip is the same documented
-      // class as the verifyClaim→flip TOCTOU.
+      // instead. An expiry landing between this check and the move is
+      // still possible: expireVersions takes no claim.
       if (!listVersions(dir).contains(toVersion))
         throw new java.util.ConcurrentModificationException(
           s"table $dir version $toVersion was expired during RESTORE; aborting")
@@ -3865,139 +3971,76 @@ object GraftStore {
     * entries removed. */
   def vacuum(dir: String, olderThanMillis: Long = 3600000L): Long = {
     // resolve any group-commit marker FIRST: a DECIDED-but-incomplete
-    // group's adopted above-pointer dirs are its roll-forward payload —
+    // group's adopted build dirs are its roll-forward payload —
     // completing (or aborting) the group here means the sweep below can
     // never reclaim dirs a committed group still needs (post-recovery, a
-    // committed member's pointer covers them; an aborted group's dirs
-    // are genuinely debris)
+    // committed member's builds are published; an aborted group's are
+    // genuinely debris)
     recoverGroupCommit(dir)
     val now = System.currentTimeMillis()
     var removed = 0L
-    val stagingRoot = Paths.get(dir, "_staging")
-    if (Files.isDirectory(stagingRoot)) {
-      listDir(stagingRoot)(_.toList).foreach { p =>
-        val age = try now - Files.getLastModifiedTime(p).toMillis
-        catch { case _: java.nio.file.NoSuchFileException => -1L }
-        if (age > olderThanMillis) { deleteRecursively(p); removed += 1 }
-      }
-    }
-    listDir(Paths.get(dir))(_.filter(p => {
-        val n = p.getFileName.toString
-        n.matches("_commit-\\d{10}\\.stale-\\d+") ||
-          n.matches("_meta_lock\\.stale-\\d+")
-      }).toList)
-      .foreach { p => Files.deleteIfExists(p); removed += 1 }
+    def age(p: Path): Long =
+      try now - Files.getLastModifiedTime(p).toMillis
+      catch { case _: java.nio.file.NoSuchFileException => -1L }
+    // liveness of a tree = the NEWEST mtime anywhere in it: a live
+    // CTAS/RTAS or clone keeps writing files deep inside without touching
+    // its root mtime, and killing an in-flight statement is worse than
+    // keeping an orphan another hour
+    def treeAge(p: Path): Long = try {
+      val walk = Files.walk(p)
+      try now - walk.iterator().asScala.map(f =>
+        try Files.getLastModifiedTime(f).toMillis
+        catch { case _: Exception => now }).foldLeft(0L)(math.max)
+      finally walk.close()
+    } catch { case _: Exception => -1L }
+    // remove the entries of `root` whose names `pick` selects and that
+    // `dead` judges abandoned
+    def sweep(root: Path)(pick: String => Boolean)(dead: Path => Boolean)
+        : Unit =
+      if (Files.isDirectory(root))
+        listDir(root)(_.filter(p => pick(p.getFileName.toString)).toList)
+          .foreach(p => if (dead(p)) { deleteRecursively(p); removed += 1 })
+    val old = (p: Path) => age(p) > olderThanMillis
+    sweep(Paths.get(dir, "_staging"))(_ => true)(old)
+    sweep(Paths.get(dir))(_.startsWith("_current.tmp-"))(old) // crash debris
+    // lease and marker tombs ([[removeIf]]), and expireVersions'
+    // rename-then-sweep version tombs (a crash between the move and the
+    // recursive delete) — invisible to every listing, reclaimed at once
+    sweep(Paths.get(dir))(n =>
+      n.matches("(_commit-\\d{10}|_meta_lock|_groupcommit)\\.stale-\\d+") ||
+        n.matches("v\\d{10}\\.expired-\\d+"))(_ => true)
     // abandoned writer-private build dirs (vN.build-<token>): their
-    // writers died or lost a takeover; the publish rename never happened.
-    // vN.expired-<nonce> tombs are expireVersions' rename-then-sweep
-    // remnants (a crash between the move and the recursive delete) —
-    // already invisible to the version listing, reclaim immediately.
-    listDir(Paths.get(dir))(_.filter { p =>
-        val n = p.getFileName.toString
-        n.matches("v\\d{10}\\.build-.*") || n.matches("v\\d{10}\\.expired-\\d+")
-      }.toList)
-      .foreach { p =>
-        val isTomb = p.getFileName.toString.contains(".expired-")
-        val age = try now - Files.getLastModifiedTime(p).toMillis
-        catch { case _: java.nio.file.NoSuchFileException => -1L }
-        if (isTomb || age > olderThanMillis) { deleteRecursively(p); removed += 1 }
-      }
-    // final-named version dirs ABOVE the pointer are branch-publish
-    // adoption debris: a crashed fast_forward or publish_group, or an
-    // ABORTED group or txn (a live publish heartbeats a claim per adopted
-    // version — the claim check keeps it safe). Invisible to listVersions
-    // (pointer-capped), so reclaiming them is pure space hygiene; any
-    // later publish that reaches their versions relinks them whole.
-    locally {
-      val cur = currentVersion(dir)
-      listDir(Paths.get(dir))(_.filter { p =>
-          val n = p.getFileName.toString
-          n.matches("v\\d{10}") && n.drop(1).toLong > cur
-        }.toList)
-        .foreach { p =>
-          val v = p.getFileName.toString.drop(1).toLong
-          val claim = Paths.get(dir, f"_commit-$v%010d")
-          val claimFresh = Files.exists(claim) &&
-            !leaseStale(claim, olderThanMillis)
-          val age = try now - Files.getLastModifiedTime(p).toMillis
-          catch { case _: java.nio.file.NoSuchFileException => -1L }
-          if (!claimFresh && age > olderThanMillis) {
-            deleteRecursively(p); removed += 1
-          }
-        }
+    // writers died or lost the move. A won move's builds were published
+    // by this currentVersion call, and a live publish heartbeats a claim
+    // per version it builds, so a fresh claim keeps its builds.
+    currentVersion(dir)
+    sweep(Paths.get(dir))(_.matches("v\\d{10}\\.build-.*")) { p =>
+      val claim = Paths.get(dir, s"_commit-${p.getFileName.toString.slice(1, 11)}")
+      old(p) && (!Files.exists(claim) || leaseStale(claim, olderThanMillis))
     }
     // abandoned CTAS/RTAS stage dirs and clone builds live as SIBLINGS of
     // the table dir (`<table>.stage-<uuid>` / `<table>.clonebuild-<uuid>`):
     // their sessions died before commitStagedChanges/the clone rename
     val self = Paths.get(dir).getFileName.toString
-    Option(Paths.get(dir).getParent).filter(Files.isDirectory(_)).foreach {
-      parent =>
-        listDir(parent)(_.filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith(s"$self.stage-") || n.startsWith(s"$self.clonebuild-")
-        }.toList).foreach { p =>
-          // liveness = the NEWEST mtime anywhere in the subtree: a live
-          // CTAS/RTAS keeps writing files deep inside the stage dir
-          // without touching its root mtime, and killing an in-flight
-          // statement is worse than keeping an orphan another hour
-          val age = try {
-            val walk = Files.walk(p)
-            val newest =
-              try walk.iterator().asScala
-                .map(f => try Files.getLastModifiedTime(f).toMillis
-                  catch { case _: Exception => now })
-                .foldLeft(0L)(math.max)
-              finally walk.close()
-            now - newest
-          } catch { case _: Exception => -1L }
-          if (age > olderThanMillis) { deleteRecursively(p); removed += 1 }
-        }
-    }
+    Option(Paths.get(dir).getParent).foreach(sweep(_)(n =>
+      n.startsWith(s"$self.stage-") || n.startsWith(s"$self.clonebuild-"))(
+      treeAge(_) > olderThanMillis))
     // a crashed createBranch/rebaseBranch leaks its full hard-linked
     // clone under `_branches/.creating-*` (and a crashed rebase swap the
     // displaced original under `_branches/.prerebase-*`) — never
-    // promoted, invisible to listBranches, reclaimed here with the same
-    // newest-mtime liveness gate as the stage-dir sweep (a live clone
-    // keeps linking files)
-    locally {
-      val broot = branchesRoot(dir)
-      if (Files.isDirectory(broot)) {
-        listDir(broot)(_.filter { p =>
-            val n = p.getFileName.toString
-            n.startsWith(".creating-") || n.startsWith(".prerebase-")
-          }.toList)
-          .foreach { p =>
-            val age = try {
-              val walk = Files.walk(p)
-              val newest =
-                try walk.iterator().asScala
-                  .map(f => try Files.getLastModifiedTime(f).toMillis
-                    catch { case _: Exception => now })
-                  .foldLeft(0L)(math.max)
-                finally walk.close()
-              now - newest
-            } catch { case _: Exception => -1L }
-            if (age > olderThanMillis) { deleteRecursively(p); removed += 1 }
-          }
-      }
-    }
+    // promoted, invisible to listBranches
+    sweep(branchesRoot(dir))(n =>
+      n.startsWith(".creating-") || n.startsWith(".prerebase-"))(
+      treeAge(_) > olderThanMillis)
     // claim markers for versions AT OR BELOW the pointer are definitionally
     // dead (claims only gate versions above it): their writer committed and
-    // was killed before releasing, or lost a takeover race post-flip. The
+    // was killed before releasing, or lost a takeover race post-move. The
     // age gate keeps a racing claim for cur+1 read during a concurrent
-    // flip safe.
+    // move safe.
     val cur = currentVersion(dir)
-    listDir(Paths.get(dir))(_.filter { p =>
-        val n = p.getFileName.toString
-        n.matches("_commit-\\d{10}") && n.drop("_commit-".length).toLong <= cur
-      }.toList)
-      .foreach { p =>
-        val age = try now - Files.getLastModifiedTime(p).toMillis
-        catch { case _: java.nio.file.NoSuchFileException => -1L }
-        if (age > olderThanMillis) { Files.deleteIfExists(p); removed += 1 }
-      }
-    removed += expireTxnBranches(dir, olderThanMillis)
-    removed
+    sweep(Paths.get(dir))(n => n.matches("_commit-\\d{10}") &&
+      n.drop("_commit-".length).toLong <= cur)(old)
+    removed + expireTxnBranches(dir, olderThanMillis)
   }
 
   /** Reclaim hidden transaction branches (`txn-*`, [[GraftTxn]]) whose
@@ -4138,6 +4181,7 @@ object GraftStore {
   }
 
   private def deleteRecursively(p: Path): Unit = {
+    hook("deleteRecursively")
     // deleteIfExists + swallowed NoSuchFile: two sweepers can race on
     // the same debris tree (vacuum vs expireVersions' tomb sweep, or two
     // group-commit resolvers consuming the same branch) and concurrent

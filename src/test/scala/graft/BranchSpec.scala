@@ -215,11 +215,12 @@ class BranchSpec extends SparkTestBase {
     assert(rows(s"$cat.`$t$$branch$$tt` VERSION AS OF 1") === Seq((1L, 0L, 10L)))
     assert(rows(s"$cat.`$t$$branch$$tt` VERSION AS OF 2") ===
       Seq((1L, 0L, 10L), (2L, 0L, 20L)))
-    // a final-named version dir ABOVE main's pointer (debris of a crashed
-    // publish, or of an aborted group or txn) is invisible to the version
-    // listing, unreadable via time travel, reclaimed by vacuum once
-    // unclaimed, and relinked by any later publish that reaches it
-    val stray = java.nio.file.Paths.get(GraftStore.versionDir(dir, 7L))
+    // a build dir ABOVE main's pointer (debris of a crashed publish, or
+    // of an aborted group or txn) is invisible to the version listing,
+    // unreadable via time travel, reclaimed by vacuum once unclaimed, and
+    // never in the way of a later publish that reaches its version
+    val stray = java.nio.file.Paths.get(
+      s"${GraftStore.versionDir(dir, 7L)}.build-crashed")
     Files.createDirectories(stray)
     assert(GraftStore.listVersions(dir) === Seq(0L, 1L))
     val e = intercept[Exception] {
@@ -229,8 +230,8 @@ class BranchSpec extends SparkTestBase {
     GraftStore.vacuum(dir, olderThanMillis = 0L)
     assert(!Files.isDirectory(stray), "vacuum must reclaim unclaimed FF debris")
     // the same debris at fork+1 — exactly the version the publish adopts
-    Files.createDirectories(
-      java.nio.file.Paths.get(GraftStore.versionDir(dir, 2L)))
+    Files.createDirectories(java.nio.file.Paths.get(
+      s"${GraftStore.versionDir(dir, 2L)}.build-crashed", "gbucket=0"))
     spark.sql(s"CALL $cat.fast_forward(table => '$t', name => 'tt')")
     assert(rows(s"$cat.$t") === Seq((1L, 0L, 10L), (2L, 0L, 20L)))
   }
@@ -389,10 +390,11 @@ class BranchSpec extends SparkTestBase {
       spark.sql(s"CALL $cat.create_branch(table => '$t', name => 'wap')"))
     spark.sql(s"INSERT INTO $cat.`$a$$branch$$wap` VALUES (2, 0, 20)")
     spark.sql(s"INSERT INTO $cat.`$b$$branch$$wap` VALUES (6, 0, 60)")
-    sys.props("graft.store.failpoint.publish_group") = "before-decision"
-    try intercept[Exception] {
-      spark.sql(s"CALL $cat.publish_group(tables => '$a,$b', name => 'wap')")
-    } finally sys.props.remove("graft.store.failpoint.publish_group")
+    GraftStore.withCrashAt("publishGroup.before-decision") {
+      intercept[Exception] {
+        spark.sql(s"CALL $cat.publish_group(tables => '$a,$b', name => 'wap')")
+      }
+    }
     // the coordinator "died" with everything staged: NEITHER table moved
     assert(rows(s"$cat.$a") === Seq((1L, 0L, 10L)))
     assert(rows(s"$cat.$b") === Seq((5L, 0L, 50L)))
@@ -425,10 +427,11 @@ class BranchSpec extends SparkTestBase {
       spark.sql(s"CALL $cat.create_branch(table => '$t', name => 'wap')"))
     spark.sql(s"INSERT INTO $cat.`$a$$branch$$wap` VALUES (2, 0, 20)")
     spark.sql(s"INSERT INTO $cat.`$b$$branch$$wap` VALUES (6, 0, 60)")
-    sys.props("graft.store.failpoint.publish_group") = "between-flips"
-    try intercept[Exception] {
-      spark.sql(s"CALL $cat.publish_group(tables => '$a,$b', name => 'wap')")
-    } finally sys.props.remove("graft.store.failpoint.publish_group")
+    GraftStore.withCrashAt("publishGroup.between-flips") {
+      intercept[Exception] {
+        spark.sql(s"CALL $cat.publish_group(tables => '$a,$b', name => 'wap')")
+      }
+    }
     // decision durable, first member flipped, coordinator "died": a plain
     // read of EITHER member completes the group (scan-path recovery), so
     // no reader can plan the second member's pre-publish snapshot
@@ -452,10 +455,11 @@ class BranchSpec extends SparkTestBase {
       spark.sql(s"CALL $cat.create_branch(table => '$t', name => 'wap')"))
     spark.sql(s"INSERT INTO $cat.`$a$$branch$$wap` VALUES (2, 0, 20)")
     spark.sql(s"INSERT INTO $cat.`$b$$branch$$wap` VALUES (6, 0, 60)")
-    sys.props("graft.store.failpoint.publish_group") = "between-flips"
-    try intercept[Exception] {
-      spark.sql(s"CALL $cat.publish_group(tables => '$a,$b', name => 'wap')")
-    } finally sys.props.remove("graft.store.failpoint.publish_group")
+    GraftStore.withCrashAt("publishGroup.between-flips") {
+      intercept[Exception] {
+        spark.sql(s"CALL $cat.publish_group(tables => '$a,$b', name => 'wap')")
+      }
+    }
     // b (second in sorted order) is decided but not completed; its branch
     // has lost the stamp the manifest pinned, so it cannot be identified
     val bDir = s"$warehouse/$b"
@@ -486,9 +490,9 @@ class BranchSpec extends SparkTestBase {
     }
     assert(chain(e).exists(x => Option(x.getMessage).exists(
       _.contains("fork point"))))
-    // a's adoption of branch x's v2 stays above a's pointer, unread
-    assert(Files.isDirectory(java.nio.file.Paths.get(
-      GraftStore.versionDir(aDir, 2L))))
+    // a's adoption of branch x's v2 stays a build dir, unread
+    assert(new java.io.File(aDir).list().exists(_.startsWith(
+      f"v${2L}%010d.build-")))
     assert(rows(s"$cat.$a") === Seq((1L, 0L, 10L)))
     // an unrelated branch publishes its own v2 over that debris
     spark.sql(s"CALL $cat.drop_branch(table => '$a', name => 'x')")

@@ -706,8 +706,7 @@ class CatalogSpec extends SparkTestBase {
       val v = GraftStore.currentVersion(dir)
       val chFinal = java.nio.file.Paths.get(
         GraftStore.changesRoot(dir), s"change_version=$v")
-      val staged = java.nio.file.Paths.get(
-        GraftStore.changesRoot(dir), s".staging-$v")
+      val staged = stagedSlice(dir, v)
       Files.move(chFinal, staged)
       val gate = new java.util.concurrent.CyclicBarrier(8)
       val fs = (1 to 8).map(_ => Future { gate.await(); GraftStore.recoverChangelog(dir) })

@@ -111,11 +111,10 @@ class IdempotentWriteSpec extends SparkTestBase {
     val dir = s"$warehouse/$t"
     append(t, 0, 3, "etl", 1) // v1, pointer = 1
     assert(GraftStore.currentVersion(dir) === 1L)
-    // simulate a crash between publishVersion and writePointer: the final-
-    // named v1 dir (with its _txn marker inside) exists ABOVE the pointer
-    Files.write(java.nio.file.Paths.get(dir, "_current"),
-      "0".getBytes("UTF-8"))
-    // readable == committed: the above-pointer marker must NOT count —
+    // simulate a crash before v1's pointer move: v1 built (its manifest
+    // carrying the txn record) but the move never recorded
+    unpublish(dir, 1L)
+    // readable == committed: the unpublished txn record must NOT count —
     // counting it would silently no-op the healing retry below
     assert(GraftStore.lastTxnVersion(dir, "etl") === None,
       "above-pointer _txn marker ignored")

@@ -647,13 +647,12 @@ class MvSpec extends SparkTestBase {
     assert(refresh("mv_crsh")._2 === "incremental")
     val stateDir = s"$warehouse/__mv_state_mv_crsh"
     val v = GraftStore.currentVersion(stateDir)
-    // crash window: the fold's state version dir (carrying the _txn
-    // watermark) published, but the pointer flip never happened — the
+    // crash window: the fold's state version (carrying the txn
+    // watermark) built, but its pointer move never recorded — the
     // readable state is PRE-fold, so the watermark must read pre-fold too
-    // (an uncapped marker scan would report the slice as folded and serve
-    // a silently-stale MV forever)
-    Files.write(java.nio.file.Paths.get(stateDir, "_current"),
-      (v - 1).toString.getBytes("UTF-8"))
+    // (a scan of unpublished builds would report the slice as folded and
+    // serve a silently-stale MV forever)
+    unpublish(stateDir, v)
     assert(rowsOf("mv_crsh") !== recompute(t), "readable state is pre-fold")
     val (_, mode) = refresh("mv_crsh")
     assert(mode === "incremental", s"healing refresh re-folds, got $mode")

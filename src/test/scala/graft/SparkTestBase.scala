@@ -21,6 +21,33 @@ trait SparkTestBase extends AnyFunSuite {
     }
   }
 
+  /** Where version `v`'s changelog slice was staged before its pointer
+    * move: the staging name, with the build token the move record names,
+    * that recovery publishes. */
+  def stagedSlice(dir: String, v: Long): java.nio.file.Path = {
+    val rec = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "_log", f"$v%010d")), "UTF-8").trim
+    java.nio.file.Paths.get(graft.sources.GraftStore.changesStaging(dir, v,
+      rec.split(" ")(1)))
+  }
+
+  /** Put table `dir` back in the crash window before version `v`'s
+    * pointer move: the version built under its build name, its changelog
+    * slice staged, the move never recorded. */
+  def unpublish(dir: String, v: Long): Unit = {
+    import java.nio.file.{Files, Paths}
+    val record = Paths.get(dir, "_log", f"$v%010d")
+    val token = new String(Files.readAllBytes(record), "UTF-8").trim
+      .split(" ")(1)
+    val vd = graft.sources.GraftStore.versionDir(dir, v)
+    val slice = Paths.get(graft.sources.GraftStore.changesRoot(dir),
+      s"change_version=$v")
+    if (Files.exists(slice)) Files.move(slice, stagedSlice(dir, v))
+    Files.move(Paths.get(vd), Paths.get(s"$vd.build-$token"))
+    Files.delete(record)
+    Files.write(Paths.get(dir, "_current"), (v - 1).toString.getBytes("UTF-8"))
+  }
+
   /** Data files planned by the (executed) query's DSv2 batch scans,
     * walking through AQE stage nesting; merge-on-read filter partitions
     * count as planned reads (one file each in `files`). The SHARED

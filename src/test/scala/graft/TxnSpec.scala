@@ -266,10 +266,10 @@ class TxnSpec extends SparkTestBase {
     // a dead coordinator BETWEEN the two pointer flips: the decision is
     // durable, one member's pointer still lags — snapshot_group must
     // return the POST versions for BOTH (its captures roll forward)
-    sys.props("graft.store.failpoint.publish_group") = "between-flips"
-    try intercept[Exception] { spark.sql(
-      s"CALL $cat.publish_group(tables => '$f,$s2', name => 'pub')") }
-    finally sys.props.remove("graft.store.failpoint.publish_group")
+    GraftStore.withCrashAt("publishGroup.between-flips") {
+      intercept[Exception] { spark.sql(
+        s"CALL $cat.publish_group(tables => '$f,$s2', name => 'pub')") }
+    }
     val after = snap()
     assert(after(f) > before(f) && after(s2) > before(s2))
     // and reading AS OF the snapshot shows the group's effects on BOTH

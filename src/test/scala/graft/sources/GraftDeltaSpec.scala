@@ -135,7 +135,7 @@ class GraftDeltaSpec extends SparkTestBase {
     // recovery must finish the publication so the committed version's
     // changes are not silently skipped.
     val finalV2 = s"${GraftStore.changesRoot(dir)}/${GraftStore.ChangeVersionCol}=2"
-    Files.move(Paths.get(finalV2), Paths.get(s"${GraftStore.changesRoot(dir)}/.staging-2"))
+    Files.move(Paths.get(finalV2), stagedSlice(dir, 2L))
     val recovered = GraftStore.readChanges(spark, dir, 2L, 2L)
       .select("k").collect().map(_.getLong(0)).toSet
     assert(recovered === Set(2L),
@@ -189,12 +189,14 @@ class GraftDeltaSpec extends SparkTestBase {
   test("commit-claim crash protocol: stale takeover has one winner, remnants clear") {
     val dir = Files.createTempDirectory("graft_claim_spec").toString + "/t"
     GraftStore.create(dir, GraftTableMeta(rowSchema, Seq("k"), buckets = 2))
-    // a crashed writer left: its claim marker, a partial next-version dir,
-    // and a changelog staging dir — the table still reads at version 0
+    // a crashed writer left: its claim marker, a partial next-version
+    // build dir, and a changelog staging dir — the table still reads at
+    // version 0
     val marker = Paths.get(dir, f"_commit-${1L}%010d")
     Files.write(marker, "crashed".getBytes)
-    Files.createDirectories(Paths.get(GraftStore.versionDir(dir, 1L), "gbucket=0"))
-    Files.createDirectories(Paths.get(s"$dir/_changes/.staging-1"))
+    Files.createDirectories(Paths.get(
+      s"${GraftStore.versionDir(dir, 1L)}.build-crashed", "gbucket=0"))
+    Files.createDirectories(Paths.get(s"$dir/_changes/.staging-1-crashed"))
     // a fresh claim within the stale window fails cleanly...
     intercept[java.util.ConcurrentModificationException] {
       GraftStore.claimCommit(dir, 1L)
@@ -218,7 +220,7 @@ class GraftDeltaSpec extends SparkTestBase {
       .withColumn(GraftStore.OpCol, org.apache.spark.sql.functions.lit("I"))
     val v = GraftStore.applyChanges(spark, dir, ch, allInserts = true)
     assert(v === 1L && GraftStore.currentVersion(dir) === 1L)
-    assert(!Files.exists(Paths.get(s"$dir/_changes/.staging-1")),
+    assert(!Files.exists(Paths.get(s"$dir/_changes/.staging-1-crashed")),
       "orphan changelog staging must not survive recovery")
     assert(GraftStore.readVersion(spark, dir, 1L).count() === 1L)
     assert(GraftStore.readChanges(spark, dir, 1L, 1L).count() === 1L)
@@ -236,7 +238,7 @@ class GraftDeltaSpec extends SparkTestBase {
     commit(2L) // v2 — then SIMULATE the crash window: changelog back to
     // staging (committed version, publication never happened)
     val published = Paths.get(s"$dir/_changes/change_version=2")
-    val staged = Paths.get(s"$dir/_changes/.staging-2")
+    val staged = stagedSlice(dir, 2L)
     Files.move(published, staged)
     // a batch covering (1, 2] must NOT skip v2: plan-time recovery
     // publishes the staged slice before the missing-dir filter runs
