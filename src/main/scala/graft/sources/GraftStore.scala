@@ -223,8 +223,14 @@ object GraftStore {
   // [[withMetaLock]]). It is taken by CREATE_NEW with a fresh token
   // inside. Breaking a stale lease and releasing one both go through
   // [[removeIf]], which removes the file only while it holds the token
-  // the remover read: two breakers can never both win, and after a stale
-  // takeover the original holder can never remove its successor's lease.
+  // the remover read: two breakers can never both win. One window remains:
+  // while a remover holds another holder's file in its tomb (it read its
+  // own token, then a stale takeover replaced the file before its
+  // rename), a third contender can create the lease, the link-back then
+  // fails and the successor's lease is lost — two holders. Commit claims
+  // tolerate that, since the pointer move is their fence ([[movePointer]]);
+  // the meta lock does not, and relies on the race needing a holder
+  // stalled past `staleMs` plus two contenders inside one rename.
 
   /** The lease's one staleness test: `p` exists and its holder last
     * proved liveness (its mtime, kept fresh by [[withClaimHeartbeat]])
@@ -257,7 +263,9 @@ object GraftStore {
     * `p` only while it holds `expected`. `p` is renamed to a private tomb
     * first — of racing removers exactly one gets the file — compared
     * there, then deleted, or linked back when it turned out to be another
-    * holder's. A tomb left by a crash is swept by [[vacuum]]. */
+    * holder's — a link-back that loses to a fresh CREATE_NEW drops that
+    * holder's lease (see the lease note above). A tomb left by a crash is
+    * swept by [[vacuum]]. */
   private def removeIf(p: Path, expected: String): Boolean =
     readText(p).contains(expected) && {
       val tomb = Paths.get(s"$p.stale-${System.nanoTime()}")
@@ -1015,9 +1023,10 @@ object GraftStore {
     * the record is that group's reservation and takes effect with its
     * decision. True when the record is this mover's — created now, or
     * earlier with the same content (a resolver completing a group again)
-    * — false when another move left `from` first, or when the build is
-    * gone. A record created off a version expiry already retired is taken
-    * back: its slot was trimmed, not free. */
+    * — false when another move left `from` first, when the build is
+    * gone, or when expiry retired `from`: its slot was trimmed, not free.
+    * The retention check runs before the record is created and again
+    * after, taking back a record whose base expiry retired in between. */
   private[sources] def movePointer(dir: String, from: Long, to: Long,
       token: String, group: Option[Path] = None): Boolean = {
     val tmp = Paths.get(dir, s"_current.tmp-${java.util.UUID.randomUUID()}")
@@ -1028,16 +1037,18 @@ object GraftStore {
         if (readText(p).contains(content(p))) Some((p, false)) else None
       case _ if !Files.isDirectory(Paths.get(
           s"${versionDir(dir, to)}.build-$token")) => None // swept meanwhile
+      case _ if !retained(from) => None // the slot was trimmed, not free
       case (p, None) =>
         Files.write(tmp, content(p).getBytes("UTF-8"))
         try { Files.createLink(p, tmp); Some((p, true)) }
         catch { case _: java.nio.file.FileAlreadyExistsException => record() }
     }
-    val base = versionDir(dir, from)
+    def retained(v: Long) =
+      Paths.get(versionDir(dir, v), ManifestName).toFile.exists &&
+        !Paths.get(versionDir(dir, v), ExpiredMarker).toFile.exists
     try record() match {
       case None => false
-      case Some((p, true)) if !Paths.get(base, ManifestName).toFile.exists ||
-          Paths.get(base, ExpiredMarker).toFile.exists =>
+      case Some((p, true)) if !retained(from) => // retired meanwhile
         Files.deleteIfExists(p)
         false
       case Some((p, won)) =>
@@ -2373,16 +2384,18 @@ object GraftStore {
         val age = try now - Files.getLastModifiedTime(m).toMillis
         catch { case _: java.nio.file.NoSuchFileException => -1L }
         if (age > 86400000L && readText(d).isEmpty) createText(d, "aborted")
-        if (age > 86400000L && readText(d).contains("aborted")) {
+        // the small decision file stays: a member's reservation record
+        // names it, and only "aborted" there lets the next move skip it
+        if (age > 86400000L && readText(d).contains("aborted"))
           Files.deleteIfExists(m)
-          Files.deleteIfExists(d)
-        }
       }
     }
     val id = java.util.UUID.randomUUID().toString
     val manifest = groupsRoot.resolve(s"group-$id.json")
     val named = manifest.toAbsolutePath.toString
-    val decision = groupDecisionPath(manifest)
+    // from the absolute name: reservations, resolvers and
+    // completeGroupMember all record and compare this one string
+    val decision = groupDecisionPath(Paths.get(named))
     val preps = scala.collection.mutable.ArrayBuffer.empty[FrozenBranch]
     val claims = scala.collection.mutable.ArrayBuffer.empty[(Path, String)]
     def marker(f: FrozenBranch): Path = Paths.get(f.dir, GroupMarkerName)

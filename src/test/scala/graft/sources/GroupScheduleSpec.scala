@@ -307,6 +307,74 @@ class GroupScheduleSpec extends AnyFunSuite {
     }
   }
 
+  test("an aborted group's reservation never wedges its member after the retention sweep") {
+    withRun(staleClaims = true) { (root, _) =>
+      val a = table(root, "a")
+      val b = table(root, "b")
+      branch(a, "g", 1)
+      branch(b, "g", 1)
+      val groups = root.resolve("_groups")
+      intercept[GraftStore.InjectedCrash] {
+        GraftStore.withCrashAt("publishGroup.before-decision") {
+          GraftStore.publishGroup(groups, Seq(a -> "g", b -> "g"))
+        }
+      }
+      Seq(a, b).foreach(GraftStore.recoverGroupCommit)
+      assert(decision(root).contains("aborted"))
+      // age the aborted group past the sweep's one-day window
+      val old = java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 2 * 86400000L)
+      GraftStore.listDir(groups)(_.toList).foreach(Files.setLastModifiedTime(_, old))
+      branch(a, "g2", 1)
+      branch(b, "g2", 1)
+      // the next publish runs the sweep, then moves off the same fork
+      GraftStore.publishGroup(groups, Seq(a -> "g2", b -> "g2"))
+      assert(!GraftStore.branchExists(a, "g2") && !GraftStore.branchExists(b, "g2"))
+      assert(GraftStore.truncate(a) === 2L && GraftStore.currentVersion(a) === 2L)
+      whole(a)
+    }
+  }
+
+  test("publish_group with a relative groups root consumes its branches") {
+    withRun(staleClaims = false) { (root, _) =>
+      val a = table(root, "a")
+      val b = table(root, "b")
+      branch(a, "g", 1)
+      branch(b, "g", 1)
+      val rel = Paths.get("").toAbsolutePath.relativize(root.resolve("_groups"))
+      assert(!rel.isAbsolute)
+      GraftStore.publishGroup(rel, Seq(a -> "g", b -> "g"))
+      assert(!GraftStore.branchExists(a, "g") && !GraftStore.branchExists(b, "g"),
+        "a member's completion did not match its own reservation")
+      assert(!Files.exists(marker(a)) && !Files.exists(marker(b)))
+      assert(GraftStore.currentVersion(a) === 1L && GraftStore.currentVersion(b) === 1L)
+    }
+  }
+
+  test("a stale flip off a version expiry retired creates no move record") {
+    withRun(staleClaims = true) { (root, s) =>
+      val a = table(root, "a")
+      var won = -1L
+      s.spawn("W1") { won = GraftStore.truncate(a) }
+      s.runUntil("W1", "flip")
+      (1 to 3).foreach(_ => GraftStore.truncate(a))
+      GraftStore.expireVersions(a, keepLast = 1)
+      s.spawn("Reader") { (1 to 3).foreach(_ => GraftStore.currentVersion(a)) }
+      while (s.live("W1") || s.live("Reader")) {
+        s.step("W1")
+        s.step("Reader")
+        assert(!Files.exists(Paths.get(a, "_log", f"${1L}%010d")),
+          s"a record off retired v0 appeared: ${s.trace.mkString(" ")}")
+      }
+      noFaults(s)
+      withClue(s.trace.mkString(" ")) {
+        assert(s.failures.contains("W1") && won === -1L, "the stale flip published")
+        assert(GraftStore.listVersions(a) === Seq(3L))
+        assert(!Files.exists(Paths.get(GraftStore.versionDir(a, 1L))))
+      }
+    }
+  }
+
   // --------------------------------------------------------------- property
 
   /** One seeded schedule: the actors a shape spawns, then `picks` — step
